@@ -33,12 +33,7 @@ SID_A = "11111111-1111-1111-1111-111111111111"
 # scan per branch), and operators/apply.py + operators/scd2.py now
 # derive their effect/event rows with the same single-read explode —
 # so every consumer plan reads each stream exactly once and
-# re-derivation is a map-only scan. _cached survives as the naming
-# shim; it deliberately does NOT checkpoint.
-
-
-def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    return build()
+# re-derivation is a map-only scan; nothing is cached or checkpointed.
 
 
 def _as_change(
@@ -129,20 +124,14 @@ def orders_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only parquet scan, which keeps column pruning/pushdown and is
     the scale-correct shape (at 100 TB you never checkpoint the base
     table to serve a maintenance batch)."""
-    return _cached(
-        spark, sf_dir, "orders_base",
-        lambda: load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderkey") % 5 != 0
-        ),
+    return load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") % 5 != 0
     )
 
 
 def orders_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-invocation-pinned wrapper over :func:`_orders_changes_build`."""
-    return _cached(
-        spark, sf_dir, "orders_changes",
-        lambda: _orders_changes_build(spark, sf_dir),
-    )
+    """The scripted ``orders`` change stream (:func:`_orders_changes_build`)."""
+    return _orders_changes_build(spark, sf_dir)
 
 
 def _orders_changes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,11 +230,8 @@ CUSTOMER_WHERE = "c_acctbal > 1000.0 AND lower(c_mktsegment) <> 'machinery'"
 
 
 def customer_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-invocation-pinned wrapper over :func:`_customer_changes_build`."""
-    return _cached(
-        spark, sf_dir, "customer_changes",
-        lambda: _customer_changes_build(spark, sf_dir),
-    )
+    """The scripted ``customer`` change stream (:func:`_customer_changes_build`)."""
+    return _customer_changes_build(spark, sf_dir)
 
 
 def _customer_changes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,24 +324,18 @@ def lineitem_base(
     change-stream build."""
     if rekeyed is not None:
         return rekeyed.filter(F.col("l_orderkey") % 5 != 0)
-    return _cached(
-        spark, sf_dir, "lineitem_base",
-        lambda: _rekeyed_lineitem(spark, sf_dir).filter(
-            F.col("l_orderkey") % 5 != 0
-        ),
+    return _rekeyed_lineitem(spark, sf_dir).filter(
+        F.col("l_orderkey") % 5 != 0
     )
 
 
 def lineitem_changes(
     spark: SparkSession, sf_dir: str, rekeyed: DataFrame | None = None
 ) -> DataFrame:
-    """Per-invocation-pinned wrapper over
-    :func:`_lineitem_changes_build`; ``rekeyed`` shares one rekey sort
+    """The scripted lineitem change stream
+    (:func:`_lineitem_changes_build`); ``rekeyed`` shares one rekey sort
     with the base build (see :func:`rekeyed_lineitem_pinned`)."""
-    return _cached(
-        spark, sf_dir, "lineitem_changes",
-        lambda: _lineitem_changes_build(spark, sf_dir, rekeyed=rekeyed),
-    )
+    return _lineitem_changes_build(spark, sf_dir, rekeyed=rekeyed)
 
 
 def _lineitem_changes_build(

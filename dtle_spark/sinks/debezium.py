@@ -79,10 +79,6 @@ def encode_decimal_bytes(unscaled: pd.Series) -> pd.Series:
     return unscaled.map(enc)
 
 
-def encode_binary_base64(col: Column) -> Column:
-    return F.base64(col)
-
-
 def encode_binary_padded(col_name: str, n: int) -> Column:
     """Fixed BINARY(n) -> base64 of the value zero-PADDED to n bytes
     (kafka3.go getBinaryValue; golden kafka3_test.go: binary(16) of ""

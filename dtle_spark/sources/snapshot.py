@@ -99,11 +99,6 @@ def snapshot_offset(df: DataFrame, chunk_size: int, index: int, where: str | Non
     )
 
 
-def count_table_rows(df: DataFrame, where: str | None = None) -> int:
-    """Progress denominator (CountTableRows, extractor.go:859-879)."""
-    return (df.filter(F.expr(where)) if where else df).count()
-
-
 def jdbc_snapshot_reader(
     spark: SparkSession,
     url: str,

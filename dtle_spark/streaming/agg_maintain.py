@@ -17,12 +17,9 @@ each delta lands as its own ``ingest_batch=<id>/`` parquet subtree:
 - view() merges on read: deltas are additive and order-free, so the
   view is one groupBy over the subtrees with zero-count groups
   dropped — cost O(batches x groups), never a table rescan;
-- compact() folds subtrees into a NEW generation behind the atomic
-  ``_CURRENT`` pointer with a compaction watermark (replayed
-  pre-compaction batches are no-ops), bounding merge-on-read;
-- the root carries the ``_CHECKPOINT_ID`` stamp — batch ids are only
-  meaningful relative to one stream checkpoint, so a fresh checkpoint
-  against an old root fails loudly instead of double-counting.
+- compact() folds subtrees into a NEW generation of the shared
+  generation store (streaming/store.py — atomic pointer, compaction
+  watermark, checkpoint stamp), bounding merge-on-read.
 
 Why this exists: the reference replicates tables; its consumers then
 re-aggregate downstream. At 100 TB the aggregate IS the product for
@@ -35,34 +32,29 @@ the apply pipeline already runs.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dtle_spark.operators.apply import dedupe_redelivered
 from dtle_spark.operators.rollup import _N, _fold, rollup_delta
-from dtle_spark.streaming.ann_serving import (
-    _check_stream_stamp,
-    _ingest_batches,
-    _swap_current,
-)
-from dtle_spark.streaming.profile import _compacted_through, _resolve
 from dtle_spark.streaming.schema_guard import (
     check_upstream_schema,
     struct_cols,
 )
+from dtle_spark.streaming.store import GenerationStore, StreamJob
 from dtle_spark.sinks.lease import leased
 
-_COMPACT_WM_FILE = "_COMPACTED_THROUGH"
 _DELTAS = "deltas"
 
 
-class AggMaintainJob:
+class AggMaintainJob(StreamJob):
     """Maintain one rollup (groups x additive measures) over a change
     stream. ``group_sqls`` / ``measure_sqls`` map output names to SQL
     expressions over the row image; measures must be integral so
     retractions cancel exactly (cents, counts, sizes)."""
+
+    _ckpt_sub = "agg_maintain"
 
     def __init__(
         self,
@@ -89,15 +81,14 @@ class AggMaintainJob:
         # self-bounding merge-on-read: apply_batch compacts once delta
         # subtrees exceed this (see join_maintain.py for the pattern)
         self.auto_compact_batches = auto_compact_batches
-        self.query = None
+        self.store = GenerationStore(view_root, (_DELTAS,))
 
     # -- batch core (exposed for tests/replay) ---------------------------
 
     @leased("view_root", "agg_maintain")
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        gen = _resolve(self.view_root)
-        _check_stream_stamp(gen, self.checkpoint_dir)
-        if batch_id <= _compacted_through(gen):
+        gen = self.store.admit(batch_id, self.checkpoint_dir)
+        if gen is None:
             return  # already folded by a compaction — skip
         # schema-evolution contract (streaming/schema_guard.py): the
         # rollup's SQL expressions reference only first-batch columns,
@@ -123,9 +114,8 @@ class AggMaintainJob:
     # -- reads ------------------------------------------------------------
 
     def _read_deltas(self) -> DataFrame | None:
-        gen = _resolve(self.view_root)
-        root = os.path.join(gen, _DELTAS)
-        batches = _ingest_batches(root)
+        root = os.path.join(self.store.current(), _DELTAS)
+        batches = self.store.batches()
         if not batches:
             return None
         return self.spark.read.option("basePath", root).parquet(
@@ -154,95 +144,37 @@ class AggMaintainJob:
     @leased("view_root", "agg_maintain")
     def compact(self, max_batches: int = 16, gc_previous: bool = True) -> int:
         """Fold per-batch delta subtrees into one in a NEW generation
-        behind the atomic ``_CURRENT`` pointer — run OFF the ingest
+        (streaming/store.py commit_generation) — run OFF the ingest
         path with the job quiesced (the profiler/vector-index
         contract). Zero-count groups are kept in the folded state: a
         group balanced to zero by later retractions must still cancel
         against pre-compaction history. Returns subtrees folded."""
-        gen = _resolve(self.view_root)
-        batches = _ingest_batches(os.path.join(gen, _DELTAS))
+        batches = self.store.batches()
         if len(batches) <= max_batches:
             return 0
-        hi = max(int(b.split("=", 1)[1]) for b in batches)
-        base = os.path.basename(gen)
-        n = int(base.split("-", 1)[1]) if base.startswith("gen-") else 0
-        new_gen_name = f"gen-{n + 1}"
-        new_gen = os.path.join(self.view_root, new_gen_name)
+
         folded = _fold(
             self._read_deltas(), list(self.group_sqls), list(self.measure_sqls)
         )
-        (
-            folded.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(new_gen, _DELTAS, f"ingest_batch={hi}"))
-        )
-        with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-            f.write(str(hi))
-        old_ck = os.path.join(gen, "_CHECKPOINT_ID")
-        if os.path.exists(old_ck):  # stream identity rides along
-            shutil.copy(old_ck, os.path.join(new_gen, "_CHECKPOINT_ID"))
-        _swap_current(self.view_root, new_gen_name)
-        if gc_previous:
-            if gen == self.view_root:
-                shutil.rmtree(os.path.join(gen, _DELTAS), ignore_errors=True)
-            else:
-                shutil.rmtree(gen, ignore_errors=True)
+
+        def fold(gen, new_gen, hi):
+            (
+                folded.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(os.path.join(new_gen, _DELTAS, f"ingest_batch={hi}"))
+            )
+
+        self.store.commit_generation(fold, gc_previous=gc_previous)
         return len(batches)
 
-    # -- lifecycle ---------------------------------------------------------
-
-    def start(self) -> "AggMaintainJob":
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self.source_dir)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_dir, "agg_maintain"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "AggMaintainJob":
-        if self.query is None:
-            self.start()
-        return self
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
-        gen = _resolve(self.view_root)
-        batches = [
-            int(b.split("=", 1)[1])
-            for b in _ingest_batches(os.path.join(gen, _DELTAS))
-        ]
-        return {
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "max_ingest_batch": max(batches, default=-1),
-        }
+        return self.store.position()
 
     def stats(self) -> dict:
-        gen = _resolve(self.view_root)
         return {
             "type": "agg_maintain",
-            "active": self.query is not None and self.query.isActive,
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "ingest_batches": len(_ingest_batches(os.path.join(gen, _DELTAS))),
+            "active": self.active,
+            **self.store.stats(),
         }

@@ -27,9 +27,9 @@ coordination — the partition tree IS the synchronization point.
 
 :func:`compact_index` is the off-path OPTIMIZE chore: it folds the
 accumulated per-batch subtrees into one cell-partitioned subtree in a
-NEW generation dir and atomically swaps the ``_CURRENT`` pointer
-(readers resolve it per micro-batch; a compaction watermark keeps
-replayed pre-compaction batches no-ops).
+NEW generation of the shared generation store (streaming/store.py —
+readers resolve its pointer per micro-batch; its compaction watermark
+keeps replayed pre-compaction batches no-ops).
 
 **Deletes and upserts (CDC mode)**: when a maintain batch carries an
 ``op`` column, rows with ``op='delete'`` remove their id from service
@@ -57,13 +57,12 @@ reindex, all against one layout.
 
 **Operations**: the model tables also PERSIST beside the index
 (``_model/`` — save_model/load_model), so jobs reconstruct with
-``centroids=None`` and specs stay plain JSON (JobManager
-create_vector_maintain / create_ann_serving put both jobs on the same
-control plane as replication jobs, including recover()). Batch
-watermarks are only meaningful relative to one stream checkpoint, so
-every root carries a ``_CHECKPOINT_ID`` stamp and a job on a fresh
-checkpoint fails loudly instead of silently skipping or duplicating
-(_check_stream_stamp).
+``centroids=None`` and specs stay plain JSON (JobManager.create_job
+puts both jobs on the same control plane as replication jobs,
+including recover()). Batch watermarks are only meaningful relative to
+one stream checkpoint, so every root carries the store's checkpoint
+stamp and a job on a fresh checkpoint fails loudly instead of silently
+skipping or duplicating (store.check_stream_stamp).
 
 At 100 TB: the model (16 centroids + m*ksub codebook rows) is
 broadcast-sized by construction; maintain cost is O(new vectors) with
@@ -82,7 +81,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +89,13 @@ from pyspark.sql.window import Window
 from dtle_spark.functions import similarity as sim
 from dtle_spark.sinks.table_sink import ParquetTableTarget
 from dtle_spark.sinks.lease import leased, writer_lease
+from dtle_spark.streaming.store import (
+    GenerationStore,
+    StreamJob,
+    check_stream_stamp,
+    ingest_batches,
+    resolve_generation,
+)
 
 SCHEMA_NAME = "serving"
 RESULTS_TABLE = "ann_results"
@@ -98,12 +103,9 @@ _WM_KEY = "__serve_batch"
 
 VECTOR_SCHEMA = "vec_id long, embedding array<float>"
 
-_CURRENT = "_CURRENT"
-_COMPACT_WM_FILE = "_COMPACTED_THROUGH"
 _TOMBSTONES = "_tombstones"
 _MODEL_FP_FILE = "_MODEL_FP"
 _MODEL_DIR = "_model"
-_CKPT_ID_FILE = "_CHECKPOINT_ID"
 _SCHEMA_FILE = "_SCHEMA"
 _OCC_TARGET_FILE = "_OCCUPANCY_TARGET"
 
@@ -111,40 +113,18 @@ CDC_VECTOR_SCHEMA = VECTOR_SCHEMA + ", op string"
 
 
 def resolve_index_path(index_root: str) -> str:
-    """The ACTIVE index generation: ``index_root`` itself until the
-    first compaction, then the generation dir the ``_CURRENT`` pointer
-    names. The pointer swap is one ``os.replace`` — the rename IS the
-    commit point, the same discipline as the table manifests. All
-    control files here are underscore-prefixed, which Spark's file
-    index skips, so a reader racing the swap sees a consistent old OR
-    new generation, never a mix."""
-    try:
-        with open(os.path.join(index_root, _CURRENT)) as f:
-            return os.path.join(index_root, f.read().strip())
-    except FileNotFoundError:
-        return index_root
+    """The ACTIVE index generation (store.resolve_generation)."""
+    return resolve_generation(index_root)
 
 
-def _compacted_through(gen_dir: str) -> int:
-    try:
-        with open(os.path.join(gen_dir, _COMPACT_WM_FILE)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return -1
-
-
-def _gen_number(index_root: str) -> int:
-    base = os.path.basename(resolve_index_path(index_root))
-    return int(base.split("-", 1)[1]) if base.startswith("gen-") else 0
-
-
-def _ingest_batches(gen_dir: str) -> list[str]:
-    try:
-        return sorted(
-            d for d in os.listdir(gen_dir) if d.startswith("ingest_batch=")
-        )
-    except FileNotFoundError:
-        return []
+def _index_store(index_root: str) -> GenerationStore:
+    """The vector index's generation store: codes land as
+    ``ingest_batch=<id>/cell=<c>/`` directly in the generation, CDC
+    tombstones in the ``_tombstones/`` sidecar, and the persisted model
+    belongs to the generation it encodes."""
+    return GenerationStore(
+        index_root, ("", _TOMBSTONES), (_MODEL_DIR, _MODEL_FP_FILE)
+    )
 
 
 def _write_schema_sidecar(gen_dir: str, schema) -> None:
@@ -159,7 +139,7 @@ def _has_data_files(gen_dir: str) -> bool:
     file. An all-deleted fold leaves the ``ingest_batch=<hi>`` dir in
     place with only _SUCCESS inside, so listing subtrees is NOT enough
     to know the generation is readable."""
-    for b in _ingest_batches(gen_dir):
+    for b in ingest_batches(gen_dir):
         for _root, _dirs, files in os.walk(os.path.join(gen_dir, b)):
             if any(fn.endswith(".parquet") for fn in files):
                 return True
@@ -269,48 +249,13 @@ def _check_model_stamp(gen_dir: str, fp: str, stamp_if_missing: bool) -> None:
         )
 
 
-def _check_stream_stamp(root: str, checkpoint_dir: str) -> None:
-    """Batch ids are meaningful only relative to ONE stream checkpoint:
-    a job recreated with a fresh checkpoint restarts them at 0, so the
-    replay watermarks would silently SKIP genuinely new batches (ids at
-    or below the watermark) and re-ingest already-folded data above it.
-    The first writer stamps its checkpoint identity; any later job must
-    present the same one — resume the original checkpoint_dir to keep
-    the position, or start a fresh index/results root."""
-    path = os.path.join(root, _CKPT_ID_FILE)
-    ident = os.path.abspath(checkpoint_dir)
-    try:
-        with open(path) as f:
-            current = f.read().strip()
-    except FileNotFoundError:
-        os.makedirs(root, exist_ok=True)
-        with open(path, "w") as f:
-            f.write(ident)
-        return
-    if current != ident:
-        raise ValueError(
-            f"checkpoint mismatch for {root}: its batch watermarks were "
-            f"written under checkpoint {current}, this job runs under "
-            f"{ident} — batch ids from a fresh checkpoint restart at 0 "
-            "and the watermarks would silently skip or duplicate data. "
-            "Reuse the original checkpoint_dir, or start a new root."
-        )
-
-
-def _swap_current(index_root: str, new_gen_name: str) -> None:
-    tmp = os.path.join(index_root, _CURRENT + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(new_gen_name)
-    os.replace(tmp, os.path.join(index_root, _CURRENT))  # the commit point
-
-
 def read_tombstones(spark: SparkSession, gen_dir: str) -> DataFrame | None:
     """The generation's tombstone sidecar as (id, tomb_batch), or None
     when the stream has never carried an op column. Read by explicit
     subtree list (the sidecar dir is underscore-prefixed precisely so
     the INDEX read's partition discovery skips it)."""
     root = os.path.join(gen_dir, _TOMBSTONES)
-    batches = _ingest_batches(root)
+    batches = ingest_batches(root)
     if not batches:
         return None
     return (
@@ -329,14 +274,12 @@ def compact_index(
 ) -> int:
     """Small-file chore for the streaming index: when more than
     ``max_batches`` ingest subtrees have accumulated, rewrite them into
-    ONE cell-partitioned subtree inside a NEW generation dir and swap
-    the ``_CURRENT`` pointer — the lake OPTIMIZE analogue,
-    compact_segments' sibling for the raw-parquet index layout.
-
-    The compacted generation carries ``_COMPACTED_THROUGH`` = the
-    highest folded batch id; the maintain job skips any (replayed)
-    batch at or below it, so folding never un-does replay idempotence.
-    Returns subtrees folded (0 = nothing to do).
+    ONE cell-partitioned subtree inside a NEW generation
+    (streaming/store.py commit_generation) — the lake OPTIMIZE
+    analogue, compact_segments' sibling for the raw-parquet index
+    layout. The maintain job skips any (replayed) batch at or below
+    the committed watermark, so folding never un-does replay
+    idempotence. Returns subtrees folded (0 = nothing to do).
 
     Tombstones (CDC deletes/upserts) are applied PHYSICALLY here: dead
     rows are dropped from the folded subtree and the sidecar does NOT
@@ -369,9 +312,9 @@ def _compact_index_locked(
     gc_previous: bool,
     purge_ids: DataFrame | None,
 ) -> int:
-    gen = resolve_index_path(index_root)
-    batches = _ingest_batches(gen)
-    tomb_batches = _ingest_batches(os.path.join(gen, _TOMBSTONES))
+    store = _index_store(index_root)
+    batches = store.batches()
+    tomb_batches = store.batches(sub=_TOMBSTONES)
     # the tombstone sidecar counts toward the trigger: a delete-heavy
     # stream accumulates sidecar subtrees without growing the index,
     # and the Δ-bounded claim holds only if folding drains them too.
@@ -380,17 +323,17 @@ def _compact_index_locked(
     # purged rows themselves.
     if purge_ids is None and len(batches) + len(tomb_batches) <= max_batches:
         return 0
-    tomb = read_tombstones(spark, gen)
-    hi = max(
-        (int(b.split("=", 1)[1]) for b in batches + tomb_batches),
-        default=_compacted_through(gen),
-    )
-    new_gen_name = f"gen-{_gen_number(index_root) + 1}"
-    new_gen = os.path.join(index_root, new_gen_name)
-    if batches:
+
+    def fold(gen, new_gen, hi):
+        if not batches:
+            # everything was deleted: the folded generation is EMPTY
+            # (no subtree at all) — the carried _SCHEMA keeps readers
+            # schema-aware
+            return
         cur = spark.read.option("basePath", gen).parquet(
             *[os.path.join(gen, b) for b in batches]
         )
+        tomb = read_tombstones(spark, gen)
         if tomb is not None:
             cur = sim.apply_tombstones(cur, tomb)
         if purge_ids is not None:
@@ -423,46 +366,14 @@ def _compact_index_locked(
             [f2 for f2 in cur.schema.fields if f2.name != "cell"]
             + [T.StructField("ingest_batch", T.IntegerType()), cell_f]
         ))
-    else:
-        # everything was deleted: the folded generation is EMPTY (no
-        # subtree at all) — only the watermark/model control files land
-        os.makedirs(new_gen, exist_ok=True)
-        old_schema = os.path.join(gen, _SCHEMA_FILE)
-        if os.path.exists(old_schema):  # keep readers schema-aware
-            shutil.copy(old_schema, os.path.join(new_gen, _SCHEMA_FILE))
-    with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-        f.write(str(hi))
-    old_fp = os.path.join(gen, _MODEL_FP_FILE)
-    if os.path.exists(old_fp):  # same model, same stamp
-        shutil.copy(old_fp, os.path.join(new_gen, _MODEL_FP_FILE))
-    old_model = os.path.join(gen, _MODEL_DIR)
-    if os.path.isdir(old_model):  # the persisted model rides along
-        shutil.copytree(
-            old_model, os.path.join(new_gen, _MODEL_DIR), dirs_exist_ok=True
-        )
-    old_ck = os.path.join(gen, _CKPT_ID_FILE)
-    if os.path.exists(old_ck):  # the stream identity rides along too
-        shutil.copy(old_ck, os.path.join(new_gen, _CKPT_ID_FILE))
-    _swap_current(index_root, new_gen_name)
-    if gc_previous:
-        _gc_generation(index_root, gen, batches)
+
+    # the tombstone sidecar does NOT carry: it was applied physically.
+    # The model (stamp + tables) and the schema sidecar ride along.
+    store.commit_generation(
+        fold, carry=(_MODEL_FP_FILE, _MODEL_DIR, _SCHEMA_FILE),
+        gc_previous=gc_previous,
+    )
     return len(batches) + len(tomb_batches)
-
-
-def _gc_generation(index_root: str, gen: str, batches: list[str]) -> None:
-    """Delete a superseded generation. The pre-compaction layout lives
-    at index_root itself, so there only the subtrees/sidecars are
-    removed (never the root, which holds the _CURRENT pointer and the
-    surviving generations)."""
-    if gen == index_root:
-        for b in batches + [_TOMBSTONES, _MODEL_DIR]:
-            shutil.rmtree(os.path.join(index_root, b), ignore_errors=True)
-        try:
-            os.remove(os.path.join(index_root, _MODEL_FP_FILE))
-        except FileNotFoundError:
-            pass
-    else:
-        shutil.rmtree(gen, ignore_errors=True)
 
 
 def purge_index_ids(
@@ -511,10 +422,11 @@ def reindex(
     tombstone state is considered already reflected in that corpus
     view; the new generation starts with an empty sidecar.
 
-    The compaction watermark carries forward (hi = highest batch id
-    seen by the OLD generation), so replays of pre-reindex batches
-    stay no-ops. The new generation is stamped with the new model's
-    fingerprint: maintain/serving jobs still holding the old model
+    The compaction watermark carries forward (the store's rule:
+    highest batch id seen by the OLD generation, else its committed
+    watermark), so replays of pre-reindex batches stay no-ops. The new
+    generation is stamped with the new model's fingerprint:
+    maintain/serving jobs still holding the old model
     fail loudly at their next batch (_check_model_stamp) instead of
     mixing incomparable encodings — retire them and construct new jobs
     with the retrained model. Quiesce contract: maintain quiesced
@@ -532,47 +444,35 @@ def _reindex_locked(
     spark, index_root, vectors, centroids, codebook, m, ksub, dim,
     id_col, vec_col, gc_previous, carry_cols,
 ) -> str:
-    gen = resolve_index_path(index_root)
-    batches = _ingest_batches(gen)
-    tomb_batches = _ingest_batches(os.path.join(gen, _TOMBSTONES))
-    hi = max(
-        [int(b.split("=", 1)[1]) for b in batches + tomb_batches],
-        default=-1,
+    def encode(gen, new_gen, hi):
+        celled = sim.ivf_pq_build_index(
+            vectors, centroids, codebook, m=m, ksub=ksub, dim=dim,
+            id_col=id_col, vec_col=vec_col, carry_cols=carry_cols,
+        )
+        (
+            celled.write.partitionBy("cell")
+            .mode("overwrite")
+            .parquet(os.path.join(new_gen, f"ingest_batch={hi}"))
+        )
+        with open(os.path.join(new_gen, _MODEL_FP_FILE), "w") as f:
+            f.write(model_fingerprint(centroids, codebook))
+        save_model(new_gen, centroids, codebook)
+        # the reindex corpus IS the build-time occupancy: record
+        # rows/cell so the successor maintainer's needs_reindex signal
+        # measures drift against THIS model's training-time density
+        # (the ~3x rule SCALE_RECALL.json measured). centroids is
+        # broadcast-sized; the vectors count is one metadata-cheap pass
+        # over a corpus the encode just read in full anyway.
+        _write_occ_target(
+            new_gen, vectors.count() / max(1, centroids.count())
+        )
+
+    # the maintain STREAM identity (checkpoint stamp) survives reindex:
+    # the successor job must resume the same checkpoint so batch ids
+    # keep meaning
+    return _index_store(index_root).commit_generation(
+        encode, gc_previous=gc_previous
     )
-    celled = sim.ivf_pq_build_index(
-        vectors, centroids, codebook, m=m, ksub=ksub, dim=dim,
-        id_col=id_col, vec_col=vec_col, carry_cols=carry_cols,
-    )
-    new_gen_name = f"gen-{_gen_number(index_root) + 1}"
-    new_gen = os.path.join(index_root, new_gen_name)
-    (
-        celled.write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(os.path.join(new_gen, f"ingest_batch={hi}"))
-    )
-    with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-        f.write(str(hi))
-    with open(os.path.join(new_gen, _MODEL_FP_FILE), "w") as f:
-        f.write(model_fingerprint(centroids, codebook))
-    save_model(new_gen, centroids, codebook)
-    # the reindex corpus IS the build-time occupancy: record rows/cell
-    # so the successor maintainer's needs_reindex signal measures drift
-    # against THIS model's training-time density (the ~3x rule
-    # SCALE_RECALL.json measured). centroids is broadcast-sized; the
-    # vectors count is one metadata-cheap pass over a corpus the
-    # encode just read in full anyway.
-    _write_occ_target(
-        new_gen, vectors.count() / max(1, centroids.count())
-    )
-    old_ck = os.path.join(gen, _CKPT_ID_FILE)
-    if os.path.exists(old_ck):
-        # the maintain STREAM identity survives reindex: the successor
-        # job must resume the same checkpoint so batch ids keep meaning
-        shutil.copy(old_ck, os.path.join(new_gen, _CKPT_ID_FILE))
-    _swap_current(index_root, new_gen_name)
-    if gc_previous:
-        _gc_generation(index_root, gen, batches)
-    return new_gen
 
 
 def wire_to_vector_ops(
@@ -683,56 +583,15 @@ def wire_vector_hooks(
     return reader, transform
 
 
-class _StreamedVectorJob:
-    """Shared micro-batch lifecycle for the two vector jobs: file
-    stream (or ``reader`` hook) → foreachBatch(apply_batch) with an
-    availableNow trigger; pause stops the query and the checkpoint
-    keeps the position (the ReplicationJob.pause contract). Subclasses
-    set ``_stream_source`` / ``_ckpt_sub`` and implement apply_batch."""
-
-    _ckpt_sub: str
-
-    def start(self):
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self._stream_source)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_dir, self._ckpt_sub),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self):
-        if self.query is None:
-            self.start()
-        return self
-
-
-class VectorIndexMaintainJob(_StreamedVectorJob):
+class VectorIndexMaintainJob(StreamJob):
     """Fold a vector stream into the cell-partitioned IVF-PQ index
     against a frozen model. ``centroids`` / ``codebook`` are the pinned
     training outputs (similarity.ivf_exact_mean_centroids / pq_refine);
     they are validated once and localCheckpointed so every batch reuses
-    the same broadcast tables."""
+    the same broadcast tables, and persisted beside the index (when the
+    generation has none yet) so a restart can reload them."""
+
+    _ckpt_sub = "index"
 
     def __init__(
         self,
@@ -805,25 +664,30 @@ class VectorIndexMaintainJob(_StreamedVectorJob):
         self.schema = schema
         self.max_files_per_trigger = max_files_per_trigger
         self.reader = reader
-        self.query = None
+        self.store = _index_store(index_root)
+        # make the generation self-describing NOW, not at first batch:
+        # a restart must be able to reload the model before any data
+        self._save_model_if_missing(self.store.current())
+
+    def _save_model_if_missing(self, gen: str) -> None:
+        # skip when already persisted (restart path / reindexed gen) —
+        # rewriting identical tables races concurrent serving reads
+        if not os.path.isdir(os.path.join(gen, _MODEL_DIR)):
+            save_model(gen, self.centroids, self.codebook)
 
     # -- batch core (exposed for tests/replay) ---------------------------
 
     @leased("index_root", "vector_maintain")
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        gen = resolve_index_path(self.index_root)
-        # BEFORE the watermark skip: ids from a different checkpoint
-        # are not comparable to the recorded watermark at all
-        _check_stream_stamp(gen, self.checkpoint_dir)
-        if batch_id <= _compacted_through(gen):
+        gen = self.store.admit(batch_id, self.checkpoint_dir)
+        if gen is None:
             return  # folded into the compacted subtree already — skip
         # the first write stamps the generation with this job's model
-        # (fingerprint + the model tables themselves, for restarts);
-        # after a reindex() the stamp differs and this raises — a job
-        # holding the superseded model must not encode into the new gen
+        # fingerprint; after a reindex() the stamp differs and this
+        # raises — a job holding the superseded model must not encode
+        # into the new gen
         _check_model_stamp(gen, self.model_fp, stamp_if_missing=True)
-        if not os.path.isdir(os.path.join(gen, _MODEL_DIR)):
-            save_model(gen, self.centroids, self.codebook)
+        self._save_model_if_missing(gen)
         if (
             self._target_rows_per_cell is not None
             and _read_occ_target(gen) is None
@@ -882,30 +746,17 @@ class VectorIndexMaintainJob(_StreamedVectorJob):
                 max_batches=self.auto_compact_batches,
             )
 
-    # -- lifecycle: start/pause/resume from _StreamedVectorJob -----------
-
-    _ckpt_sub = "index"
-
-    @property
-    def _stream_source(self) -> str:
-        return self.source_dir
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
-        gen = resolve_index_path(self.index_root)
-        batches = [int(b.split("=", 1)[1]) for b in _ingest_batches(gen)]
-        return {
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "max_ingest_batch": max(batches, default=-1),
-        }
+        return self.store.position()
 
     def stats(self) -> dict:
-        gen = resolve_index_path(self.index_root)
         return {
             "type": "vector_maintain",
-            "active": self.query is not None and self.query.isActive,
+            "active": self.active,
             "model_fp": self.model_fp,
-            "ingest_batches": len(_ingest_batches(gen)),
+            "ingest_batches": len(self.store.batches()),
             **self.position(),
             **self.occupancy(),
         }
@@ -927,7 +778,7 @@ class VectorIndexMaintainJob(_StreamedVectorJob):
         superseded versions), which only DELAYS the signal toward the
         next compaction folding the dead rows away — never a false
         fire."""
-        gen = resolve_index_path(self.index_root)
+        gen = self.store.current()
         codes = read_index(self.spark, gen).count()
         tomb = read_tombstones(self.spark, gen)
         dead = tomb.count() if tomb is not None else 0
@@ -961,18 +812,18 @@ class VectorIndexMaintainJob(_StreamedVectorJob):
         ingest_batch/cell columns). Probes never read it this way —
         they go through ivf_pq_topk_indexed's static cell filter.
         Includes dead versions in CDC mode — see live_index."""
-        return read_index(self.spark, resolve_index_path(self.index_root))
+        return read_index(self.spark, self.store.current())
 
     def live_index(self) -> DataFrame:
         """index() minus tombstoned rows — the logical current state a
         probe sees (serving applies the same filter pre-ranking)."""
-        gen = resolve_index_path(self.index_root)
+        gen = self.store.current()
         idx = read_index(self.spark, gen)
         tomb = read_tombstones(self.spark, gen)
         return idx if tomb is None else sim.apply_tombstones(idx, tomb)
 
 
-class AnnServingJob(_StreamedVectorJob):
+class AnnServingJob(StreamJob):
     """Serve a query-vector stream from the persisted index. Results
     land in a manifest-committed table with the batch watermark, so a
     replayed micro-batch is skipped — at-least-once delivery converges
@@ -993,6 +844,8 @@ class AnnServingJob(_StreamedVectorJob):
     INDEPENDENT id space (request counters, uuid hashes): the default
     drops any corpus vector whose id equals the query's id — right for
     corpus-drawn queries, silently wrong for request ids."""
+
+    _ckpt_sub = "serve"
 
     def __init__(
         self,
@@ -1019,7 +872,7 @@ class AnnServingJob(_StreamedVectorJob):
         exclude_self: bool = True,
     ):
         self.spark = spark
-        self.query_source_dir = query_source_dir
+        self.query_source_dir = self.source_dir = query_source_dir
         self.index_root = index_root
         self.checkpoint_dir = checkpoint_dir
         if vectors is not None and not callable(vectors):
@@ -1049,12 +902,11 @@ class AnnServingJob(_StreamedVectorJob):
         self.exclude_self = exclude_self
         self.results_root = results_root
         self.target = ParquetTableTarget(results_root)
-        self.query = None
 
     # -- batch core (exposed for tests/replay) ---------------------------
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        _check_stream_stamp(self.results_root, self.checkpoint_dir)
+        check_stream_stamp(self.results_root, self.checkpoint_dir)
         wm = self.target.seq_watermark(SCHEMA_NAME, RESULTS_TABLE)
         if wm.get(_WM_KEY, -1) >= batch_id:
             return  # replayed batch already committed — skip (idempotent)
@@ -1079,13 +931,7 @@ class AnnServingJob(_StreamedVectorJob):
             SCHEMA_NAME, RESULTS_TABLE, seq_watermark={_WM_KEY: batch_id},
         )
 
-    # -- lifecycle: start/pause/resume from _StreamedVectorJob -----------
-
-    _ckpt_sub = "serve"
-
-    @property
-    def _stream_source(self) -> str:
-        return self.query_source_dir
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
         wm = self.target.seq_watermark(SCHEMA_NAME, RESULTS_TABLE)
@@ -1094,7 +940,7 @@ class AnnServingJob(_StreamedVectorJob):
     def stats(self) -> dict:
         return {
             "type": "ann_serving",
-            "active": self.query is not None and self.query.isActive,
+            "active": self.active,
             "model_fp": self.model_fp,
             "k": self.k,
             "nprobe": self.nprobe,

@@ -52,6 +52,7 @@ from dtle_spark.functions.dedup import (
     with_dedup_index,
 )
 from dtle_spark.sinks.table_sink import ParquetTableTarget
+from dtle_spark.streaming.store import StreamJob
 
 SCHEMA_NAME = "corpus"
 TABLE_NAME = "documents"
@@ -67,7 +68,9 @@ _CHECK_KINDS = {
 }
 
 
-class CorpusIngestJob:
+class CorpusIngestJob(StreamJob):
+    _ckpt_sub = "ingest"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -131,7 +134,6 @@ class CorpusIngestJob:
         # stream plugs in.
         self.reader = reader
         self.target = ParquetTableTarget(target_root)
-        self.query = None
 
     # -- drift quarantine gate ---------------------------------------------
 
@@ -268,7 +270,7 @@ class CorpusIngestJob:
         same tables; interleaving erases whichever commit loses the
         race (and purge's history-severing then physically deletes the
         erased segment's data). Refuse loud instead of racing."""
-        if self.query is not None and self.query.isActive:
+        if self.active:
             raise RuntimeError(
                 f"{op} needs the corpus ingest stream PAUSED: it swaps "
                 "the same manifests foreachBatch commits to (pause the "
@@ -374,38 +376,7 @@ class CorpusIngestJob:
                 max_segments=self.auto_compact_segments,
             )
 
-    # -- lifecycle -------------------------------------------------------
-
-    def start(self) -> "CorpusIngestJob":
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self.source_dir)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", os.path.join(self.checkpoint_dir, "ingest"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "CorpusIngestJob":
-        if self.query is None:
-            self.start()
-        return self
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
         wm = self.target.seq_watermark(SCHEMA_NAME, TABLE_NAME)
@@ -424,7 +395,7 @@ class CorpusIngestJob:
         q = TableManifest.load(self.target.path(SCHEMA_NAME, Q_TABLE))
         return {
             "type": "corpus_ingest",
-            "active": self.query is not None and self.query.isActive,
+            "active": self.active,
             "segments": len(m.entries) if m else 0,
             "ingest_batch": m.seq_watermark.get(_WM_KEY, -1) if m else -1,
             "quarantine_batches": len(q.entries) if q else 0,

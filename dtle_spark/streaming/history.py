@@ -21,21 +21,19 @@ idempotent ``ingest_batch=<id>/`` subtree, and:
   store shared across generations (appended once, never rewritten —
   a version closes exactly once, so it lands in exactly one fold);
   each key's still-OPEN event is retained as the folded events
-  subtree so a later close can bound it. The swap is the atomic
-  ``_CURRENT`` generation pointer; a compaction watermark keeps
-  replayed pre-compaction batches no-ops. Compaction cost is
+  subtree so a later close can bound it. The commit is the shared
+  generation store's (streaming/store.py — atomic pointer, compaction
+  watermark, checkpoint stamp). Compaction cost is
   O(events-since-last-compaction), NOT O(|history|): prior folds are
   never read, copied, or rewritten.
 - crash safety: a fold whose generation swap never landed (crash
-  between the segment write and ``_swap_current``) is orphaned ABOVE
+  between the segment write and the ``_CURRENT`` swap) is orphaned ABOVE
   the committed watermark — INVISIBLE to reads (history() includes
   only folds <= the current generation's watermark, since the
   orphan's versions are still derivable from the old generation's
   events) and GC'd at the next compact() before any new segment is
   written, so neither a read in the window nor a retry at a
-  different watermark can double-count its versions;
-- the ``_CHECKPOINT_ID`` stamp pairs batch ids with one stream
-  checkpoint (fail-loud on a fresh checkpoint against an old root).
+  different watermark can double-count its versions.
 
 Write shape: every parquet write here is multi-task (one file per
 upstream partition — no coalesce(1) funnel): the per-batch event
@@ -71,15 +69,9 @@ from dtle_spark.operators.scd2 import (
     temporal_join,
     versions_of_events,
 )
-from dtle_spark.streaming.ann_serving import (
-    _check_stream_stamp,
-    _ingest_batches,
-    _swap_current,
-)
-from dtle_spark.streaming.profile import _compacted_through, _resolve
+from dtle_spark.streaming.store import GenerationStore, StreamJob
 from dtle_spark.sinks.lease import leased
 
-_COMPACT_WM_FILE = "_COMPACTED_THROUGH"
 _RETAINED_FROM_FILE = "_RETAINED_FROM"
 _RETAINED_FROM_TS_FILE = "_RETAINED_FROM_TS"
 _EVENTS = "events"
@@ -87,11 +79,13 @@ _CLOSED = "closed"
 _SEED_BATCH = -1
 
 
-class Scd2HistoryJob:
+class Scd2HistoryJob(StreamJob):
     """Maintain the SCD2 history of one keyed table over its change
     stream. ``key_cols`` name the unique key inside the row images;
     the optional snapshot seed lands as its own idempotent subtree at
     batch id -1 (seed once, before or after starting the stream)."""
+
+    _ckpt_sub = "scd2_history"
 
     def __init__(
         self,
@@ -118,14 +112,14 @@ class Scd2HistoryJob:
         # thread = the only writer, so the quiesce precondition holds
         # by construction; rides the JSON job spec as a plain int)
         self.auto_compact_batches = auto_compact_batches
-        self.query = None
+        self.store = GenerationStore(history_root, (_EVENTS,))
 
     # -- batch core (exposed for tests/replay) ---------------------------
 
     def _write_events(self, events: DataFrame, batch_id: int) -> None:
         # no coalesce: the subtree is O(batch) rows — it must write
         # with the batch's own parallelism, never through one task
-        gen = _resolve(self.history_root)
+        gen = self.store.current()
         (
             events.write.mode("overwrite")
             .parquet(os.path.join(gen, _EVENTS, f"ingest_batch={batch_id}"))
@@ -137,8 +131,7 @@ class Scd2HistoryJob:
         only BEFORE the first compaction: afterwards the seed's opens
         are already folded (closed versions + retained open events),
         and a fresh subtree -1 would double-open every seeded key."""
-        gen = _resolve(self.history_root)
-        if os.path.exists(os.path.join(gen, _COMPACT_WM_FILE)):
+        if self.store.watermark() >= 0:
             raise ValueError(
                 "cannot seed after compaction: the seed batch is "
                 "already folded into the closed store / retained open "
@@ -150,9 +143,7 @@ class Scd2HistoryJob:
 
     @leased("history_root", "history")
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        gen = _resolve(self.history_root)
-        _check_stream_stamp(gen, self.checkpoint_dir)
-        if batch_id <= _compacted_through(gen):
+        if self.store.admit(batch_id, self.checkpoint_dir) is None:
             return  # already folded by a compaction — skip
         # schema-evolution contract (streaming/schema_guard.py): SCD2
         # history pins the row-image schema hard — on_additive="fail".
@@ -178,9 +169,9 @@ class Scd2HistoryJob:
     # -- reads ------------------------------------------------------------
 
     def _read_events(self) -> DataFrame | None:
-        gen = _resolve(self.history_root)
+        gen = self.store.current()
         root = os.path.join(gen, _EVENTS)
-        batches = _ingest_batches(root)
+        batches = self.store.batches(gen)
         if not batches:
             return None
         return self.spark.read.option("basePath", root).parquet(
@@ -212,7 +203,7 @@ class Scd2HistoryJob:
         # generation's events — reading it would double-count until the
         # next compact() GCs it. Orphans are invisible to reads, not
         # just GC'd later.
-        wm = _compacted_through(_resolve(self.history_root))
+        wm = self.store.watermark()
         folds = [
             f for f in self._fold_dirs() if int(f.split("=", 1)[1]) <= wm
         ]
@@ -277,7 +268,7 @@ class Scd2HistoryJob:
         :meth:`as_of` at a seq below the floor fails loud instead of
         silently returning a state missing the dropped versions.
         Returns the number of folds dropped."""
-        wm = _compacted_through(_resolve(self.history_root))
+        wm = self.store.watermark()
         root = self._closed_root()
         doomed = [
             f for f in self._fold_dirs()
@@ -419,28 +410,23 @@ class Scd2HistoryJob:
         ``closed/fold=<watermark>/`` segment (prior folds untouched —
         O(Δ-since-last-compaction), never O(|history|)); each key's
         still-open EVENT is retained as the folded events subtree (a
-        later close must be able to bound it). Atomic ``_CURRENT``
-        swap; run with the job quiesced (the family contract).
-        Returns subtrees folded."""
-        gen = _resolve(self.history_root)
-        batches = _ingest_batches(os.path.join(gen, _EVENTS))
+        later close must be able to bound it). Committed as a new
+        generation (streaming/store.py); run with the job quiesced
+        (the family contract). Returns subtrees folded."""
+        gen = self.store.current()
+        batches = self.store.batches(gen)
         if len(batches) <= max_batches:
             return 0
-        hi = max(int(b.split("=", 1)[1]) for b in batches)
-        if hi <= _compacted_through(gen):
+        wm = self.store.watermark(gen)
+        if self.store.high_water(gen) <= wm:
             # nothing ingested since the committed watermark: a re-run
             # would reuse fold=<hi> and overwrite a COMMITTED segment
             return 0
-        base = os.path.basename(gen)
-        n = int(base.split("-", 1)[1]) if base.startswith("gen-") else 0
-        new_gen_name = f"gen-{n + 1}"
-        new_gen = os.path.join(self.history_root, new_gen_name)
 
         # GC folds orphaned by a crashed compaction (segment written,
         # pointer swap never landed): any fold above the COMMITTED
         # watermark was never referenced, and a retry at a different
         # watermark would otherwise double-count its versions
-        wm = _compacted_through(gen)
         for f in self._fold_dirs():
             if int(f.split("=", 1)[1]) > wm:
                 shutil.rmtree(
@@ -450,12 +436,6 @@ class Scd2HistoryJob:
         ev = self._read_events().localCheckpoint()  # versions + open fold
         vers = versions_of_events(ev, self.key_cols)
         newly_closed = vers.filter(~F.col("is_current"))
-        # append-only: exactly the versions closed since the last
-        # compaction — each closes once, so each lands in one fold
-        newly_closed.write.mode("overwrite").parquet(
-            os.path.join(self._closed_root(), f"fold={hi}")
-        )
-
         open_events = ev.filter(F.col("kind") == "o").join(
             vers.filter("is_current").select(
                 *self.key_cols, F.col("valid_from_seq").alias("seq")
@@ -463,83 +443,35 @@ class Scd2HistoryJob:
             self.key_cols + ["seq"],
             "inner",
         ).select(*ev.columns)
-        # no coalesce: O(live keys) rows — same no-funnel rule as the
-        # per-batch event write
-        (
-            open_events.write.mode("overwrite")
-            .parquet(os.path.join(new_gen, _EVENTS, f"ingest_batch={hi}"))
-        )
-        with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-            f.write(str(hi))
-        old_ck = os.path.join(gen, "_CHECKPOINT_ID")
-        if os.path.exists(old_ck):  # stream identity rides along
-            shutil.copy(old_ck, os.path.join(new_gen, "_CHECKPOINT_ID"))
-        _swap_current(self.history_root, new_gen_name)
-        if gc_previous:
-            if gen == self.history_root:
-                # root-as-generation: only the events subtree belongs
-                # to the old generation — closed/ is the shared store
-                shutil.rmtree(os.path.join(gen, _EVENTS), ignore_errors=True)
-            else:
-                shutil.rmtree(gen, ignore_errors=True)
+
+        def fold(gen, new_gen, hi):
+            # append-only: exactly the versions closed since the last
+            # compaction — each closes once, so each lands in one fold
+            newly_closed.write.mode("overwrite").parquet(
+                os.path.join(self._closed_root(), f"fold={hi}")
+            )
+            # no coalesce: O(live keys) rows — same no-funnel rule as
+            # the per-batch event write
+            (
+                open_events.write.mode("overwrite")
+                .parquet(os.path.join(new_gen, _EVENTS, f"ingest_batch={hi}"))
+            )
+
+        # root-as-generation GC removes only events/ — closed/ is the
+        # store shared across generations
+        self.store.commit_generation(fold, gc_previous=gc_previous)
         return len(batches)
 
-    # -- lifecycle ---------------------------------------------------------
-
-    def start(self) -> "Scd2HistoryJob":
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self.source_dir)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_dir, "scd2_history"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "Scd2HistoryJob":
-        if self.query is None:
-            self.start()
-        return self
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
-        gen = _resolve(self.history_root)
-        batches = [
-            int(b.split("=", 1)[1])
-            for b in _ingest_batches(os.path.join(gen, _EVENTS))
-        ]
-        return {
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "max_ingest_batch": max(batches, default=-1),
-        }
+        return self.store.position()
 
     def stats(self) -> dict:
-        gen = _resolve(self.history_root)
         return {
             "type": "scd2_history",
-            "active": self.query is not None and self.query.isActive,
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "ingest_batches": len(_ingest_batches(os.path.join(gen, _EVENTS))),
+            "active": self.active,
+            **self.store.stats(),
             "closed_folds": len(self._fold_dirs()),
             "retained_from_seq": self.retained_from_seq(),
         }

@@ -66,7 +66,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from dtle_spark.catalog import SchemaCatalog
 from dtle_spark.model import JobConfig, TableConfig
-from dtle_spark.streaming.jobs import JobManager
+from dtle_spark.streaming.jobs import JOB_TYPES, JobManager
 
 _JOB_RE = re.compile(
     r"^/v2/job/([^/]+)(?:/(pause|resume|position|metrics|reverse|versions"
@@ -157,147 +157,24 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._send(400, {
                         "error": "target_format does not apply to "
                                  "subscription jobs (frames log only)"})
-                if d.get("type") == "stream_profile":
-                    # sixth job type: the sketch profiler — the spec is
-                    # plain JSON end to end (SQL-string key/value exprs)
-                    required = ["name", "source_dir", "profile_root",
-                                "checkpoint_dir", "key_sql", "value_sql"]
-                    missing = [k for k in required if not d.get(k)]
-                    if missing:
-                        return self._send(400, {
-                            "error": f"missing required fields: {missing}"})
-                    kw = {k: d[k] for k in (
-                        "schema", "depth", "width", "k", "subdiv",
-                        "max_files_per_trigger", "group_sql",
-                        "auto_compact_batches",
-                    ) if k in d}
-                    self.manager.create_stream_profile(
-                        d["name"], d["source_dir"], d["profile_root"],
-                        d["checkpoint_dir"], d["key_sql"], d["value_sql"],
-                        start=bool(d.get("start", True)), **kw,
-                    )
-                    return self._send(201, {"created": d["name"]})
-                if d.get("type") == "agg_maintain":
-                    # seventh job type: incremental rollup maintenance —
-                    # plain-JSON spec (SQL-expression dicts + row DDL)
-                    required = ["name", "source_dir", "view_root",
-                                "checkpoint_dir", "group_sqls",
-                                "measure_sqls", "row_schema_ddl"]
-                    missing = [k for k in required if not d.get(k)]
-                    if missing:
-                        return self._send(400, {
-                            "error": f"missing required fields: {missing}"})
-                    kw = {k: d[k] for k in (
-                        "max_files_per_trigger", "auto_compact_batches",
-                    ) if k in d}
-                    self.manager.create_agg_maintain(
-                        d["name"], d["source_dir"], d["view_root"],
-                        d["checkpoint_dir"], d["group_sqls"],
-                        d["measure_sqls"],
-                        row_schema_ddl=d["row_schema_ddl"],
-                        start=bool(d.get("start", True)), **kw,
-                    )
-                    return self._send(201, {"created": d["name"]})
-                if d.get("type") == "scd2_history":
-                    # eighth job type: SCD2 temporal-history maintenance
-                    required = ["name", "source_dir", "history_root",
-                                "checkpoint_dir", "key_cols",
-                                "row_schema_ddl"]
-                    missing = [k for k in required if not d.get(k)]
-                    if missing:
-                        return self._send(400, {
-                            "error": f"missing required fields: {missing}"})
-                    kw = {k: d[k] for k in (
-                        "max_files_per_trigger", "auto_compact_batches",
-                    ) if k in d}
-                    self.manager.create_scd2_history(
-                        d["name"], d["source_dir"], d["history_root"],
-                        d["checkpoint_dir"], d["key_cols"],
-                        row_schema_ddl=d["row_schema_ddl"],
-                        start=bool(d.get("start", True)), **kw,
-                    )
-                    return self._send(201, {"created": d["name"]})
-                if d.get("type") == "join_maintain":
-                    # ninth job type: materialized join-view maintenance
-                    required = ["name", "source_dir", "dim_dir",
-                                "view_root", "checkpoint_dir", "key_cols",
-                                "fk", "right_pk", "right_cols",
-                                "row_schema_ddl"]
-                    missing = [k for k in required if not d.get(k)]
-                    if missing:
-                        return self._send(400, {
-                            "error": f"missing required fields: {missing}"})
-                    kw = {k: d[k]
-                          for k in ("max_files_per_trigger", "extra_dims",
-                                    "cluster_by", "auto_compact_batches")
-                          if k in d}
-                    self.manager.create_join_maintain(
-                        d["name"], d["source_dir"], d["dim_dir"],
-                        d["view_root"], d["checkpoint_dir"], d["key_cols"],
-                        d["fk"], d["right_pk"], d["right_cols"],
-                        row_schema_ddl=d["row_schema_ddl"],
-                        start=bool(d.get("start", True)), **kw,
-                    )
-                    return self._send(201, {"created": d["name"]})
-                if d.get("type") == "corpus_ingest":
-                    # tenth job type: the streaming corpus builder —
-                    # plain-JSON spec (DDL schema string, float dedup
-                    # threshold, drift-gate thresholds dict)
-                    required = ["name", "source_dir", "target_root",
-                                "checkpoint_dir"]
-                    missing = [k for k in required if not d.get(k)]
-                    if missing:
-                        return self._send(400, {
-                            "error": f"missing required fields: {missing}"})
-                    kw = {k: d[k] for k in (
-                        "schema", "id_col", "text_col", "threshold",
-                        "max_files_per_trigger", "gate_thresholds",
-                        "gate_key_sql", "gate_value_sql",
-                        "auto_compact_segments",
-                    ) if k in d}
-                    self.manager.create_corpus_ingest(
-                        d["name"], d["source_dir"], d["target_root"],
-                        d["checkpoint_dir"],
-                        start=bool(d.get("start", True)), **kw,
-                    )
-                    return self._send(201, {"created": d["name"]})
-                if d.get("type") in ("vector_maintain", "ann_serving"):
-                    # vector jobs (4th/5th job types): the model is NOT
-                    # in the request body — it loads from the index
-                    # generation's persisted copy (save_model), so the
-                    # index must be bootstrapped before HTTP create
-                    required = ["name", "source_dir", "index_root",
-                                "checkpoint_dir"]
-                    if d["type"] == "ann_serving":
-                        required.append("results_root")
-                    missing = [k for k in required if not d.get(k)]
+                jt = JOB_TYPES.get(d.get("type"))
+                if jt is not None:
+                    # table-driven job types (jobs.JOB_TYPES): plain-JSON
+                    # specs end to end. Vector jobs take no model in the
+                    # body — it loads from the index generation's
+                    # persisted copy, so the index must be bootstrapped
+                    # before HTTP create
+                    missing = [k for k in ("name", *jt.required) if not d.get(k)]
                     if missing:
                         # a malformed body is a 400, not the 404 a bare
                         # KeyError would become in _dispatch
                         return self._send(400, {
                             "error": f"missing required fields: {missing}"})
-                    keys = (
-                        ("m", "ksub", "dim", "id_col", "vec_col", "schema",
-                         "max_files_per_trigger", "carry_cols", "wire_table",
-                         "auto_compact_batches")
-                        if d["type"] == "vector_maintain"
-                        else ("k", "nprobe", "m", "ksub", "dim", "rerank",
-                              "where", "exclude_self", "id_col", "vec_col",
-                              "schema", "max_files_per_trigger")
+                    self.manager.create_job(
+                        d["type"], d["name"],
+                        start=bool(d.get("start", True)),
+                        **{k: d[k] for k in (*jt.required, *jt.optional) if k in d},
                     )
-                    kw = {k: d[k] for k in keys if k in d}
-                    if d["type"] == "vector_maintain":
-                        self.manager.create_vector_maintain(
-                            d["name"], d["source_dir"], d["index_root"],
-                            d["checkpoint_dir"],
-                            start=bool(d.get("start", True)), **kw,
-                        )
-                    else:
-                        self.manager.create_ann_serving(
-                            d["name"], d["source_dir"], d["index_root"],
-                            d["results_root"], d["checkpoint_dir"],
-                            start=bool(d.get("start", True)), **kw,
-                        )
                     return self._send(201, {"created": d["name"]})
                 if d.get("type") == "subscription":
                     # third job type: change log -> Debezium frames

@@ -9,8 +9,10 @@ because Spark moves the data.
 from __future__ import annotations
 
 import dataclasses
+import importlib
 import json
 import os
+from typing import Callable
 
 from dtle_spark.catalog import SchemaCatalog
 from dtle_spark.model import JobConfig, TableConfig
@@ -193,378 +195,37 @@ class JobManager:
             sj.start()
         return sj
 
-    def create_vector_maintain(
-        self,
-        name: str,
-        source_dir: str,
-        index_root: str,
-        checkpoint_dir: str,
-        centroids=None,
-        codebook=None,
-        start: bool = True,
-        wire_table: dict | None = None,
-        **kw,
-    ):
-        """The vector-index maintain job (streaming/ann_serving.py) as
-        a MANAGED job: same create/pause/resume/metrics/delete/recover
-        control plane as replication and subscription jobs. The model
-        tables are NOT part of the spec (DataFrames do not serialize) —
-        they are persisted beside the index (save_model) at create and
-        reloaded from the active generation on recover, so the spec
-        stays a plain JSON descriptor.
-
-        ``wire_table`` makes the job a CDC-WIRE bridge (the replicated
-        embeddings table feeds the index): a plain-JSON descriptor
-        resolved through wire_vector_hooks, so — unlike raw
-        reader/transform callables — it persists in the spec and
-        recover() rebuilds the bridge."""
-        from dtle_spark.streaming.ann_serving import (
-            VectorIndexMaintainJob,
-            resolve_index_path,
-            save_model,
-            wire_vector_hooks,
-        )
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        if wire_table is not None:
-            if "reader" in kw or "transform" in kw:
-                raise ValueError(
-                    "wire_table resolves its own reader/transform; pass "
-                    "one or the other"
-                )
-            kw["reader"], kw["transform"] = wire_vector_hooks(
-                source_dir, wire_table,
-                max_files_per_trigger=kw.get("max_files_per_trigger", 1),
-            )
-            kw.setdefault("id_col", wire_table.get("id_col", "vec_id"))
-            kw.setdefault("vec_col", wire_table.get("vec_col", "embedding"))
-            kw.setdefault(
-                "carry_cols", tuple(wire_table.get("carry_cols", ()))
-            )
-        vj = VectorIndexMaintainJob(
-            self.spark, source_dir, index_root, checkpoint_dir,
-            centroids, codebook, **kw,
-        )
-        # make the generation self-describing NOW, not at first batch:
-        # recover() must be able to reload the model before any data.
-        # Skip when already persisted (recover path / reindexed gen) —
-        # rewriting identical tables races concurrent serving reads.
-        gen = resolve_index_path(index_root)
-        from dtle_spark.streaming.ann_serving import _MODEL_DIR
-
-        if not os.path.isdir(os.path.join(gen, _MODEL_DIR)):
-            save_model(gen, vj.centroids, vj.codebook)
-        self._persist_spec(name, {
-            "type": "vector_maintain",
-            "source_dir": source_dir,
-            "index_root": index_root,
-            "checkpoint_dir": checkpoint_dir,
-            "wire_table": wire_table,
-            # the resolved hooks are NOT spec-persistable; wire_table
-            # regenerates them on recover
-            "kw": {k: v for k, v in kw.items()
-                   if not (wire_table is not None
-                           and k in ("reader", "transform"))},
-        })
-        self._jobs[name] = vj
-        if start:
-            vj.start()
-        return vj
-
-    def create_ann_serving(
-        self,
-        name: str,
-        query_source_dir: str,
-        index_root: str,
-        results_root: str,
-        checkpoint_dir: str,
-        centroids=None,
-        codebook=None,
-        start: bool = True,
-        **kw,
-    ):
-        """The ANN serving job as a MANAGED job (see
-        create_vector_maintain). ``where`` filtered-search predicates
-        must be SQL strings here (Columns do not serialize into the
-        spec); the non-serializable ``vectors`` rerank callable is
-        rejected by the spec round-trip check."""
-        from dtle_spark.streaming.ann_serving import AnnServingJob
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        where = kw.get("where")
-        if where is not None and not isinstance(where, str):
+    def create_job(self, type_: str, name: str, start: bool = True, **fields):
+        """Create a managed job of a table-driven type (:data:`JOB_TYPES`)
+        — the same create/pause/resume/metrics/delete/recover control
+        plane as replication and subscription jobs. ``fields`` are the
+        type's spec fields plus any constructor keyword arguments; the
+        spec persists them as plain JSON so recover() rebuilds the job
+        verbatim against the same roots (the store's checkpoint stamp
+        guarantees the stream pairing)."""
+        t = JOB_TYPES.get(type_)
+        if t is None:
             raise ValueError(
-                "managed serving jobs take `where` as a SQL string "
-                "(Column predicates cannot be persisted for recover())"
+                f"unknown job type {type_!r}; known: {sorted(JOB_TYPES)}"
             )
-        sj = AnnServingJob(
-            self.spark, query_source_dir, index_root, results_root,
-            checkpoint_dir, centroids, codebook, **kw,
-        )
-        self._persist_spec(name, {
-            "type": "ann_serving",
-            "source_dir": query_source_dir,
-            "index_root": index_root,
-            "results_root": results_root,
-            "checkpoint_dir": checkpoint_dir,
-            "kw": kw,
-        })
-        self._jobs[name] = sj
-        if start:
-            sj.start()
-        return sj
-
-    def create_stream_profile(
-        self,
-        name: str,
-        source_dir: str,
-        profile_root: str,
-        checkpoint_dir: str,
-        key_sql: str,
-        value_sql: str,
-        start: bool = True,
-        **kw,
-    ):
-        """The sketch profiler (streaming/profile.py) as a MANAGED job:
-        the spec is already plain JSON (key_sql/value_sql are SQL
-        strings, sketch dims are ints — no model tables, no callables),
-        so recover() rebuilds it verbatim and the stream resumes from
-        its checkpoint against the same profile root (the
-        _CHECKPOINT_ID stamp guarantees the pairing)."""
-        from dtle_spark.streaming.profile import StreamProfileJob
-
         if name in self._jobs:
             raise ValueError(f"job {name!r} already exists")
-        pj = StreamProfileJob(
-            self.spark, source_dir, profile_root, checkpoint_dir,
-            key_sql, value_sql, **kw,
+        missing = [f for f in t.args if f not in fields]
+        if missing:
+            raise TypeError(f"{type_} job {name!r} needs {missing}")
+        spec = {f: fields.pop(f) for f in t.args}
+        if t.hook_field:
+            spec[t.hook_field] = fields.pop(t.hook_field, None)
+        ctor_only = t.prepare(self, spec, fields) if t.prepare else {}
+        module, cls = t.cls.split(":")
+        job = getattr(importlib.import_module(module), cls)(
+            self.spark, *[spec[f] for f in t.args], **fields, **ctor_only
         )
-        self._persist_spec(name, {
-            "type": "stream_profile",
-            "source_dir": source_dir,
-            "profile_root": profile_root,
-            "checkpoint_dir": checkpoint_dir,
-            "key_sql": key_sql,
-            "value_sql": value_sql,
-            "kw": kw,
-        })
-        self._jobs[name] = pj
+        self._persist_spec(name, {"type": type_, **spec, "kw": fields})
+        self._jobs[name] = job
         if start:
-            pj.start()
-        return pj
-
-    def create_agg_maintain(
-        self,
-        name: str,
-        source_dir: str,
-        view_root: str,
-        checkpoint_dir: str,
-        group_sqls: dict,
-        measure_sqls: dict,
-        row_schema_ddl: str | None = None,
-        start: bool = True,
-        **kw,
-    ):
-        """Incremental rollup maintenance (streaming/agg_maintain.py)
-        as the seventh managed job type. The spec is plain JSON
-        (group/measure SQL-expression dicts, the row schema as a DDL
-        string from which the change-record schema is rebuilt), so
-        recover() reconstructs the job verbatim and the stream resumes
-        against the same view root (_CHECKPOINT_ID pairing)."""
-        from pyspark.sql import types as T
-
-        from dtle_spark.model import change_schema
-        from dtle_spark.streaming.agg_maintain import AggMaintainJob
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        if (
-            self.spec_root is not None
-            and row_schema_ddl is None
-            and "schema" in kw
-            and "reader" not in kw
-        ):
-            # a raw StructType cannot round-trip through the JSON spec:
-            # recover() would rebuild a job that fails at start()
-            raise ValueError(
-                "persistent managers need row_schema_ddl (a DDL string), "
-                "not schema=: the spec must rebuild the stream schema on "
-                "recover()"
-            )
-        if row_schema_ddl is not None:
-            kw = {**kw, "schema": change_schema(T.StructType.fromDDL(row_schema_ddl))}
-        aj = AggMaintainJob(
-            self.spark, source_dir, view_root, checkpoint_dir,
-            group_sqls, measure_sqls, **kw,
-        )
-        self._persist_spec(name, {
-            "type": "agg_maintain",
-            "source_dir": source_dir,
-            "view_root": view_root,
-            "checkpoint_dir": checkpoint_dir,
-            "group_sqls": dict(group_sqls),
-            "measure_sqls": dict(measure_sqls),
-            "row_schema_ddl": row_schema_ddl,
-            "kw": {k: v for k, v in kw.items() if k != "schema"},
-        })
-        self._jobs[name] = aj
-        if start:
-            aj.start()
-        return aj
-
-    def create_scd2_history(
-        self,
-        name: str,
-        source_dir: str,
-        history_root: str,
-        checkpoint_dir: str,
-        key_cols: list,
-        row_schema_ddl: str | None = None,
-        start: bool = True,
-        **kw,
-    ):
-        """SCD2 history maintenance (streaming/history.py) as the
-        eighth managed job type — same plain-JSON spec discipline as
-        the rollup maintainer (key_cols list + row schema as DDL)."""
-        from pyspark.sql import types as T
-
-        from dtle_spark.model import change_schema
-        from dtle_spark.streaming.history import Scd2HistoryJob
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        if (
-            self.spec_root is not None
-            and row_schema_ddl is None
-            and "schema" in kw
-            and "reader" not in kw
-        ):
-            raise ValueError(
-                "persistent managers need row_schema_ddl (a DDL string), "
-                "not schema=: the spec must rebuild the stream schema on "
-                "recover()"
-            )
-        if row_schema_ddl is not None:
-            kw = {**kw, "schema": change_schema(T.StructType.fromDDL(row_schema_ddl))}
-        hj = Scd2HistoryJob(
-            self.spark, source_dir, history_root, checkpoint_dir,
-            list(key_cols), **kw,
-        )
-        self._persist_spec(name, {
-            "type": "scd2_history",
-            "source_dir": source_dir,
-            "history_root": history_root,
-            "checkpoint_dir": checkpoint_dir,
-            "key_cols": list(key_cols),
-            "row_schema_ddl": row_schema_ddl,
-            "kw": {k: v for k, v in kw.items() if k != "schema"},
-        })
-        self._jobs[name] = hj
-        if start:
-            hj.start()
-        return hj
-
-    def create_join_maintain(
-        self,
-        name: str,
-        source_dir: str,
-        dim_dir: str,
-        view_root: str,
-        checkpoint_dir: str,
-        key_cols: list,
-        fk: str,
-        right_pk: str,
-        right_cols: dict,
-        row_schema_ddl: str | None = None,
-        start: bool = True,
-        **kw,
-    ):
-        """Materialized join-view maintenance (streaming/
-        join_maintain.py) as the ninth managed job type — same
-        plain-JSON spec discipline (key list, fk/pk names, the
-        right-column map, the row schema as DDL), so recover()
-        rebuilds the job verbatim and the stream resumes against the
-        same view root (_CHECKPOINT_ID pairing). The dim side needs no
-        spec entry beyond its table path: the job derives per-batch
-        dim dirt from its own digest snapshots."""
-        from pyspark.sql import types as T
-
-        from dtle_spark.model import change_schema
-        from dtle_spark.streaming.join_maintain import JoinViewMaintainJob
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        if (
-            self.spec_root is not None
-            and row_schema_ddl is None
-            and "schema" in kw
-            and "reader" not in kw
-        ):
-            raise ValueError(
-                "persistent managers need row_schema_ddl (a DDL string), "
-                "not schema=: the spec must rebuild the stream schema on "
-                "recover()"
-            )
-        if row_schema_ddl is not None:
-            kw = {**kw, "schema": change_schema(T.StructType.fromDDL(row_schema_ddl))}
-        jj = JoinViewMaintainJob(
-            self.spark, source_dir, dim_dir, view_root, checkpoint_dir,
-            list(key_cols), fk, right_pk, dict(right_cols), **kw,
-        )
-        self._persist_spec(name, {
-            "type": "join_maintain",
-            "source_dir": source_dir,
-            "dim_dir": dim_dir,
-            "view_root": view_root,
-            "checkpoint_dir": checkpoint_dir,
-            "key_cols": list(key_cols),
-            "fk": fk,
-            "right_pk": right_pk,
-            "right_cols": dict(right_cols),
-            "row_schema_ddl": row_schema_ddl,
-            "kw": {k: v for k, v in kw.items() if k != "schema"},
-        })
-        self._jobs[name] = jj
-        if start:
-            jj.start()
-        return jj
-
-    def create_corpus_ingest(
-        self,
-        name: str,
-        source_dir: str,
-        target_root: str,
-        checkpoint_dir: str,
-        start: bool = True,
-        **kw,
-    ):
-        """The streaming corpus builder (streaming/corpus_ingest.py) as
-        the tenth managed job type. The spec is plain JSON end to end —
-        schema is a DDL string, dedup threshold a float, the drift-gate
-        config a {check: max_deviation} dict plus two SQL expressions —
-        so recover() rebuilds the job verbatim and the stream resumes
-        against the same target (manifest watermarks make replays
-        no-ops)."""
-        from dtle_spark.streaming.corpus_ingest import CorpusIngestJob
-
-        if name in self._jobs:
-            raise ValueError(f"job {name!r} already exists")
-        cj = CorpusIngestJob(
-            self.spark, source_dir, target_root, checkpoint_dir, **kw
-        )
-        self._persist_spec(name, {
-            "type": "corpus_ingest",
-            "source_dir": source_dir,
-            "target_root": target_root,
-            "checkpoint_dir": checkpoint_dir,
-            "kw": kw,
-        })
-        self._jobs[name] = cj
-        if start:
-            cj.start()
-        return cj
+            job.start()
+        return job
 
     def _persist_spec(self, name: str, spec: dict) -> None:
         """Atomic spec write. Kwarg serializability is validated HERE,
@@ -596,86 +257,19 @@ class JobManager:
                 continue
             with open(os.path.join(self.spec_root, fname)) as f:
                 spec = json.load(f)
-            if spec.get("type") == "stream_profile":
-                pname = fname[: -len(".json")]
-                if pname in self._jobs:
+            t = JOB_TYPES.get(spec.get("type"))
+            if t is not None:
+                name = fname[: -len(".json")]
+                if name in self._jobs:
                     continue
-                self.create_stream_profile(
-                    pname, spec["source_dir"], spec["profile_root"],
-                    spec["checkpoint_dir"], spec["key_sql"],
-                    spec["value_sql"], start=start, **spec.get("kw", {}),
-                )
-                out.append(pname)
-                continue
-            if spec.get("type") == "agg_maintain":
-                aname = fname[: -len(".json")]
-                if aname in self._jobs:
-                    continue
-                self.create_agg_maintain(
-                    aname, spec["source_dir"], spec["view_root"],
-                    spec["checkpoint_dir"], spec["group_sqls"],
-                    spec["measure_sqls"],
-                    row_schema_ddl=spec.get("row_schema_ddl"),
-                    start=start, **spec.get("kw", {}),
-                )
-                out.append(aname)
-                continue
-            if spec.get("type") == "scd2_history":
-                hname = fname[: -len(".json")]
-                if hname in self._jobs:
-                    continue
-                self.create_scd2_history(
-                    hname, spec["source_dir"], spec["history_root"],
-                    spec["checkpoint_dir"], spec["key_cols"],
-                    row_schema_ddl=spec.get("row_schema_ddl"),
-                    start=start, **spec.get("kw", {}),
-                )
-                out.append(hname)
-                continue
-            if spec.get("type") == "join_maintain":
-                jname = fname[: -len(".json")]
-                if jname in self._jobs:
-                    continue
-                self.create_join_maintain(
-                    jname, spec["source_dir"], spec["dim_dir"],
-                    spec["view_root"], spec["checkpoint_dir"],
-                    spec["key_cols"], spec["fk"], spec["right_pk"],
-                    spec["right_cols"],
-                    row_schema_ddl=spec.get("row_schema_ddl"),
-                    start=start, **spec.get("kw", {}),
-                )
-                out.append(jname)
-                continue
-            if spec.get("type") == "corpus_ingest":
-                cname = fname[: -len(".json")]
-                if cname in self._jobs:
-                    continue
-                self.create_corpus_ingest(
-                    cname, spec["source_dir"], spec["target_root"],
-                    spec["checkpoint_dir"], start=start,
+                fields = {f: spec[f] for f in t.args}
+                if t.hook_field:
+                    fields[t.hook_field] = spec.get(t.hook_field)
+                self.create_job(
+                    spec["type"], name, start=start, **fields,
                     **spec.get("kw", {}),
                 )
-                out.append(cname)
-                continue
-            if spec.get("type") in ("vector_maintain", "ann_serving"):
-                vname = fname[: -len(".json")]
-                if vname in self._jobs:
-                    continue
-                # model reloads from the index's active generation
-                if spec["type"] == "vector_maintain":
-                    self.create_vector_maintain(
-                        vname, spec["source_dir"], spec["index_root"],
-                        spec["checkpoint_dir"], start=start,
-                        wire_table=spec.get("wire_table"),
-                        **spec.get("kw", {}),
-                    )
-                else:
-                    self.create_ann_serving(
-                        vname, spec["source_dir"], spec["index_root"],
-                        spec["results_root"], spec["checkpoint_dir"],
-                        start=start, **spec.get("kw", {}),
-                    )
-                out.append(vname)
+                out.append(name)
                 continue
             job = job_config_from_dict(spec["job"])
             if job.name in self._jobs:
@@ -890,3 +484,177 @@ class JobManager:
             name, source_dir, target_root, checkpoint_dir, catalog,
             local_sid=local_sid, start=start, **kw,
         )
+
+
+# -- table-driven job types ---------------------------------------------
+#
+# One entry per managed type beyond replication/subscription (whose
+# JobConfig + catalog path stays in JobManager.create /
+# create_subscription). JobManager.create_job, recover() and the HTTP
+# POST /v2/jobs route all read this table.
+
+
+def _row_schema(mgr: JobManager, spec: dict, kw: dict) -> dict:
+    """The change-record schema, rebuilt from a DDL string so it can
+    round-trip through the JSON spec."""
+    from pyspark.sql import types as T
+
+    from dtle_spark.model import change_schema
+
+    row_schema_ddl = spec["row_schema_ddl"]
+    if (
+        mgr.spec_root is not None
+        and row_schema_ddl is None
+        and "schema" in kw
+        and "reader" not in kw
+    ):
+        # a raw StructType cannot round-trip through the JSON spec:
+        # recover() would rebuild a job that fails at start()
+        raise ValueError(
+            "persistent managers need row_schema_ddl (a DDL string), "
+            "not schema=: the spec must rebuild the stream schema on "
+            "recover()"
+        )
+    schema = kw.pop("schema", None)
+    if row_schema_ddl is not None:
+        schema = change_schema(T.StructType.fromDDL(row_schema_ddl))
+    return {} if schema is None else {"schema": schema}
+
+
+def _model_tables(kw: dict) -> dict:
+    """The vector model tables are never part of the spec (DataFrames
+    do not serialize): a job reloads them from the index generation's
+    persisted copy (ann_serving.save_model)."""
+    return {k: kw.pop(k) for k in ("centroids", "codebook") if k in kw}
+
+
+def _vector_maintain(mgr: JobManager, spec: dict, kw: dict) -> dict:
+    """``wire_table`` makes the job a CDC-WIRE bridge (the replicated
+    embeddings table feeds the index): a plain-JSON descriptor resolved
+    through wire_vector_hooks, so — unlike raw reader/transform
+    callables — it persists in the spec and recover() rebuilds the
+    bridge."""
+    ctor_only = _model_tables(kw)
+    wire_table = spec["wire_table"]
+    if wire_table is not None:
+        from dtle_spark.streaming.ann_serving import wire_vector_hooks
+
+        if "reader" in kw or "transform" in kw:
+            raise ValueError(
+                "wire_table resolves its own reader/transform; pass "
+                "one or the other"
+            )
+        ctor_only["reader"], ctor_only["transform"] = wire_vector_hooks(
+            spec["source_dir"], wire_table,
+            max_files_per_trigger=kw.get("max_files_per_trigger", 1),
+        )
+        kw.setdefault("id_col", wire_table.get("id_col", "vec_id"))
+        kw.setdefault("vec_col", wire_table.get("vec_col", "embedding"))
+        kw.setdefault("carry_cols", tuple(wire_table.get("carry_cols", ())))
+    return ctor_only
+
+
+def _ann_serving(mgr: JobManager, spec: dict, kw: dict) -> dict:
+    """``where`` filtered-search predicates must be SQL strings here
+    (Columns do not serialize into the spec); the non-serializable
+    ``vectors`` rerank callable is rejected by the spec round-trip
+    check."""
+    where = kw.get("where")
+    if where is not None and not isinstance(where, str):
+        raise ValueError(
+            "managed serving jobs take `where` as a SQL string "
+            "(Column predicates cannot be persisted for recover())"
+        )
+    return _model_tables(kw)
+
+
+@dataclasses.dataclass(frozen=True)
+class JobType:
+    """``cls``: "module:Class". ``args``: the spec fields, in persisted
+    order, passed positionally after ``spark``. ``hook_field``: the one
+    spec field (persisted after ``args``, default None) the ``prepare``
+    hook consumes instead of the constructor. ``prepare(manager, spec,
+    kw)`` may raise, pops constructor-only kwargs out of ``kw`` (which
+    persists as the spec's "kw") and returns them.
+    ``required`` / ``optional``: the HTTP create body's fields beyond
+    ``name`` (missing required ones are a 400, in this order)."""
+
+    cls: str
+    args: tuple[str, ...]
+    required: tuple[str, ...]
+    optional: tuple[str, ...]
+    hook_field: str | None = None
+    prepare: Callable | None = None
+
+
+_BATCHED = ("max_files_per_trigger", "auto_compact_batches")
+_ROW_DDL = dict(hook_field="row_schema_ddl", prepare=_row_schema)
+
+JOB_TYPES: dict[str, JobType] = {
+    "vector_maintain": JobType(
+        "dtle_spark.streaming.ann_serving:VectorIndexMaintainJob",
+        args=("source_dir", "index_root", "checkpoint_dir"),
+        required=("source_dir", "index_root", "checkpoint_dir"),
+        optional=("m", "ksub", "dim", "id_col", "vec_col", "schema",
+                  "max_files_per_trigger", "carry_cols", "wire_table",
+                  "auto_compact_batches"),
+        hook_field="wire_table", prepare=_vector_maintain,
+    ),
+    "ann_serving": JobType(
+        "dtle_spark.streaming.ann_serving:AnnServingJob",
+        args=("source_dir", "index_root", "results_root", "checkpoint_dir"),
+        required=("source_dir", "index_root", "checkpoint_dir",
+                  "results_root"),
+        optional=("k", "nprobe", "m", "ksub", "dim", "rerank", "where",
+                  "exclude_self", "id_col", "vec_col", "schema",
+                  "max_files_per_trigger"),
+        prepare=_ann_serving,
+    ),
+    "stream_profile": JobType(
+        "dtle_spark.streaming.profile:StreamProfileJob",
+        args=("source_dir", "profile_root", "checkpoint_dir", "key_sql",
+              "value_sql"),
+        required=("source_dir", "profile_root", "checkpoint_dir",
+                  "key_sql", "value_sql"),
+        optional=("schema", "depth", "width", "k", "subdiv",
+                  "max_files_per_trigger", "group_sql",
+                  "auto_compact_batches"),
+    ),
+    "agg_maintain": JobType(
+        "dtle_spark.streaming.agg_maintain:AggMaintainJob",
+        args=("source_dir", "view_root", "checkpoint_dir", "group_sqls",
+              "measure_sqls"),
+        required=("source_dir", "view_root", "checkpoint_dir",
+                  "group_sqls", "measure_sqls", "row_schema_ddl"),
+        optional=_BATCHED,
+        **_ROW_DDL,
+    ),
+    "scd2_history": JobType(
+        "dtle_spark.streaming.history:Scd2HistoryJob",
+        args=("source_dir", "history_root", "checkpoint_dir", "key_cols"),
+        required=("source_dir", "history_root", "checkpoint_dir",
+                  "key_cols", "row_schema_ddl"),
+        optional=_BATCHED,
+        **_ROW_DDL,
+    ),
+    "join_maintain": JobType(
+        "dtle_spark.streaming.join_maintain:JoinViewMaintainJob",
+        args=("source_dir", "dim_dir", "view_root", "checkpoint_dir",
+              "key_cols", "fk", "right_pk", "right_cols"),
+        required=("source_dir", "dim_dir", "view_root", "checkpoint_dir",
+                  "key_cols", "fk", "right_pk", "right_cols",
+                  "row_schema_ddl"),
+        optional=("max_files_per_trigger", "extra_dims", "cluster_by",
+                  "auto_compact_batches"),
+        **_ROW_DDL,
+    ),
+    "corpus_ingest": JobType(
+        "dtle_spark.streaming.corpus_ingest:CorpusIngestJob",
+        args=("source_dir", "target_root", "checkpoint_dir"),
+        required=("source_dir", "target_root", "checkpoint_dir"),
+        optional=("schema", "id_col", "text_col", "threshold",
+                  "max_files_per_trigger", "gate_thresholds",
+                  "gate_key_sql", "gate_value_sql",
+                  "auto_compact_segments"),
+    ),
+}

@@ -11,12 +11,12 @@ upserts and tombstones (`versions/ingest_batch=<id>/`, columns = view
 columns + __seq + __deleted); ``view()`` folds latest-per-key on read
 and drops tombstones — never a view rewrite on the ingest path. The
 seeded bootstrap lives in ``base/`` (implicit seq −1) and ``compact()``
-folds everything into a fresh generation's base behind the atomic
-``_CURRENT`` pointer, with the `_COMPACTED_THROUGH` watermark making
-replayed pre-compaction batches no-ops (tombstones are DROPPED by the
-fold: replays at or below the watermark are skipped, and every later
-batch re-emits its own rows, so a folded tombstone can never be needed
-to shadow anything again).
+folds everything into a fresh generation's base, committed through the
+shared generation store (streaming/store.py), whose compaction
+watermark makes replayed pre-compaction batches no-ops (tombstones are
+DROPPED by the fold: replays at or below the watermark are skipped,
+and every later batch re-emits its own rows, so a folded tombstone can
+never be needed to shadow anything again).
 
 The dim side needs no side channel: the dim's OWN apply lane publishes
 its table (any parquet path); this job keeps a per-batch PK→xxhash64
@@ -45,27 +45,25 @@ cost.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dtle_spark.operators.apply import dedupe_redelivered, latest_image_per_key
 from dtle_spark.operators.join_view import DimSpec
-from dtle_spark.streaming.ann_serving import (
-    _check_stream_stamp,
-    _ingest_batches,
-    _swap_current,
-)
-from dtle_spark.streaming.profile import _compacted_through, _resolve
 from dtle_spark.streaming.schema_guard import (
     check_upstream_schema,
     require_columns,
     struct_cols,
 )
+from dtle_spark.streaming.store import (
+    GenerationStore,
+    StreamJob,
+    batch_no as _batch_no,
+    ingest_batches as _ingest_batches,
+)
 from dtle_spark.sinks.lease import leased
 
-_COMPACT_WM_FILE = "_COMPACTED_THROUGH"
 _VERSIONS = "versions"
 _BASE = "base"
 _DIMDIG = "_dimdigest"
@@ -75,11 +73,7 @@ _RPK = "__rpk"
 _DIG = "__dig"
 
 
-def _batch_no(subtree: str) -> int:
-    return int(subtree.split("=", 1)[1])
-
-
-class JoinViewMaintainJob:
+class JoinViewMaintainJob(StreamJob):
     """Maintain one denormalized fact ⟕ dim(s) view over a fact change
     stream plus dim table paths. ``right_cols`` maps the PRIMARY dim's
     source columns to their view names (must not collide with fact
@@ -88,6 +82,8 @@ class JoinViewMaintainJob:
     "cols"} so it rides the JSON job spec verbatim). Every dim gets
     its own digest lane and refresh carve; a fact row referencing two
     moved dims is carved once and rebuilt against ALL current dims."""
+
+    _ckpt_sub = "join_maintain"
 
     def __init__(
         self,
@@ -140,7 +136,7 @@ class JoinViewMaintainJob:
             (d["dim_dir"], DimSpec(d["fk"], d["pk"], dict(d["cols"])))
             for d in (extra_dims or [])
         ]
-        self.query = None
+        self.store = GenerationStore(view_root, (_VERSIONS,), (_BASE, _DIMDIG))
 
     def _write_base(self, df: DataFrame, base: str, mode: str) -> None:
         if self.cluster_by:
@@ -173,7 +169,7 @@ class JoinViewMaintainJob:
         return os.path.join(gen, _DIMDIG, f"dim={i}")
 
     def _latest_digest_before(self, i: int, batch_id: int) -> DataFrame | None:
-        root = self._digest_root(_resolve(self.view_root), i)
+        root = self._digest_root(self.store.current(), i)
         prior = [b for b in _ingest_batches(root) if _batch_no(b) < batch_id]
         if not prior:
             return None
@@ -215,7 +211,7 @@ class JoinViewMaintainJob:
         real dim drift instead of every key. Refuses to re-seed an
         existing base (the history.py lesson: a second seed
         double-counts)."""
-        gen = _resolve(self.view_root)
+        gen = self.store.current()
         base = os.path.join(gen, _BASE)
         if os.path.exists(base):
             raise ValueError(
@@ -231,9 +227,8 @@ class JoinViewMaintainJob:
 
     @leased("view_root", "join_maintain")
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        gen = _resolve(self.view_root)
-        _check_stream_stamp(gen, self.checkpoint_dir)
-        if batch_id <= _compacted_through(gen):
+        gen = self.store.admit(batch_id, self.checkpoint_dir)
+        if gen is None:
             return  # already folded by a compaction — skip
         # pin each dim ONCE per batch: a lazy spark.read re-evaluates
         # per action, so the end-of-batch digest snapshot could capture
@@ -378,7 +373,7 @@ class JoinViewMaintainJob:
         (cut strictly below ``before`` for a batch's own refresh read —
         replay idempotence). Returns view columns + __seq + __deleted;
         the caller filters tombstones."""
-        gen = _resolve(self.view_root)
+        gen = self.store.current()
         parts = []
         base = os.path.join(gen, _BASE)
         if os.path.exists(base):
@@ -432,96 +427,39 @@ class JoinViewMaintainJob:
 
     @leased("view_root", "join_maintain")
     def compact(self, max_batches: int = 16, gc_previous: bool = True) -> int:
-        """Fold base + versions into a NEW generation's base behind the
-        atomic ``_CURRENT`` pointer (run quiesced, off the ingest
-        path). Alive rows only — see the module header for why folded
-        tombstones are safely droppable. Returns subtrees folded."""
-        gen = _resolve(self.view_root)
-        vroot = os.path.join(gen, _VERSIONS)
-        batches = _ingest_batches(vroot)
+        """Fold base + versions into a NEW generation's base
+        (streaming/store.py commit_generation; run quiesced, off the
+        ingest path). Alive rows only — see the module header for why
+        folded tombstones are safely droppable. Returns subtrees
+        folded."""
+        batches = self.store.batches()
         if len(batches) <= max_batches:
             return 0
-        hi = max(_batch_no(b) for b in batches)
-        base_name = os.path.basename(gen)
-        n = int(base_name.split("-", 1)[1]) if base_name.startswith("gen-") else 0
-        new_gen = os.path.join(self.view_root, f"gen-{n + 1}")
-        self._write_base(self.view(), os.path.join(new_gen, _BASE), "overwrite")
-        for i in range(len(self.dims)):
-            dig_root = self._digest_root(gen, i)
-            digs = _ingest_batches(dig_root)
-            if digs:
-                last = max(digs, key=_batch_no)
-                self.spark.read.parquet(
-                    os.path.join(dig_root, last)
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self._digest_root(new_gen, i), f"ingest_batch={hi}")
-                )
-        with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-            f.write(str(hi))
-        old_ck = os.path.join(gen, "_CHECKPOINT_ID")
-        if os.path.exists(old_ck):
-            shutil.copy(old_ck, os.path.join(new_gen, "_CHECKPOINT_ID"))
-        _swap_current(self.view_root, f"gen-{n + 1}")
-        if gc_previous and gen != self.view_root:
-            shutil.rmtree(gen, ignore_errors=True)
+
+        def fold(gen, new_gen, hi):
+            self._write_base(self.view(), os.path.join(new_gen, _BASE), "overwrite")
+            for i in range(len(self.dims)):
+                dig_root = self._digest_root(gen, i)
+                digs = _ingest_batches(dig_root)
+                if digs:
+                    last = max(digs, key=_batch_no)
+                    self.spark.read.parquet(
+                        os.path.join(dig_root, last)
+                    ).write.mode("overwrite").parquet(
+                        os.path.join(self._digest_root(new_gen, i), f"ingest_batch={hi}")
+                    )
+
+        self.store.commit_generation(fold, gc_previous=gc_previous)
         return len(batches)
 
-    # -- lifecycle ---------------------------------------------------------
-
-    def start(self) -> "JoinViewMaintainJob":
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self.source_dir)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_dir, "join_maintain"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "JoinViewMaintainJob":
-        if self.query is None:
-            self.start()
-        return self
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
-        gen = _resolve(self.view_root)
-        batches = [
-            _batch_no(b)
-            for b in _ingest_batches(os.path.join(gen, _VERSIONS))
-        ]
-        return {
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "max_ingest_batch": max(batches, default=-1),
-        }
+        return self.store.position()
 
     def stats(self) -> dict:
-        gen = _resolve(self.view_root)
         return {
             "type": "join_maintain",
-            "active": self.query is not None and self.query.isActive,
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "ingest_batches": len(
-                _ingest_batches(os.path.join(gen, _VERSIONS))
-            ),
+            "active": self.active,
+            **self.store.stats(),
         }

@@ -596,7 +596,12 @@ class ReplicationJob:
             return
         held = self.spool.read(self.spark)
         if held is not None and held.limit(1).count() > 0:
-            apply_batch(self.spark, held, self.job, self.target, self.catalog)
+            # the flushed txs fold into the applied position and the
+            # task metrics like any streamed batch's
+            apply_batch(
+                self.spark, held, self.job, self.target, self.catalog,
+                gtid_path=self.gtid_path, metrics=self.metrics,
+            )
             self.spool.write(held.limit(0))
 
     def process_available(self) -> None:

@@ -16,13 +16,9 @@ sketch's subdir — the vector index's layout discipline
   cells, so the merge cost is O(batches x cells) — control-plane
   sized, never a re-scan of the data;
 - compact() folds the accumulated subtrees into one inside a NEW
-  generation dir and atomically swaps a ``_CURRENT`` pointer (the
-  ann_serving generation protocol), bounding merge-on-read for
-  long-lived streams. A compaction watermark keeps replayed
-  pre-compaction batches no-ops.
-- batch ids are only meaningful relative to one stream checkpoint, so
-  the root carries the same ``_CHECKPOINT_ID`` stamp as the vector
-  index roots (fail-loud on a fresh checkpoint against an old root).
+  generation of the shared generation store (streaming/store.py —
+  atomic pointer, compaction watermark, checkpoint stamp), bounding
+  merge-on-read for long-lived streams.
 
 Why this exists: a 100 TB training-data pipeline needs per-increment
 answers to "how many distinct sources/users so far", "which keys are
@@ -48,15 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dtle_spark.functions import sketches as sk
-from dtle_spark.streaming.ann_serving import (
-    _check_stream_stamp,
-    _ingest_batches,
-    _swap_current,
-)
+from dtle_spark.streaming.store import GenerationStore, StreamJob
 from dtle_spark.sinks.lease import leased
 
-_CURRENT = "_CURRENT"
-_COMPACT_WM_FILE = "_COMPACTED_THROUGH"
 _SKETCHES = ("cms", "kmv", "loghist")
 
 
@@ -120,23 +110,7 @@ def read_profile_baseline(
     }
 
 
-def _resolve(profile_root: str) -> str:
-    try:
-        with open(os.path.join(profile_root, _CURRENT)) as f:
-            return os.path.join(profile_root, f.read().strip())
-    except FileNotFoundError:
-        return profile_root
-
-
-def _compacted_through(gen: str) -> int:
-    try:
-        with open(os.path.join(gen, _COMPACT_WM_FILE)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return -1
-
-
-class StreamProfileJob:
+class StreamProfileJob(StreamJob):
     """Maintain the three sketches over a stream of rows.
 
     ``key_sql`` feeds KMV (distinct keys) and CMS (key frequencies);
@@ -152,6 +126,8 @@ class StreamProfileJob:
     :meth:`drift_vs` emits the per-group report
     (functions/dq.py dq_drift_report_grouped) — the gate for drift
     localized to ONE source that a global profile averages away."""
+
+    _ckpt_sub = "profile"
 
     def __init__(
         self,
@@ -186,15 +162,14 @@ class StreamProfileJob:
         # self-bounding merge-on-read: apply_batch compacts once sketch
         # subtrees exceed this (see join_maintain.py for the pattern)
         self.auto_compact_batches = auto_compact_batches
-        self.query = None
+        self.store = GenerationStore(profile_root, _SKETCHES)
 
     # -- batch core (exposed for tests/replay) ---------------------------
 
     @leased("profile_root", "profile")
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        gen = _resolve(self.profile_root)
-        _check_stream_stamp(gen, self.checkpoint_dir)
-        if batch_id <= _compacted_through(gen):
+        gen = self.store.admit(batch_id, self.checkpoint_dir)
+        if gen is None:
             return  # already folded by a compaction — skip
         # schema-evolution contract (streaming/schema_guard.py): the
         # profiler's key/value/group SQL expressions reference only
@@ -249,9 +224,9 @@ class StreamProfileJob:
     # -- reads ------------------------------------------------------------
 
     def _read(self, name: str) -> DataFrame | None:
-        gen = _resolve(self.profile_root)
+        gen = self.store.current()
         root = os.path.join(gen, name)
-        batches = _ingest_batches(root)
+        batches = self.store.batches(gen, name)
         if not batches:
             return None
         return self.spark.read.option("basePath", root).parquet(
@@ -435,22 +410,13 @@ class StreamProfileJob:
     @leased("profile_root", "profile")
     def compact(self, max_batches: int = 16, gc_previous: bool = True) -> int:
         """Fold the per-batch subtrees into one subtree per sketch in a
-        NEW generation and swap the ``_CURRENT`` pointer atomically —
-        run OFF the ingest path with the job quiesced (same contract as
+        NEW generation (streaming/store.py commit_generation) — run OFF
+        the ingest path with the job quiesced (same contract as
         ann_serving.compact_index). Returns the number of subtrees
         folded (0 = under the cap, nothing done)."""
-        gen = _resolve(self.profile_root)
-        per = {name: _ingest_batches(os.path.join(gen, name)) for name in _SKETCHES}
-        n_subtrees = sum(len(v) for v in per.values())
+        per = {name: self.store.batches(sub=name) for name in _SKETCHES}
         if len(per["cms"]) <= max_batches:
             return 0
-        hi = max(
-            int(b.split("=", 1)[1]) for bs in per.values() for b in bs
-        )
-        base = os.path.basename(gen)
-        n = int(base.split("-", 1)[1]) if base.startswith("gen-") else 0
-        new_gen_name = f"gen-{n + 1}"
-        new_gen = os.path.join(self.profile_root, new_gen_name)
         if self.group_sql is not None:
             from pyspark.sql import Window
 
@@ -484,84 +450,31 @@ class StreamProfileJob:
                 ),
                 "loghist": sk.loghist_merge(self._read("loghist")),
             }
-        for name, df in merged.items():
-            (
-                df.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(new_gen, name, f"ingest_batch={hi}"))
-            )
-        with open(os.path.join(new_gen, _COMPACT_WM_FILE), "w") as f:
-            f.write(str(hi))
-        old_ck = os.path.join(gen, "_CHECKPOINT_ID")
-        if os.path.exists(old_ck):  # stream identity rides along
-            shutil.copy(old_ck, os.path.join(new_gen, "_CHECKPOINT_ID"))
-        _swap_current(self.profile_root, new_gen_name)
-        if gc_previous:
-            if gen == self.profile_root:
-                for name in _SKETCHES:
-                    shutil.rmtree(os.path.join(gen, name), ignore_errors=True)
-            else:
-                shutil.rmtree(gen, ignore_errors=True)
-        return n_subtrees
 
-    # -- lifecycle ---------------------------------------------------------
+        def fold(gen, new_gen, hi):
+            for name, df in merged.items():
+                (
+                    df.coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(new_gen, name, f"ingest_batch={hi}"))
+                )
 
-    def start(self) -> "StreamProfileJob":
-        if self.reader is not None:
-            stream = self.reader(self.spark)
-        else:
-            stream = (
-                self.spark.readStream.schema(self.schema)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .parquet(self.source_dir)
-            )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation", os.path.join(self.checkpoint_dir, "profile")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self
+        self.store.commit_generation(fold, gc_previous=gc_previous)
+        return sum(len(v) for v in per.values())
 
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.awaitTermination()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "StreamProfileJob":
-        if self.query is None:
-            self.start()
-        return self
+    # -- lifecycle: start/pause/resume from StreamJob ---------------------
 
     def position(self) -> dict:
-        gen = _resolve(self.profile_root)
-        batches = [
-            int(b.split("=", 1)[1])
-            for b in _ingest_batches(os.path.join(gen, "cms"))
-        ]
-        return {
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "max_ingest_batch": max(batches, default=-1),
-        }
+        return self.store.position()
 
     def stats(self) -> dict:
-        gen = _resolve(self.profile_root)
         baseline = profile_baseline_name(
             os.path.join(self.profile_root, "_baseline")
         )
         return {
             "type": "stream_profile",
-            "active": self.query is not None and self.query.isActive,
-            "generation": os.path.basename(gen),
-            "compacted_through": _compacted_through(gen),
-            "ingest_batches": len(_ingest_batches(os.path.join(gen, "cms"))),
+            "active": self.active,
+            **self.store.stats(),
             "group_sql": self.group_sql,
             "baseline": baseline,
         }

@@ -9,7 +9,7 @@ construction, so an upstream ADD COLUMN or retype previously had
 undefined behavior: silently stale view columns, or an opaque
 AnalysisException mid-batch. This module defines it, with the
 stamp-next-to-the-store pattern ann_serving._check_model_stamp and
-_check_stream_stamp established:
+store.check_stream_stamp established:
 
 - the FIRST batch stamps the upstream row schema at the store root
   (``_UPSTREAM_SCHEMA.json`` — root-level, so it survives generation

@@ -74,10 +74,3 @@ def write_clustered(
         df.repartitionByRange(n_files, *cols)
     )
     out.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (mirrors the driver's
-    DuckDB-side view registration, so SQL text can be shared)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -383,7 +383,6 @@ def run_history_skew_tier(
     from pyspark.sql import functions as F
 
     from dtle_spark.streaming.history import Scd2HistoryJob
-    from dtle_spark.streaming.profile import _compacted_through, _resolve
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     job = Scd2HistoryJob(
@@ -450,12 +449,12 @@ def run_history_skew_tier(
             )
         )
         batch = hot_batch.unionByName(cold).localCheckpoint()
-        wm0 = _compacted_through(_resolve(job.history_root))
+        wm0 = job.store.watermark()
         storage.append(_gc_nudge(spark))
         t0 = time.perf_counter()
         job.apply_batch(batch, b)
         times.append(round(time.perf_counter() - t0, 3))
-        if _compacted_through(_resolve(job.history_root)) != wm0:
+        if job.store.watermark() != wm0:
             compactions.append(b)
         print(f"  history-skew {name} batch {b}: {times[-1]:.3f}s",
               file=sys.stderr)

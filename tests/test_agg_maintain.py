@@ -214,22 +214,6 @@ class TestAggMaintainJob:
         want = rollup_of(spark.createDataFrame(rows, ROW), GROUPS, MEASURES)
         assert _view_dict(job.view()) == _view_dict(want)
 
-    def test_fresh_checkpoint_against_old_root_fails(self, spark, tmp_path):
-        os.makedirs(str(tmp_path / "src"))
-        job = self._job(spark, tmp_path)
-        job.apply_batch(_chg(spark, [_c("i", None, (1, "a", 1), 1)]), 1)
-        other = AggMaintainJob(
-            spark,
-            str(tmp_path / "src" / "*"),
-            str(tmp_path / "view"),
-            str(tmp_path / "ck2"),  # fresh checkpoint, same root
-            GROUPS,
-            MEASURES,
-            schema=change_schema(ROW),
-        )
-        with pytest.raises(Exception, match="checkpoint"):
-            other.apply_batch(_chg(spark, [_c("i", None, (2, "a", 2), 2)]), 1)
-
 
 class TestSchemaEvolution:
     """The schema_guard contract on the rollup maintainer: additive
@@ -310,9 +294,10 @@ def test_manager_agg_job_lifecycle_recover_and_http(spark, tmp_path):
 
     spec_root = str(tmp_path / "specs")
     mgr = JobManager(spark, spec_root=spec_root)
-    aj = mgr.create_agg_maintain(
-        "rev-by-grp", os.path.join(src, "*"), str(tmp_path / "view"),
-        str(tmp_path / "ck"), GROUPS, MEASURES,
+    aj = mgr.create_job(
+        "agg_maintain", "rev-by-grp", source_dir=os.path.join(src, "*"),
+        view_root=str(tmp_path / "view"), checkpoint_dir=str(tmp_path / "ck"),
+        group_sqls=GROUPS, measure_sqls=MEASURES,
         row_schema_ddl="id long, grp string, amount long",
     )
     aj.process_available()
@@ -320,9 +305,10 @@ def test_manager_agg_job_lifecycle_recover_and_http(spark, tmp_path):
     assert st["type"] == "agg_maintain" and st["ingest_batches"] == 1
     # a raw StructType cannot round-trip the JSON spec: fail at create
     with pytest.raises(ValueError, match="row_schema_ddl"):
-        mgr.create_agg_maintain(
-            "bad", os.path.join(src, "*"), str(tmp_path / "v2"),
-            str(tmp_path / "ck2"), GROUPS, MEASURES,
+        mgr.create_job(
+            "agg_maintain", "bad", source_dir=os.path.join(src, "*"),
+            view_root=str(tmp_path / "v2"), checkpoint_dir=str(tmp_path / "ck2"),
+            group_sqls=GROUPS, measure_sqls=MEASURES,
             schema=change_schema(ROW),
         )
     assert mgr.position("rev-by-grp")["max_ingest_batch"] == 0

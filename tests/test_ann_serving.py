@@ -165,10 +165,10 @@ def test_index_compaction_generation_swap(spark, tmp_path):
     become no-ops (compaction watermark), new batches land in the new
     generation, and a second compaction stacks a further generation."""
     from dtle_spark.streaming.ann_serving import (
-        _ingest_batches,
         compact_index,
         resolve_index_path,
     )
+    from dtle_spark.streaming.store import ingest_batches as _ingest_batches
 
     e = _embeddings(spark)
     cent, cb = _model(e)
@@ -241,10 +241,10 @@ def test_purge_index_ids_hard_deletes(spark, tmp_path):
     them, the purge forces a fold even under the subtree-count
     trigger, and the stream keeps ingesting afterwards."""
     from dtle_spark.streaming.ann_serving import (
-        _ingest_batches,
         purge_index_ids,
         resolve_index_path,
     )
+    from dtle_spark.streaming.store import ingest_batches as _ingest_batches
 
     e = _embeddings(spark)
     cent, cb = _model(e)
@@ -303,9 +303,11 @@ def test_purge_route_over_http(spark, tmp_path):
     os.makedirs(src)
     e.limit(200).coalesce(1).write.parquet(os.path.join(src, "b0"))
     mgr = JobManager(spark)
-    mj = mgr.create_vector_maintain(
-        "vm", os.path.join(src, "*"), str(tmp_path / "index"),
-        str(tmp_path / "ck"), cent, cb, start=False,
+    mj = mgr.create_job(
+        "vector_maintain", "vm", source_dir=os.path.join(src, "*"),
+        index_root=str(tmp_path / "index"),
+        checkpoint_dir=str(tmp_path / "ck"), centroids=cent, codebook=cb,
+        start=False,
     )
     mj.start()
     mj.process_available()
@@ -374,10 +376,8 @@ def test_auto_compact_bounds_index_subtrees(spark, tmp_path):
     calls (gc_previous stays False — superseded generations are the
     separate VACUUM chore), and the served index equals the full
     corpus throughout."""
-    from dtle_spark.streaming.ann_serving import (
-        _ingest_batches,
-        resolve_index_path,
-    )
+    from dtle_spark.streaming.ann_serving import resolve_index_path
+    from dtle_spark.streaming.store import ingest_batches as _ingest_batches
 
     e = _embeddings(spark)
     cent, cb = _model(e)
@@ -410,11 +410,11 @@ def test_cdc_deletes_and_upserts(spark, tmp_path):
     compaction watermark, and a deleted id can be revived."""
     from dtle_spark.streaming.ann_serving import (
         _TOMBSTONES,
-        _ingest_batches,
         compact_index,
         read_tombstones,
         resolve_index_path,
     )
+    from dtle_spark.streaming.store import ingest_batches as _ingest_batches
 
     e = _embeddings(spark)
     cent, cb = _model(e)
@@ -744,16 +744,18 @@ def test_manager_vector_jobs_lifecycle_and_recover(spark, tmp_path):
     q.coalesce(1).write.parquet(os.path.join(qsrc, "q0"))
 
     mgr = JobManager(spark, spec_root=spec_root)
-    mj = mgr.create_vector_maintain(
-        "vec-maintain", os.path.join(vsrc, "*"), index_root,
-        str(tmp_path / "mck"), cent, cb,
+    mj = mgr.create_job(
+        "vector_maintain", "vec-maintain", source_dir=os.path.join(vsrc, "*"),
+        index_root=index_root, checkpoint_dir=str(tmp_path / "mck"),
+        centroids=cent, codebook=cb,
     )
     mj.process_available()
     assert mj.index().count() == half0.count()
     # serving constructed WITHOUT model tables: loads the persisted one
-    sj = mgr.create_ann_serving(
-        "ann-serve", os.path.join(qsrc, "*"), index_root, results_root,
-        str(tmp_path / "sck"), **PQ,
+    sj = mgr.create_job(
+        "ann_serving", "ann-serve", source_dir=os.path.join(qsrc, "*"),
+        index_root=index_root, results_root=results_root,
+        checkpoint_dir=str(tmp_path / "sck"), **PQ,
     )
     sj.process_available()
     assert _topk_map(sj.results()) == _topk_map(_inline(half0, q, cent, cb))
@@ -803,10 +805,10 @@ def test_manager_vector_jobs_lifecycle_and_recover(spark, tmp_path):
     # a manager WITHOUT persistence must accept non-serializable kwargs
     # (nothing round-trips) — e.g. the rerank corpus callable
     mgr3 = JobManager(spark)
-    mgr3.create_ann_serving(
-        "rr", os.path.join(qsrc, "*"), index_root,
-        str(tmp_path / "rrres"), str(tmp_path / "rrck"),
-        rerank=20, vectors=lambda: e, start=False, **PQ,
+    mgr3.create_job(
+        "ann_serving", "rr", source_dir=os.path.join(qsrc, "*"),
+        index_root=index_root, results_root=str(tmp_path / "rrres"),
+        checkpoint_dir=str(tmp_path / "rrck"), rerank=20, vectors=lambda: e, start=False, **PQ,
     )
     assert mgr3.get("rr").rerank == 20
 
@@ -957,9 +959,10 @@ def test_wire_cdc_to_vector_index_e2e(spark, tmp_path):
         "row_schema": "vec_id long, embedding array<float>",
     }
     mgr = JobManager(spark, spec_root=spec_root)
-    wj = mgr.create_vector_maintain(
-        "wire-vec", os.path.join(wsrc, "*"), mroot,
-        str(tmp_path / "wck"), cent, cb, wire_table=wire_table,
+    wj = mgr.create_job(
+        "vector_maintain", "wire-vec", source_dir=os.path.join(wsrc, "*"),
+        index_root=mroot, checkpoint_dir=str(tmp_path / "wck"),
+        centroids=cent, codebook=cb, wire_table=wire_table,
     )
     wj.process_available()
     assert wj.live_index().count() == current.count()

@@ -117,17 +117,6 @@ class TestScd2HistoryJob:
         job.apply_batch(_chg(spark, STREAM_A), 0)
         assert _hist_dict(job.history()) == after
 
-    def test_fresh_checkpoint_against_old_root_fails(self, spark, tmp_path):
-        os.makedirs(str(tmp_path / "src"))
-        job = _job(spark, tmp_path)
-        job.apply_batch(_chg(spark, STREAM_A), 0)
-        other = Scd2HistoryJob(
-            spark, str(tmp_path / "src" / "*"), str(tmp_path / "hist"),
-            str(tmp_path / "ck2"), ["id"], schema=change_schema(ROW),
-        )
-        with pytest.raises(Exception, match="checkpoint"):
-            other.apply_batch(_chg(spark, STREAM_B), 1)
-
     def test_auto_compact_bounds_event_subtrees(self, spark, tmp_path):
         """auto_compact_batches: a long stream keeps the event-subtree
         count bounded with no manual compact() calls, generations roll,
@@ -172,9 +161,10 @@ def test_manager_scd2_job_lifecycle_recover_and_http(spark, tmp_path):
 
     spec_root = str(tmp_path / "specs")
     mgr = JobManager(spark, spec_root=spec_root)
-    hj = mgr.create_scd2_history(
-        "orders-history", os.path.join(src, "*"), str(tmp_path / "hist"),
-        str(tmp_path / "ck"), ["id"],
+    hj = mgr.create_job(
+        "scd2_history", "orders-history", source_dir=os.path.join(src, "*"),
+        history_root=str(tmp_path / "hist"),
+        checkpoint_dir=str(tmp_path / "ck"), key_cols=["id"],
         row_schema_ddl="id long, grp string, amount long",
     )
     hj.seed(spark.createDataFrame(BASE, ROW))

@@ -167,17 +167,6 @@ class TestJoinViewMaintainJob:
         got = {r[0]: tuple(r) for r in job.view().collect()}
         assert got[1] == (1, 20, 111, "bob", "base")
 
-    def test_fresh_checkpoint_against_old_root_fails(self, spark, tmp_path):
-        job = self._seeded(spark, tmp_path)
-        job.apply_batch(_chg(spark, [_c("i", None, (5, 10, 5), 1)]), 0)
-        other = JoinViewMaintainJob(
-            job.spark, job.source_dir, job.dim_dir, job.view_root,
-            str(tmp_path / "ck2"), ["id"], "cust", "cid", DIM_COLS,
-            schema=change_schema(FACT),
-        )
-        with pytest.raises(Exception, match="checkpoint"):
-            other.apply_batch(_chg(spark, [_c("i", None, (6, 10, 6), 2)]), 1)
-
     def test_streaming_e2e(self, spark, tmp_path):
         src = str(tmp_path / "src")
         os.makedirs(src)
@@ -215,10 +204,11 @@ class TestJoinViewMaintainJob:
         )
         spec_root = str(tmp_path / "specs")
         mgr = JobManager(spark, spec_root=spec_root)
-        jj = mgr.create_join_maintain(
-            "ordview", os.path.join(src, "*"), str(tmp_path / "dim"),
-            str(tmp_path / "view"), str(tmp_path / "ck"),
-            ["id"], "cust", "cid", DIM_COLS,
+        jj = mgr.create_job(
+            "join_maintain", "ordview", source_dir=os.path.join(src, "*"),
+            dim_dir=str(tmp_path / "dim"), view_root=str(tmp_path / "view"),
+            checkpoint_dir=str(tmp_path / "ck"), key_cols=["id"],
+            fk="cust", right_pk="cid", right_cols=DIM_COLS,
             row_schema_ddl="id long, cust long, amount long",
             start=False,
         )
@@ -230,10 +220,11 @@ class TestJoinViewMaintainJob:
         st = mgr.list()["ordview"]
         assert st["type"] == "join_maintain" and st["ingest_batches"] == 1
         with pytest.raises(ValueError, match="row_schema_ddl"):
-            mgr.create_join_maintain(
-                "bad", os.path.join(src, "*"), str(tmp_path / "dim"),
-                str(tmp_path / "v2"), str(tmp_path / "ck2"),
-                ["id"], "cust", "cid", DIM_COLS,
+            mgr.create_job(
+                "join_maintain", "bad", source_dir=os.path.join(src, "*"),
+                dim_dir=str(tmp_path / "dim"), view_root=str(tmp_path / "v2"),
+                checkpoint_dir=str(tmp_path / "ck2"), key_cols=["id"],
+                fk="cust", right_pk="cid", right_cols=DIM_COLS,
                 schema=change_schema(FACT),
             )
         mgr.pause("ordview")
@@ -350,10 +341,11 @@ class TestJoinViewMaintainJob:
 
         spec_root = str(tmp_path / "specs")
         mgr = JobManager(spark, spec_root=spec_root)
-        job = mgr.create_join_maintain(
-            "star", os.path.join(src, "*"), str(tmp_path / "dim"),
-            str(tmp_path / "view"), str(tmp_path / "ck"),
-            ["id"], "cust", "cid", DIM_COLS,
+        job = mgr.create_job(
+            "join_maintain", "star", source_dir=os.path.join(src, "*"),
+            dim_dir=str(tmp_path / "dim"), view_root=str(tmp_path / "view"),
+            checkpoint_dir=str(tmp_path / "ck"), key_cols=["id"],
+            fk="cust", right_pk="cid", right_cols=DIM_COLS,
             row_schema_ddl="id long, cust long, prod long",
             extra_dims=[{"dim_dir": str(tmp_path / "dim2"), "fk": "prod",
                          "pk": "pid", "cols": {"pname": "prod_name"}}],

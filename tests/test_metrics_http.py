@@ -618,9 +618,10 @@ def test_http_mutation_routes_serialize_on_writer_lease(spark, tmp_path):
         # --- corpus family: purge_documents contends on the table root
         src = str(tmp_path / "csrc")
         os.makedirs(src)
-        cj = manager.create_corpus_ingest(
-            "cj", os.path.join(src, "*"), str(tmp_path / "ctgt"),
-            str(tmp_path / "cck"), start=False,
+        cj = manager.create_job(
+            "corpus_ingest", "cj", source_dir=os.path.join(src, "*"),
+            target_root=str(tmp_path / "ctgt"),
+            checkpoint_dir=str(tmp_path / "cck"), start=False,
         )
         cj.apply_batch(spark.createDataFrame(
             [(1, "a doc that will be taken down end to end", "en", "s0"),
@@ -649,9 +650,11 @@ def test_http_mutation_routes_serialize_on_writer_lease(spark, tmp_path):
         ).localCheckpoint()
         index_root = str(tmp_path / "index")
         save_model(index_root, cent, cb)
-        vm = manager.create_vector_maintain(
-            "vm", str(tmp_path / "vsrc-unused") + "/*", index_root,
-            str(tmp_path / "vck"), start=False,
+        vm = manager.create_job(
+            "vector_maintain", "vm",
+            source_dir=str(tmp_path / "vsrc-unused") + "/*",
+            index_root=index_root, checkpoint_dir=str(tmp_path / "vck"),
+            start=False,
         )
         vm.apply_batch(e.limit(64).localCheckpoint(), 0)
         with _Holder(index_root):

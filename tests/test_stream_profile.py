@@ -127,19 +127,6 @@ def test_compact_and_post_compact_ingest(spark, tmp_path):
     )
 
 
-def test_fresh_checkpoint_fails_loudly(spark, tmp_path):
-    d = _docs(spark).limit(50)
-    job = _job(spark, tmp_path)
-    job.apply_batch(d, 0)
-    stranger = StreamProfileJob(
-        spark, str(tmp_path / "src"), str(tmp_path / "profile"),
-        str(tmp_path / "other-ck"),
-        key_sql="lang", value_sql="n_chars",
-    )
-    with pytest.raises(ValueError, match="checkpoint mismatch"):
-        stranger.apply_batch(d, 0)
-
-
 def test_manager_profile_job_lifecycle_recover_and_http(spark, tmp_path):
     """The profiler as the sixth managed job type: JobManager create/
     list/metrics/pause/resume/position, recover() on a fresh manager
@@ -160,9 +147,11 @@ def test_manager_profile_job_lifecycle_recover_and_http(spark, tmp_path):
 
     spec_root = str(tmp_path / "specs")
     mgr = JobManager(spark, spec_root=spec_root)
-    pj = mgr.create_stream_profile(
-        "doc-profile", os.path.join(src, "*"), str(tmp_path / "profile"),
-        str(tmp_path / "ck"), key_sql="source", value_sql="n_chars",
+    pj = mgr.create_job(
+        "stream_profile", "doc-profile", source_dir=os.path.join(src, "*"),
+        profile_root=str(tmp_path / "profile"),
+        checkpoint_dir=str(tmp_path / "ck"), key_sql="source",
+        value_sql="n_chars",
         schema="doc_id long, text string, lang string, source string, n_chars long",
     )
     pj.process_available()
@@ -554,9 +543,10 @@ def test_grouped_profiler_end_to_end(spark, tmp_path):
         for i, df in enumerate(data_batches):
             df.coalesce(1).write.parquet(os.path.join(src, f"b{i}"))
         mgr = JobManager(spark, spec_root=spec_root)
-        job = mgr.create_stream_profile(
-            name, os.path.join(src, "*"),
-            str(tmp_path / name / "profile"), str(tmp_path / name / "ck"),
+        job = mgr.create_job(
+            "stream_profile", name, source_dir=os.path.join(src, "*"),
+            profile_root=str(tmp_path / name / "profile"),
+            checkpoint_dir=str(tmp_path / name / "ck"),
             key_sql="doc_id", value_sql="n_chars",
             schema="doc_id long, text string, lang string, "
                    "source string, n_chars long",

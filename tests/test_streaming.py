@@ -291,6 +291,58 @@ def test_tx_spanning_batch_atomicity(spark, job_dirs):
     assert t2_state() == {2: "a", 9: "z"}
 
 
+def test_flush_spool_folds_flushed_txs_into_position(spark, job_dirs):
+    """flush_spool applies each source's held frontier tx like a
+    streamed batch: the flushed txs reach the applied GTID set that
+    position() reports (and the task metrics), not just the target."""
+    from pyspark.sql import Row, types as T
+
+    from dtle_spark.sources.gtid import GtidSet
+    from dtle_spark.streaming.wire import WIRE_SCHEMA
+
+    s1 = "11111111-aaaa-aaaa-aaaa-111111111111"
+    s2 = "22222222-bbbb-bbbb-bbbb-222222222222"
+
+    def wrow(sid, gno, seq, after):
+        return Row(sid=sid, gno=gno, seq=seq, lc=0, op="i", ts=None,
+                   schema_name="db1", table_name="t1", before=None,
+                   after=after, query=None)
+
+    rows = [
+        wrow(s1, 1, 1, '{"id":1,"v":10}'),
+        wrow(s2, 1, 2, '{"id":2,"v":20}'),
+        wrow(s1, 2, 3, '{"id":3,"v":30}'),
+        wrow(s2, 2, 4, '{"id":4,"v":40}'),
+    ]
+    cat = SchemaCatalog()
+    cat.register("db1", "t1", T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
+    ), ["id"])
+    job = JobConfig("flush", [TableConfig("db1", "t1", unique_key=["id"])],
+                    tx_atomic=True)
+    os.makedirs(job_dirs["source"])
+    spark.createDataFrame(rows, WIRE_SCHEMA).coalesce(1).write.parquet(
+        os.path.join(job_dirs["source"], "f0"))
+    rj = ReplicationJob(
+        spark, job, os.path.join(job_dirs["source"], "*"), job_dirs["target"],
+        job_dirs["checkpoint"], cat, max_files_per_trigger=1,
+    ).start()
+    rj.process_available()
+    held = GtidSet.from_str(rj.position()["gtid_set"])
+    # each source's last tx is its frontier: held in the spool
+    assert held.contains(s1, 1) and not held.contains(s1, 2)
+    assert held.contains(s2, 1) and not held.contains(s2, 2)
+    applied_before = rj.stats()["exec_tx_count"]
+
+    rj.pause()
+    rj.flush_spool()
+    applied = GtidSet.from_str(rj.position()["gtid_set"])
+    assert applied.contains(s1, 2) and applied.contains(s2, 2)
+    assert rj.stats()["exec_tx_count"] == applied_before + 2
+    got = {r["id"] for r in rj.target.read(spark, "db1", "t1").collect()}
+    assert got == {1, 2, 3, 4}
+
+
 def test_replication_retry_after_failed_merge_no_duplicate_fields(
     spark, job_dirs, monkeypatch
 ):

@@ -760,9 +760,10 @@ def test_manager_corpus_ingest_lifecycle_recover_and_http(spark, tmp_path):
 
     spec_root = str(tmp_path / "specs")
     mgr = JobManager(spark, spec_root=spec_root)
-    cj = mgr.create_corpus_ingest(
-        "corpus1", os.path.join(src, "*"), str(tmp_path / "tgt"),
-        str(tmp_path / "ck"),
+    cj = mgr.create_job(
+        "corpus_ingest", "corpus1", source_dir=os.path.join(src, "*"),
+        target_root=str(tmp_path / "tgt"),
+        checkpoint_dir=str(tmp_path / "ck"),
         gate_thresholds={"drift:loghist_tv": 0.5},
     )
     cj.process_available()
