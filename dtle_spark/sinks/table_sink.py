@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from dtle_spark.operators.apply import (
     DELETED_COL,
     SEQ_COL,
-    dedupe_redelivered,
     latest_image_per_key,
     merge_into_versioned,
     with_version_columns,
@@ -506,8 +505,12 @@ class BucketedTableTarget(ManifestedTarget):
         table dir (invisible — readers resolve the old manifest), then
         swaps the manifest ONCE. The streaming batch loop collects
         these closures from every table and runs them back-to-back:
-        A6 cross-table atomicity with a crash window of zero per table."""
-        net = latest_image_per_key(dedupe_redelivered(changes), key_cols)
+        A6 cross-table atomicity with a crash window of zero per table.
+
+        No dedupe pass: a re-delivered row is a verbatim copy, and the
+        per-key window of ``latest_image_per_key`` keeps exactly one of
+        them (operators/apply.apply_changes)."""
+        net = latest_image_per_key(changes, key_cols)
         net = net.withColumn("__b", self._bucket_fn(key_cols, self.n_buckets)).persist()
         p = self.path(schema_name, table_name)
         m = TableManifest.load(p)

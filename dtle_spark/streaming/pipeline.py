@@ -34,7 +34,9 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -72,52 +74,176 @@ class TxSpool:
     batch tx-aligned, and the A6 staged-swap then upgrades batch
     atomicity to per-tx atomicity ACROSS tables.
 
-    Crash safety: the spool is swapped atomically before the batch
-    applies; a replayed batch unions with the spool and dedupes on
-    (sid, gno, seq), so the effective row set is identical. State is
-    O(one tx per source), not O(history)."""
+    Crash safety: the spool is kept in generations keyed by batch id.
+    Batch k reads the newest generation below k and writes
+    ``gen-k``; the generation it read is deleted only when a later
+    batch writes. A failed batch therefore replays against the same
+    input generation (its retry sees the txs that graduated from it),
+    and the applied rows' lineage, which reads that generation, stays
+    valid for the whole batch. A spool written as one flat parquet
+    directory (the layout before generations) reads as generation -1.
+    State is O(one tx per source) per generation, not O(history)."""
+
+    LEGACY = -1
 
     def __init__(self, root: str):
         self.root = root
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.exists(self.root):
-            return None
-        return spark.read.schema(WIRE_SCHEMA).parquet(self.root)
+    def _legacy_files(self) -> list[str]:
+        return [
+            os.path.join(self.root, n)
+            for n in sorted(os.listdir(self.root))
+            if os.path.isfile(os.path.join(self.root, n))
+        ]
 
-    def write(self, df: DataFrame) -> None:
-        staged = f"{self.root}.staged-{uuid.uuid4().hex[:8]}"
+    def _generations(self) -> dict[int, str]:
+        """Generation id -> its directory (the root for the flat layout)."""
+        if not os.path.isdir(self.root):
+            return {}
+        out = {}
+        for n in os.listdir(self.root):
+            if n.startswith("gen-") and n[4:].isdigit():
+                out[int(n[4:])] = os.path.join(self.root, n)
+        if self._legacy_files():
+            out[self.LEGACY] = self.root
+        return out
+
+    def read(self, spark: SparkSession, below: int | None = None) -> DataFrame | None:
+        """The newest generation below batch id ``below`` (the newest of
+        all when None), or None when there is none."""
+        gens = self._generations()
+        ids = [g for g in gens if below is None or g < below]
+        if not ids:
+            return None
+        g = max(ids)
+        reader = spark.read.schema(WIRE_SCHEMA)
+        if g != self.LEGACY:
+            return reader.parquet(gens[g])
+        data = [f for f in self._legacy_files() if not os.path.basename(f).startswith(("_", "."))]
+        return reader.parquet(*data) if data else None
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        """Write ``gen-<batch_id>`` (replacing a failed attempt's), then
+        drop every generation but it and the input one below it."""
+        gens = self._generations()
+        keep = max((g for g in gens if g < batch_id), default=None)
+        token = uuid.uuid4().hex[:8]
+        staged = os.path.join(self.root, f".staged-{token}")
         df.write.mode("overwrite").parquet(staged)
-        old = f"{self.root}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.root):
-            os.rename(self.root, old)
-        os.rename(staged, self.root)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        final = os.path.join(self.root, f"gen-{batch_id}")
+        old = os.path.join(self.root, f".old-{token}")
+        if os.path.exists(final):
+            os.rename(final, old)
+        os.rename(staged, final)
+        shutil.rmtree(old, ignore_errors=True)
+        for g, path in gens.items():
+            if g in (keep, batch_id):
+                continue
+            if g == self.LEGACY:
+                for f in self._legacy_files():
+                    os.remove(f)
+            else:
+                shutil.rmtree(path, ignore_errors=True)
+
+    def clear(self, spark: SparkSession) -> None:
+        """Empty the newest generation (flush_spool, stream paused). The
+        flat layout's replacement is ``gen-0``, which every later batch
+        reads in its place."""
+        newest = max(self._generations(), default=self.LEGACY)
+        self.write(spark.createDataFrame([], WIRE_SCHEMA), max(newest, 0))
+
+
+class BatchSummary:
+    """Driver-side bookkeeping of one micro-batch from ONE grouped Spark
+    action: a row per (sid, gno, schema, table, op) with its row count,
+    newest event ts, max seq and DDL (seq, query) pairs. O(txs x tables
+    x ops) rows reach the driver, never O(batch rows).
+
+    Everything the batch loop needs derives from it: each source's
+    frontier gno (held back with a TxSpool), DDL presence and each
+    table's DDL barriers, the applied (sid, gno) set for the GTID fold
+    and the TaskMetrics inputs — all over the COMPLETE rows only."""
+
+    def __init__(self, rows: list, hold_frontier: bool = False):
+        self.frontier: dict[str, int] = {}
+        if hold_frontier:
+            for r in rows:
+                self.frontier[r["sid"]] = max(self.frontier.get(r["sid"], r["gno"]), r["gno"])
+        self.rows = [r for r in rows if self.frontier.get(r["sid"]) != r["gno"]]
+
+    @classmethod
+    def of(cls, df: DataFrame, hold_frontier: bool = False) -> "BatchSummary":
+        rows = df.groupBy("sid", "gno", "schema_name", "table_name", "op").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("mt"),
+            F.max("seq").alias("s"),
+            F.collect_list(
+                F.when(F.col("op") == "ddl", F.struct("seq", "query"))
+            ).alias("ddls"),
+        ).collect()
+        return cls(rows, hold_frontier)
+
+    def held(self):
+        """Column predicate: the rows of each source's frontier tx."""
+        cond = F.lit(False)
+        for sid, g in self.frontier.items():
+            cond = cond | ((F.col("sid") == sid) & (F.col("gno") == g))
+        return cond
+
+    def complete(self, df: DataFrame) -> DataFrame:
+        return df.filter(~self.held()) if self.frontier else df
+
+    @property
+    def has_ddl(self) -> bool:
+        return any(r["op"] == "ddl" for r in self.rows)
+
+    def ddls(self, schema_name: str, table_name: str) -> list:
+        """The table's DDL rows (seq, query), in seq order."""
+        return sorted(
+            (d for r in self.rows
+             if r["schema_name"] == schema_name and r["table_name"] == table_name
+             for d in r["ddls"]),
+            key=lambda d: d["seq"],
+        )
+
+    @property
+    def txs(self) -> list[tuple[str, int]]:
+        return sorted({(r["sid"], r["gno"]) for r in self.rows})
+
+    def op_counts(self) -> list[tuple]:
+        """(schema, table, op, rows, newest event ts in epoch s)."""
+        agg: dict[tuple, list] = {}
+        for r in self.rows:
+            a = agg.setdefault((r["schema_name"], r["table_name"], r["op"]), [0, None])
+            a[0] += r["n"]
+            if r["mt"] is not None and (a[1] is None or r["mt"] > a[1]):
+                a[1] = r["mt"]
+        return [(*k, n, mt / 1e6 if mt is not None else None) for k, (n, mt) in agg.items()]
+
+    def seq_high(self) -> dict[str, int]:
+        out: dict[str, int] = {}
+        for r in self.rows:
+            out[r["sid"]] = max(out.get(r["sid"], r["s"]), r["s"])
+        return out
 
 
 def split_complete_txs(
-    spark: SparkSession, batch: DataFrame, spool: TxSpool
-) -> DataFrame:
-    """Union the spool into the batch, hold back each sid's frontier
-    gno, return the provably-complete remainder for application."""
-    prev = spool.read(spark)
+    spark: SparkSession, batch: DataFrame, spool: TxSpool, batch_id: int
+) -> tuple[DataFrame, BatchSummary]:
+    """Union the input spool generation into the batch, summarize it
+    and write each sid's frontier tx to the batch's own generation.
+    Returns the cached effective batch (unpersist when done) and its
+    summary; ``summary.complete(eff)`` is the part to apply."""
+    prev = spool.read(spark, below=batch_id)
     eff = batch if prev is None else prev.unionByName(batch)
     eff = eff.dropDuplicates(["sid", "gno", "seq"]).persist()
-    # bounded driver-side state: one row per source server, like the
-    # reference's per-source gtid bookkeeping
-    frontier = eff.groupBy("sid").agg(F.max("gno").alias("g")).collect()
-    cond = F.lit(False)
-    for r in frontier:
-        cond = cond | ((F.col("sid") == r["sid"]) & (F.col("gno") == r["g"]))
-    # materialize (lineage-free) BEFORE the spool swap: `complete`'s
-    # lineage reads the OLD spool files, which the swap deletes — an
-    # evicted cache would otherwise recompute against the new spool and
-    # silently drop the rows that just graduated from it
-    complete = eff.filter(~cond).localCheckpoint()
-    spool.write(eff.filter(cond))
-    eff.unpersist()
-    return complete
+    try:
+        summary = BatchSummary.of(eff, hold_frontier=True)
+        spool.write(eff.filter(summary.held()), batch_id)
+    except BaseException:
+        eff.unpersist()
+        raise
+    return eff, summary
 
 
 def transform_changes(changes: DataFrame, cfg: TableConfig, local_sid: str | None) -> DataFrame:
@@ -137,14 +263,10 @@ def _read_seq_watermark(target, schema_name: str, table_name: str) -> dict[str, 
 
 
 def _merge_segment(
-    spark: SparkSession,
-    typed: DataFrame,
-    cfg: TableConfig,
-    job: JobConfig,
-    target,
-    row_type,
-    deferred_commits: list | None = None,
-) -> None:
+    spark: SparkSession, typed: DataFrame, cfg: TableConfig, job: JobConfig, target
+):
+    """Stage one segment's merge; returns its commit closure. Nothing is
+    visible until the closure runs."""
     from dtle_spark.operators.apply import (
         DELETED_COL,
         latest_image_per_key,
@@ -168,11 +290,7 @@ def _merge_segment(
         _, commit_fn = target.stage_merge(
             spark, tchanges, cfg.target_schema, cfg.target_table, cfg.unique_key
         )
-        if deferred_commits is not None:
-            deferred_commits.append(commit_fn)
-        else:
-            commit_fn()
-        return
+        return commit_fn
     wm_update: dict[str, int] | None = None
     if cfg.unique_key:
         # seq-versioned merge: correct under split/reordered delivery
@@ -214,13 +332,38 @@ def _merge_segment(
     def commit_fn(staged=staged, s=s, t=t, wm=wm) -> None:
         target.commit(staged, s, t, seq_watermark=wm)
 
-    if deferred_commits is not None:
-        # A6 cross-table atomicity: stage now, swap with the rest of the
-        # batch's tables at the end — a reader never observes table A's
-        # new state next to table B's old one within a micro-batch
-        deferred_commits.append(commit_fn)
-    else:
-        commit_fn()
+    return commit_fn
+
+
+def _stage_tables(
+    spark: SparkSession, batch: DataFrame, job: JobConfig, target, cat: SchemaCatalog
+) -> list:
+    """Stage every table of a DDL-free batch; returns the commit
+    closures in ``job.tables`` order.
+
+    The tables' transform -> parse -> merge staging chains are
+    independent, so they overlap on a pool of min(tables, default
+    parallelism) threads — the reference applier's MTS workers, split
+    by table instead of by tx (nothing is visible before the commits
+    run). Each worker inherits the caller's local properties (job group
+    and description), so a streaming query's stop() still cancels its
+    jobs."""
+
+    def stage(cfg: TableConfig):
+        meta = cat.get(cfg.schema_name, cfg.table_name)
+        typed = from_wire(table_filter(batch, cfg.schema_name, cfg.table_name), meta.schema)
+        return _merge_segment(spark, typed, cfg, job, target)
+
+    n = min(len(job.tables), spark.sparkContext.defaultParallelism)
+    if n <= 1:
+        return [stage(cfg) for cfg in job.tables]
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        # one wrapper per task: each clones the caller's properties, so
+        # a worker setting its job description cannot leak into another
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(stage), cfg) for cfg in job.tables
+        ]
+        return [f.result() for f in futures]
 
 
 def apply_ddl_to_target(
@@ -323,15 +466,20 @@ def apply_batch(
 
     A6 cross-table atomicity: when the batch contains no DDL (the
     overwhelmingly common case) every table's new image is staged
-    first and then all are swapped in a tight rename loop — a reader
-    cannot observe a half-applied batch across tables. DDL batches
-    fall back to per-segment commits (the DDL barrier itself is the
-    serialization point). Cache the batch once — every table's
-    transform scans it.
+    first — the tables in parallel (``_stage_tables``) — and then all
+    are swapped back to back on this thread, in ``job.tables`` order —
+    a reader cannot observe a half-applied batch across tables. DDL
+    batches keep the sequential per-segment commits (the DDL barrier
+    itself is the serialization point). The batch is cached once —
+    every table's transform scans it.
 
-    With a TxSpool (job.tx_atomic), the batch is first reduced to
-    provably-complete transactions (frontier held back), which makes
-    the A6 swap per-TX atomic, not merely per-batch.
+    The batch's bookkeeping — frontier, DDL presence and barriers, the
+    applied tx set, the metrics — comes from ONE grouped action
+    (``BatchSummary``), not one Spark job per question.
+
+    With a TxSpool (job.tx_atomic, needs ``batch_id``), the batch is
+    first reduced to provably-complete transactions (frontier held
+    back), which makes the A6 swap per-TX atomic, not merely per-batch.
 
     ``gtid_path`` (optional): after the batch commits, every applied
     (sid, gno) folds into a persisted interval GtidSet — the queryable
@@ -352,11 +500,14 @@ def apply_batch(
     import time as _time
 
     t0 = _time.perf_counter()
-    if spool is not None:
-        batch = split_complete_txs(spark, batch, spool)
-    batch.persist()
+    pinned = None
     try:
-        has_ddl = batch.filter(F.col("op") == "ddl").limit(1).count() > 0
+        if spool is not None:
+            pinned, summary = split_complete_txs(spark, batch, spool, batch_id)
+        else:
+            pinned = batch.persist()
+            summary = BatchSummary.of(pinned)
+        batch = summary.complete(pinned)
         marker = -1
         if catalog_path is not None:
             try:
@@ -371,55 +522,51 @@ def apply_batch(
         marker = max(marker, getattr(catalog, "applied_batch_mem", -1))
         ddl_in_snapshot = batch_id is not None and marker >= batch_id
         cat = catalog.copy()
-        # commit closures: every table (bucketed or whole-image) stages
-        # first; the closures then run back-to-back, each one an atomic
-        # manifest rename — the A6 cross-table swap
-        deferred: list | None = [] if not has_ddl else None
-        for cfg in job.tables:
-            rows = table_filter(batch, cfg.schema_name, cfg.table_name)
-            ddls = sorted(
-                rows.filter(F.col("op") == "ddl").select("seq", "query").collect(),
-                key=lambda r: r["seq"],
-            )
-            dml = rows.filter(F.col("op") != "ddl")
-            if ddls:
-                # same contract as SubscriptionJob: segmentation uses
-                # STRICT inequalities around the DDL seqs, so a DML row
-                # SHARING a seq with a barrier would silently drop from
-                # every segment — fail loud instead
-                clash = dml.filter(
-                    F.col("seq").isin([d["seq"] for d in ddls])
-                ).count()
-                if clash:
-                    raise ValueError(
-                        f"{clash} DML row(s) share a seq with a DDL "
-                        f"barrier in {cfg.schema_name}.{cfg.table_name}"
-                        f" (batch {batch_id}); wire seqs must be unique"
-                    )
-            lo = None
-            for ddl_row in ddls + [None]:
-                hi = ddl_row["seq"] if ddl_row is not None else None
-                seg = dml
-                if lo is not None:
-                    seg = seg.filter(F.col("seq") > lo)
-                if hi is not None:
-                    seg = seg.filter(F.col("seq") < hi)
-                meta = cat.get(cfg.schema_name, cfg.table_name)
-                typed = from_wire(seg, meta.schema)
-                _merge_segment(spark, typed, cfg, job, target, meta.schema, deferred)
-                if ddl_row is not None:
-                    # multi-clause ALTER / multi-pair RENAME replay in order
-                    for action in parse_ddl_actions(
-                        ddl_row["query"], default_schema=cfg.schema_name
-                    ):
-                        if not ddl_in_snapshot:
-                            cat.apply(action)
-                        apply_ddl_to_target(spark, target, cfg, action)
-                    lo = hi
-        if deferred:
-            for fn in deferred:
+        if not summary.has_ddl:
+            # commit closures: every table (bucketed or whole-image)
+            # stages first; the closures then run back-to-back, each one
+            # an atomic manifest rename — the A6 cross-table swap
+            for fn in _stage_tables(spark, batch, job, target, cat):
                 fn()
-        if has_ddl:
+        else:
+            for cfg in job.tables:
+                ddls = summary.ddls(cfg.schema_name, cfg.table_name)
+                dml = table_filter(batch, cfg.schema_name, cfg.table_name).filter(
+                    F.col("op") != "ddl"
+                )
+                if ddls:
+                    # same contract as SubscriptionJob: segmentation uses
+                    # STRICT inequalities around the DDL seqs, so a DML row
+                    # SHARING a seq with a barrier would silently drop from
+                    # every segment — fail loud instead
+                    clash = dml.filter(
+                        F.col("seq").isin([d["seq"] for d in ddls])
+                    ).count()
+                    if clash:
+                        raise ValueError(
+                            f"{clash} DML row(s) share a seq with a DDL "
+                            f"barrier in {cfg.schema_name}.{cfg.table_name}"
+                            f" (batch {batch_id}); wire seqs must be unique"
+                        )
+                lo = None
+                for ddl_row in ddls + [None]:
+                    hi = ddl_row["seq"] if ddl_row is not None else None
+                    seg = dml
+                    if lo is not None:
+                        seg = seg.filter(F.col("seq") > lo)
+                    if hi is not None:
+                        seg = seg.filter(F.col("seq") < hi)
+                    meta = cat.get(cfg.schema_name, cfg.table_name)
+                    _merge_segment(spark, from_wire(seg, meta.schema), cfg, job, target)()
+                    if ddl_row is not None:
+                        # multi-clause ALTER / multi-pair RENAME replay in order
+                        for action in parse_ddl_actions(
+                            ddl_row["query"], default_schema=cfg.schema_name
+                        ):
+                            if not ddl_in_snapshot:
+                                cat.apply(action)
+                            apply_ddl_to_target(spark, target, cfg, action)
+                        lo = hi
             # every commit landed: snapshot the COPY first, then sync
             # the caller's catalog in place (aliases observe the
             # evolution). Save-before-sync, as in SubscriptionJob: a
@@ -439,44 +586,23 @@ def apply_batch(
                 # leaves the catalog pristine and the retry must
                 # re-apply; a failure after it must not
                 catalog.applied_batch_mem = int(batch_id)
-        tx_rows = None
         if gtid_path is not None:
             from dtle_spark.sources.gtid import GtidSet
 
             gs = GtidSet.load(gtid_path)
-            tx_rows = batch.select("sid", "gno").distinct().collect()
-            for r in tx_rows:
-                gs.add(r["sid"], r["gno"])
+            for sid, gno in summary.txs:
+                gs.add(sid, gno)
             gs.save(gtid_path)
         if metrics is not None:
-            # ONE bounded aggregate: O(tables x ops + sources) rows to
-            # the driver, never O(batch rows)
-            agg = batch.groupBy("schema_name", "table_name", "op").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("mt"),
-            ).collect()
-            seq_high = {
-                r["sid"]: r["s"]
-                for r in batch.groupBy("sid").agg(F.max("seq").alias("s")).collect()
-            }
-            if tx_rows is None:
-                tx_count = batch.select("sid", "gno").distinct().count()
-            else:
-                tx_count = len(tx_rows)
             metrics.observe_batch(
-                [
-                    (
-                        r["schema_name"], r["table_name"], r["op"], r["n"],
-                        r["mt"] / 1e6 if r["mt"] is not None else None,
-                    )
-                    for r in agg
-                ],
-                tx_count,
-                seq_high,
+                summary.op_counts(),
+                len(summary.txs),
+                summary.seq_high(),
                 _time.perf_counter() - t0,
             )
     finally:
-        batch.unpersist()
+        if pinned is not None:
+            pinned.unpersist()
 
 
 class ReplicationJob:
@@ -602,7 +728,7 @@ class ReplicationJob:
                 self.spark, held, self.job, self.target, self.catalog,
                 gtid_path=self.gtid_path, metrics=self.metrics,
             )
-            self.spool.write(held.limit(0))
+            self.spool.clear(self.spark)
 
     def process_available(self) -> None:
         """Synchronously drain everything currently in the source

@@ -467,3 +467,328 @@ def test_ddl_redelivery_without_catalog_path_no_double_apply(
     pl.apply_batch(spark, b1, job, target, cat, batch_id=1)
     assert [f.name for f in cat.get("db1", "t").schema.fields] == [
         "id", "v", "c", "d"]
+
+
+# -- batch summary, spool generations, parallel staging ----------------------
+
+S1 = "11111111-aaaa-aaaa-aaaa-111111111111"
+S2 = "22222222-bbbb-bbbb-bbbb-222222222222"
+
+
+def _wire(spark, rows):
+    """Wire rows from (sid, gno, seq, table, op, image-or-query) tuples."""
+    from pyspark.sql import Row
+
+    from dtle_spark.streaming.wire import WIRE_SCHEMA
+
+    out = []
+    for sid, gno, seq, table, op, payload in rows:
+        out.append(Row(
+            sid=sid, gno=gno, seq=seq, lc=0, op=op, ts=None, schema_name="db1",
+            table_name=table, before=payload if op in ("u", "d") else None,
+            after=payload if op in ("i", "u") else None,
+            query=payload if op == "ddl" else None,
+        ))
+    return spark.createDataFrame(out, WIRE_SCHEMA)
+
+
+def _keyed_job(name, tables):
+    """A tx_atomic job over keyed (id, v) tables."""
+    from pyspark.sql import types as T
+
+    cat = SchemaCatalog()
+    for t in tables:
+        cat.register("db1", t, T.StructType(
+            [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
+        ), ["id"])
+    job = JobConfig(name, [TableConfig("db1", t, unique_key=["id"]) for t in tables],
+                    tx_atomic=True)
+    return job, cat
+
+
+def _one_row_per_table(sid, gnos, tables, seq0=0):
+    """Each tx inserts id=gno, v=gno into every table."""
+    rows, seq = [], seq0
+    for g in gnos:
+        for t in tables:
+            seq += 1
+            rows.append((sid, g, seq, t, "i", f'{{"id":{g},"v":{g}}}'))
+    return rows
+
+
+def _ids(spark, target, table):
+    df = target.read(spark, "db1", table)
+    return set() if df is None else {r["id"] for r in df.collect()}
+
+
+def _apply(spark, rj, df, batch_id):
+    """One streamed batch of ``rj``, as its foreachBatch runs it."""
+    import dtle_spark.streaming.pipeline as pl
+
+    pl.apply_batch(
+        spark, df, rj.job, rj.target, rj.catalog, spool=rj.spool,
+        gtid_path=rj.gtid_path, metrics=rj.metrics,
+        catalog_path=rj.catalog_path, batch_id=batch_id,
+    )
+
+
+@pytest.mark.parametrize("fail_at", ["table_stage", "gtid_save"])
+def test_spool_replay_keeps_graduated_tx(spark, job_dirs, monkeypatch, fail_at):
+    """A tx_atomic batch that fails after writing its spool must replay
+    against the spool it read. Batch 0 holds gno 2; batch 1 (gno 3)
+    graduates it and fails once, inside a table's stage or after the
+    commits but before the GTID save; the replay must still apply gno 2
+    and fold it into the position."""
+    from dtle_spark.sources.gtid import GtidSet
+
+    tables = ["t1", "t2"]
+    job, cat = _keyed_job("replay", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    _apply(spark, rj, _wire(spark, _one_row_per_table(S1, [1, 2], tables)), 0)
+    assert _ids(spark, rj.target, "t1") == {1}
+
+    armed = {"on": True}
+    if fail_at == "table_stage":
+        real = rj.target.stage_merge
+
+        def flaky(spark_, changes, schema_name, table_name, key_cols):
+            if armed["on"] and table_name == "t2":
+                armed["on"] = False
+                raise RuntimeError("injected failure")
+            return real(spark_, changes, schema_name, table_name, key_cols)
+
+        monkeypatch.setattr(rj.target, "stage_merge", flaky)
+    else:
+        real_save = GtidSet.save
+
+        def flaky_save(self, path):
+            if armed["on"]:
+                armed["on"] = False
+                raise RuntimeError("injected failure")
+            return real_save(self, path)
+
+        monkeypatch.setattr(GtidSet, "save", flaky_save)
+    b1 = _wire(spark, _one_row_per_table(S1, [3], tables, seq0=10))
+    with pytest.raises(RuntimeError, match="injected"):
+        _apply(spark, rj, b1, 1)
+    _apply(spark, rj, b1, 1)  # the replay of the same batch id
+    rj.flush_spool()
+    for t in tables:
+        assert _ids(spark, rj.target, t) == {1, 2, 3}, t
+    assert rj.position()["gtid_set"] == f"{S1}:1-3"
+
+
+@pytest.mark.parametrize("resume", [False, True])
+def test_flat_layout_spool_is_read_as_input(spark, job_dirs, resume):
+    """A checkpoint whose txspool/ is one flat parquet directory (the
+    layout before spool generations) still holds its frontier tx: a
+    resumed batch graduates it, and flush_spool applies it."""
+    from dtle_spark.sources.gtid import GtidSet
+
+    job, cat = _keyed_job("flat", ["t1"])
+    spool_dir = os.path.join(job_dirs["checkpoint"], "txspool")
+    _wire(spark, _one_row_per_table(S1, [1], ["t1"])).coalesce(1).write.parquet(spool_dir)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    want = {1}
+    if resume:
+        _apply(spark, rj, _wire(spark, _one_row_per_table(S1, [2], ["t1"], seq0=5)), 4)
+        assert _ids(spark, rj.target, "t1") == {1}
+        assert rj.position()["gtid_set"] == f"{S1}:1"
+        want = {1, 2}
+    rj.flush_spool()
+    assert _ids(spark, rj.target, "t1") == want
+    expected = GtidSet()
+    for g in want:
+        expected.add(S1, g)
+    assert rj.position()["gtid_set"] == expected.to_str()
+    # the flushed spool is empty: a second flush applies nothing
+    rj.flush_spool()
+    assert rj.stats()["exec_tx_count"] == len(want)
+
+
+def test_failed_table_stage_moves_no_manifest_and_retry_converges(
+    spark, job_dirs, monkeypatch
+):
+    """Tables stage in parallel but commit together: when one of three
+    tables' stage raises, the exception propagates, no table's manifest
+    moves, and a retry of the batch converges."""
+    from dtle_spark.sinks.manifest import TableManifest
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("par", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rj.target.n_buckets = 4
+    _apply(spark, rj, _wire(spark, _one_row_per_table(S1, [1, 2, 3], tables)), 0)
+
+    def manifests():
+        out = {}
+        for t in tables:
+            p = rj.target.path("db1", t)
+            out[t] = (TableManifest.load(p).entries, TableManifest.versions(p))
+        return out
+
+    before = manifests()
+    real = rj.target.stage_merge
+
+    def failing(spark_, changes, schema_name, table_name, key_cols):
+        if table_name == "b":
+            raise RuntimeError("injected stage failure")
+        return real(spark_, changes, schema_name, table_name, key_cols)
+
+    monkeypatch.setattr(rj.target, "stage_merge", failing)
+    b1 = _wire(spark, _one_row_per_table(S1, [4, 5], tables, seq0=20))
+    with pytest.raises(RuntimeError, match="injected stage failure"):
+        _apply(spark, rj, b1, 1)
+    assert manifests() == before
+    monkeypatch.setattr(rj.target, "stage_merge", real)
+    _apply(spark, rj, b1, 1)
+    for t in tables:
+        assert _ids(spark, rj.target, t) == {1, 2, 3, 4}, t
+    assert rj.position()["gtid_set"] == f"{S1}:1-4"
+
+
+
+def test_parallel_stage_more_tables_than_workers(spark, job_dirs):
+    """More tables than staging threads, with a short thread switch
+    interval: every table still gets exactly its own rows (a commit
+    closure paired with the wrong table would move one table's image
+    into another)."""
+    import sys
+
+    tables = [f"t{i}" for i in range(spark.sparkContext.defaultParallelism + 2)]
+    job, cat = _keyed_job("stress", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rj.target.n_buckets = 2
+    rows = []
+    for i, t in enumerate(tables):
+        rows += [(S1, g, 100 * i + g, t, "i", f'{{"id":{100 * i + g},"v":{g}}}')
+                 for g in (1, 2, 3)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        _apply(spark, rj, _wire(spark, rows), 0)
+    finally:
+        sys.setswitchinterval(old)
+    for i, t in enumerate(tables):
+        assert _ids(spark, rj.target, t) == {100 * i + 1, 100 * i + 2}, t
+
+def _wait_jobs_settled(sc):
+    """Job events reach the status store asynchronously."""
+    import time
+
+    deadline = time.monotonic() + 10
+    while sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    time.sleep(0.3)
+
+
+def _all_job_ids(sc) -> set[int]:
+    it = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next().jobId())
+    return out
+
+
+def test_streamed_batch_jobs_stay_in_query_group(spark, job_dirs):
+    """Every Spark job of a streamed batch, the parallel table stages'
+    included, runs in the query's job group (so stop()/pause() cancels
+    them), and the worker threads inherit it without the "Tags will not
+    be inherited" warning."""
+    import warnings
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("group", tables)
+    os.makedirs(job_dirs["source"])
+    staging = job_dirs["source"] + "-staging"
+    rj = ReplicationJob(spark, job, os.path.join(job_dirs["source"], "*"),
+                        job_dirs["target"], job_dirs["checkpoint"], cat,
+                        max_files_per_trigger=1).start()
+    sc = spark.sparkContext
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            for i, gnos in enumerate([[1, 2], [3, 4]]):
+                staged = os.path.join(staging, f"f{i}")
+                _wire(spark, _one_row_per_table(S1, gnos, tables, seq0=10 * i)).coalesce(
+                    1).write.parquet(staged)
+                _wait_jobs_settled(sc)
+                seen = _all_job_ids(sc)
+                os.rename(staged, os.path.join(job_dirs["source"], f"f{i}"))
+                rj.process_available()
+                _wait_jobs_settled(sc)
+                new = _all_job_ids(sc) - seen
+                group = set(sc.statusTracker().getJobIdsForGroup(str(rj.query.runId)))
+                assert new and new <= group, sorted(new - group)
+    finally:
+        rj.pause()
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    assert _ids(spark, rj.target, "c") == {1, 2, 3}
+
+
+def test_ddl_free_three_table_batch_job_count(spark, job_dirs):
+    """A DDL-free 3-table tx_atomic batch issues at most 32 Spark jobs:
+    one summary action answers the frontier, DDL, GTID and metrics
+    questions, and stage_merge runs no separate dedupe."""
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("count", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rj.target.n_buckets = 8
+    sc = spark.sparkContext
+    for b in range(3):
+        df = _wire(spark, _one_row_per_table(S1, range(10 * b + 1, 10 * b + 11), tables,
+                                             seq0=100 * b))
+        group = f"repl-job-count-{b}"
+        sc.setJobGroup(group, "count apply_batch jobs")
+        try:
+            _apply(spark, rj, df, b)
+        finally:
+            sc.setJobGroup(None, None)
+    _wait_jobs_settled(sc)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # the third batch: spool non-empty, tables already bucketed
+    assert 0 < len(jobs) <= 32, len(jobs)
+    assert _ids(spark, rj.target, "a") == set(range(1, 30))
+
+
+def test_batch_bookkeeping_two_sources_held_frontier_and_ddl(spark, job_dirs):
+    """stats() and position() after one batch with two sources, each
+    source's frontier tx held and one DDL, against hand-computed values."""
+    from dtle_spark.sources.gtid import GtidSet
+
+    job, cat = _keyed_job("books", ["t1", "t2"])
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rows = [
+        (S1, 1, 1, "t1", "i", '{"id":1,"v":10}'),
+        (S1, 1, 2, "t2", "i", '{"id":1,"v":10}'),
+        (S1, 2, 3, "t1", "u", '{"id":1,"v":11}'),
+        (S1, 3, 4, "t1", "ddl", "ALTER TABLE db1.t1 ADD COLUMN c BIGINT"),
+        (S1, 4, 5, "t1", "i", '{"id":2,"v":20,"c":7}'),
+        (S1, 4, 6, "t2", "d", '{"id":1,"v":10}'),
+        (S1, 5, 7, "t2", "i", '{"id":5,"v":50}'),  # S1's frontier: held
+        (S2, 1, 8, "t2", "i", '{"id":3,"v":30}'),
+        (S2, 2, 9, "t1", "i", '{"id":3,"v":30}'),  # S2's frontier: held
+    ]
+    _apply(spark, rj, _wire(spark, rows), 0)
+    st = rj.stats()
+    assert st["exec_row_count"] == 6
+    assert st["exec_tx_count"] == 5
+    assert st["applied_seq"] == {S1: 6, S2: 8}
+    assert st["table_stats"] == {
+        "db1.t1": {"insert_count": 2, "update_count": 1, "del_count": 0, "ddl_count": 1},
+        "db1.t2": {"insert_count": 2, "update_count": 0, "del_count": 1, "ddl_count": 0},
+    }
+    want = GtidSet()
+    for sid, gnos in ((S1, [1, 2, 3, 4]), (S2, [1])):
+        for g in gnos:
+            want.add(sid, g)
+    assert rj.position()["gtid_set"] == want.to_str()
+    t1 = {r["id"]: (r["v"], r["c"]) for r in rj.target.read(spark, "db1", "t1").collect()}
+    assert t1 == {1: (11, None), 2: (20, 7)}
+    assert _ids(spark, rj.target, "t2") == {3}
