@@ -80,11 +80,16 @@ class TxSpool:
     batch writes. A failed batch therefore replays against the same
     input generation (its retry sees the txs that graduated from it),
     and the applied rows' lineage, which reads that generation, stays
-    valid for the whole batch. A spool written as one flat parquet
-    directory (the layout before generations) reads as generation -1.
-    State is O(one tx per source) per generation, not O(history)."""
+    valid for the whole batch. A batch that finishes marks its
+    generation applied; flush_spool reads the newest applied generation,
+    the one the next batch to run reads (a failed batch's own
+    generation is skipped: its replay will rewrite it). A spool written
+    as one flat parquet directory (the layout before generations) reads
+    as generation -1, applied. State is O(one tx per source) per
+    generation, not O(history)."""
 
     LEGACY = -1
+    APPLIED = "_APPLIED"
 
     def __init__(self, root: str):
         self.root = root
@@ -108,11 +113,11 @@ class TxSpool:
             out[self.LEGACY] = self.root
         return out
 
-    def read(self, spark: SparkSession, below: int | None = None) -> DataFrame | None:
-        """The newest generation below batch id ``below`` (the newest of
-        all when None), or None when there is none."""
+    def read(self, spark: SparkSession, below: int) -> DataFrame | None:
+        """The newest generation below batch id ``below``, or None when
+        there is none."""
         gens = self._generations()
-        ids = [g for g in gens if below is None or g < below]
+        ids = [g for g in gens if g < below]
         if not ids:
             return None
         g = max(ids)
@@ -122,7 +127,7 @@ class TxSpool:
         data = [f for f in self._legacy_files() if not os.path.basename(f).startswith(("_", "."))]
         return reader.parquet(*data) if data else None
 
-    def write(self, df: DataFrame, batch_id: int) -> None:
+    def write(self, df: DataFrame, batch_id: int, applied: bool = False) -> None:
         """Write ``gen-<batch_id>`` (replacing a failed attempt's), then
         drop every generation but it and the input one below it."""
         gens = self._generations()
@@ -130,6 +135,8 @@ class TxSpool:
         token = uuid.uuid4().hex[:8]
         staged = os.path.join(self.root, f".staged-{token}")
         df.write.mode("overwrite").parquet(staged)
+        if applied:
+            open(os.path.join(staged, self.APPLIED), "w").close()
         final = os.path.join(self.root, f"gen-{batch_id}")
         old = os.path.join(self.root, f".old-{token}")
         if os.path.exists(final):
@@ -145,19 +152,33 @@ class TxSpool:
             else:
                 shutil.rmtree(path, ignore_errors=True)
 
-    def clear(self, spark: SparkSession) -> None:
-        """Empty the newest generation (flush_spool, stream paused). The
-        flat layout's replacement is ``gen-0``, which every later batch
-        reads in its place."""
-        newest = max(self._generations(), default=self.LEGACY)
-        self.write(spark.createDataFrame([], WIRE_SCHEMA), max(newest, 0))
+    def mark_applied(self, batch_id: int) -> None:
+        """Batch ``batch_id`` finished: everything but the txs its
+        generation holds is applied."""
+        open(os.path.join(self.root, f"gen-{batch_id}", self.APPLIED), "w").close()
+
+    def last_applied(self) -> int | None:
+        """The newest applied generation, or None when there is none."""
+        return max(
+            (g for g, path in self._generations().items()
+             if g == self.LEGACY or os.path.exists(os.path.join(path, self.APPLIED))),
+            default=None,
+        )
+
+    def clear(self, spark: SparkSession, gen: int) -> None:
+        """Replace applied generation ``gen`` with an empty one, after
+        flush_spool applied its txs (stream paused); newer generations
+        go. The flat layout's replacement is ``gen-0``, which every
+        later batch reads in its place."""
+        self.write(spark.createDataFrame([], WIRE_SCHEMA), max(gen, 0), applied=True)
 
 
 class BatchSummary:
     """Driver-side bookkeeping of one micro-batch from ONE grouped Spark
     action: a row per (sid, gno, schema, table, op) with its row count,
-    newest event ts, max seq and DDL (seq, query) pairs. O(txs x tables
-    x ops) rows reach the driver, never O(batch rows).
+    newest event ts, max seq and DDL (seq, query) pairs. One row per
+    tx x table x op reaches the driver: with single-row autocommit txs
+    that is as many rows as the batch has.
 
     Everything the batch loop needs derives from it: each source's
     frontier gno (held back with a TxSpool), DDL presence and each
@@ -170,6 +191,7 @@ class BatchSummary:
             for r in rows:
                 self.frontier[r["sid"]] = max(self.frontier.get(r["sid"], r["gno"]), r["gno"])
         self.rows = [r for r in rows if self.frontier.get(r["sid"]) != r["gno"]]
+        self.txs: list[tuple[str, int]] = sorted({(r["sid"], r["gno"]) for r in self.rows})
 
     @classmethod
     def of(cls, df: DataFrame, hold_frontier: bool = False) -> "BatchSummary":
@@ -205,10 +227,6 @@ class BatchSummary:
              for d in r["ddls"]),
             key=lambda d: d["seq"],
         )
-
-    @property
-    def txs(self) -> list[tuple[str, int]]:
-        return sorted({(r["sid"], r["gno"]) for r in self.rows})
 
     def op_counts(self) -> list[tuple]:
         """(schema, table, op, rows, newest event ts in epoch s)."""
@@ -355,9 +373,7 @@ def _stage_tables(
         return _merge_segment(spark, typed, cfg, job, target)
 
     n = min(len(job.tables), spark.sparkContext.defaultParallelism)
-    if n <= 1:
-        return [stage(cfg) for cfg in job.tables]
-    with ThreadPoolExecutor(max_workers=n) as pool:
+    with ThreadPoolExecutor(max_workers=max(1, n)) as pool:
         # one wrapper per task: each clones the caller's properties, so
         # a worker setting its job description cannot leak into another
         futures = [
@@ -600,6 +616,8 @@ def apply_batch(
                 summary.seq_high(),
                 _time.perf_counter() - t0,
             )
+        if spool is not None:
+            spool.mark_applied(batch_id)
     finally:
         if pinned is not None:
             pinned.unpersist()
@@ -720,7 +738,13 @@ class ReplicationJob:
         shutdown drain is the same judgement call)."""
         if self.spool is None:
             return
-        held = self.spool.read(self.spark)
+        # the generation the next batch to run reads: a batch that
+        # failed after writing its own generation replays against the
+        # one below it, so that is the one whose txs are held
+        gen = self.spool.last_applied()
+        if gen is None:
+            return
+        held = self.spool.read(self.spark, below=gen + 1)
         if held is not None and held.limit(1).count() > 0:
             # the flushed txs fold into the applied position and the
             # task metrics like any streamed batch's
@@ -728,7 +752,7 @@ class ReplicationJob:
                 self.spark, held, self.job, self.target, self.catalog,
                 gtid_path=self.gtid_path, metrics=self.metrics,
             )
-            self.spool.clear(self.spark)
+            self.spool.clear(self.spark, gen)
 
     def process_available(self) -> None:
         """Synchronously drain everything currently in the source

@@ -492,16 +492,17 @@ def _wire(spark, rows):
     return spark.createDataFrame(out, WIRE_SCHEMA)
 
 
-def _keyed_job(name, tables):
-    """A tx_atomic job over keyed (id, v) tables."""
+def _keyed_job(name, tables, keyed=True):
+    """A tx_atomic job over (id, v) tables, keyed on id unless not ``keyed``."""
     from pyspark.sql import types as T
 
+    key = ["id"] if keyed else []
     cat = SchemaCatalog()
     for t in tables:
         cat.register("db1", t, T.StructType(
             [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
-        ), ["id"])
-    job = JobConfig(name, [TableConfig("db1", t, unique_key=["id"]) for t in tables],
+        ), key)
+    job = JobConfig(name, [TableConfig("db1", t, unique_key=key) for t in tables],
                     tx_atomic=True)
     return job, cat
 
@@ -576,6 +577,53 @@ def test_spool_replay_keeps_graduated_tx(spark, job_dirs, monkeypatch, fail_at):
     rj.flush_spool()
     for t in tables:
         assert _ids(spark, rj.target, t) == {1, 2, 3}, t
+    assert rj.position()["gtid_set"] == f"{S1}:1-3"
+
+
+@pytest.mark.parametrize("keyed", [True, False])
+def test_flush_after_failed_batch_applies_its_input_generation(
+    spark, job_dirs, monkeypatch, keyed
+):
+    """Batch 0 holds gno 2; batch 1 (gno 3) fails after writing its
+    spool generation, and the spool is flushed before batch 1 replays.
+    The flush applies gno 2, the tx batch 1's replay reads as held, so
+    the position has no gap; the replay then holds gno 3 and the next
+    flush applies it. Every tx lands exactly once, also on a no-PK table
+    where the flush's seq watermark could drop the older tx."""
+    import dtle_spark.streaming.pipeline as pl
+
+    tables = ["t1", "t2"]
+    job, cat = _keyed_job("flushfail", tables, keyed=keyed)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+
+    def ids(t):
+        return sorted(r["id"] for r in rj.target.read(spark, "db1", t).collect())
+
+    _apply(spark, rj, _wire(spark, _one_row_per_table(S1, [1, 2], tables)), 0)
+    real = pl._merge_segment
+    armed = {"on": True}
+
+    def flaky(spark_, typed, cfg, job_, target):
+        if armed["on"] and cfg.table_name == "t2":
+            armed["on"] = False
+            raise RuntimeError("injected failure")
+        return real(spark_, typed, cfg, job_, target)
+
+    monkeypatch.setattr(pl, "_merge_segment", flaky)
+    b1 = _wire(spark, _one_row_per_table(S1, [3], tables, seq0=10))
+    with pytest.raises(RuntimeError, match="injected"):
+        _apply(spark, rj, b1, 1)
+    rj.flush_spool()
+    for t in tables:
+        assert ids(t) == [1, 2], t
+    assert rj.position()["gtid_set"] == f"{S1}:1-2"
+    _apply(spark, rj, b1, 1)  # the replay of the same batch id
+    for t in tables:
+        assert ids(t) == [1, 2], t
+    rj.flush_spool()
+    for t in tables:
+        assert ids(t) == [1, 2, 3], t
     assert rj.position()["gtid_set"] == f"{S1}:1-3"
 
 
