@@ -91,8 +91,8 @@ def net_to_source(net: DataFrame, key_cols: list[str], row_type) -> DataFrame:
 
 class DeltaTableTarget:
     """Delta-backed TableTarget: same call surface the streaming batch
-    loop uses (``stage_merge``/``merge``/``read``/``read_internal``/
-    ``seed``/``overwrite``/``seq_watermark``), dispatched in
+    loop uses (``stage_merge``/``stage_image``/``merge``/``read``/
+    ``read_internal``/``seed``/``overwrite``/``seq_watermark``), dispatched in
     ``_merge_segment`` via ``NATIVE_MERGE``."""
 
     NATIVE_MERGE = True
@@ -132,6 +132,18 @@ class DeltaTableTarget:
         out.write.format("delta").mode("overwrite").option(
             "overwriteSchema", "true"
         ).save(self.path(schema_name, table_name))
+
+    def stage_image(self, df: DataFrame, schema_name: str, table_name: str,
+                    key_cols: list[str] | None = None,
+                    seq_watermark: dict[str, int] | None = None):
+        """The whole-image write as a commit closure: the ``overwrite``
+        runs inside it (its log commit is atomic per table, as for
+        ``stage_merge``)."""
+
+        def commit_fn() -> None:
+            self.overwrite(df, schema_name, table_name)
+
+        return commit_fn
 
     def read_internal(self, spark: SparkSession, schema_name: str,
                       table_name: str) -> DataFrame | None:

@@ -1,7 +1,7 @@
 """Merge targets over parquet with manifest-atomic commits.
 
 Two targets behind one interface (``read``/``read_internal``/``stage``/
-``commit``/``overwrite``/``compact``):
+``commit``/``stage_image``/``overwrite``/``compact``):
 
 - ``ParquetTableTarget`` — whole-table image per commit. Simple, exact;
   rewrite cost O(table) per batch, the test-tier stand-in.
@@ -23,9 +23,10 @@ Two targets behind one interface (``read``/``read_internal``/``stage``/
 Both commit through :mod:`dtle_spark.sinks.manifest`: data dirs are
 immutable, a commit is ONE atomic manifest rename, and a crash at any
 point leaves the previous table state readable (no rename-swap window).
-``stage_merge`` returns the commit as a closure so the streaming batch
-loop can swap EVERY table's manifest in one tight loop — the A6
-cross-table atomicity of streaming/pipeline.apply_batch.
+``stage_merge`` (a batch's changes) and ``stage_image`` (a whole new
+image: a DDL batch's table) return the commit as a closure so the
+streaming batch loop can swap EVERY table's manifest in one tight loop —
+the A6 cross-table atomicity of streaming/pipeline.apply_batch.
 """
 
 from __future__ import annotations
@@ -184,6 +185,26 @@ class ManifestedTarget:
 
     def overwrite(self, df: DataFrame, schema_name: str, table_name: str) -> None:
         self.commit(self.stage(df, schema_name, table_name), schema_name, table_name)
+
+    def stage_image(
+        self,
+        df: DataFrame,
+        schema_name: str,
+        table_name: str,
+        key_cols: list[str] | None = None,
+        seq_watermark: dict[str, int] | None = None,
+    ):
+        """Write a whole new table image aside; returns the commit
+        closure that adopts it (the streaming batch loop's image path,
+        committed with the batch's other tables). ``key_cols`` lays the
+        image out by key where the target buckets; a None watermark
+        keeps the committed one."""
+        staged = self.stage(df, schema_name, table_name)
+
+        def commit_fn() -> None:
+            self.commit(staged, schema_name, table_name, seq_watermark=seq_watermark)
+
+        return commit_fn
 
     def append(
         self,
@@ -408,31 +429,54 @@ class BucketedTableTarget(ManifestedTarget):
     def seed(self, df: DataFrame, schema_name: str, table_name: str, key_cols: list[str]) -> None:
         """Initial (snapshot) load: write every bucket partition
         (seq-versioned from the start, seq -1 = before every change)."""
+        self.stage_image(df, schema_name, table_name, key_cols)()
+
+    def stage_image(
+        self,
+        df: DataFrame,
+        schema_name: str,
+        table_name: str,
+        key_cols: list[str] | None = None,
+        seq_watermark: dict[str, int] | None = None,
+    ):
+        """Write the whole image re-bucketed on ``key_cols`` (seq-versioned;
+        unversioned rows take seq -1) into a staged dir; the returned
+        closure adopts every bucket and replaces any previous table state
+        in ONE manifest swap. Without ``key_cols`` the image is one
+        whole-table entry."""
+        if not key_cols:
+            return super().stage_image(df, schema_name, table_name, seq_watermark=seq_watermark)
         if DELETED_COL not in df.columns:
             df = with_version_columns(df)
         bucketed = df.withColumn("__b", self._bucket_fn(key_cols, self.n_buckets))
         p = self.path(schema_name, table_name)
-        staged = p + f".staged-{uuid.uuid4().hex[:8]}"
+        token = uuid.uuid4().hex[:8]
+        staged = p + f".staged-{token}"
         (
             bucketed.repartition(self.n_buckets, "__b")
             .write.partitionBy("__b")
             .mode("overwrite")
             .parquet(staged)
         )
-        os.makedirs(p, exist_ok=True)
-        token = uuid.uuid4().hex[:8]
-        with writer_lease(p, "seed"):
-            m = TableManifest(key_cols=list(key_cols), n_buckets=self.n_buckets)
-            for d in sorted(os.listdir(staged)):
-                if not d.startswith("__b="):
-                    continue
-                b = d[4:]
-                entry = f"b{b}-{token}"
-                os.rename(os.path.join(staged, d), os.path.join(p, entry))
-                m.entries[b] = entry
-            m.save(p)  # <- commit point; replaces any previous table state
-            gc_unreferenced(p, m)
-        shutil.rmtree(staged, ignore_errors=True)
+
+        def commit_fn() -> None:
+            os.makedirs(p, exist_ok=True)
+            with writer_lease(p, "seed"):
+                m = TableManifest(key_cols=list(key_cols), n_buckets=self.n_buckets)
+                if seq_watermark is not None:
+                    m.seq_watermark = seq_watermark
+                for d in sorted(os.listdir(staged)):
+                    if not d.startswith("__b="):
+                        continue
+                    b = d[4:]
+                    entry = f"b{b}-{token}"
+                    os.rename(os.path.join(staged, d), os.path.join(p, entry))
+                    m.entries[b] = entry
+                m.save(p)  # <- commit point; replaces any previous table state
+                gc_unreferenced(p, m)
+            shutil.rmtree(staged, ignore_errors=True)
+
+        return commit_fn
 
     def overwrite(self, df: DataFrame, schema_name: str, table_name: str) -> None:
         """Whole-table rewrite that PRESERVES bucketing when the table

@@ -12,11 +12,12 @@ Guarantees (SURVEY §7 hard part (b)): each micro-batch applies
 atomically per table via staged directory swap; replays after failure
 are idempotent because merge is seq-versioned and re-delivery is
 deduped (A10) — the streaming checkpoint plays the gtid-set role.
-DDL-free batches commit cross-table atomically (A6 staged swaps), and
-with ``job.tx_atomic`` the TxSpool holds back each source's frontier
-tx until a later gno proves its commit — batches become tx-aligned,
-upgrading the A6 swap to per-TX atomicity across tables (the
-reference's guarantee, reached by inference instead of XID markers).
+Every batch, DDL batches included, commits cross-table atomically (A6
+staged swaps), and with ``job.tx_atomic`` the TxSpool holds back each
+source's frontier tx until a later gno proves its commit — batches
+become tx-aligned, upgrading the A6 swap to per-TX atomicity across
+tables (the reference's guarantee, reached by inference instead of
+XID markers).
 
 The transport layer the reference built on NATS (64MB segmentation,
 gob+gzip, ack flow control — extractor.go:626-681) has no Spark
@@ -31,10 +32,13 @@ jar-free local stand-in behind the same TableSink interface.
 
 from __future__ import annotations
 
+import operator
 import os
 import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +47,13 @@ from pyspark.sql import types as T
 
 from dtle_spark.catalog import DdlAction, SchemaCatalog, parse_ddl_actions
 from dtle_spark.model import JobConfig, TableConfig
-from dtle_spark.operators.apply import apply_changes, apply_changes_no_pk
+from dtle_spark.operators.apply import (
+    DELETED_COL,
+    apply_changes_no_pk,
+    latest_image_per_key,
+    merge_into_versioned,
+    with_version_columns,
+)
 from dtle_spark.operators.filters import (
     apply_where_to_changes,
     origin_filter,
@@ -176,13 +186,14 @@ class TxSpool:
 class BatchSummary:
     """Driver-side bookkeeping of one micro-batch from ONE grouped Spark
     action: a row per (sid, gno, schema, table, op) with its row count,
-    newest event ts, max seq and DDL (seq, query) pairs. One row per
+    newest event ts, min and max seq and DDL (seq, query) pairs. One row per
     tx x table x op reaches the driver: with single-row autocommit txs
     that is as many rows as the batch has.
 
     Everything the batch loop needs derives from it: each source's
-    frontier gno (held back with a TxSpool), DDL presence and each
-    table's DDL barriers, the applied (sid, gno) set for the GTID fold
+    frontier gno (held back with a TxSpool), DDL presence, each table's
+    DDL barriers and DML seq ranges (which decide whether a seq check
+    needs a Spark job), the applied (sid, gno) set for the GTID fold
     and the TaskMetrics inputs — all over the COMPLETE rows only."""
 
     def __init__(self, rows: list, hold_frontier: bool = False):
@@ -198,6 +209,7 @@ class BatchSummary:
         rows = df.groupBy("sid", "gno", "schema_name", "table_name", "op").agg(
             F.count(F.lit(1)).alias("n"),
             F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("mt"),
+            F.min("seq").alias("s0"),
             F.max("seq").alias("s"),
             F.collect_list(
                 F.when(F.col("op") == "ddl", F.struct("seq", "query"))
@@ -227,6 +239,15 @@ class BatchSummary:
              for d in r["ddls"]),
             key=lambda d: d["seq"],
         )
+
+    def dml_seq_ranges(self, schema_name: str, table_name: str) -> list[tuple[int, int]]:
+        """(min seq, max seq) of each of the table's DML summary rows: a
+        DML row of the table can only have a seq inside one of them."""
+        return [
+            (r["s0"], r["s"]) for r in self.rows
+            if r["schema_name"] == schema_name and r["table_name"] == table_name
+            and r["op"] != "ddl"
+        ]
 
     def op_counts(self) -> list[tuple]:
         """(schema, table, op, rows, newest event ts in epoch s)."""
@@ -274,10 +295,134 @@ def transform_changes(changes: DataFrame, cfg: TableConfig, local_sid: str | Non
     return map_changes(out, cfg)
 
 
-def _read_seq_watermark(target, schema_name: str, table_name: str) -> dict[str, int]:
-    """Per-source applied-seq high-water mark, stored IN the table
-    manifest so data + watermark commit atomically (one rename)."""
-    return target.seq_watermark(schema_name, table_name)
+def _unapplied(tchanges: DataFrame, wm: dict[str, int]) -> DataFrame:
+    """The rows a no-PK table's seq watermark does not yet cover."""
+    if not wm:
+        return tchanges
+    cond = F.lit(True)
+    for sid, s in wm.items():
+        cond = cond & ~((F.col("sid") == sid) & (F.col("seq") <= F.lit(s)))
+    return tchanges.filter(cond)
+
+
+def _advance_watermark(wm: dict[str, int], fresh: DataFrame) -> dict[str, int]:
+    """The watermark once ``fresh`` is applied (bounded driver-side
+    state: one row per source server)."""
+    out = dict(wm)
+    for r in fresh.groupBy("sid").agg(F.max("seq").alias("s")).collect():
+        out[r["sid"]] = max(out.get(r["sid"], -(1 << 62)), r["s"])
+    return out
+
+
+# DDL kinds without a physical effect on the table's image: catalog-level
+# or schema-unaffected (indexes, defaults); target dirs are managed lazily
+CATALOG_DDL = frozenset(
+    {"create_schema", "create_table", "drop_table", "drop_schema", "rename_table", "noop"}
+)
+
+
+def apply_ddl_to_target(img: DataFrame | None, action: DdlAction) -> DataFrame | None:
+    """D2 on the physical table, as a frame transform of its image (on a
+    lake deployment these are native ALTER TABLE/schema-evolution
+    commits). Works on the INTERNAL form so version columns/tombstones
+    survive; no image yet (None) stays None.
+
+    IDEMPOTENT on replay: foreachBatch is at-least-once, so a batch
+    whose DDL already landed physically can redeliver (crash between
+    the catalog snapshot and the checkpoint commit). Each structural
+    action checks the image's columns and returns it unchanged when its
+    effect is already present — re-running add_column would otherwise
+    re-backfill the column and WIPE every value later merges wrote
+    into it (measured: post-DDL images silently reset to the
+    default)."""
+    if img is None or action.kind in CATALOG_DDL:
+        return img
+    cols = img.columns
+    if action.kind == "add_column":
+        if action.column in cols:
+            return img
+        fill = F.lit(None).cast(action.dtype)
+        if action.default is not None:
+            # DEFAULT backfill: existing rows take the literal
+            # (MySQL instant-ADD semantics for constant defaults)
+            raw = action.default.strip()
+            lit = raw[1:-1].replace("''", "'") if raw.startswith("'") else raw
+            if lit.upper() != "NULL":
+                fill = F.lit(lit).cast(action.dtype)
+        return img.withColumn(action.column, fill)
+    if action.kind == "drop_column":
+        return img.drop(action.column) if action.column in cols else img
+    if action.kind in ("rename_column", "change_column"):
+        # the new name must also be ABSENT: a replayed batch carrying
+        # [rename a->b, add_column a] re-adds `a`, and renaming it
+        # again would create a second `b` (AMBIGUOUS_REFERENCE on
+        # every later read)
+        if action.column not in cols or action.new_name in cols:
+            return img
+        if action.kind == "change_column":
+            img = img.withColumn(action.column, F.col(action.column).cast(action.dtype))
+        return img.withColumnRenamed(action.column, action.new_name)
+    if action.kind == "modify_column":
+        if action.column not in cols:
+            return img
+        return img.withColumn(action.column, F.col(action.column).cast(action.dtype))
+    if action.kind == "truncate":
+        return img.limit(0)
+    raise ValueError(f"unhandled DDL action {action.kind}")
+
+
+def _stage_image(spark: SparkSession, steps: list, cfg: TableConfig, job: JobConfig, target):
+    """Fold a table's steps, in seq order, into ONE lazy image over the
+    committed one (read once) and stage it with one write; returns the
+    commit closure, or None when the table has no image. A step is a
+    typed DML segment, merged, or a DdlAction, applied as its frame
+    transform."""
+    s, t, key = cfg.target_schema, cfg.target_table, cfg.unique_key
+    if key:
+        img = target.read_internal(spark, s, t)
+        if img is not None and DELETED_COL not in img.columns:
+            img = with_version_columns(img)  # freshly-seeded snapshot
+    else:
+        # counting semantics have no key to version on. foreachBatch is
+        # at-least-once (a crash between target swap and checkpoint
+        # commit replays the batch) and counting double-applies on
+        # replay — so we keep a per-source applied-seq watermark in the
+        # table dir (swapped atomically with the data) and drop
+        # already-applied rows. Bridges make seq monotone per sid, so
+        # `seq <= watermark[sid]` identifies replayed rows exactly. The
+        # watermark lives IN the table manifest, so data + watermark
+        # commit atomically (one rename).
+        img = target.read(spark, s, t)
+        wm = target.seq_watermark(s, t)
+        fresh = []
+    for step in steps:
+        if isinstance(step, DdlAction):
+            img = apply_ddl_to_target(img, step)
+            continue
+        tchanges = transform_changes(step, cfg, job.local_sid)
+        if img is None:
+            # seed schema must be the POST-column-map row struct
+            # (tchanges has already passed map_changes; meta.schema
+            # carries source names)
+            img = spark.createDataFrame([], tchanges.schema["after"].dataType)
+            if key:
+                img = with_version_columns(img)
+        if key:
+            # seq-versioned merge: correct under split/reordered delivery
+            # across micro-batches (multi-file sources); tombstones guard
+            # late stale changes (operators/apply.merge_into_versioned)
+            img = merge_into_versioned(img, latest_image_per_key(tchanges, key), key)
+        else:
+            fresh.append(_unapplied(tchanges, wm))
+            img = apply_changes_no_pk(img, fresh[-1])
+    if img is None:
+        return None
+    wm_update = None
+    if not key and fresh:
+        wm_update = _advance_watermark(
+            wm, reduce(DataFrame.unionByName, [f.select("sid", "seq") for f in fresh])
+        )
+    return target.stage_image(img, s, t, key_cols=key or None, seq_watermark=wm_update)
 
 
 def _merge_segment(
@@ -285,17 +430,6 @@ def _merge_segment(
 ):
     """Stage one segment's merge; returns its commit closure. Nothing is
     visible until the closure runs."""
-    from dtle_spark.operators.apply import (
-        DELETED_COL,
-        latest_image_per_key,
-        merge_into_versioned,
-        with_version_columns,
-    )
-
-    tchanges = transform_changes(typed, cfg, job.local_sid)
-    # seed schema must be the POST-column-map row struct (tchanges has
-    # already passed map_changes; meta.schema carries source names)
-    row_struct = tchanges.schema["after"].dataType
     if cfg.unique_key and (
         isinstance(target, BucketedTableTarget)
         or getattr(target, "NATIVE_MERGE", False)
@@ -305,59 +439,160 @@ def _merge_segment(
         # branch (sinks/delta_target.py) — both stage now and commit
         # with the rest of the batch's tables (A6; per-table atomic on
         # the native branch, see delta_target's module note)
+        tchanges = transform_changes(typed, cfg, job.local_sid)
         _, commit_fn = target.stage_merge(
             spark, tchanges, cfg.target_schema, cfg.target_table, cfg.unique_key
         )
         return commit_fn
-    wm_update: dict[str, int] | None = None
-    if cfg.unique_key:
-        # seq-versioned merge: correct under split/reordered delivery
-        # across micro-batches (multi-file sources); tombstones guard
-        # late stale changes (operators/apply.merge_into_versioned)
-        current = target.read_internal(spark, cfg.target_schema, cfg.target_table)
-        if current is None:
-            current = with_version_columns(spark.createDataFrame([], row_struct))
-        elif DELETED_COL not in current.columns:
-            current = with_version_columns(current)  # freshly-seeded snapshot
-        net = latest_image_per_key(tchanges, cfg.unique_key)
-        merged = merge_into_versioned(current, net, cfg.unique_key)
-    else:
-        # counting semantics have no key to version on. foreachBatch is
-        # at-least-once (a crash between target swap and checkpoint
-        # commit replays the batch) and counting double-applies on
-        # replay — so we keep a per-source applied-seq watermark in the
-        # table dir (swapped atomically with the data) and drop
-        # already-applied rows. Bridges make seq monotone per sid, so
-        # `seq <= watermark[sid]` identifies replayed rows exactly.
-        current = target.read(spark, cfg.target_schema, cfg.target_table)
-        if current is None:
-            current = spark.createDataFrame([], row_struct)
-        wm = _read_seq_watermark(target, cfg.target_schema, cfg.target_table)
-        fresh = tchanges
-        if wm:
-            cond = F.lit(True)
-            for sid, s in wm.items():
-                cond = cond & ~((F.col("sid") == sid) & (F.col("seq") <= F.lit(s)))
-            fresh = tchanges.filter(cond)
-        wm_update = dict(wm)
-        # bounded driver-side state: one row per source server
-        for r in fresh.groupBy("sid").agg(F.max("seq").alias("s")).collect():
-            wm_update[r["sid"]] = max(wm_update.get(r["sid"], -(1 << 62)), r["s"])
-        merged = apply_changes_no_pk(current, fresh)
-    staged = target.stage(merged, cfg.target_schema, cfg.target_table)
-    s, t, wm = cfg.target_schema, cfg.target_table, wm_update
+    return _stage_image(spark, [typed], cfg, job, target)
 
-    def commit_fn(staged=staged, s=s, t=t, wm=wm) -> None:
-        target.commit(staged, s, t, seq_watermark=wm)
 
-    return commit_fn
+@dataclass
+class TablePlan:
+    """One table's share of a batch, planned on the driver. ``steps``,
+    in seq order: ``(lo, hi, schema)`` segments (the table's DML rows
+    with lo < seq < hi, None = unbounded, parsed with the catalog schema
+    current for the segment) and the DDL actions between them.
+    ``checks``: ``(predicate, message)`` pairs over the DML rows that
+    the batch summary could not rule out; the stage counts them and
+    fails on a hit with the message (``{n}`` rows, first at ``{seq}``)."""
+
+    cfg: TableConfig
+    steps: list
+    checks: list
+
+    @property
+    def has_ddl(self) -> bool:
+        return any(isinstance(s, DdlAction) for s in self.steps)
+
+    @property
+    def segments(self) -> list[tuple]:
+        return [s for s in self.steps if not isinstance(s, DdlAction)]
+
+    @property
+    def folds(self) -> bool:
+        """Whether the table's image is rewritten: a DDL transforms it,
+        or its segments parse with different schemas."""
+        segs = self.segments
+        return any(
+            isinstance(s, DdlAction) and s.kind not in CATALOG_DDL for s in self.steps
+        ) or any(seg[2] != segs[0][2] for seg in segs)
+
+
+def _seq_between(lo: int | None, hi: int | None):
+    cond = F.lit(True)
+    if lo is not None:
+        cond = cond & (F.col("seq") > lo)
+    if hi is not None:
+        cond = cond & (F.col("seq") < hi)
+    return cond
+
+
+def plan_tables(
+    job: JobConfig,
+    cat: SchemaCatalog,
+    summary: BatchSummary,
+    ddl_in_snapshot: bool,
+    batch_id: int | None,
+) -> list[TablePlan]:
+    """Plan the batch's tables on the driver, from the summary alone (no
+    Spark job): walk ``job.tables`` in order and each table's DDL rows
+    in seq order, apply the actions to ``cat`` (the batch's catalog
+    copy; skipped when the batch's DDL is already in the snapshot) and
+    record each table's segments with the schema current for them —
+    the reference's DDL barrier (applier_incr.go:375-386) as seq
+    bounds. Tables without complete rows in the batch get no plan, and
+    segments the summary shows empty are dropped.
+
+    A segment whose table has no catalog entry (a DDL renamed or
+    dropped it) ends the table's segments: DML rows in it fail the
+    batch. On a replay whose DDL is already in the snapshot, every
+    commit of the batch landed, so such a segment is skipped."""
+    plans = []
+    for cfg in job.tables:
+        name = f"{cfg.schema_name}.{cfg.table_name}"
+        ranges = summary.dml_seq_ranges(cfg.schema_name, cfg.table_name)
+        ddls = summary.ddls(cfg.schema_name, cfg.table_name)
+        if not ranges and not ddls:
+            continue
+
+        def maybe_dml(first, last):
+            return any(a <= last and b >= first for a, b in ranges)
+
+        # segmentation uses STRICT inequalities around the DDL seqs, so a
+        # DML row SHARING a seq with a barrier would silently drop from
+        # every segment — fail loud instead (same contract as
+        # SubscriptionJob). Binlog DDL is its own tx, so the summary
+        # rules the clash out without a Spark job almost always.
+        checks = [
+            (F.col("seq") == d["seq"],
+             f"{{n}} DML row(s) share a seq with a DDL barrier in {name} "
+             f"(batch {batch_id}); wire seqs must be unique")
+            for d in ddls if maybe_dml(d["seq"], d["seq"])
+        ]
+        steps: list = []
+        lo = None
+        for ddl_row in ddls + [None]:
+            hi = ddl_row["seq"] if ddl_row is not None else None
+            first = float("-inf") if lo is None else lo + 1
+            last = float("inf") if hi is None else hi - 1
+            if maybe_dml(first, last):
+                meta = cat.get(cfg.schema_name, cfg.table_name)
+                if meta is not None:
+                    steps.append((lo, hi, meta.schema))
+                elif not ddl_in_snapshot:
+                    why = "" if lo is None else f": the DDL at seq {lo} renamed or dropped it"
+                    checks.append((
+                        _seq_between(lo, hi),
+                        f"{{n}} DML row(s) of {name} (first at seq {{seq}}) have no "
+                        f"catalog entry{why} (batch {batch_id})",
+                    ))
+            if ddl_row is not None:
+                # multi-clause ALTER / multi-pair RENAME replay in order
+                for action in parse_ddl_actions(ddl_row["query"], default_schema=cfg.schema_name):
+                    if not ddl_in_snapshot:
+                        cat.apply(action)
+                    steps.append(action)
+                lo = hi
+        plans.append(TablePlan(cfg, steps, checks))
+    return plans
+
+
+def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: JobConfig, target):
+    """One table's stage: the exact checks its plan asks for, then one
+    merge over all its DML, or the whole-image fold when its image
+    changes. Returns the commit closure, or None when there is nothing
+    to commit."""
+    cfg = plan.cfg
+    rows = table_filter(batch, cfg.schema_name, cfg.table_name)
+    if plan.has_ddl:
+        rows = rows.filter(F.col("op") != "ddl")
+    for pred, message in plan.checks:
+        r = rows.filter(pred).agg(
+            F.count(F.lit(1)).alias("n"), F.min("seq").alias("seq")
+        ).first()
+        if r["n"]:
+            raise ValueError(message.format(n=r["n"], seq=r["seq"]))
+    if plan.folds:
+        steps = [
+            s if isinstance(s, DdlAction)
+            else from_wire(rows.filter(_seq_between(s[0], s[1])), s[2])
+            for s in plan.steps
+        ]
+        return _stage_image(spark, steps, cfg, job, target)
+    segs = plan.segments
+    if not segs:
+        return None
+    if plan.has_ddl:
+        rows = rows.filter(reduce(operator.or_, [_seq_between(lo, hi) for lo, hi, _ in segs]))
+    return _merge_segment(spark, from_wire(rows, segs[0][2]), cfg, job, target)
 
 
 def _stage_tables(
-    spark: SparkSession, batch: DataFrame, job: JobConfig, target, cat: SchemaCatalog
+    spark: SparkSession, batch: DataFrame, plans: list[TablePlan], job: JobConfig, target
 ) -> list:
-    """Stage every table of a DDL-free batch; returns the commit
-    closures in ``job.tables`` order.
+    """Stage every planned table; returns the commit closures in
+    ``job.tables`` order.
 
     The tables' transform -> parse -> merge staging chains are
     independent, so they overlap on a pool of min(tables, default
@@ -366,98 +601,17 @@ def _stage_tables(
     run). Each worker inherits the caller's local properties (job group
     and description), so a streaming query's stop() still cancels its
     jobs."""
-
-    def stage(cfg: TableConfig):
-        meta = cat.get(cfg.schema_name, cfg.table_name)
-        typed = from_wire(table_filter(batch, cfg.schema_name, cfg.table_name), meta.schema)
-        return _merge_segment(spark, typed, cfg, job, target)
-
-    n = min(len(job.tables), spark.sparkContext.defaultParallelism)
-    with ThreadPoolExecutor(max_workers=max(1, n)) as pool:
+    if not plans:
+        return []
+    n = min(len(plans), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=n) as pool:
         # one wrapper per task: each clones the caller's properties, so
         # a worker setting its job description cannot leak into another
         futures = [
-            pool.submit(inheritable_thread_target(spark)(stage), cfg) for cfg in job.tables
+            pool.submit(inheritable_thread_target(spark)(_stage_table), spark, batch, p, job, target)
+            for p in plans
         ]
-        return [f.result() for f in futures]
-
-
-def apply_ddl_to_target(
-    spark: SparkSession, target: ParquetTableTarget, cfg: TableConfig, action: DdlAction
-) -> None:
-    """D2 on the physical table: evolve the parquet target (on a lake
-    deployment these are native ALTER TABLE/schema-evolution commits).
-    Operates on the INTERNAL form so version columns/tombstones survive.
-
-    IDEMPOTENT on replay: foreachBatch is at-least-once, so a batch
-    whose DDL already landed physically can redeliver (crash between
-    the catalog snapshot and the checkpoint commit). Each structural
-    action checks the current physical schema and SKIPS when its
-    effect is already present — re-running add_column would otherwise
-    re-backfill the column and WIPE every value later merges wrote
-    into it (measured: post-DDL images silently reset to the
-    default)."""
-    cur = target.read_internal(spark, cfg.target_schema, cfg.target_table)
-    if action.kind == "add_column":
-        if cur is not None and action.column not in cur.columns:
-            fill = F.lit(None).cast(action.dtype)
-            if action.default is not None:
-                # DEFAULT backfill: existing rows take the literal
-                # (MySQL instant-ADD semantics for constant defaults)
-                raw = action.default.strip()
-                lit = raw[1:-1].replace("''", "'") if raw.startswith("'") else raw
-                if lit.upper() != "NULL":
-                    fill = F.lit(lit).cast(action.dtype)
-            target.overwrite(
-                cur.withColumn(action.column, fill),
-                cfg.target_schema,
-                cfg.target_table,
-            )
-    elif action.kind == "drop_column":
-        if cur is not None and action.column in cur.columns:
-            target.overwrite(cur.drop(action.column), cfg.target_schema, cfg.target_table)
-    elif action.kind == "rename_column":
-        # the new name must also be ABSENT: a replayed batch carrying
-        # [rename a->b, add_column a] re-adds `a`, and renaming it
-        # again would create a second `b` (AMBIGUOUS_REFERENCE on
-        # every later read)
-        if (
-            cur is not None
-            and action.column in cur.columns
-            and action.new_name not in cur.columns
-        ):
-            target.overwrite(
-                cur.withColumnRenamed(action.column, action.new_name),
-                cfg.target_schema,
-                cfg.target_table,
-            )
-    elif action.kind == "modify_column":
-        if cur is not None:
-            target.overwrite(
-                cur.withColumn(action.column, F.col(action.column).cast(action.dtype)),
-                cfg.target_schema,
-                cfg.target_table,
-            )
-    elif action.kind == "change_column":
-        # same double-name hazard as rename_column above
-        if (
-            cur is not None
-            and action.column in cur.columns
-            and action.new_name not in cur.columns
-        ):
-            target.overwrite(
-                cur.withColumn(action.column, F.col(action.column).cast(action.dtype))
-                .withColumnRenamed(action.column, action.new_name),
-                cfg.target_schema,
-                cfg.target_table,
-            )
-    elif action.kind == "truncate":
-        if cur is not None:
-            target.overwrite(cur.limit(0), cfg.target_schema, cfg.target_table)
-    elif action.kind in ("create_schema", "create_table", "drop_table", "drop_schema", "rename_table", "noop"):
-        pass  # catalog-level or schema-unaffected; dirs managed lazily
-    else:
-        raise ValueError(f"unhandled DDL action {action.kind}")
+        return [fn for fn in (f.result() for f in futures) if fn is not None]
 
 
 def apply_batch(
@@ -476,21 +630,26 @@ def apply_batch(
     table; DML merges in seq order segmented around DDL barriers.
 
     The reference serializes DDL with a WaitForAllCommitted barrier
-    (applier_incr.go:375-386); segmenting the micro-batch by the DDL's
-    seq reproduces that ordering. Images are parsed from JSON with the
-    catalog schema current *for that segment* (streaming/wire.py).
+    (applier_incr.go:375-386) and applies everything else in parallel
+    (MTS). Here every batch takes one path:
 
-    A6 cross-table atomicity: when the batch contains no DDL (the
-    overwhelmingly common case) every table's new image is staged
-    first — the tables in parallel (``_stage_tables``) — and then all
-    are swapped back to back on this thread, in ``job.tables`` order —
-    a reader cannot observe a half-applied batch across tables. DDL
-    batches keep the sequential per-segment commits (the DDL barrier
-    itself is the serialization point). The batch is cached once —
-    every table's transform scans it.
+    1. plan (``plan_tables``, driver only, no Spark job): each table's
+       DDL rows evolve a catalog COPY in seq order, and each segment
+       between them records its seq bounds and the catalog schema
+       current for it (images parse with it, streaming/wire.py);
+    2. stage every table on a thread pool (``_stage_tables``): a table
+       whose DDL leaves its image alone merges all its DML at once
+       (bucket-selective on BucketedTableTarget); a table whose image a
+       DDL changes folds the batch into ONE lazy image — read once,
+       each segment merged and each DDL applied as a frame transform
+       (``apply_ddl_to_target``) — and stages it with one write;
+    3. commit: the closures run back to back on this thread, in
+       ``job.tables`` order — A6 cross-table atomicity, DDL batches
+       included: a reader cannot observe a half-applied batch across
+       tables. Tables with no rows in the batch are not touched.
 
-    The batch's bookkeeping — frontier, DDL presence and barriers, the
-    applied tx set, the metrics — comes from ONE grouped action
+    The batch's bookkeeping — frontier, DDL barriers and seq checks,
+    the applied tx set, the metrics — comes from ONE grouped action
     (``BatchSummary``), not one Spark job per question.
 
     With a TxSpool (job.tx_atomic, needs ``batch_id``), the batch is
@@ -504,13 +663,13 @@ def apply_batch(
     driver; re-adding on replay is idempotent.
 
     DDL catalog protocol (same copy-and-swap as SubscriptionJob): the
-    segment loop evolves a catalog COPY and the caller's instance is
-    synced in place only after every commit lands, so a failed batch's
+    planner evolves a catalog COPY and the caller's instance is synced
+    in place only after every commit lands, so a failed batch's
     in-process retry re-derives from the pristine catalog instead of
     double-applying ADD COLUMN. The snapshot carries an
     ``__applied_batch`` marker: a redelivered batch whose DDL is
     already IN the snapshot (crash after save, before the checkpoint
-    commit) skips catalog.apply — merges and apply_ddl_to_target
+    commit) skips catalog.apply — merges and the image transforms
     re-run, both replay-convergent."""
     import json as _json
     import time as _time
@@ -538,51 +697,10 @@ def apply_batch(
         marker = max(marker, getattr(catalog, "applied_batch_mem", -1))
         ddl_in_snapshot = batch_id is not None and marker >= batch_id
         cat = catalog.copy()
-        if not summary.has_ddl:
-            # commit closures: every table (bucketed or whole-image)
-            # stages first; the closures then run back-to-back, each one
-            # an atomic manifest rename — the A6 cross-table swap
-            for fn in _stage_tables(spark, batch, job, target, cat):
-                fn()
-        else:
-            for cfg in job.tables:
-                ddls = summary.ddls(cfg.schema_name, cfg.table_name)
-                dml = table_filter(batch, cfg.schema_name, cfg.table_name).filter(
-                    F.col("op") != "ddl"
-                )
-                if ddls:
-                    # same contract as SubscriptionJob: segmentation uses
-                    # STRICT inequalities around the DDL seqs, so a DML row
-                    # SHARING a seq with a barrier would silently drop from
-                    # every segment — fail loud instead
-                    clash = dml.filter(
-                        F.col("seq").isin([d["seq"] for d in ddls])
-                    ).count()
-                    if clash:
-                        raise ValueError(
-                            f"{clash} DML row(s) share a seq with a DDL "
-                            f"barrier in {cfg.schema_name}.{cfg.table_name}"
-                            f" (batch {batch_id}); wire seqs must be unique"
-                        )
-                lo = None
-                for ddl_row in ddls + [None]:
-                    hi = ddl_row["seq"] if ddl_row is not None else None
-                    seg = dml
-                    if lo is not None:
-                        seg = seg.filter(F.col("seq") > lo)
-                    if hi is not None:
-                        seg = seg.filter(F.col("seq") < hi)
-                    meta = cat.get(cfg.schema_name, cfg.table_name)
-                    _merge_segment(spark, from_wire(seg, meta.schema), cfg, job, target)()
-                    if ddl_row is not None:
-                        # multi-clause ALTER / multi-pair RENAME replay in order
-                        for action in parse_ddl_actions(
-                            ddl_row["query"], default_schema=cfg.schema_name
-                        ):
-                            if not ddl_in_snapshot:
-                                cat.apply(action)
-                            apply_ddl_to_target(spark, target, cfg, action)
-                        lo = hi
+        plans = plan_tables(job, cat, summary, ddl_in_snapshot, batch_id)
+        for fn in _stage_tables(spark, batch, plans, job, target):
+            fn()
+        if summary.has_ddl:
             # every commit landed: snapshot the COPY first, then sync
             # the caller's catalog in place (aliases observe the
             # evolution). Save-before-sync, as in SubscriptionJob: a

@@ -41,6 +41,7 @@ def normalize(rows, colnames):
 
 
 def assert_matches_oracle(sdf, duck_con, sql):
+    """Assert ``sdf`` equals the oracle's result; returns the collected rows."""
     actual_cols = sdf.columns
     actual = [tuple(r) for r in sdf.collect()]
     res = duck_con.execute(sql)
@@ -53,3 +54,4 @@ def assert_matches_oracle(sdf, duck_con, sql):
     assert len(na) == len(ne), f"row count {len(na)} != {len(ne)}"
     mismatches = [(a, e) for a, e in zip(na, ne) if a != e]
     assert not mismatches, f"{len(mismatches)} mismatching rows; first: {mismatches[0]}"
+    return actual

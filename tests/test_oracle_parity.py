@@ -8,16 +8,12 @@ import pytest
 from dtle_spark.queries import REGISTRY
 from tests.conftest import SF_DIR, assert_matches_oracle
 
-WITH_ORACLE = [name for name, p in REGISTRY.items() if p.oracle is not None]
-
-
-@pytest.mark.parametrize("name", WITH_ORACLE)
+@pytest.mark.parametrize("name", list(REGISTRY))
 def test_query_matches_oracle(spark, duck, name):
+    """Every registry query returns rows, and they match its oracle."""
     pair = REGISTRY[name]
     sdf = pair.spark_fn(spark, SF_DIR)
-    assert_matches_oracle(sdf, duck, pair.oracle)
-
-
-def test_all_queries_return_rows(spark):
-    for name, pair in REGISTRY.items():
-        assert pair.spark_fn(spark, SF_DIR).count() > 0, name
+    if pair.oracle is None:
+        assert sdf.count() > 0, name
+        return
+    assert len(assert_matches_oracle(sdf, duck, pair.oracle)) > 0, name

@@ -347,11 +347,12 @@ def test_replication_retry_after_failed_merge_no_duplicate_fields(
     spark, job_dirs, monkeypatch
 ):
     """The failed-batch in-process retry, replication edition (the
-    subscription twin was the r7 ADVICE medium): a post-DDL segment
-    merge THROWS, the stream re-runs the batch, and ADD COLUMN must
-    land in the catalog exactly once. Before the copy-and-swap fix,
-    apply_batch mutated the shared catalog mid-batch, so the retry
-    replayed the DDL onto an already-evolved StructType."""
+    subscription twin was the r7 ADVICE medium): the DDL table's image
+    write THROWS after the planner evolved the catalog copy, the stream
+    re-runs the batch, and ADD COLUMN must land in the catalog exactly
+    once. Before the copy-and-swap fix, apply_batch mutated the shared
+    catalog mid-batch, so the retry replayed the DDL onto an
+    already-evolved StructType."""
     import json as _json
 
     from pyspark.sql import Row
@@ -379,22 +380,19 @@ def test_replication_retry_after_failed_merge_no_duplicate_fields(
         wire_row(3, "i", after='{"id":2,"v":20,"c":7}'),
     ], WIRE_SCHEMA)
 
-    real_merge = pl._merge_segment
-    calls = {"n": 0}
+    real_stage_image = target.stage_image
 
-    def flaky_merge(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # the post-DDL segment, after cat.apply ran
-            raise RuntimeError("injected merge failure")
-        return real_merge(*a, **kw)
+    def flaky_stage_image(*a, **kw):
+        # the DDL table's one image write: the planner's cat.apply ran
+        raise RuntimeError("injected image write failure")
 
-    monkeypatch.setattr(pl, "_merge_segment", flaky_merge)
+    monkeypatch.setattr(target, "stage_image", flaky_stage_image)
     with pytest.raises(RuntimeError, match="injected"):
         pl.apply_batch(spark, b0, job, target, cat,
                        catalog_path=catalog_path, batch_id=0)
     # failed attempt leaves the shared catalog pristine
     assert [f.name for f in cat.get("db1", "t").schema.fields] == ["id", "v"]
-    monkeypatch.setattr(pl, "_merge_segment", real_merge)
+    monkeypatch.setattr(target, "stage_image", real_stage_image)
     # in-process retry of the SAME batch
     pl.apply_batch(spark, b0, job, target, cat,
                    catalog_path=catalog_path, batch_id=0)
@@ -476,17 +474,19 @@ S2 = "22222222-bbbb-bbbb-bbbb-222222222222"
 
 
 def _wire(spark, rows):
-    """Wire rows from (sid, gno, seq, table, op, image-or-query) tuples."""
+    """Wire rows from (sid, gno, seq, table, op, image-or-query) tuples;
+    an update's payload is its image, or a (before, after) pair."""
     from pyspark.sql import Row
 
     from dtle_spark.streaming.wire import WIRE_SCHEMA
 
     out = []
     for sid, gno, seq, table, op, payload in rows:
+        before, after = payload if isinstance(payload, tuple) else (payload, payload)
         out.append(Row(
             sid=sid, gno=gno, seq=seq, lc=0, op=op, ts=None, schema_name="db1",
-            table_name=table, before=payload if op in ("u", "d") else None,
-            after=payload if op in ("i", "u") else None,
+            table_name=table, before=before if op in ("u", "d") else None,
+            after=after if op in ("i", "u") else None,
             query=payload if op == "ddl" else None,
         ))
     return spark.createDataFrame(out, WIRE_SCHEMA)
@@ -840,3 +840,272 @@ def test_batch_bookkeeping_two_sources_held_frontier_and_ddl(spark, job_dirs):
     t1 = {r["id"]: (r["v"], r["c"]) for r in rj.target.read(spark, "db1", "t1").collect()}
     assert t1 == {1: (11, None), 2: (20, 7)}
     assert _ids(spark, rj.target, "t2") == {3}
+
+
+# -- DDL batches on the staged path ------------------------------------------
+
+# kind -> (DDL, post-DDL rows, columns, expected {id: non-key values}).
+# Every case runs batch 0 = insert (1, 10), (2, 20), then one batch:
+# pre-DDL update id 1 -> v 11 and insert (4, 40), the DDL, the post-DDL
+# rows below (insert 3, update 4), and a delete of id 2.
+DDL_CASES = {
+    "add_default": (
+        "ALTER TABLE db1.t ADD COLUMN c BIGINT DEFAULT 5",
+        ['{"id":3,"v":30,"c":7}', '{"id":4,"v":41,"c":9}'],
+        ["id", "v", "c"], {1: (11, 5), 3: (30, 7), 4: (41, 9)},
+    ),
+    "drop": (
+        "ALTER TABLE db1.t DROP COLUMN v",
+        ['{"id":3}', '{"id":4}'],
+        ["id"], {1: (), 3: (), 4: ()},
+    ),
+    "rename": (
+        "ALTER TABLE db1.t RENAME COLUMN v TO w",
+        ['{"id":3,"w":30}', '{"id":4,"w":41}'],
+        ["id", "w"], {1: (11,), 3: (30,), 4: (41,)},
+    ),
+    "modify": (
+        "ALTER TABLE db1.t MODIFY COLUMN v varchar(8)",
+        ['{"id":3,"v":"x3"}', '{"id":4,"v":"x4"}'],
+        ["id", "v"], {1: ("11",), 3: ("x3",), 4: ("x4",)},
+    ),
+    "change": (
+        "ALTER TABLE db1.t CHANGE v w varchar(8)",
+        ['{"id":3,"w":"x3"}', '{"id":4,"w":"x4"}'],
+        ["id", "w"], {1: ("11",), 3: ("x3",), 4: ("x4",)},
+    ),
+    # the truncate wipes batch 0 and the pre-DDL rows; the update of
+    # id 4 lands as an upsert
+    "truncate": (
+        "TRUNCATE TABLE db1.t",
+        ['{"id":3,"v":30}', '{"id":4,"v":41}'],
+        ["id", "v"], {3: (30,), 4: (41,)},
+    ),
+}
+
+
+def _ddl_target(kind, root):
+    from dtle_spark.sinks.table_sink import BucketedTableTarget
+
+    return ParquetTableTarget(root) if kind == "parquet" else BucketedTableTarget(root, n_buckets=2)
+
+
+@pytest.mark.parametrize("target_kind", ["parquet", "bucketed"])
+@pytest.mark.parametrize("case", sorted(DDL_CASES))
+def test_ddl_kind_matrix_keyed(spark, job_dirs, target_kind, case):
+    """Each DDL kind with DML before and after it in one batch folds
+    into the keyed table's image: rows and columns as computed by hand."""
+    import dtle_spark.streaming.pipeline as pl
+
+    ddl, post, cols, want = DDL_CASES[case]
+    job, cat = _keyed_job("matrix", ["t"])
+    target = _ddl_target(target_kind, job_dirs["target"])
+    b0 = [(S1, 1, 1, "t", "i", '{"id":1,"v":10}'), (S1, 2, 2, "t", "i", '{"id":2,"v":20}')]
+    b1 = [
+        (S1, 3, 10, "t", "u", '{"id":1,"v":11}'),
+        (S1, 4, 11, "t", "i", '{"id":4,"v":40}'),
+        (S1, 5, 12, "t", "ddl", ddl),
+        (S1, 6, 13, "t", "i", post[0]),
+        (S1, 7, 14, "t", "u", post[1]),
+        (S1, 8, 15, "t", "d", '{"id":2}'),
+    ]
+    pl.apply_batch(spark, _wire(spark, b0), job, target, cat, batch_id=0)
+    pl.apply_batch(spark, _wire(spark, b1), job, target, cat, batch_id=1)
+    got = target.read(spark, "db1", "t")
+    assert got.columns == cols
+    assert {r["id"]: tuple(r[c] for c in cols[1:]) for r in got.collect()} == want
+    assert [f.name for f in cat.get("db1", "t").schema.fields] == cols
+
+
+@pytest.mark.parametrize("target_kind", ["parquet", "bucketed"])
+def test_ddl_add_column_no_pk(spark, job_dirs, target_kind):
+    """ADD COLUMN ... DEFAULT between DML on a no-PK table: the counting
+    merge and the seq watermark fold over the segments, and post-DDL
+    deletes match the backfilled rows."""
+    import dtle_spark.streaming.pipeline as pl
+
+    job, cat = _keyed_job("matrix_nopk", ["t"], keyed=False)
+    target = _ddl_target(target_kind, job_dirs["target"])
+    b0 = [(S1, 1, 1, "t", "i", '{"id":1,"v":10}'), (S1, 2, 2, "t", "i", '{"id":2,"v":20}')]
+    b1 = [
+        (S1, 3, 10, "t", "u", ('{"id":1,"v":10}', '{"id":1,"v":11}')),
+        (S1, 4, 11, "t", "i", '{"id":4,"v":40}'),
+        (S1, 5, 12, "t", "ddl", "ALTER TABLE db1.t ADD COLUMN c BIGINT DEFAULT 5"),
+        (S1, 6, 13, "t", "i", '{"id":3,"v":30,"c":7}'),
+        (S1, 7, 14, "t", "u", ('{"id":4,"v":40,"c":5}', '{"id":4,"v":41,"c":9}')),
+        (S1, 8, 15, "t", "d", '{"id":2,"v":20,"c":5}'),
+    ]
+    pl.apply_batch(spark, _wire(spark, b0), job, target, cat, batch_id=0)
+    b1 = _wire(spark, b1)
+    pl.apply_batch(spark, b1, job, target, cat, batch_id=1)
+    want = [(1, 11, 5), (3, 30, 7), (4, 41, 9)]
+    assert sorted(tuple(r) for r in target.read(spark, "db1", "t").collect()) == want
+    assert target.seq_watermark("db1", "t") == {S1: 15}
+    # a redelivery is dropped by the watermark
+    pl.apply_batch(spark, b1, job, target, cat, batch_id=1)
+    assert sorted(tuple(r) for r in target.read(spark, "db1", "t").collect()) == want
+
+
+@pytest.mark.parametrize("stmt", ["RENAME TABLE db1.t TO db1.t2", "DROP TABLE db1.t"])
+def test_table_rename_or_drop_ends_its_segments(spark, job_dirs, stmt):
+    """RENAME/DROP TABLE of a replicated table: the rows before the DDL
+    apply and the catalog entry goes; a DML row of the table after the
+    DDL fails the batch with a ValueError naming the table and the seq,
+    and nothing commits."""
+    import dtle_spark.streaming.pipeline as pl
+
+    job, cat = _keyed_job("gone", ["t"])
+    target = ParquetTableTarget(job_dirs["target"])
+    rows = [(S1, 1, 1, "t", "i", '{"id":1,"v":1}'), (S1, 2, 2, "t", "ddl", stmt)]
+    late = (S1, 3, 3, "t", "i", '{"id":2,"v":2}')
+    with pytest.raises(ValueError, match=r"db1\.t \(first at seq 3\)"):
+        pl.apply_batch(spark, _wire(spark, rows + [late]), job, target, cat, batch_id=0)
+    assert target.read(spark, "db1", "t") is None
+    assert cat.get("db1", "t") is not None
+    pl.apply_batch(spark, _wire(spark, rows), job, target, cat, batch_id=0)
+    assert _ids(spark, target, "t") == {1}
+    assert cat.get("db1", "t") is None
+    assert (cat.get("db1", "t2") is not None) == stmt.startswith("RENAME")
+
+
+def test_replication_rejects_dml_sharing_seq_with_ddl(spark, job_dirs):
+    """The replication twin of the subscription seq-clash guard: a DML
+    row sharing its seq with a DDL barrier would drop from every
+    segment, so the batch fails loud."""
+    import dtle_spark.streaming.pipeline as pl
+
+    job, cat = _keyed_job("clash", ["t"])
+    target = ParquetTableTarget(job_dirs["target"])
+    b0 = _wire(spark, [
+        (S1, 1, 1, "t", "i", '{"id":1,"v":10}'),
+        (S1, 2, 2, "t", "ddl", "ALTER TABLE db1.t ADD COLUMN c BIGINT"),
+        (S1, 2, 2, "t", "i", '{"id":2,"v":20}'),  # seq collides with the DDL
+    ])
+    with pytest.raises(ValueError, match="share a seq"):
+        pl.apply_batch(spark, b0, job, target, cat, batch_id=0)
+
+
+def _ddl_batch_rows(ids, ddl_after, seq0):
+    """Tx 2*id inserts id into a, b and c; after id ``ddl_after`` the DDL
+    tx 2*id+1 adds column c to table a, and a's later rows carry it."""
+    rows, seq = [], seq0
+    for i in ids:
+        for t in ("a", "b", "c"):
+            seq += 1
+            img = f'{{"id":{i},"v":{i},"c":{10 * i}}}' if t == "a" and i > ddl_after else \
+                f'{{"id":{i},"v":{i}}}'
+            rows.append((S1, 2 * i, seq, t, "i", img))
+        if i == ddl_after:
+            seq += 1
+            rows.append((S1, 2 * i + 1, seq, "a", "ddl", "ALTER TABLE db1.a ADD COLUMN c BIGINT"))
+    return rows
+
+
+def test_ddl_batch_failed_stage_moves_no_manifest_and_retry_converges(
+    spark, job_dirs, monkeypatch
+):
+    """A DDL batch over three tables stages them all before any commit:
+    when a DDL-free table's stage raises, no manifest moves (the DDL
+    table's included), the catalog stays pristine, and the retry
+    converges with the DDL applied once."""
+    from dtle_spark.sinks.manifest import TableManifest
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("ddlpar", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rj.target.n_buckets = 4
+    _apply(spark, rj, _wire(spark, _one_row_per_table(S1, [1, 2, 3], tables)), 0)
+
+    def manifests():
+        out = {}
+        for t in tables:
+            p = rj.target.path("db1", t)
+            out[t] = (TableManifest.load(p).entries, TableManifest.versions(p))
+        return out
+
+    before = manifests()
+    real = rj.target.stage_merge
+
+    def failing(spark_, changes, schema_name, table_name, key_cols):
+        if table_name == "b":
+            raise RuntimeError("injected stage failure")
+        return real(spark_, changes, schema_name, table_name, key_cols)
+
+    monkeypatch.setattr(rj.target, "stage_merge", failing)
+    # ids 4, the DDL, 5 and 6; the spool holds id 6's tx
+    b1 = _wire(spark, _ddl_batch_rows([4, 5, 6], ddl_after=4, seq0=20))
+    with pytest.raises(RuntimeError, match="injected stage failure"):
+        _apply(spark, rj, b1, 1)
+    assert manifests() == before
+    assert [f.name for f in cat.get("db1", "a").schema.fields] == ["id", "v"]
+    assert not os.path.exists(rj.catalog_path)
+    monkeypatch.setattr(rj.target, "stage_merge", real)
+    _apply(spark, rj, b1, 1)
+    assert [f.name for f in cat.get("db1", "a").schema.fields] == ["id", "v", "c"]
+    a = {r["id"]: r["c"] for r in rj.target.read(spark, "db1", "a").collect()}
+    assert a == {1: None, 2: None, 3: None, 4: None, 5: 50}
+    for t in ("b", "c"):
+        assert _ids(spark, rj.target, t) == {1, 2, 3, 4, 5}, t
+
+
+def test_ddl_three_table_batch_job_count(spark, job_dirs):
+    """A 3-table tx_atomic batch with one ADD COLUMN issues at most 33
+    Spark jobs (46 with the sequential barrier loop): the DDL table
+    folds into one image write, and the seq-clash check needs no job."""
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("ddlcount", tables)
+    rj = ReplicationJob(spark, job, job_dirs["source"], job_dirs["target"],
+                        job_dirs["checkpoint"], cat)
+    rj.target.n_buckets = 8
+    sc = spark.sparkContext
+    for b in range(3):
+        gnos = range(10 * b + 1, 10 * b + 11)
+        rows = (_ddl_batch_rows(gnos, ddl_after=25, seq0=100 * b) if b == 2
+                else _one_row_per_table(S1, gnos, tables, seq0=100 * b))
+        group = f"repl-ddl-count-{b}"
+        sc.setJobGroup(group, "count apply_batch jobs")
+        try:
+            _apply(spark, rj, _wire(spark, rows), b)
+        finally:
+            sc.setJobGroup(None, None)
+    _wait_jobs_settled(sc)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 33, len(jobs)
+    a = {r["id"]: r["c"] for r in rj.target.read(spark, "db1", "a").collect()}
+    assert set(a) == set(range(1, 30)) and a[26] == 260 and a[25] is None
+
+
+def test_batch_with_rows_for_one_table_touches_only_it(spark, job_dirs):
+    """Tables with no complete rows in a batch are not staged: on the
+    whole-image target, only the table with rows gets a new manifest
+    version, and the batch runs at most 10 Spark jobs (18 when every
+    table was rewritten)."""
+    import dtle_spark.streaming.pipeline as pl
+    from dtle_spark.sinks.manifest import TableManifest
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("onetable", tables)
+    target = ParquetTableTarget(job_dirs["target"])
+    pl.apply_batch(spark, _wire(spark, _one_row_per_table(S1, [1], tables)), job, target,
+                   cat, batch_id=0)
+
+    def manifests():
+        return {t: (TableManifest.load(target.path("db1", t)).entries,
+                    target.versions("db1", t)) for t in tables}
+
+    before = manifests()
+    sc = spark.sparkContext
+    sc.setJobGroup("repl-one-table", "count apply_batch jobs")
+    try:
+        pl.apply_batch(spark, _wire(spark, [(S1, 2, 10, "a", "i", '{"id":2,"v":2}')]),
+                       job, target, cat, batch_id=1)
+    finally:
+        sc.setJobGroup(None, None)
+    _wait_jobs_settled(sc)
+    jobs = sc.statusTracker().getJobIdsForGroup("repl-one-table")
+    after = manifests()
+    assert after["b"] == before["b"] and after["c"] == before["c"]
+    assert after["a"] != before["a"]
+    assert _ids(spark, target, "a") == {1, 2}
+    assert 0 < len(jobs) <= 10, len(jobs)
