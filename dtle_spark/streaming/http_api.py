@@ -176,34 +176,27 @@ class _Handler(BaseHTTPRequestHandler):
                         **{k: d[k] for k in (*jt.required, *jt.optional) if k in d},
                     )
                     return self._send(201, {"created": d["name"]})
-                if d.get("type") == "subscription":
-                    # third job type: change log -> Debezium frames
-                    # (api/handler/v2/job.go:1222-1235)
-                    self.manager.create_subscription(
-                        _job_config_from_json(d),
-                        d["source_dir"],
-                        d.get("output_root") or d["target_root"],
-                        d["checkpoint_dir"],
-                        self.catalog,
-                        start=bool(d.get("start", True)),
-                    )
-                else:
-                    # optional serializable target selector (resolved
-                    # by JobManager.create: parquet | bucketed | delta)
-                    tkw = {}
-                    if d.get("target_format"):
-                        tkw["target_format"] = d["target_format"]
-                        if d.get("target_n_buckets") is not None:
-                            tkw["target_n_buckets"] = int(d["target_n_buckets"])
-                    self.manager.create(
-                        _job_config_from_json(d),
-                        d["source_dir"],
-                        d["target_root"],
-                        d["checkpoint_dir"],
-                        self.catalog,
-                        start=bool(d.get("start", True)),
-                        **tkw,
-                    )
+                # JobConfig job types: replication, or the subscription
+                # (change log -> Debezium frames, job.go:1222-1235)
+                sub = d.get("type") == "subscription"
+                # optional serializable target selector (replication
+                # only, resolved by JobManager.create: parquet |
+                # bucketed | delta)
+                tkw = {}
+                if d.get("target_format"):
+                    tkw["target_format"] = d["target_format"]
+                    if d.get("target_n_buckets") is not None:
+                        tkw["target_n_buckets"] = int(d["target_n_buckets"])
+                create = self.manager.create_subscription if sub else self.manager.create
+                create(
+                    _job_config_from_json(d),
+                    d["source_dir"],
+                    (sub and d.get("output_root")) or d["target_root"],
+                    d["checkpoint_dir"],
+                    self.catalog,
+                    start=bool(d.get("start", True)),
+                    **tkw,
+                )
                 return self._send(201, {"created": d["name"]})
             return self._send(405, {"error": method})
         sm = _SCHEMAS_RE.match(self.path)
@@ -351,7 +344,7 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._send(400, {
                     "error": "purge needs ids: a non-empty JSON list"})
             if hasattr(job, "purge_documents"):
-                if job.query is not None and job.query.isActive:
+                if job.active:
                     # same hazard as the vector branch: purge_keys and
                     # the stream's foreachBatch both load-modify-save
                     # the manifest — a concurrent append would be
@@ -368,7 +361,7 @@ class _Handler(BaseHTTPRequestHandler):
             if hasattr(job, "index_root"):  # vector maintain job
                 from dtle_spark.streaming.ann_serving import purge_index_ids
 
-                if job.query is not None and job.query.isActive:
+                if job.active:
                     return self._send(400, {
                         "error": "purge needs the maintain job PAUSED: "
                                  "the forced fold swaps the generation "
@@ -380,7 +373,7 @@ class _Handler(BaseHTTPRequestHandler):
                     n for n, j in self.manager._jobs.items()
                     if j is not job
                     and getattr(j, "index_root", None) == job.index_root
-                    and j.query is not None and j.query.isActive
+                    and j.active
                 ]
                 if probers:
                     return self._send(400, {

@@ -17,6 +17,8 @@ from typing import Callable
 from dtle_spark.catalog import SchemaCatalog
 from dtle_spark.model import JobConfig, TableConfig
 from dtle_spark.streaming.pipeline import ReplicationJob
+from dtle_spark.streaming.store import StreamJob
+from dtle_spark.streaming.subscription import SubscriptionJob
 
 
 def job_config_to_dict(job: JobConfig) -> dict:
@@ -100,7 +102,7 @@ class JobManager:
         (common/store.go:40-446)."""
         self.spark = spark
         self.spec_root = spec_root
-        self._jobs: dict[str, ReplicationJob] = {}
+        self._jobs: dict[str, StreamJob] = {}
 
     def _spec_path(self, name: str) -> str | None:
         if self.spec_root is None:
@@ -117,46 +119,9 @@ class JobManager:
         start: bool = True,
         **kw,
     ) -> ReplicationJob:
-        if job.name in self._jobs:
-            raise ValueError(f"job {job.name!r} already exists")
-        # preflight: fail HERE, not mid-stream (inspect.go:89-180)
-        from dtle_spark.preflight import preflight
-
-        preflight(job, catalog, self.spark)
-        # a serializable target descriptor (the recover() wire form)
-        # resolves to the instance here; a passed instance round-trips
-        # through its descriptor below
-        fmt = kw.pop("target_format", None)
-        n_buckets = kw.pop("target_n_buckets", None)
-        if n_buckets is not None and fmt is None:
-            raise ValueError(
-                "target_n_buckets has no effect without target_format "
-                "(it parameterizes the resolved target); pass "
-                "target_format='bucketed' or drop target_n_buckets"
-            )
-        if fmt is not None and "target" not in kw:
-            kw["target"] = _resolve_target(
-                fmt, target_root, 32 if n_buckets is None else n_buckets
-            )
-        rj = ReplicationJob(
-            self.spark, job, source_dir, target_root, checkpoint_dir, catalog, **kw
+        return self._create_wire_job(
+            None, job, source_dir, target_root, checkpoint_dir, catalog, start, kw
         )
-        if self.spec_root is not None:
-            spec_kw = {k: v for k, v in kw.items() if k != "target"}
-            if kw.get("target") is not None:
-                spec_kw.update(_target_spec(kw["target"]))
-            self._persist_spec(job.name, {
-                "job": job_config_to_dict(job),
-                "source_dir": source_dir,
-                "target_root": target_root,
-                "checkpoint_dir": checkpoint_dir,
-                "catalog": catalog.to_dict(),
-                "kw": spec_kw,
-            })
-        self._jobs[job.name] = rj
-        if start:
-            rj.start()
-        return rj
 
     def create_subscription(
         self,
@@ -167,33 +132,67 @@ class JobManager:
         catalog: SchemaCatalog,
         start: bool = True,
         **kw,
-    ):
+    ) -> SubscriptionJob:
         """The reference's third job type (subscription-to-Kafka,
         api/handler/v2/job.go:1222-1235): stream the change log as
         Debezium frames instead of applying it."""
-        from dtle_spark.streaming.subscription import SubscriptionJob
+        return self._create_wire_job(
+            "subscription", job, source_dir, output_root, checkpoint_dir, catalog, start, kw
+        )
 
+    def _create_wire_job(
+        self,
+        type_: str | None,
+        job: JobConfig,
+        source_dir: str,
+        root: str,
+        checkpoint_dir: str,
+        catalog: SchemaCatalog,
+        start: bool,
+        kw: dict,
+    ):
+        """The one create path of the JobConfig + catalog job types
+        (:data:`WIRE_JOB_TYPES`; replication specs carry no "type"):
+        exists check, preflight, construct, persist, register, start."""
         if job.name in self._jobs:
             raise ValueError(f"job {job.name!r} already exists")
+        # preflight: fail HERE, not mid-stream (inspect.go:89-180)
         from dtle_spark.preflight import preflight
 
         preflight(job, catalog, self.spark)
-        sj = SubscriptionJob(
-            self.spark, job, source_dir, output_root, checkpoint_dir, catalog, **kw
+        # a serializable target descriptor (the recover() wire form)
+        # resolves to the instance here; a passed instance round-trips
+        # through its descriptor below. Only replication takes a target:
+        # the subscription constructor rejects it
+        fmt = kw.pop("target_format", None)
+        n_buckets = kw.pop("target_n_buckets", None)
+        if n_buckets is not None and fmt is None:
+            raise ValueError(
+                "target_n_buckets has no effect without target_format "
+                "(it parameterizes the resolved target); pass "
+                "target_format='bucketed' or drop target_n_buckets"
+            )
+        if fmt is not None and "target" not in kw:
+            kw["target"] = _resolve_target(
+                fmt, root, 32 if n_buckets is None else n_buckets
+            )
+        wj = WIRE_JOB_TYPES[type_](
+            self.spark, job, source_dir, root, checkpoint_dir, catalog, **kw
         )
-        self._persist_spec(job.name, {
-            "type": "subscription",
-            "job": job_config_to_dict(job),
-            "source_dir": source_dir,
-            "target_root": output_root,
-            "checkpoint_dir": checkpoint_dir,
-            "catalog": catalog.to_dict(),
-            "kw": kw,
-        })
-        self._jobs[job.name] = sj
-        if start:
-            sj.start()
-        return sj
+        if self.spec_root is not None:
+            spec_kw = {k: v for k, v in kw.items() if k != "target"}
+            if kw.get("target") is not None:
+                spec_kw.update(_target_spec(kw["target"]))
+            self._persist_spec(job.name, {
+                **({} if type_ is None else {"type": type_}),
+                "job": job_config_to_dict(job),
+                "source_dir": source_dir,
+                "target_root": root,
+                "checkpoint_dir": checkpoint_dir,
+                "catalog": catalog.to_dict(),
+                "kw": spec_kw,
+            })
+        return self._register(job.name, wj, start)
 
     def create_job(self, type_: str, name: str, start: bool = True, **fields):
         """Create a managed job of a table-driven type (:data:`JOB_TYPES`)
@@ -222,6 +221,9 @@ class JobManager:
             self.spark, *[spec[f] for f in t.args], **fields, **ctor_only
         )
         self._persist_spec(name, {"type": type_, **spec, "kw": fields})
+        return self._register(name, job, start)
+
+    def _register(self, name: str, job, start: bool):
         self._jobs[name] = job
         if start:
             job.start()
@@ -282,19 +284,15 @@ class JobManager:
                 if ckpt_catalog is not None
                 else SchemaCatalog.from_dict(spec["catalog"])
             )
-            creator = (
-                self.create_subscription
-                if spec.get("type") == "subscription"
-                else self.create
-            )
-            creator(
+            self._create_wire_job(
+                spec.get("type"),
                 job,
                 spec["source_dir"],
                 spec["target_root"],
                 spec["checkpoint_dir"],
                 catalog,
-                start=start,
-                **spec.get("kw", {}),
+                start,
+                spec.get("kw", {}),
             )
             out.append(job.name)
         return out
@@ -302,7 +300,7 @@ class JobManager:
     def list(self) -> dict[str, dict]:
         return {name: rj.stats() for name, rj in self._jobs.items()}
 
-    def get(self, name: str) -> ReplicationJob:
+    def get(self, name: str) -> StreamJob:
         return self._jobs[name]
 
     def pause(self, name: str) -> None:
@@ -338,7 +336,7 @@ class JobManager:
                 f"config name {new_job.name!r} does not match job {name!r}"
             )
         rj = self._jobs[name]
-        was_active = rj.query is not None and rj.query.isActive
+        was_active = rj.active
         if was_active:
             rj.pause()
         from dtle_spark.preflight import preflight
@@ -436,7 +434,6 @@ class JobManager:
         sequences this with WaitOnJob: the reverse src waits on the
         forward job's completion)."""
         from dtle_spark.model import reverse_job_config
-        from dtle_spark.streaming.subscription import SubscriptionJob
 
         fwd = self._jobs[name]
         if isinstance(fwd, SubscriptionJob):
@@ -444,7 +441,7 @@ class JobManager:
             # jobs — a one-way Kafka subscription has no target to
             # replicate back from (job.go reverse validation)
             raise ValueError(f"subscription job {name!r} cannot be reversed")
-        if fwd.query is not None and fwd.query.isActive:
+        if fwd.active:
             raise ValueError(f"pause forward job {name!r} before reversing")
         rev = reverse_job_config(fwd.job, local_sid=local_sid)
         return self.create(
@@ -472,7 +469,7 @@ class JobManager:
         frontier, wait for target_gtid_finished, then derive and start
         ``reverse-<name>``."""
         fwd = self._jobs[name]
-        if fwd.query is not None and fwd.query.isActive:
+        if fwd.active:
             fwd.finish()
             fwd.process_available()
             if not fwd.wait_finished(finish_timeout):
@@ -486,12 +483,14 @@ class JobManager:
         )
 
 
-# -- table-driven job types ---------------------------------------------
+# -- job types ------------------------------------------------------------
 #
-# One entry per managed type beyond replication/subscription (whose
-# JobConfig + catalog path stays in JobManager.create /
-# create_subscription). JobManager.create_job, recover() and the HTTP
-# POST /v2/jobs route all read this table.
+# The JobConfig + catalog types, created through JobManager.create /
+# create_subscription (spec "type" None = replication):
+WIRE_JOB_TYPES = {None: ReplicationJob, "subscription": SubscriptionJob}
+
+# One entry per table-driven type. JobManager.create_job, recover() and
+# the HTTP POST /v2/jobs route all read this table.
 
 
 def _row_schema(mgr: JobManager, spec: dict, kw: dict) -> dict:

@@ -39,6 +39,7 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +61,7 @@ from dtle_spark.operators.filters import (
     table_filter,
 )
 from dtle_spark.operators.projection import map_changes
+from dtle_spark.streaming.store import StreamJob
 from dtle_spark.streaming.wire import WIRE_SCHEMA, from_wire
 
 
@@ -272,10 +274,14 @@ def split_complete_txs(
     """Union the input spool generation into the batch, summarize it
     and write each sid's frontier tx to the batch's own generation.
     Returns the cached effective batch (unpersist when done) and its
-    summary; ``summary.complete(eff)`` is the part to apply."""
+    summary; ``summary.complete(eff)`` is the part to apply.
+
+    A redelivered row repeats its (sid, gno, seq, op); a row that
+    differs in ``op`` is not a redelivery, so a DML row sharing its seq
+    with a DDL row survives to the planner's seq-clash check."""
     prev = spool.read(spark, below=batch_id)
     eff = batch if prev is None else prev.unionByName(batch)
-    eff = eff.dropDuplicates(["sid", "gno", "seq"]).persist()
+    eff = eff.dropDuplicates(["sid", "gno", "seq", "op"]).persist()
     try:
         summary = BatchSummary.of(eff, hold_frontier=True)
         spool.write(eff.filter(summary.held()), batch_id)
@@ -447,12 +453,21 @@ def _merge_segment(
     return _stage_image(spark, [typed], cfg, job, target)
 
 
+class Segment(NamedTuple):
+    """A table's DML rows with lo < seq < hi (None = unbounded), and the
+    catalog schema and unique key current for them — copied, because
+    catalog.apply rewrites a TableMeta in place."""
+
+    lo: int | None
+    hi: int | None
+    schema: T.StructType
+    key: list
+
+
 @dataclass
 class TablePlan:
     """One table's share of a batch, planned on the driver. ``steps``,
-    in seq order: ``(lo, hi, schema)`` segments (the table's DML rows
-    with lo < seq < hi, None = unbounded, parsed with the catalog schema
-    current for the segment) and the DDL actions between them.
+    in seq order: Segments and the DDL actions between them.
     ``checks``: ``(predicate, message)`` pairs over the DML rows that
     the batch summary could not rule out; the stage counts them and
     fails on a hit with the message (``{n}`` rows, first at ``{seq}``)."""
@@ -466,7 +481,7 @@ class TablePlan:
         return any(isinstance(s, DdlAction) for s in self.steps)
 
     @property
-    def segments(self) -> list[tuple]:
+    def segments(self) -> list[Segment]:
         return [s for s in self.steps if not isinstance(s, DdlAction)]
 
     @property
@@ -476,7 +491,7 @@ class TablePlan:
         segs = self.segments
         return any(
             isinstance(s, DdlAction) and s.kind not in CATALOG_DDL for s in self.steps
-        ) or any(seg[2] != segs[0][2] for seg in segs)
+        ) or any(seg.schema != segs[0].schema for seg in segs)
 
 
 def _seq_between(lo: int | None, hi: int | None):
@@ -521,9 +536,9 @@ def plan_tables(
 
         # segmentation uses STRICT inequalities around the DDL seqs, so a
         # DML row SHARING a seq with a barrier would silently drop from
-        # every segment — fail loud instead (same contract as
-        # SubscriptionJob). Binlog DDL is its own tx, so the summary
-        # rules the clash out without a Spark job almost always.
+        # every segment — fail loud instead. Binlog DDL is its own tx,
+        # so the summary rules the clash out without a Spark job almost
+        # always.
         checks = [
             (F.col("seq") == d["seq"],
              f"{{n}} DML row(s) share a seq with a DDL barrier in {name} "
@@ -539,7 +554,7 @@ def plan_tables(
             if maybe_dml(first, last):
                 meta = cat.get(cfg.schema_name, cfg.table_name)
                 if meta is not None:
-                    steps.append((lo, hi, meta.schema))
+                    steps.append(Segment(lo, hi, meta.schema, list(meta.unique_key)))
                 elif not ddl_in_snapshot:
                     why = "" if lo is None else f": the DDL at seq {lo} renamed or dropped it"
                     checks.append((
@@ -558,11 +573,10 @@ def plan_tables(
     return plans
 
 
-def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: JobConfig, target):
-    """One table's stage: the exact checks its plan asks for, then one
-    merge over all its DML, or the whole-image fold when its image
-    changes. Returns the commit closure, or None when there is nothing
-    to commit."""
+def checked_dml(batch: DataFrame, plan: TablePlan) -> DataFrame:
+    """The plan's table's DML rows in ``batch``, once the exact checks
+    the plan asks for pass (a Spark job each; a hit raises
+    ValueError)."""
     cfg = plan.cfg
     rows = table_filter(batch, cfg.schema_name, cfg.table_name)
     if plan.has_ddl:
@@ -573,10 +587,23 @@ def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: Jo
         ).first()
         if r["n"]:
             raise ValueError(message.format(n=r["n"], seq=r["seq"]))
+    return rows
+
+
+def segment_rows(rows: DataFrame, seg: Segment) -> DataFrame:
+    """The segment's rows of ``rows``, parsed with its schema."""
+    return from_wire(rows.filter(_seq_between(seg.lo, seg.hi)), seg.schema)
+
+
+def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: JobConfig, target):
+    """One table's stage: the checked DML, then one merge over all of
+    it, or the whole-image fold when its image changes. Returns the
+    commit closure, or None when there is nothing to commit."""
+    cfg = plan.cfg
+    rows = checked_dml(batch, plan)
     if plan.folds:
         steps = [
-            s if isinstance(s, DdlAction)
-            else from_wire(rows.filter(_seq_between(s[0], s[1])), s[2])
+            s if isinstance(s, DdlAction) else segment_rows(rows, s)
             for s in plan.steps
         ]
         return _stage_image(spark, steps, cfg, job, target)
@@ -584,8 +611,8 @@ def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: Jo
     if not segs:
         return None
     if plan.has_ddl:
-        rows = rows.filter(reduce(operator.or_, [_seq_between(lo, hi) for lo, hi, _ in segs]))
-    return _merge_segment(spark, from_wire(rows, segs[0][2]), cfg, job, target)
+        rows = rows.filter(reduce(operator.or_, [_seq_between(s.lo, s.hi) for s in segs]))
+    return _merge_segment(spark, from_wire(rows, segs[0].schema), cfg, job, target)
 
 
 def _stage_tables(
@@ -662,7 +689,7 @@ def apply_batch(
     (applier_gtid_executed.go:17-25). Only tx IDs travel to the
     driver; re-adding on replay is idempotent.
 
-    DDL catalog protocol (same copy-and-swap as SubscriptionJob): the
+    DDL catalog protocol (the copy-and-swap SubscriptionJob shares): the
     planner evolves a catalog COPY and the caller's instance is synced
     in place only after every commit lands, so a failed batch's
     in-process retry re-derives from the pristine catalog instead of
@@ -741,12 +768,67 @@ def apply_batch(
             pinned.unpersist()
 
 
-class ReplicationJob:
+class WireStreamJob(StreamJob):
+    """A JobConfig-driven job over the wire change stream (replication,
+    subscription) on the shared StreamJob lifecycle: a processingTime
+    trigger of ``job.trigger_seconds``, a synchronous drain, a config
+    swap under a paused stream and the post-DDL catalog snapshot at
+    ``<checkpoint_dir>/catalog.json`` (checkpointed batches never
+    replay, so DDL effects on the catalog must persist outside the
+    stream for recovery)."""
+
+    schema = WIRE_SCHEMA
+    reader = None
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        job: JobConfig,
+        source_dir: str,
+        checkpoint_dir: str,
+        catalog: SchemaCatalog,
+        max_files_per_trigger: int,
+    ):
+        self.spark = spark
+        self.job = job
+        self.source_dir = source_dir
+        self.checkpoint_dir = checkpoint_dir
+        self.catalog = catalog
+        self.max_files_per_trigger = max_files_per_trigger
+        self.catalog_path = os.path.join(checkpoint_dir, "catalog.json")
+
+    def _trigger(self) -> dict:
+        return {"processingTime": f"{self.job.trigger_seconds} seconds"}
+
+    def process_available(self) -> None:
+        """Synchronously drain everything currently in the source
+        (test/snapshot-catchup path)."""
+        assert self.query is not None
+        self.query.processAllAvailable()
+
+    def update_config(self, new_job: JobConfig) -> None:
+        """Swap the job config under a paused stream (JobManager.update
+        drives pause → preflight → this → resume). The batch body reads
+        ``self.job`` per batch, so the swap takes effect on the next
+        micro-batch."""
+        if self.active:
+            raise ValueError("pause the job before updating its config")
+        self.job = new_job
+
+    def _progress(self) -> dict:
+        """The last progress' batch id and source offsets."""
+        p = self.query.lastProgress if self.query is not None else None
+        return {} if p is None else {"batch_id": p["batchId"], "sources": p["sources"]}
+
+
+class ReplicationJob(WireStreamJob):
     """Job lifecycle over a StreamingQuery handle — the Spark
     restatement of the reference's HTTP v2 control surface
     (api/handler/v2/job.go: create/pause/resume/position) without a
     control plane: Consul/Nomad/NATS state collapses into the
     streaming checkpoint + StreamingQuery object."""
+
+    _ckpt_sub = ""
 
     def __init__(
         self,
@@ -759,9 +841,7 @@ class ReplicationJob:
         max_files_per_trigger: int = 10,
         target=None,
     ):
-        self.spark = spark
-        self.job = job
-        self.source_dir = source_dir
+        super().__init__(spark, job, source_dir, checkpoint_dir, catalog, max_files_per_trigger)
         # default = the scale path: affected-buckets-only merge
         # (sinks/table_sink.py); pass ParquetTableTarget for the simple
         # whole-image tier
@@ -780,42 +860,27 @@ class ReplicationJob:
                     f"native-merge target requires unique_key on every "
                     f"table; missing on: {no_pk}"
                 )
-        self.checkpoint_dir = checkpoint_dir
-        self.catalog = catalog
-        self.max_files_per_trigger = max_files_per_trigger
-        self.query = None
         self.spool = (
             TxSpool(os.path.join(checkpoint_dir, "txspool")) if job.tx_atomic else None
         )
         # applied-gtid interval set, persisted next to the checkpoint —
         # survives pause/resume; replays re-add idempotently
         self.gtid_path = os.path.join(checkpoint_dir, "gtid_position.json")
-        # post-DDL schema snapshots for cross-process recovery
-        self.catalog_path = os.path.join(checkpoint_dir, "catalog.json")
         from dtle_spark.streaming.metrics import TaskMetrics
 
         self.metrics = TaskMetrics()
 
+    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        # the module-level apply_batch, looked up at batch time
+        apply_batch(
+            self.spark, batch, self.job, self.target, self.catalog,
+            spool=self.spool, gtid_path=self.gtid_path,
+            metrics=self.metrics, catalog_path=self.catalog_path,
+            batch_id=batch_id,
+        )
+
     def start(self) -> "ReplicationJob":
-        stream = (
-            self.spark.readStream.schema(WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.source_dir)
-        )
-        self.query = (
-            stream.writeStream.outputMode("update")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(
-                lambda df, epoch: apply_batch(
-                    self.spark, df, self.job, self.target, self.catalog,
-                    spool=self.spool, gtid_path=self.gtid_path,
-                    metrics=self.metrics, catalog_path=self.catalog_path,
-                    batch_id=epoch,
-                )
-            )
-            .trigger(processingTime=f"{self.job.trigger_seconds} seconds")
-            .start()
-        )
+        super().start()
         # a cutover in flight survives restarts: re-arm the target-gtid
         # watcher from its persisted key (Consul-key analogue) OR from
         # the in-memory target — an in-process pause/resume keeps
@@ -834,20 +899,16 @@ class ReplicationJob:
         return self
 
     def update_config(self, new_job: JobConfig) -> None:
-        """Swap the job config under a paused stream (JobManager.update
-        drives pause → preflight → this → resume). The foreachBatch
-        closure reads ``self.job`` per batch, so the swap takes effect
-        on the next micro-batch; the tx spool is rebuilt when the
-        atomicity setting changed."""
-        if self.query is not None and self.query.isActive:
-            raise ValueError("pause the job before updating its config")
-        if new_job.tx_atomic != self.job.tx_atomic:
+        """The config swap; the tx spool is rebuilt when the atomicity
+        setting changed."""
+        was_atomic = self.job.tx_atomic
+        super().update_config(new_job)
+        if new_job.tx_atomic != was_atomic:
             self.spool = (
                 TxSpool(os.path.join(self.checkpoint_dir, "txspool"))
                 if new_job.tx_atomic
                 else None
             )
-        self.job = new_job
 
     def flush_spool(self) -> None:
         """Apply the held frontier tx unconditionally — the operator's
@@ -872,26 +933,6 @@ class ReplicationJob:
             )
             self.spool.clear(self.spark, gen)
 
-    def process_available(self) -> None:
-        """Synchronously drain everything currently in the source
-        (test/snapshot-catchup path)."""
-        assert self.query is not None
-        self.query.processAllAvailable()
-
-    def pause(self) -> None:
-        """Pause = stop the query; the checkpoint keeps the position
-        (reference pause keeps gtid in Consul, store.go:40-446)."""
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "ReplicationJob":
-        """Resume from the checkpointed offsets — same as start; the
-        checkpoint is the position."""
-        if self.query is None:
-            self.start()
-        return self
-
     def position(self) -> dict:
         """Stream position (reference: Gtid/BinlogFilePos query API,
         api/handler/v2 + applier_gtid_executed.go): the applied-GTID
@@ -899,12 +940,7 @@ class ReplicationJob:
         file, not query state) plus the last progress' source offsets."""
         from dtle_spark.sources.gtid import GtidSet
 
-        out: dict = {"gtid_set": GtidSet.load(self.gtid_path).to_str()}
-        if self.query is not None and self.query.lastProgress is not None:
-            p = self.query.lastProgress
-            out["batch_id"] = p.get("batchId") if isinstance(p, dict) else p["batchId"]
-            out["sources"] = p.get("sources") if isinstance(p, dict) else p["sources"]
-        return out
+        return {"gtid_set": GtidSet.load(self.gtid_path).to_str(), **self._progress()}
 
     def table_versions(self) -> dict[str, list[int]]:
         """Retained commit versions per target table (manifest time
@@ -965,14 +1001,12 @@ class ReplicationJob:
         from dtle_spark.sources.gtid import GtidSet
 
         def watch():
-            while True:
-                q = self.query
-                if q is None or not q.isActive:
-                    return
-                applied = GtidSet.load(self.gtid_path)
-                if applied.contains_set(self.target_gtid):
+            while self.active:
+                if GtidSet.load(self.gtid_path).contains_set(self.target_gtid):
                     self.finished = True
-                    q.stop()  # stop() from another thread is the supported path
+                    q = self.query  # a pause may have cleared it meanwhile
+                    if q is not None:
+                        q.stop()  # stop() from another thread is the supported path
                     return
                 import time as _t
 
@@ -992,7 +1026,7 @@ class ReplicationJob:
     def stats(self) -> dict:
         """TaskStatistics analogue (common/models.go:69-88): lifecycle
         + per-table op counters, throughput, delay, applied position."""
-        out = {"active": self.query is not None and self.query.isActive}
+        out = {"type": "replication", "active": self.active}
         if getattr(self, "finished", False):
             # the reference's TargetGtidFinished terminal status
             out["job_status"] = "target_gtid_finished"

@@ -217,17 +217,24 @@ class GenerationStore:
 
 
 class StreamJob:
-    """The micro-batch lifecycle of every streamed maintainer: the file
-    stream (or a ``reader(spark)`` hook) feeds
-    ``foreachBatch(apply_batch)`` under an availableNow trigger, with
-    the stream checkpoint at ``<checkpoint_dir>/<_ckpt_sub>``. Pause
-    stops the query and the checkpoint keeps the position (the
-    ReplicationJob.pause contract). Subclasses set ``source_dir``,
-    ``checkpoint_dir``, ``schema``, ``max_files_per_trigger`` and
-    ``reader``, and implement apply_batch."""
+    """The micro-batch lifecycle every managed job shares — the
+    maintainers here, replication and subscription in pipeline.py: the
+    file stream (or a ``reader(spark)`` hook) feeds
+    ``foreachBatch(apply_batch)`` with the stream checkpoint at
+    ``<checkpoint_dir>/<_ckpt_sub>`` (``checkpoint_dir`` itself when
+    ``_ckpt_sub`` is empty). Maintainers drain under an availableNow
+    trigger; a subclass picks another in ``_trigger``. Pause stops the
+    query and the checkpoint keeps the position (the reference's pause
+    keeps the gtid in Consul, store.go:40-446); resume restarts from it.
+    Subclasses set ``source_dir``, ``checkpoint_dir``, ``schema``,
+    ``max_files_per_trigger`` and ``reader``, and implement
+    apply_batch."""
 
     _ckpt_sub: str
     query = None
+
+    def _trigger(self) -> dict:
+        return {"availableNow": True}
 
     def start(self):
         if self.reader is not None:
@@ -238,13 +245,13 @@ class StreamJob:
                 .option("maxFilesPerTrigger", self.max_files_per_trigger)
                 .parquet(self.source_dir)
             )
+        ckpt = self.checkpoint_dir
+        if self._ckpt_sub:
+            ckpt = os.path.join(ckpt, self._ckpt_sub)
         self.query = (
             stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_dir, self._ckpt_sub),
-            )
-            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .trigger(**self._trigger())
             .start()
         )
         return self

@@ -4,7 +4,8 @@ table (reference: driver/kafka/kafka3.go; created through the same
 /v2 job API as migration/sync, api/handler/v2/job.go:1222-1235).
 
 Spark restatement: readStream over the wire source → per-table typed
-parse with the evolving catalog schema → sinks/debezium.envelope
+parse with the evolving catalog schema (DDL barriers planned by
+pipeline.plan_tables, as for replication) → sinks/debezium.envelope
 (+ tombstones) and schema_change_frames for DDL → frames appended to a
 log-structured parquet topic dir, partitioned by topic. The real Kafka
 producer remains the one seam (sinks/debezium.write_kafka_stream needs
@@ -21,16 +22,24 @@ produce is at-least-once in the reference too — consumers dedupe by
 
 from __future__ import annotations
 
-import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dtle_spark.catalog import SchemaCatalog, parse_ddl_actions
+from dtle_spark.catalog import SchemaCatalog
 from dtle_spark.model import JobConfig
+from dtle_spark.operators.filters import table_filter
 from dtle_spark.sinks.debezium import envelope, schema_change_frames
 from dtle_spark.sinks.table_sink import ParquetTableTarget
-from dtle_spark.streaming.wire import WIRE_SCHEMA, from_wire
+from dtle_spark.streaming.pipeline import (
+    BatchSummary,
+    TablePlan,
+    WireStreamJob,
+    checked_dml,
+    plan_tables,
+    segment_rows,
+)
 
 _WM_KEY = "__frames_batch"
 FRAMES_SCHEMA_NAME = "kafka"
@@ -48,9 +57,11 @@ def default_image_fields(schema) -> list:
     ]
 
 
-class SubscriptionJob:
-    """Change stream → Debezium frames, with the ReplicationJob
-    lifecycle surface (start/pause/resume/process_available/stats)."""
+class SubscriptionJob(WireStreamJob):
+    """Change stream → Debezium frames, on the lifecycle and the DDL
+    planner replication uses."""
+
+    _ckpt_sub = "frames"
 
     def __init__(
         self,
@@ -63,19 +74,9 @@ class SubscriptionJob:
         topic_prefix: str = "dtle",
         max_files_per_trigger: int = 10,
     ):
-        self.spark = spark
-        self.job = job
-        self.source_dir = source_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.catalog = catalog
+        super().__init__(spark, job, source_dir, checkpoint_dir, catalog, max_files_per_trigger)
         self.topic_prefix = topic_prefix
-        self.max_files_per_trigger = max_files_per_trigger
         self.target = ParquetTableTarget(output_root)
-        # post-DDL schema snapshots, same protocol as ReplicationJob:
-        # checkpointed batches never replay, so DDL effects on the
-        # catalog must persist outside the stream for recovery
-        self.catalog_path = os.path.join(checkpoint_dir, "catalog.json")
-        self.query = None
 
     # -- batch core ------------------------------------------------------
 
@@ -87,45 +88,47 @@ class SubscriptionJob:
 
         try:
             with open(self.catalog_path) as f:
-                return int(json.load(f).get("__frames_batch", -1))
+                return int(json.load(f).get(_WM_KEY, -1))
         except (OSError, ValueError):
             return -1
 
-    def _save_catalog(self, batch_id: int, catalog=None) -> None:
-        (catalog if catalog is not None else self.catalog).save(
-            self.catalog_path, extra={"__frames_batch": int(batch_id)}
-        )
-
-    def _repair_catalog(self, batch: DataFrame, batch_id: int) -> None:
-        """Crash landed AFTER the frames commit and BEFORE the catalog
-        snapshot: the replayed batch's frames are already committed but
-        catalog.json is still pre-DDL — fold the batch's DDL in now.
-        Guarded by the in-snapshot batch marker so an already-evolved
-        snapshot is never double-applied (ADD COLUMN is not
-        idempotent). Copy-and-swap: DDL lands on a catalog COPY, the
-        snapshot saves FIRST, then the copy swaps in — if the save
-        throws, the in-memory catalog is still pristine and the next
-        replay repairs cleanly instead of double-applying."""
-        names = {(c.schema_name, c.table_name) for c in self.job.tables}
-        rows = sorted(
-            batch.filter(F.col("op") == "ddl")
-            .select("seq", "query", "schema_name", "table_name")
-            .collect(),
-            key=lambda r: r["seq"],
-        )
+    def _plan(self, batch: DataFrame, batch_id: int) -> tuple[list[TablePlan], SchemaCatalog]:
+        """The batch's table plans (pipeline.plan_tables) and the catalog
+        COPY they evolved. Copy-and-swap: the envelopes need the
+        EVOLVING schema, but an in-process retry of a failed batch must
+        re-derive from the pristine catalog, not replay DDL onto an
+        already-evolved one (duplicate fields)."""
         cat = self.catalog.copy()
-        applied = False
-        for r in rows:
-            if (r["schema_name"], r["table_name"]) not in names:
-                continue
-            for action in parse_ddl_actions(
-                r["query"], default_schema=r["schema_name"]
-            ):
-                cat.apply(action)
-                applied = True
-        if applied:
-            self._save_catalog(batch_id, cat)
+        return plan_tables(self.job, cat, BatchSummary.of(batch), False, batch_id), cat
+
+    def _commit_catalog(self, plans: list[TablePlan], cat: SchemaCatalog, batch_id: int) -> None:
+        """Snapshot the evolved COPY first, then swap it in: a failed
+        save leaves the in-memory catalog pristine for the retry."""
+        if any(p.has_ddl for p in plans):
+            cat.save(self.catalog_path, extra={_WM_KEY: int(batch_id)})
             self.catalog.restore_from(cat)
+
+    def _table_frames(self, batch: DataFrame, plan: TablePlan) -> DataFrame:
+        """One table's frames: each segment's envelopes, built with the
+        schema and unique key current for it (rows after an ALTER carry
+        the new columns), then its schema-change frames."""
+        dml = checked_dml(batch, plan)
+        parts = [
+            envelope(
+                segment_rows(dml, seg),
+                seg.key or [seg.schema.fields[0].name],
+                default_image_fields(seg.schema),
+                topic_prefix=self.topic_prefix,
+                carry_order=True,
+            )
+            for seg in plan.segments
+        ]
+        if plan.has_ddl:
+            rows = table_filter(batch, plan.cfg.schema_name, plan.cfg.table_name)
+            parts.append(
+                schema_change_frames(rows, topic_prefix=self.topic_prefix, carry_order=True)
+            )
+        return reduce(DataFrame.unionByName, parts)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         wm = self.target.seq_watermark(FRAMES_SCHEMA_NAME, FRAMES_TABLE_NAME)
@@ -133,152 +136,35 @@ class SubscriptionJob:
             # frames already committed; the catalog snapshot may still
             # be missing this batch's DDL (crash between the two)
             if self._catalog_batch() < batch_id:
-                self._repair_catalog(batch, batch_id)
+                self._commit_catalog(*self._plan(batch, batch_id), batch_id)
             return
-        frames = None
-        has_ddl = False
-        # Copy-and-swap: the segment loop needs the EVOLVING schema
-        # (envelopes after an ALTER parse with the new columns), but it
-        # must evolve a COPY — mutating self.catalog while building
-        # meant an in-process retry of a FAILED batch (append threw,
-        # stream re-runs the batch) replayed DDL onto an already-
-        # evolved catalog and duplicated fields.
-        cat = self.catalog.copy()
-        for cfg in self.job.tables:
-            rows = batch.filter(
-                (F.col("schema_name") == cfg.schema_name)
-                & (F.col("table_name") == cfg.table_name)
+        plans, cat = self._plan(batch, batch_id)
+        if plans:
+            frames = reduce(
+                DataFrame.unionByName, [self._table_frames(batch, p) for p in plans]
             )
-            # DDL rows are catalog barriers, exactly as in
-            # ReplicationJob.apply_batch: row envelopes BEFORE an ALTER
-            # parse with the old schema, rows AFTER with the evolved
-            # one — otherwise new columns silently vanish from frames
-            ddls = sorted(
-                rows.filter(F.col("op") == "ddl").select("seq", "query").collect(),
-                key=lambda r: r["seq"],
-            )
-            dml = rows.filter(F.col("op") != "ddl")
-            if ddls:
-                # segmentation uses STRICT inequalities around the DDL
-                # seqs — a DML row SHARING a seq with a DDL barrier
-                # would be dropped from every segment. The wire source
-                # assigns unique seqs; fail loud if a source violates it
-                clash = dml.filter(
-                    F.col("seq").isin([d["seq"] for d in ddls])
-                ).count()
-                if clash:
-                    raise ValueError(
-                        f"{clash} DML row(s) share a seq with a DDL "
-                        f"barrier in {cfg.schema_name}.{cfg.table_name} "
-                        f"(batch {batch_id}); wire seqs must be unique"
-                    )
-            parts = []
-            lo = None
-            for ddl_row in ddls + [None]:
-                hi = ddl_row["seq"] if ddl_row is not None else None
-                seg = dml
-                if lo is not None:
-                    seg = seg.filter(F.col("seq") > lo)
-                if hi is not None:
-                    seg = seg.filter(F.col("seq") < hi)
-                meta = cat.get(cfg.schema_name, cfg.table_name)
-                typed = from_wire(seg, meta.schema)
-                parts.append(
-                    envelope(
-                        typed,
-                        meta.unique_key or [meta.schema.fields[0].name],
-                        default_image_fields(meta.schema),
-                        topic_prefix=self.topic_prefix,
-                        carry_order=True,
-                    )
-                )
-                if ddl_row is not None:
-                    has_ddl = True
-                    for action in parse_ddl_actions(
-                        ddl_row["query"], default_schema=cfg.schema_name
-                    ):
-                        cat.apply(action)
-                    lo = hi
-            part = parts[0]
-            for p in parts[1:]:
-                part = part.unionByName(p)
-            part = part.unionByName(
-                schema_change_frames(
-                    rows, topic_prefix=self.topic_prefix, carry_order=True
-                )
-            )
-            frames = part if frames is None else frames.unionByName(part)
-        if frames is not None:
             # (__batch, __seq, __sub) is the producer drain's total
-            # order — __batch alone left same-key frames to a
-            # non-stable sort (delete before its insert -> compaction
-            # resurrects the key)
-            ordered = frames.withColumn("__batch", F.lit(batch_id))
+            # order — __batch alone left same-key frames to a non-stable
+            # sort (delete before its insert -> compaction resurrects
+            # the key)
             self.target.append(
-                ordered, FRAMES_SCHEMA_NAME, FRAMES_TABLE_NAME,
+                frames.withColumn("__batch", F.lit(batch_id)),
+                FRAMES_SCHEMA_NAME, FRAMES_TABLE_NAME,
                 seq_watermark={_WM_KEY: batch_id},
             )
-        if has_ddl:
-            # AFTER the frames commit: a crash before the append leaves
-            # both watermark and snapshot un-advanced (clean replay);
-            # a crash between append and the save is repaired by the
-            # marker check on replay. The snapshot saves the COPY
-            # before the swap, so a failed save also leaves the
-            # in-memory catalog pristine for the retry.
-            self._save_catalog(batch_id, cat)
-            self.catalog.restore_from(cat)
+        # AFTER the frames commit: a crash before the append leaves both
+        # watermark and snapshot un-advanced (clean replay); a crash
+        # between append and the save is repaired by the marker check
+        # on replay
+        self._commit_catalog(plans, cat, batch_id)
 
-    # -- lifecycle -------------------------------------------------------
-
-    def start(self) -> "SubscriptionJob":
-        stream = (
-            self.spark.readStream.schema(WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.source_dir)
-        )
-        self.query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option(
-                "checkpointLocation", os.path.join(self.checkpoint_dir, "frames")
-            )
-            .trigger(processingTime=f"{self.job.trigger_seconds} seconds")
-            .start()
-        )
-        return self
-
-    def process_available(self) -> None:
-        assert self.query is not None
-        self.query.processAllAvailable()
-
-    def pause(self) -> None:
-        if self.query is not None:
-            self.query.stop()
-            self.query = None
-
-    def resume(self) -> "SubscriptionJob":
-        if self.query is None:
-            self.start()
-        return self
-
-    def update_config(self, new_job: JobConfig) -> None:
-        """Config swap under a paused stream (JobManager.update drives
-        pause → preflight → this → resume; same contract as
-        ReplicationJob.update_config — apply_batch reads self.job per
-        micro-batch, so the swap takes effect on the next one)."""
-        if self.query is not None and self.query.isActive:
-            raise ValueError("pause the job before updating its config")
-        self.job = new_job
+    # -- lifecycle: start/pause/resume from StreamJob --------------------
 
     def position(self) -> dict:
         """Stream position for the /v2 position route: last committed
         frames batch (the replay watermark) + source offsets."""
         wm = self.target.seq_watermark(FRAMES_SCHEMA_NAME, FRAMES_TABLE_NAME)
-        out: dict = {"frames_batch": wm.get(_WM_KEY, -1)}
-        if self.query is not None and self.query.lastProgress is not None:
-            p = self.query.lastProgress
-            out["batch_id"] = p.get("batchId") if isinstance(p, dict) else p["batchId"]
-            out["sources"] = p.get("sources") if isinstance(p, dict) else p["sources"]
-        return out
+        return {"frames_batch": wm.get(_WM_KEY, -1), **self._progress()}
 
     def frames(self) -> DataFrame | None:
         """The produced topic log (topic, key, value, __batch)."""
@@ -291,7 +177,7 @@ class SubscriptionJob:
         applied-GTID set to watch (frames are the output), so the
         frontier is "source exhausted now" — target_gtid is accepted
         for route parity and ignored."""
-        if self.query is None or not self.query.isActive:
+        if not self.active:
             # a paused job still honors the drain-then-stop contract:
             # resume, drain, stop (finished must not mean "whatever
             # happened to be published when someone paused")
@@ -311,7 +197,9 @@ class SubscriptionJob:
         return {key: self.target.versions(FRAMES_SCHEMA_NAME, FRAMES_TABLE_NAME)}
 
     def stats(self) -> dict:
-        out = {"active": self.query is not None and self.query.isActive,
+        # "job_type" predates the common "type" key; the HTTP response
+        # keeps both
+        out = {"type": "subscription", "active": self.active,
                "job_type": "subscription"}
         if getattr(self, "finished", False):
             out["job_status"] = "target_gtid_finished"

@@ -349,14 +349,10 @@ def test_purge_route_over_http(spark, tmp_path):
         # an ACTIVE serving job probing the same index_root blocks the
         # purge: the forced fold gc's the superseded generation, which
         # would be deleted out from under a mid-batch probe. Stubbed
-        # prober — the guard reads only (index_root, query.isActive).
+        # prober — the guard reads only (index_root, active).
         class _Prober:
             index_root = str(tmp_path / "index")
-
-            class _Q:
-                isActive = True
-
-            query = _Q()
+            active = True
 
         mgr._jobs["serve-x"] = _Prober()
         code, err = _http("POST", "/v2/job/vm/purge", {"ids": doomed})

@@ -430,6 +430,9 @@ def test_http_create_subscription_job(spark, job_dirs_factory):
         manager.get("s1").process_available()
         code, d = _http("GET", f"{url}/v2/job/s1")
         assert code == 200 and d["job_type"] == "subscription" and d["frames"] > 0
+        assert d["type"] == "subscription"
+        code, body = _http("POST", f"{url}/v2/job/s1/drift_gate", {"thresholds": {"x": 1}})
+        assert code == 400 and "subscription job 's1'" in body["error"]
         code, _ = _http("POST", f"{url}/v2/job/s1/pause")
         assert code == 200
     finally:

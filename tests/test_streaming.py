@@ -948,11 +948,13 @@ def test_ddl_add_column_no_pk(spark, job_dirs, target_kind):
 
 @pytest.mark.parametrize("stmt", ["RENAME TABLE db1.t TO db1.t2", "DROP TABLE db1.t"])
 def test_table_rename_or_drop_ends_its_segments(spark, job_dirs, stmt):
-    """RENAME/DROP TABLE of a replicated table: the rows before the DDL
-    apply and the catalog entry goes; a DML row of the table after the
-    DDL fails the batch with a ValueError naming the table and the seq,
-    and nothing commits."""
+    """RENAME/DROP TABLE of a replicated or subscribed table: the rows
+    before the DDL apply (or become frames) and the catalog entry goes;
+    a DML row of the table after the DDL fails the batch with a
+    ValueError naming the table and the seq, nothing commits and the
+    catalog stays pristine."""
     import dtle_spark.streaming.pipeline as pl
+    from dtle_spark.streaming.subscription import SubscriptionJob
 
     job, cat = _keyed_job("gone", ["t"])
     target = ParquetTableTarget(job_dirs["target"])
@@ -967,11 +969,30 @@ def test_table_rename_or_drop_ends_its_segments(spark, job_dirs, stmt):
     assert cat.get("db1", "t") is None
     assert (cat.get("db1", "t2") is not None) == stmt.startswith("RENAME")
 
+    # the subscription plans its batch with the same planner
+    job, cat = _keyed_job("gone_sub", ["t"])
+    sj = SubscriptionJob(spark, job, job_dirs["source"], os.path.join(job_dirs["target"], "sub"),
+                         job_dirs["checkpoint"], cat)
+    with pytest.raises(ValueError, match=r"db1\.t \(first at seq 3\)"):
+        sj.apply_batch(_wire(spark, rows + [late]), 0)
+    assert sj.frames() is None
+    assert [f.name for f in cat.get("db1", "t").schema.fields] == ["id", "v"]
+    assert not os.path.exists(sj.catalog_path)
+    sj.apply_batch(_wire(spark, rows), 0)
+    frames = sj.frames().collect()
+    assert sorted(r["topic"] for r in frames) == ["dtle.db1.t", "schema-changes.dtle"]
+    assert [r["key"] for r in frames if r["topic"] == "dtle.db1.t"] == ['{"id":1}']
+    assert cat.get("db1", "t") is None
+    assert (cat.get("db1", "t2") is not None) == stmt.startswith("RENAME")
 
-def test_replication_rejects_dml_sharing_seq_with_ddl(spark, job_dirs):
+
+@pytest.mark.parametrize("tx_atomic", [False, True])
+def test_replication_rejects_dml_sharing_seq_with_ddl(spark, job_dirs, tx_atomic):
     """The replication twin of the subscription seq-clash guard: a DML
     row sharing its seq with a DDL barrier would drop from every
-    segment, so the batch fails loud."""
+    segment, so the batch fails loud. With tx_atomic the spool's
+    redelivery dedupe must keep the row (it differs from the DDL row in
+    op) for the check to see it."""
     import dtle_spark.streaming.pipeline as pl
 
     job, cat = _keyed_job("clash", ["t"])
@@ -980,9 +1001,13 @@ def test_replication_rejects_dml_sharing_seq_with_ddl(spark, job_dirs):
         (S1, 1, 1, "t", "i", '{"id":1,"v":10}'),
         (S1, 2, 2, "t", "ddl", "ALTER TABLE db1.t ADD COLUMN c BIGINT"),
         (S1, 2, 2, "t", "i", '{"id":2,"v":20}'),  # seq collides with the DDL
+        (S1, 3, 3, "t", "i", '{"id":3,"v":30}'),  # graduates gno 2 from the spool
     ])
+    spool = pl.TxSpool(os.path.join(job_dirs["checkpoint"], "txspool")) if tx_atomic else None
     with pytest.raises(ValueError, match="share a seq"):
-        pl.apply_batch(spark, b0, job, target, cat, batch_id=0)
+        pl.apply_batch(spark, b0, job, target, cat, spool=spool, batch_id=0)
+    assert target.read(spark, "db1", "t") is None
+    assert [f.name for f in cat.get("db1", "t").schema.fields] == ["id", "v"]
 
 
 def _ddl_batch_rows(ids, ddl_after, seq0):
@@ -1074,6 +1099,43 @@ def test_ddl_three_table_batch_job_count(spark, job_dirs):
     assert 0 < len(jobs) <= 33, len(jobs)
     a = {r["id"]: r["c"] for r in rj.target.read(spark, "db1", "a").collect()}
     assert set(a) == set(range(1, 30)) and a[26] == 260 and a[25] is None
+
+
+@pytest.mark.parametrize("ddl", [False, True])
+def test_subscription_three_table_batch_job_count(spark, job_dirs, ddl):
+    """A 3-table subscription batch, DML-only or with one ADD COLUMN,
+    runs at most 3 Spark jobs: one batch summary plans every table's DDL
+    barriers on the driver, and the frames append writes once."""
+    from dtle_spark.streaming.subscription import SubscriptionJob
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("subcount", tables)
+    sj = SubscriptionJob(spark, job, job_dirs["source"], job_dirs["target"],
+                         job_dirs["checkpoint"], cat)
+    sc = spark.sparkContext
+    for b in range(2):
+        gnos = range(10 * b + 1, 10 * b + 11)
+        rows = (_ddl_batch_rows(gnos, ddl_after=15, seq0=100 * b) if ddl and b == 1
+                else _one_row_per_table(S1, gnos, tables, seq0=100 * b))
+        df = _wire(spark, rows)
+        group = f"sub-job-count-{ddl}-{b}"
+        sc.setJobGroup(group, "count subscription apply_batch jobs")
+        try:
+            sj.apply_batch(df, b)
+        finally:
+            sc.setJobGroup(None, None)
+    _wait_jobs_settled(sc)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, len(jobs)
+    frames = sj.frames().collect()
+    assert sum(r["topic"] == "schema-changes.dtle" for r in frames) == int(ddl)
+    assert sum(r["topic"] == "dtle.db1.a" for r in frames) == 20
+    if ddl:
+        import json
+
+        after = {json.loads(r["value"])["after"]["id"]: json.loads(r["value"])["after"]
+                 for r in frames if r["topic"] == "dtle.db1.a"}
+        assert "c" not in after[15] and after[16]["c"] == 160
 
 
 def test_batch_with_rows_for_one_table_touches_only_it(spark, job_dirs):
