@@ -1,21 +1,28 @@
 """Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line.
+(default ``tableio.DEFAULT_SF_DIR``, the sf0.1 tier) and prints ONE JSON
+line.
 
-Each query is forced through the noop sink (full materialization, no
-collect-to-driver, no write amplification) — the number is pure plan
-execution time. First a warmup query absorbs JVM/codegen startup.
+Each query is timed in two parts by ``perfbench/registry_slice.run_pass``:
+*build* is the ``spark_fn`` call, with whatever it pins or collects
+eagerly; *execution* is a ``noop`` write of the returned DataFrame (full
+materialisation, nothing collected to the driver). A warmup first absorbs
+JVM, codegen and Python-worker startup.
 
-Each query runs $SPARK_GRAFT_BENCH_RUNS times (default 3) and reports
-the MIN: single samples showed 3-8x noise on iterative/codegen-heavy
-queries (first execution pays JIT + codegen compilation; a GC pause
-mid-bench lands on whichever query is running), and the min is the
-steady-state plan cost — the number that scales with data, which is
-what the 100 TB comparison needs. Default was 2 through r7; raised to
-3 after the token_count_bpe adjudication (r8): ambient ~1.3 s spikes
-hit ~3% of samples at gc=0, scattered across positions — with 2
-samples a short query occasionally has BOTH hit (r7 recorded
-1.81 s for a 0.27 s plan), with 3 the min dodges reliably. Set
-SPARK_GRAFT_BENCH_RUNS=1 for single-sample behavior.
+Each query runs $SPARK_GRAFT_BENCH_RUNS times (default 3) and reports the
+MIN of build + execution: the first execution pays JIT and codegen, and a
+GC pause lands on whichever query is running. Set it to 1 for
+single-sample behaviour.
+
+Wall time moves with host load; Spark's own counters do not. For the
+fastest run the harness reads, from Spark's status store
+(``perfbench/tracing``), the jobs it submitted, their stages, the
+executors' task CPU and the shuffle and spill bytes. A reader comparing
+two runs checks whether a slower query also ran more jobs or more task
+CPU; if neither moved, the host did.
+
+$SPARK_GRAFT_BENCH_ONLY restricts the run to a comma-separated subset;
+$SPARK_GRAFT_BENCH_NO_FULL keeps ``bench_full.json`` and
+``bench_last.json`` as they are (scale-tier runs set both).
 """
 
 from __future__ import annotations
@@ -23,346 +30,30 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 from dtle_spark.tableio import DEFAULT_SF_DIR, load_table
 from dtle_spark.queries import REGISTRY
 from dtle_spark.session import get_spark
 
-# Host-state canary: a fixed, data-independent, CPU-bound plan (codegen
-# hash-aggregate over a generated range — no IO, no skew, no Python
-# workers) whose steady-state cost on a QUIESCENT host is the stored
-# reference below. The canary runs min-of-3 at bench start AND end; its
-# ratio vs the reference is the per-run host-state signal that lets a
-# reader separate "this round's code got slower" from "the box was hot"
-# WITHOUT the forensic essay r11/r12 needed (same-code totals swung
-# 117.8->175.3 s purely with host load; every adjudication was manual).
-# Re-calibrate (and commit) when the canary plan or host class changes:
-#   SPARK_GRAFT_CANARY_CALIBRATE=1 python bench.py
-_CANARY_REF_SEC = 0.69  # local[32], idle host, warmed min-of-3 (r13)
-_CANARY_ROWS = 40_000_000
+REPO = os.path.dirname(os.path.abspath(__file__))
+_PERFBENCH = os.path.join(REPO, "perfbench")
+if _PERFBENCH not in sys.path:
+    sys.path.append(_PERFBENCH)
 
+import registry_slice  # noqa: E402  (perfbench/)
+import tracing  # noqa: E402  (perfbench/)
 
-def _canary_once(spark) -> float:
-    df = spark.range(0, _CANARY_ROWS, 1, 32).selectExpr(
-        "id % 9973 AS k",
-        "(id * 2654435761) % 1000003 AS v",
-    ).groupBy("k").agg(
-        {"v": "sum", "*": "count"}
-    )
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
-def _canary(spark) -> float:
-    _canary_once(spark)  # discard the JIT/codegen warmup sample
-    return round(min(_canary_once(spark) for _ in range(3)), 3)
-
-
-def _sf_of(rec: dict) -> float | None:
-    try:
-        return float(rec.get("sf"))
-    except (TypeError, ValueError):
-        return None
-
-
-def _max_bench_round(repo_dir: str) -> int:
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0)
-
-
-def _run_canary_ratio(rec: dict) -> float:
-    """A run's host-speed context: mean of its start/end canary ratios
-    (1.0 = the calibrated reference host speed). Pre-r13 records have
-    no canary fields — treat them as reference speed."""
-    c = rec.get("canary") or {}
-    rs = [c.get("start_ratio"), c.get("end_ratio")]
-    rs = [float(r) for r in rs if isinstance(r, (int, float)) and r > 0]
-    return round(sum(rs) / len(rs), 2) if rs else 1.0
-
-
-def _anchor_history(
-    repo_dir: str, sf: float | None,
-) -> dict[str, list[list]]:
-    """Per-query history of PER-RUN minima: {name: [[sec, round,
-    run_canary_ratio], ...]} over the rounds the query's CURRENT
-    definition was in force (recorded round >= the query's
-    QUERY_HASHES round stamp) at the SAME scale factor. Sources: the
-    committed bench_full.json (its "anchors" map carries the history
-    forward run-over-run — without it every overwrite would erase it;
-    pre-r14 single-entry formats [sec, round] / [sec, round, ratio]
-    load as one-sample histories) plus any BENCH_r*.json that carries
-    queries. A query whose definition changes re-anchors automatically
-    (stamp filter); a bench at a different sf has no history and flags
-    nothing rather than comparing across scales."""
-    import glob
-    import re
-
-    stamps: dict[str, int] = {}
-    try:
-        with open(os.path.join(repo_dir, "QUERY_HASHES.json")) as f:
-            stamps = {k: v.get("round", 0) for k, v in json.load(f).items()}
-    except OSError:
-        pass
-
-    hist: dict[str, list[list]] = {}
-
-    def add(name: str, sec: float, rnd: int, ratio: float) -> None:
-        if rnd < stamps.get(name, 0):
-            return  # measured under an older definition
-        samples = hist.setdefault(name, [])
-        entry = [float(sec), int(rnd), float(ratio) if ratio > 0 else 1.0]
-        if entry not in samples:
-            samples.append(entry)
-
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m is None:
-            # driver-side artifacts like BENCH_r15_c8.json (the low-core
-            # scaling run) match the glob but are not round records
-            continue
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        qs = rec.get("queries") or (rec.get("parsed") or {}).get(
-            "queries") or {}
-        if qs and _sf_of(rec) == sf:
-            ratio = _run_canary_ratio(rec)
-            for name, sec in qs.items():
-                add(name, sec, int(m.group(1)), ratio)
-    try:
-        with open(os.path.join(repo_dir, "bench_full.json")) as f:
-            rec = json.load(f)
-        if _sf_of(rec) == sf:
-            if rec.get("queries"):
-                # a pre-r13 bench_full.json has no 'round' key; default
-                # to 0 (conservatively OLD, pruned by the stamp filter)
-                rnd = int(rec.get("round", 0))
-                ratio = _run_canary_ratio(rec)
-                for name, sec in rec["queries"].items():
-                    add(name, sec, rnd, ratio)
-            for name, entry in (rec.get("anchors") or {}).items():
-                if entry and isinstance(entry[0], (int, float)):
-                    entry = [entry]  # pre-r14 single-sample formats
-                for s in entry:
-                    add(name, s[0], s[1], s[2] if len(s) > 2 else 1.0)
-    except (OSError, ValueError):
-        pass
-    return hist
-
-
-def _anchor_of(samples: list[list]) -> tuple[float, int, float]:
-    """Collapse a query's per-run-minima history to its anchor: the
-    MEDIAN of the minima -> (sec, newest_round, ratio_at_median).
-
-    Median, not min (the r13/r14 adjudications): the global min is
-    burst-poisonable — dedup_simhash's 0.318 s was a favorable-burst
-    sample on a host that floats 0.66-2.15x, a bar honest runs read
-    1.5x over — and normalizing by the run-level canary mislabels
-    queries when the box heats/cools WITHIN a run (a 1.91->0.69 run
-    credited mid-run queries 1.3, under-barred them ~2x, and the next
-    honest run fired a 39-flag storm). The median needs no host-speed
-    inference at all: one burst run is one outvoted sample."""
-    ordered = sorted(samples, key=lambda s: s[0])
-    mid = ordered[(len(ordered) - 1) // 2]
-    return (
-        float(mid[0]),
-        max(int(s[1]) for s in samples),
-        float(mid[2]) if len(mid) > 2 else 1.0,
-    )
-
-
-_HISTORY_CAP = 8  # per-run minima kept per query (newest rounds win)
-
-
-def _merge_history(
-    hist: dict[str, list[list]],
-    timings: dict[str, float],
-    this_round: int,
-    run_ratio: float,
-    flagged: dict[str, dict] | None = None,
-) -> dict[str, list[list]]:
-    """Append this run's per-query minima to the anchor history —
-    EXCEPT for queries this run failed to acquit (ADVICE r14: with the
-    8-sample cap and a median anchor, unconditionally appending a
-    regression's slow sample re-baselines the regression after ~4 runs
-    and the flag silently disappears; the old min-ratchet could never
-    drift upward). Acquitted flags contribute their CLEAN re-measure
-    (host-tax -> the isolated min, position-tax -> the fresh-JVM min)
-    so the history records the plan's cost, not the transient that
-    flagged it; regression / host-suspect / fresh-check-failed / error
-    samples are dropped entirely — a real regression keeps firing
-    every run until the code is fixed (and the definition re-stamps,
-    re-anchoring honestly) or the box is proven healthy."""
-    out = {k: [list(s) for s in v] for k, v in hist.items()}
-    run_ratio = run_ratio if run_ratio > 0 else 1.0
-    for name, sec in timings.items():
-        f = (flagged or {}).get(name)
-        if f:
-            verdict = f.get("verdict")
-            if verdict == "host-tax" and f.get("isolated") is not None:
-                sec = f["isolated"]
-            elif verdict == "position-tax" and f.get("fresh") is not None:
-                sec = f["fresh"]
-            else:
-                continue  # unacquitted sample: never let it re-baseline
-        samples = out.setdefault(name, [])
-        samples.append([float(sec), this_round, round(run_ratio, 2)])
-        samples.sort(key=lambda s: s[1])
-        del samples[:-_HISTORY_CAP]
-    return out
-
-
-def _freshcheck(repo_dir: str, names: list[str], sf_dir: str) -> dict | None:
-    """Re-measure queries in a brand-new subprocess JVM (warmups +
-    min-of-3 after a discarded ramp sample). The r13 blind spot: the
-    in-JVM 'isolated' recheck runs AFTER the 143-query sweep in the
-    same long-lived JVM, so a megamorphic-pollution slowdown
-    (interpreted-HOF call sites gone polymorphic) survives it and gets
-    stamped 'regression' — the one verdict class a same-JVM recheck
-    structurally cannot acquit. Accepts a BATCH so a flag storm costs
-    ceil(N/batch) JVM cold-starts, not N (the r14 budget corner: >4
-    flags used to exhaust the budget and leave 'unadjudicated'
-    verdicts in a graded artifact)."""
-    import subprocess
-
-    env = {**os.environ,
-           "SPARK_GRAFT_BENCH_FRESHCHECK": ",".join(names),
-           "SPARK_GRAFT_SF_DIR": sf_dir}
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(repo_dir, "bench.py")],
-            env=env, capture_output=True, text=True,
-            timeout=900 * max(1, len(names)),
-        )
-    except Exception:
-        return None
-    for line in reversed((out.stdout or "").strip().splitlines()):
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        if rec.get("freshcheck") == ",".join(names):
-            return rec
-    return None
-
-
-def _adjudicate(
-    timings: dict[str, float],
-    history: dict[str, list[list]],
-    bar_scale: float,
-    run_ratio: float,
-    measure_isolated,
-    freshcheck_batch,
-    batch_size: int = 4,
-) -> dict[str, dict]:
-    """The flag-adjudication ladder, cheapest rung first. Verdicts the
-    judge reads as fields:
-
-      1. same-JVM isolated min-of-3 (post-sweep, post-GC) back at
-         anchor -> "host-tax" (transient load landed on the sweep)
-      2. still slow -> FRESH SUBPROCESS JVM min-of-3, BATCHED up to
-         ``batch_size`` queries per JVM so every flag gets a verdict
-         regardless of storm size; fresh at anchor -> "position-tax"
-         (in-session pollution, the plan is fine). A query that reads
-         slow in a SHARED batch gets one DEDICATED fresh JVM before any
-         indicting verdict — in-batch neighbors could themselves have
-         polluted the JVM, and "regression" must never rest on a
-         measurement another query could have tainted.
-      3. fresh still slow alone on a provably hot host (fresh-JVM
-         canary > 1.3x) -> "host-suspect"; else -> "regression" (real).
-
-    ``measure_isolated(name) -> float | None`` and
-    ``freshcheck_batch(names) -> dict | None`` are injected so the
-    ladder's arithmetic is unit-testable without Spark
-    (tests/test_bench_adjudication.py)."""
-    flagged: dict[str, dict] = {}
-    pending: list[str] = []
-    for name, sec in timings.items():
-        samples_hist = history.get(name)
-        if not samples_hist:
-            continue
-        a_sec, a_rnd, a_ratio = _anchor_of(samples_hist)
-        if sec <= 2 * a_sec * bar_scale:
-            continue
-        isolated = measure_isolated(name)
-        rec = {
-            "min": sec, "anchor": a_sec, "anchor_round": a_rnd,
-            "anchor_canary": a_ratio, "anchor_runs": len(samples_hist),
-            "run_canary": round(run_ratio, 2), "isolated": isolated,
-        }
-        flagged[name] = rec
-        if isolated is None:
-            rec["verdict"] = "error"
-        elif isolated <= 2 * a_sec * bar_scale:
-            rec["verdict"] = "host-tax"
-        else:
-            pending.append(name)
-
-    def fresh_verdict(name: str, fresh: dict, shared: bool) -> str | None:
-        """None = needs a dedicated re-run before an indicting verdict."""
-        rec = flagged[name]
-        mins = fresh.get("mins") or (
-            {name: fresh["min"]} if "min" in fresh else {}
-        )
-        fmin = mins.get(name)
-        if fmin is None:
-            return "fresh-check-failed"
-        f_ratio = float(fresh.get("canary_ratio") or 1.0)
-        rec["fresh"] = float(fmin)
-        rec["fresh_canary"] = f_ratio
-        if float(fmin) <= 2 * rec["anchor"] * max(1.0, f_ratio):
-            return "position-tax"
-        if shared:
-            return None
-        return "host-suspect" if f_ratio > 1.3 else "regression"
-
-    step = max(1, batch_size)
-    for i in range(0, len(pending), step):
-        chunk = pending[i:i + step]
-        fresh = freshcheck_batch(chunk)
-        if fresh is None:
-            for n in chunk:
-                flagged[n]["verdict"] = "fresh-check-failed"
-            continue
-        for n in chunk:
-            v = fresh_verdict(n, fresh, shared=len(chunk) > 1)
-            if v is None:
-                solo = freshcheck_batch([n])
-                v = (
-                    fresh_verdict(n, solo, shared=False)
-                    if solo is not None else "fresh-check-failed"
-                )
-            flagged[n]["verdict"] = v
-    for name, rec in flagged.items():
-        print(
-            f"  FLAG {name}: {rec['min']:.3f}s vs median anchor "
-            f"{rec['anchor']:.3f}s (r{rec['anchor_round']}, "
-            f"{rec['anchor_runs']} runs) isolated={rec['isolated']} "
-            f"fresh={rec.get('fresh')} -> {rec['verdict']}",
-            file=sys.stderr,
-        )
-    return flagged
+# orphaned localCheckpoint/broadcast blocks are freed only when a DRIVER
+# GC collects their Python-side handles: one GC every 10 queries, plus
+# one whenever block storage crosses this many bytes
+_GC_BYTES = 1 << 30
 
 
 def _parallelism_facts(spark) -> dict:
-    """The effective-parallelism contract, made OBSERVABLE (r16, after
-    the r15 scaling run was uninterpretable): what master the JVM
-    actually runs, how many task slots it schedules, and how many CPUs
-    the OS actually grants this process (a cgroup/affinity cap would
-    show up as sched_affinity < cpu_count). Carried in the bench JSON
-    line so a low-core run proves — not asserts — that it ran on fewer
-    cores."""
+    """What master the JVM runs, how many task slots it schedules, and
+    how many CPUs the OS grants this process (a cgroup/affinity cap shows
+    up as sched_affinity < cpu_count), so a low-core run proves that it
+    ran on fewer cores."""
     sc = spark.sparkContext
     try:
         affinity = len(os.sched_getaffinity(0))
@@ -377,284 +68,117 @@ def _parallelism_facts(spark) -> dict:
     }
 
 
+def _storage_bytes(sc) -> int:
+    """Memory held by cached/localCheckpointed RDD blocks."""
+    try:
+        return int(sum(i.memSize() for i in sc._jsc.sc().getRDDStorageInfo()))
+    except Exception:
+        return -1
+
+
+def _spark_counters(sc, rec: dict) -> dict:
+    """One ``run_pass`` record's build and execution seconds, and Spark's
+    counters for it: the jobs submitted between its build start and its
+    execution end, their distinct stage ids (skipped stages included)
+    and the stages' task CPU, shuffle read + write bytes and memory +
+    disk spill."""
+    tracing.wait_listener_drained(sc)
+    jobs = tracing.jobs_between(tracing.spark_jobs(sc), rec["build_ms"][0], rec["exec_ms"][1])
+    stages = {s for j in jobs for s in j["stages"]}
+    m = tracing.stage_metrics(sc, stages)
+    return {
+        "build_s": round(rec["build_s"], 3),
+        "exec_s": round(rec["exec_s"], 3),
+        "jobs": len(jobs),
+        "stages": len(stages),
+        "task_cpu_s": round(m["task_cpu_s"], 3),
+        "shuffle_bytes": int(m["shuffle_bytes"]),
+        "spill_bytes": int(m["spill_bytes"]),
+    }
+
+
+def _write(name: str, payload: dict) -> None:
+    try:
+        with open(os.path.join(REPO, name), "w") as f:
+            json.dump(payload, f, indent=1)
+    except OSError as exc:
+        print(f"  {name} not written: {exc}", file=sys.stderr)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("dtle_spark_bench")
-
-    # warmup: JVM, codegen, parquet footer caches
-    load_table(spark, sf_dir, "lineitem").count()
-    # warmup: the Python/Arrow worker pool (mapInPandas queries otherwise
-    # charge ~20s of worker+Arrow cold-start to whichever runs first)
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
-
-    fresh_name = os.environ.get("SPARK_GRAFT_BENCH_FRESHCHECK")
-    if fresh_name:
-        # subprocess mode for _freshcheck: measure the named queries
-        # (comma-separated batch) in THIS brand-new JVM and print a
-        # single JSON line. Per query the first sample is DISCARDED
-        # from the min: a fresh JVM pays each query's whole-stage-
-        # codegen compile + C1->C2 ramp on run 0 (measured: 8.9s ->
-        # 2.4s -> 2.2s for a 60-aggregate plan), and a min that
-        # includes it would refuse to acquit a healthy plan — the
-        # sweep's own min-of-N never includes a per-query cold sample
-        # either, since the long-lived JVM amortizes compiles across
-        # the registry.
-        mins: dict[str, float] = {}
-        samples_by: dict[str, list[float]] = {}
-        for qn in fresh_name.split(","):
-            samples = []
-            for _ in range(4):
-                t0 = time.perf_counter()
-                REGISTRY[qn].spark_fn(spark, sf_dir).write.format(
-                    "noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            mins[qn] = round(min(samples[1:]), 3)
-            samples_by[qn] = [round(s, 3) for s in samples]
-        print(json.dumps({
-            "freshcheck": fresh_name,
-            "mins": mins,
-            **({"min": next(iter(mins.values()))} if len(mins) == 1 else {}),
-            "samples": samples_by,
-            "canary_ratio": round(_canary(spark) / _CANARY_REF_SEC, 2),
-            "parallelism": _parallelism_facts(spark),
-        }))
-        return
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    canary_start = _canary(spark)
-    if os.environ.get("SPARK_GRAFT_CANARY_CALIBRATE"):
-        print(json.dumps({"canary_measured": canary_start,
-                          "canary_ref": _CANARY_REF_SEC}))
-        return
-    try:
-        load_start = list(os.getloadavg())
-    except OSError:
-        load_start = None
-
-    def gc_stats() -> tuple[int, int]:
-        """Driver-JVM cumulative (collections, millis) across all GC
-        beans — per-query deltas let a reader adjudicate 'slow sample'
-        vs 'GC pause landed here' without a same-host A/B rerun."""
-        try:
-            beans = (spark.sparkContext._jvm.java.lang.management
-                     .ManagementFactory.getGarbageCollectorMXBeans())
-            n = t = 0
-            for i in range(beans.size()):
-                b = beans.get(i)
-                n += max(0, b.getCollectionCount())
-                t += max(0, b.getCollectionTime())
-            return n, t
-        except Exception:
-            return 0, 0
-
-    def storage_bytes() -> int:
-        """Total memory held by cached/localCheckpointed RDD blocks —
-        the pile-up that taxed random queries (r8 rp_embed_neighbors,
-        r10 text_rp_embedding: in-bench 3-5x their isolated cost).
-        Recorded per query so a slow sample is attributable to block
-        pressure without a same-host A/B rerun."""
-        try:
-            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            return int(sum(i.memSize() for i in infos))
-        except Exception:
-            return -1
-
-    # orphaned localCheckpoint blocks are freed only when a DRIVER GC
-    # collects their Python-side handles; gc when storage memory
-    # crosses a threshold (not on a blind every-N cadence — r10 showed
-    # a checkpoint-heavy neighbor can pile up GiBs inside one window)
-    gc_threshold = int(
-        os.environ.get("SPARK_GRAFT_BENCH_GC_BYTES", str(1 << 30))
-    )
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    # optional subset (comma-separated registry names) — the scale-tier
-    # sweeps (scripts/scale_sweep.py, SCALE.md) run only the heaviest
-    # queries at 3x/10x data; unknown names fail loud, not silently
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     registry = REGISTRY
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
         names = [n.strip() for n in only.split(",") if n.strip()]
         unknown = sorted(set(names) - set(REGISTRY))
         if unknown:
             raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY unknown: {unknown}")
         registry = {n: REGISTRY[n] for n in names}
+
+    spark = get_spark("dtle_spark_bench")
+    sc = spark.sparkContext
+    # warmup: JVM, codegen, parquet footer caches
+    load_table(spark, sf_dir, "lineitem").count()
+    # warmup: the Python/Arrow worker pool (mapInPandas queries otherwise
+    # charge ~20s of worker+Arrow cold-start to whichever runs first)
+    spark.range(sc.defaultParallelism * 4).repartition(
+        sc.defaultParallelism
+    ).mapInPandas(lambda it: it, "id long").count()
+
     timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
     all_samples: dict[str, list[float]] = {}
-    gc_deltas: dict[str, dict[str, int]] = {}
-    storage: dict[str, dict[str, int]] = {}
-    run_order: list[str] = []
     errors: dict[str, str] = {}
     since_gc = 0
-    for name, pair in registry.items():
-        # Spark's ContextCleaner releases localCheckpoint/broadcast
-        # blocks only when a DRIVER GC collects their handles; across
-        # ~100 queries in one JVM the orphaned blocks otherwise pile up
-        # in storage memory and randomly tax later queries (observed:
-        # 69-94 s total swing; with this nudge totals sit at the low
-        # end). One explicit GC per 10 queries costs ~nothing, plus an
-        # immediate one whenever block storage crosses the threshold.
+    for name in registry:
         since_gc += 1
-        pre_bytes = storage_bytes()
-        if since_gc >= 10 or pre_bytes > gc_threshold:
+        if since_gc >= 10 or _storage_bytes(sc) > _GC_BYTES:
             since_gc = 0
-            spark.sparkContext._jvm.System.gc()
-            pre_bytes = storage_bytes()
-        run_order.append(name)
-        gc0_n, gc0_t = gc_stats()
-        samples = []
+            sc._jvm.System.gc()
+        recs = []
         for _ in range(runs):
-            t0 = time.perf_counter()
-            try:
-                pair.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # one broken query must not zero the bench
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            rec = registry_slice.run_pass(spark, sf_dir, [name])[0]
+            if not rec["ok"]:  # one broken query must not zero the bench
+                errors[name] = rec["error"]
                 print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)
-                samples = []
                 break
-            samples.append(time.perf_counter() - t0)
-        if not samples:
+            recs.append(rec)
+        if name in errors:
             continue
-        gc1_n, gc1_t = gc_stats()
+        samples = [r["build_s"] + r["exec_s"] for r in recs]
         timings[name] = round(min(samples), 3)
         all_samples[name] = [round(s, 3) for s in samples]
-        gc_deltas[name] = {"collections": gc1_n - gc0_n, "ms": gc1_t - gc0_t}
-        storage[name] = {"pre": pre_bytes, "post": storage_bytes()}
-        print(f"  {name}: {timings[name]:.3f}s (min of {len(samples)})", file=sys.stderr)
+        counters[name] = _spark_counters(sc, recs[samples.index(min(samples))])
+        c = counters[name]
+        print(f"  {name}: {timings[name]:.3f}s (min of {len(samples)}; build "
+              f"{c['build_s']:.3f}s, {c['jobs']} jobs, {c['task_cpu_s']:.2f}s task CPU)",
+              file=sys.stderr)
 
-    canary_end = _canary(spark)
-    try:
-        load_end = list(os.getloadavg())
-    except OSError:
-        load_end = None
-    canary = {
-        "start": canary_start,
-        "end": canary_end,
-        "ref": _CANARY_REF_SEC,
-        "start_ratio": round(canary_start / _CANARY_REF_SEC, 2),
-        "end_ratio": round(canary_end / _CANARY_REF_SEC, 2),
-    }
-
-    # Flag queries whose min-of-N exceeds 2x their MEDIAN anchor (the
-    # median of per-run minima under the SAME definition per
-    # QUERY_HASHES stamp — robust to burst runs, needs no host-speed
-    # inference; see _anchor_of), with the bar INFLATED on a slow box
-    # and never narrowed on a fast one; the ladder itself lives in
-    # _adjudicate (unit-tested without Spark).
-    history = _anchor_history(
-        repo_dir, float(sf) if sf.replace(".", "").isdigit() else None
-    )
-    run_ratio = max(0.25, (canary["start_ratio"] + canary["end_ratio"]) / 2)
-    # host adjustment is INFLATE-ONLY: a slow box widens the bar (the
-    # one claim a loaded box can't support is "the plan got slower"),
-    # a fast box never narrows it (dividing by a sub-1 ratio is how
-    # the r14 false-regression storms happened). The scale is the MIN
-    # of the two endpoint canaries, not their mean (ADVICE r14): a run
-    # that starts hot and ends cool would otherwise over-widen the bar
-    # for its cool-phase queries by the mean ratio — an inflate-only
-    # false NEGATIVE that can mask a real regression. The min widens
-    # the bar only when the box was slow at BOTH ends; phase-specific
-    # heat surfaces as a flag instead and is acquitted one rung up for
-    # the price of an isolated min-of-3.
-    bar_scale = max(1.0, min(canary["start_ratio"], canary["end_ratio"]))
-    fresh_batch = int(os.environ.get("SPARK_GRAFT_BENCH_FRESHCHECKS", "4"))
-
-    def measure_isolated(name: str) -> float | None:
-        spark.sparkContext._jvm.System.gc()
-        samples = []
-        try:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                REGISTRY[name].spark_fn(spark, sf_dir).write.format(
-                    "noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            return round(min(samples), 3)
-        except Exception as exc:
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            return None
-
-    flagged = _adjudicate(
-        timings, history, bar_scale, run_ratio, measure_isolated,
-        lambda names: _freshcheck(repo_dir, names, sf_dir),
-        batch_size=fresh_batch,
-    )
-
-    total = round(sum(timings.values()), 3)
     payload = {
         "metric": "registry_total_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "canary": canary,
-        # effective-parallelism facts (r16): the r15 low-core scaling
-        # run was uninterpretable because nothing in the output proved
-        # what core count the JVM actually ran with
         "parallelism": _parallelism_facts(spark),
-        **({"flagged": flagged} if flagged else {}),
+        "spark": {n: {"jobs": c["jobs"], "task_cpu_s": c["task_cpu_s"]}
+                  for n, c in counters.items()},
         **({"errors": errors} if errors else {}),
     }
-    # the driver records stdout with a tail truncation (r04 kept only 68
-    # of 100 per-query entries) — persist the FULL per-query dict to a
-    # stable file so round-over-round comparison never depends on tail
-    # luck. The file additionally carries every raw sample, the run
-    # order, and per-query driver-GC deltas (r5 lesson: the judge
-    # burned a worktree A/B proving an apparent regression was a GC
-    # pause; with samples + GC attribution that is readable directly).
-    full = {
-        **payload,
-        "runs_per_query": runs,
-        "run_order": run_order,
-        "samples": all_samples,
-        "gc": gc_deltas,
-        "storage_bytes": storage,
-        "loadavg": {"start": load_start, "end": load_end},
-        # the round this measurement belongs to (BENCH_r<N> for the
-        # current round does not exist yet at close time) — read back
-        # by _anchor_timings' definition-stamp filter next round
-        "round": _max_bench_round(repo_dir) + 1,
-        # carry the per-run-minima HISTORY forward (capped at the
-        # newest 8 runs per query): the anchor is its MEDIAN, so one
-        # burst-fast or loaded run is one outvoted sample instead of a
-        # poisoned ratchet — the durable record that survives
-        # bench_full overwrites (stamp filter prunes entries whose
-        # definition changes later, at read time). Flagged-but-not-
-        # acquitted samples are excluded so a real regression can
-        # never re-baseline itself out of the flag (ADVICE r14).
-        "anchors": _merge_history(
-            history, timings, _max_bench_round(repo_dir) + 1, run_ratio,
-            flagged=flagged,
-        ),
-    }
-    # scale-tier sweeps (scripts/scale_sweep.py) run bench at sf0.3/1/3
-    # dirs; letting them overwrite bench_full.json would REPLACE the
-    # sf0.1 record — and since _anchor_timings sf-filters, the ratchet
-    # map carried in that file would become unreadable at the next
-    # sf0.1 run (anchors silently reset). Tier runs set this env var.
     if not os.environ.get("SPARK_GRAFT_BENCH_NO_FULL"):
-        try:
-            with open(os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "bench_full.json"), "w") as f:
-                json.dump(full, f, indent=1)
-        except OSError as exc:
-            print(f"  bench_full.json not written: {exc}", file=sys.stderr)
-        # Persist the one-line summary to a stable file too (r16): the
-        # driver records stdout with a tail truncation, and BENCH_r14's
-        # line was cut mid-JSON — which cost round 15 its per-query
-        # prev/now table. The stdout line stays the contract; this file
-        # is the redundancy that makes a truncated capture recoverable.
-        # Under the same NO_FULL guard as bench_full.json so scale-tier
-        # smoke runs don't replace the last real record.
-        try:
-            with open(os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "bench_last.json"), "w") as f:
-                json.dump(payload, f, indent=1)
-        except OSError as exc:
-            print(f"  bench_last.json not written: {exc}", file=sys.stderr)
+        # the stdout line is recorded with a tail truncation; these two
+        # files keep the whole record (every sample and counter) and a
+        # copy of the line
+        _write("bench_full.json", {
+            **payload,
+            "spark": counters,
+            "runs_per_query": runs,
+            "samples": all_samples,
+        })
+        _write("bench_last.json", payload)
     print(json.dumps(payload))
 
 

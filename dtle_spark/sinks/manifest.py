@@ -40,7 +40,8 @@ Manifest fields:
   replay guard) — stored here so data + watermark commit atomically.
 - ``key_cols`` / ``n_buckets``: bucketing spec, kept so DDL rewrites
   can re-bucket without being told the key again.
-- ``schema_version``: bumped by DDL application (observability only).
+- ``schema_version``: carried through load/save so older manifests
+  round-trip; nothing sets it.
 - ``version``: commit counter; names the retained history entry.
 """
 

@@ -31,6 +31,7 @@ the A6 cross-table atomicity of streaming/pipeline.apply_batch.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -115,6 +116,23 @@ class ManifestedTarget:
         if DELETED_COL in df.columns:
             df = df.filter(~F.col(DELETED_COL)).drop(SEQ_COL, DELETED_COL)
         return df
+
+    def stored_rows(self, schema_name: str, table_name: str) -> int:
+        """Rows in the live manifest's data files, summed from their
+        parquet footers without a Spark job. Tombstones are rows here, so
+        this equals ``read(...).count()`` only for tables without
+        ``__deleted`` (the append-only segment tables)."""
+        import pyarrow.parquet as pq
+
+        p = self.path(schema_name, table_name)
+        m = TableManifest.load(p)
+        if m is None:
+            return 0
+        return sum(
+            pq.read_metadata(f).num_rows
+            for d in m.dirs(p)
+            for f in glob.glob(os.path.join(d, "*.parquet"))
+        )
 
     def versions(self, schema_name: str, table_name: str) -> list[int]:
         """Retained commit versions, ascending (current last)."""
@@ -379,13 +397,6 @@ class ManifestedTarget:
         m = self._manifest(schema_name, table_name)
         return dict(m.seq_watermark) if m is not None else {}
 
-    def bump_schema_version(self, schema_name: str, table_name: str) -> None:
-        p = self.path(schema_name, table_name)
-        m = TableManifest.load(p)
-        if m is not None:
-            m.schema_version += 1
-            m.save(p)
-
     def compact(self, spark: SparkSession, schema_name: str, table_name: str,
                 horizon_seq: int) -> int:
         """Tombstone GC: drop tombstones whose __seq is older than the
@@ -487,7 +498,6 @@ class BucketedTableTarget(ManifestedTarget):
         m = self._manifest(schema_name, table_name)
         if m is not None and m.key_cols:
             self.seed(df, schema_name, table_name, m.key_cols)
-            self.bump_schema_version(schema_name, table_name)
         else:
             super().overwrite(df, schema_name, table_name)
 

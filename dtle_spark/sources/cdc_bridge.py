@@ -4,16 +4,16 @@ wire-form change stream the engine consumes.
 Binlog parsing is outside Spark (BASELINE.json notes this explicitly);
 the reference runs a go-mysql BinlogSyncer in-process. The Spark-native
 topology is a small bridge process that publishes wire-form records
-(streaming/wire.py schema) to a staging directory or Kafka topic, and
-the engine's ``readStream`` picks them up. Three bridges:
+(streaming/wire.py schema) to a staging directory, and the engine's
+``readStream`` picks them up. The bridges:
 
-- FileBridge (implemented): append wire-form parquet files to a dir —
-  the relay-log analogue (S7); used by every streaming test.
-- KafkaBridge (config-only here): ``readStream.format("kafka")`` over a
-  Debezium-ish topic; needs the spark-sql-kafka jars on the cluster.
+- FileBridge: append wire-form parquet files to a dir — the relay-log
+  analogue (S7); used by every streaming test.
 - MySQLBinlogBridge (import-gated): the python-mysql-replication
   BinlogStreamReader loop -> wire rows; the lib isn't in this
   environment, so construction raises with instructions.
+- OracleLogMinerBridge (S8): v$logmnr_contents rows polled by SCN
+  window -> wire rows.
 """
 
 from __future__ import annotations
@@ -46,23 +46,6 @@ class FileBridge:
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(os.path.join(self.source_dir, "*"))
         )
-
-
-def kafka_stream(spark: SparkSession, bootstrap: str, topic: str):
-    """Kafka-topic bridge: value column carries the wire JSON. Requires
-    spark-sql-kafka jars (cluster deployment; not in this image)."""
-    from pyspark.sql import functions as F
-
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .load()
-    )
-    parsed = raw.select(
-        F.from_json(F.col("value").cast("string"), WIRE_SCHEMA).alias("c")
-    ).select("c.*")
-    return parsed
 
 
 def binlog_event_object_to_dict(ev) -> dict | None:

@@ -9,17 +9,17 @@ executed :159-305; OFFSET fallback for no-UK tables :95-104).
 Spark-first restatement: a snapshot of a parquet/lake table is just a
 batch read — Catalyst already partitions the scan, so chunking for
 parallelism is unnecessary. Keyset chunking remains useful for (a) a
-JDBC source where server-side cursoring is needed, and (b) resumable /
-bounded snapshots. Both shapes are provided; the chunk predicate is a
-pure Column expression so it pushes down to the scan
-(``PushedFilters`` in the plan — verified in tests).
+source where server-side cursoring is needed, and (b) resumable /
+bounded snapshots. The chunk predicate is a pure Column expression so
+it pushes down to the scan (``PushedFilters`` in the plan — verified in
+tests).
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterator, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -97,41 +97,3 @@ def snapshot_offset(df: DataFrame, chunk_size: int, index: int, where: str | Non
         .filter((F.col("__rn") > index * chunk_size) & (F.col("__rn") <= (index + 1) * chunk_size))
         .drop("__rn")
     )
-
-
-def jdbc_snapshot_reader(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 32,
-    where: str | None = None,
-    fetch_size: int = 2000,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """S1 against a live MySQL/JDBC source: the parallel-snapshot
-    configuration the reference's chunked dump maps onto when Spark owns
-    the connection. ``partitionColumn`` parallelizes a numeric single
-    column; composite keys use the driver-side ``snapshot_chunks`` loop
-    with ``keyset_predicate`` pushed into the ``dbtable`` subquery.
-    fetch_size mirrors the reference's ChunkSize=2000 default
-    (taskconfig.go:13). Untestable here (no database) — the documented
-    seam a MySQL deployment fills in."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", f"(SELECT * FROM {table}" + (f" WHERE {where}" if where else "") + ") s")
-        .option("fetchsize", str(fetch_size))
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()

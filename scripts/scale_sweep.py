@@ -49,8 +49,8 @@ def run_tier(sf_dir: str, queries: list[str]) -> dict:
         os.environ,
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_ONLY=",".join(queries),
-        # tier runs must not overwrite the sf0.1 bench_full.json (the
-        # anchor-ratchet carrier)
+        # tier runs must not overwrite the sf0.1 bench_full.json /
+        # bench_last.json record
         SPARK_GRAFT_BENCH_NO_FULL="1",
     )
     out = subprocess.run(
@@ -99,8 +99,9 @@ def main() -> None:
         print(f"== tier {scale:g}x ({sf_dir}) ==", file=sys.stderr)
         rec = run_tier(sf_dir, queries)
         results[scale] = rec
-        print(f"   total {rec['value']}s  canary "
-              f"{rec['canary']['start_ratio']}/{rec['canary']['end_ratio']}",
+        counters = rec["spark"].values()
+        print(f"   total {rec['value']}s  {sum(c['jobs'] for c in counters)} jobs  "
+              f"{sum(c['task_cpu_s'] for c in counters):.1f}s task CPU",
               file=sys.stderr)
 
     out_path = os.path.join(REPO, "SCALE_SWEEP.json")
@@ -130,7 +131,7 @@ def main() -> None:
         table[q] = row
     payload.setdefault("tiers", {}).update({
         f"{s:g}": {"sf_dir": ALL_TIERS[s], "total": results[s]["value"],
-                   "canary": results[s]["canary"]}
+                   "spark": results[s]["spark"]}
         for s in args.tiers
     })
     with open(out_path, "w") as f:

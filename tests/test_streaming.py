@@ -1138,6 +1138,31 @@ def test_subscription_three_table_batch_job_count(spark, job_dirs, ddl):
         assert "c" not in after[15] and after[16]["c"] == 160
 
 
+def test_subscription_stats_counts_frames_without_a_spark_job(spark, job_dirs):
+    """stats()["frames"] is read from the frames log's parquet footers:
+    after two appended batches it equals frames().count(), and stats()
+    submits no Spark job."""
+    from dtle_spark.streaming.subscription import SubscriptionJob
+
+    tables = ["a", "b", "c"]
+    job, cat = _keyed_job("substats", tables)
+    sj = SubscriptionJob(spark, job, job_dirs["source"], job_dirs["target"],
+                         job_dirs["checkpoint"], cat)
+    assert sj.stats()["frames"] == 0
+    for b in range(2):
+        gnos = range(10 * b + 1, 10 * b + 11)
+        sj.apply_batch(_wire(spark, _one_row_per_table(S1, gnos, tables, seq0=100 * b)), b)
+    sc = spark.sparkContext
+    sc.setJobGroup("sub-stats", "count stats() jobs")
+    try:
+        stats = sj.stats()
+    finally:
+        sc.setJobGroup(None, None)
+    _wait_jobs_settled(sc)
+    assert len(sc.statusTracker().getJobIdsForGroup("sub-stats")) == 0
+    assert stats["frames"] == sj.frames().count() == 60
+
+
 def test_batch_with_rows_for_one_table_touches_only_it(spark, job_dirs):
     """Tables with no complete rows in a batch are not staged: on the
     whole-image target, only the table with rows gets a new manifest
