@@ -13,10 +13,11 @@ MIN of build + execution: the first execution pays JIT and codegen, and a
 GC pause lands on whichever query is running. Set it to 1 for
 single-sample behaviour.
 
-Wall time moves with host load; Spark's own counters do not. For the
-fastest run the harness reads, from Spark's status store
-(``perfbench/tracing``), the jobs it submitted, their stages, the
-executors' task CPU and the shuffle and spill bytes. A reader comparing
+Wall time moves with host load; Spark's own counters do not. Each
+timed pass runs under its own job group; for the fastest pass the
+harness reads, from Spark's status tracker and store
+(``perfbench/tracing``), the group's jobs, their stages, the executors'
+task CPU and the shuffle and spill bytes. A reader comparing
 two runs checks whether a slower query also ran more jobs or more task
 CPU; if neither moved, the host did.
 
@@ -76,15 +77,30 @@ def _storage_bytes(sc) -> int:
         return -1
 
 
+def _timed_pass(spark, sf_dir: str, name: str, group: str) -> dict:
+    """One ``run_pass`` of ``name`` with every job it submits in
+    ``group`` (registry code starts no driver threads)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    try:
+        return {**registry_slice.run_pass(spark, sf_dir, [name])[0], "group": group}
+    finally:
+        sc.setJobGroup(None, None)
+
+
 def _spark_counters(sc, rec: dict) -> dict:
-    """One ``run_pass`` record's build and execution seconds, and Spark's
-    counters for it: the jobs submitted between its build start and its
-    execution end, their distinct stage ids (skipped stages included)
-    and the stages' task CPU, shuffle read + write bytes and memory +
-    disk spill."""
+    """One ``_timed_pass`` record's build and execution seconds, and
+    Spark's counters for it: the jobs of its job group, their distinct
+    stage ids (skipped stages included) and the stages' task CPU,
+    shuffle read + write bytes and memory + disk spill."""
     tracing.wait_listener_drained(sc)
-    jobs = tracing.jobs_between(tracing.spark_jobs(sc), rec["build_ms"][0], rec["exec_ms"][1])
-    stages = {s for j in jobs for s in j["stages"]}
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(rec["group"])
+    stages = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stages.update(info.stageIds)
     m = tracing.stage_metrics(sc, stages)
     return {
         "build_s": round(rec["build_s"], 3),
@@ -139,8 +155,8 @@ def main() -> None:
             since_gc = 0
             sc._jvm.System.gc()
         recs = []
-        for _ in range(runs):
-            rec = registry_slice.run_pass(spark, sf_dir, [name])[0]
+        for i in range(runs):
+            rec = _timed_pass(spark, sf_dir, name, f"bench:{name}:{i}")
             if not rec["ok"]:  # one broken query must not zero the bench
                 errors[name] = rec["error"]
                 print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)

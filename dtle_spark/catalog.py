@@ -46,7 +46,8 @@ class TableMeta:
     unique_key: list[str] = field(default_factory=list)
 
 
-_IDENT = r"`?(?P<{}>[A-Za-z_][A-Za-z0-9_]*)`?"
+# a bare identifier, or a backticked one holding any character but `
+_IDENT = r"`?(?P<{}>(?<=`)[^`]+(?=`)|[A-Za-z_][A-Za-z0-9_]*)`?"
 
 
 def _qual(name: str) -> str:
@@ -71,8 +72,9 @@ _PATTERNS: list[tuple[str, re.Pattern]] = [
 # (the reference parses these with the TiDB parser and handles each
 # AlterTableSpec — binlog_reader.go:1099-1107; MODIFY/CHANGE golden
 # resolution cases in binlog_reader_test.go)
-_DEFAULT = r"(?:\s+default\s+(?P<default>'(?:[^']|'')*'|[^\s,]+))?"
-_EXTRAS = r"(?:\s+(?:not\s+null|null|auto_increment|unsigned|comment\s+'(?:[^']|'')*'|first|after\s+`?[A-Za-z_][A-Za-z0-9_]*`?))*"
+_STR = r"'(?:[^'\\]|\\.|'')*'"  # backslash escapes and doubled quotes
+_DEFAULT = rf"(?:\s+default\s+(?P<default>{_STR}|[^\s,]+))?"
+_EXTRAS = rf"(?:\s+(?:not\s+null|null|auto_increment|unsigned|comment\s+{_STR}|first|after\s+`?[A-Za-z_][A-Za-z0-9_]*`?))*"
 _ALTER_CLAUSES: list[tuple[str, re.Pattern]] = [
     ("add_column", re.compile(
         rf"^add\s+(?:column\s+)?{_IDENT.format('column')}\s+{_TYPE}"
@@ -109,26 +111,45 @@ _COLDEF = re.compile(
 )
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas outside parens/quotes (multi-clause ALTER)."""
-    parts, cur, depth, quote = [], [], 0, None
-    for ch in text:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
+def split_top_level(s: str) -> list[str]:
+    """Split MySQL text on commas at paren depth 0, outside quoted spans
+    ('...', "..." with backslash escapes and doubled quotes; `...`
+    identifiers), so COMMENT 'a,b' or `a,b` never split a clause.
+    Shared by the multi-clause ALTER/RENAME parser and the CREATE TABLE
+    rewrite (sinks/mysql_dml)."""
+    out, depth, cur, i, n = [], 0, [], 0, len(s)
+    while i < n:
+        ch = s[i]
+        if ch in "'\"`":
+            q = ch
+            j = i + 1
+            while j < n:
+                if s[j] == "\\" and q != "`":
+                    j += 2
+                    continue
+                if s[j] == q:
+                    if j + 1 < n and s[j + 1] == q:
+                        j += 2
+                        continue
+                    j += 1
+                    break
+                j += 1
+            cur.append(s[i:j])
+            i = j
+            continue
+        if ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
+        if ch == "," and depth == 0:
+            out.append("".join(cur).strip())
             cur = []
-            continue
-        cur.append(ch)
-    parts.append("".join(cur).strip())
-    return [p for p in parts if p]
+        else:
+            cur.append(ch)
+        i += 1
+    if cur:
+        out.append("".join(cur).strip())
+    return [p for p in out if p]
 
 
 def _fill_type(action: DdlAction, g: dict) -> None:
@@ -160,7 +181,7 @@ def parse_ddl_actions(query: str, default_schema: str | None = None) -> list[Ddl
     m = _RENAME_TABLE_STMT.match(query)
     if m and not _ALTER_HEAD.match(query):
         actions = []
-        for pair in _split_top_level(m.group("list")):
+        for pair in split_top_level(m.group("list")):
             pm = _RENAME_PAIR.match(pair)
             if not pm:
                 raise ValueError(f"unparseable RENAME TABLE pair: {pair!r}")
@@ -177,7 +198,7 @@ def parse_ddl_actions(query: str, default_schema: str | None = None) -> list[Ddl
         schema = m.group("table_schema") or default_schema
         table = m.group("table")
         actions = []
-        for clause in _split_top_level(m.group("rest")):
+        for clause in split_top_level(m.group("rest")):
             for kind, cpat in _ALTER_CLAUSES:
                 cm = cpat.match(clause)
                 if not cm:

@@ -19,6 +19,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    running = SparkSession._instantiatedSession  # what getOrCreate reuses
+    if running is not None and running._sc._jsc is not None:
+        # getOrCreate would apply the builder's configs (shuffle
+        # partitions included) to the running session
+        return running
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(8, int(cpus))

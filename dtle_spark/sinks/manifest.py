@@ -11,6 +11,11 @@ at any point leaves the previous manifest — and therefore the previous
 table state — fully readable; orphaned data dirs are garbage, not
 corruption, and are collected by the next successful commit.
 
+Every table write commits through :func:`commit`: writers only stage
+data dirs outside the table dir and name their entries; the move-in,
+the manifest update, the swap and the GC happen there, under the
+table's writer lease (sinks/lease.py).
+
 This is the jar-free analogue of a Delta/Iceberg log entry, matching
 the reference applier's transactional guarantee
 (driver/mysql/applier_incr.go:565-570: binlog position + data commit
@@ -52,6 +57,8 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
+
+from dtle_spark.sinks.lease import LEASE_FILE, writer_lease
 
 MANIFEST_NAME = "_manifest.json"
 HISTORY_DIR = "_history"
@@ -111,20 +118,27 @@ class TableManifest:
         cur = TableManifest.load(table_dir)
         if cur is not None:
             out.add(cur.version)
-        hist = os.path.join(table_dir, HISTORY_DIR)
-        if os.path.isdir(hist):
-            for name in os.listdir(hist):
-                if name.startswith("_v") and name.endswith(".json"):
-                    try:
-                        v = int(name[2:-5])
-                    except ValueError:
-                        continue
-                    # ignore orphans newer than the live manifest (a
-                    # crashed pre-r5 commit's history file never became
-                    # a committed state)
-                    if cur is None or v <= cur.version:
-                        out.add(v)
+        for v in _history_files(table_dir):
+            # ignore orphans newer than the live manifest (a crashed
+            # pre-r5 commit's history file never became a committed state)
+            if cur is None or v <= cur.version:
+                out.add(v)
         return sorted(out)
+
+    @property
+    def bucketed(self) -> bool:
+        """Key-bucketed layout: every entry is a bucket number (whole-
+        table images are ``"_table"``, appended segments their dir)."""
+        return bool(self.entries) and all(k.isdigit() for k in self.entries)
+
+    def repointed(self, new_dirs: dict[str, str]) -> dict[str, str]:
+        """The entries with each old dir in ``new_dirs`` replaced by its
+        new dir. A segment entry is keyed by its own dir, so it is
+        re-keyed by the new one; bucket and ``"_table"`` keys stay."""
+        return {
+            (new_dirs.get(d, d) if k == d else k): new_dirs.get(d, d)
+            for k, d in self.entries.items()
+        }
 
     def _payload(self) -> dict:
         return {
@@ -183,17 +197,7 @@ class TableManifest:
         # prune history beyond the retention window (current + retain-1
         # predecessors stay resolvable)
         keep = set(TableManifest.versions(table_dir)[-max(retain, 1):])
-        for name in os.listdir(hist):
-            if name.startswith("_v") and name.endswith(".json"):
-                try:
-                    v = int(name[2:-5])
-                except ValueError:
-                    continue
-                if v not in keep:
-                    try:
-                        os.remove(os.path.join(hist, name))
-                    except OSError:
-                        pass
+        _drop_history(table_dir, lambda v: v not in keep)
 
     def dirs(self, table_dir: str) -> list[str]:
         return [os.path.join(table_dir, d) for d in self.entries.values()]
@@ -203,14 +207,81 @@ def unique_entry_name(prefix: str) -> str:
     return f"{prefix}-{uuid.uuid4().hex[:8]}"
 
 
+def _history_files(table_dir: str) -> dict[int, str]:
+    """Retained history copies on disk: version -> path."""
+    hist = os.path.join(table_dir, HISTORY_DIR)
+    out = {}
+    if os.path.isdir(hist):
+        for name in os.listdir(hist):
+            if name.startswith("_v") and name.endswith(".json"):
+                try:
+                    out[int(name[2:-5])] = os.path.join(hist, name)
+                except ValueError:
+                    continue
+    return out
+
+
+def _drop_history(table_dir: str, drop) -> None:
+    for v, path in _history_files(table_dir).items():
+        if drop(v):
+            try:
+                os.remove(path)
+            except OSError:
+                pass
+
+
+def commit(
+    table_dir: str,
+    owner: str,
+    entries: dict[str, str],
+    staged: dict[str, str],
+    *,
+    replace: bool = False,
+    seq_watermark: dict[str, int] | None = None,
+    key_cols: list[str] | None = None,
+    n_buckets: int | None = None,
+) -> None:
+    """The one commit sequence of a table write, under the table's
+    writer lease: move each ``staged`` dir (new entry name -> staged
+    path, written outside the table dir) in under its entry name —
+    invisible, readers still resolve the old manifest — then load (or
+    create) the manifest, set ``entries`` (logical -> entry name) over
+    the committed ones or, with ``replace``, in place of them, set the
+    given seq-watermark keys (None keeps them all), set the
+    bucketing spec when ``key_cols`` is given, save — the commit point
+    — and collect what no retained version references. A crash before
+    the save leaves the previous state; the moved-in dirs are garbage
+    for the next commit's GC."""
+    os.makedirs(table_dir, exist_ok=True)
+    with writer_lease(table_dir, owner):
+        for entry, path in staged.items():
+            os.rename(path, os.path.join(table_dir, entry))
+        m = TableManifest.load(table_dir) or TableManifest()
+        m.entries = dict(entries) if replace else {**m.entries, **entries}
+        if seq_watermark is not None:
+            m.seq_watermark.update(seq_watermark)
+        if key_cols is not None:
+            m.key_cols, m.n_buckets = list(key_cols), n_buckets
+        m.save(table_dir)  # <- the commit point
+        gc_unreferenced(table_dir, m)
+
+
+def sever_history(table_dir: str) -> None:
+    """Drop every retained version older than the live one, then
+    collect the dirs only they referenced: time travel stops at the
+    live version (a takedown must not survive in a snapshot)."""
+    m = TableManifest.load(table_dir)
+    if m is not None:
+        _drop_history(table_dir, lambda v: v < m.version)
+        gc_unreferenced(table_dir, m)
+
+
 def gc_unreferenced(table_dir: str, manifest: TableManifest) -> None:
     """Remove everything in the table dir that neither the live
     manifest nor any RETAINED history version references: replaced data
     dirs past retention, move-in orphans from a crashed commit, stray
     legacy top-level part files, stale manifest temps. Safe to crash
     mid-GC — unreferenced garbage stays garbage."""
-    from dtle_spark.sinks.lease import LEASE_FILE
-
     live = set(manifest.entries.values())
     for v in TableManifest.versions(table_dir):
         past = TableManifest.load_version(table_dir, v)

@@ -32,6 +32,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from dtle_spark.catalog import split_top_level
+
 
 @dataclass
 class Column:
@@ -358,44 +360,6 @@ def _upper_outside_quotes(s: str) -> str:
     return "".join(out)
 
 
-def _split_top_level_commas(s: str) -> list[str]:
-    """Split on commas at paren depth 0, ignoring commas inside quoted
-    spans (COMMENT 'a,b' must not split a column def)."""
-    out, depth, cur, i, n = [], 0, [], 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            q = ch
-            j = i + 1
-            while j < n:
-                if s[j] == "\\" and q != "`":
-                    j += 2
-                    continue
-                if s[j] == q:
-                    if j + 1 < n and s[j + 1] == q:
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            cur.append(s[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        out.append("".join(cur).strip())
-    return [p for p in out if p]
-
-
 def rename_create_table(
     create_sql: str,
     new_schema: str,
@@ -416,7 +380,7 @@ def rename_create_table(
     if not m:
         raise ValueError(f"unparseable CREATE TABLE: {create_sql[:80]!r}")
     body, tail = _split_body_and_tail(stripped, m.end() - 1)
-    defs = _split_top_level_commas(body)
+    defs = split_top_level(body)
     col_defs: dict[str, str] = {}
     table_level: list[str] = []
     order: list[str] = []

@@ -5,8 +5,8 @@ Two targets behind one interface (``read``/``read_internal``/``stage``/
 
 - ``ParquetTableTarget`` — whole-table image per commit. Simple, exact;
   rewrite cost O(table) per batch, the test-tier stand-in.
-- ``BucketedTableTarget`` — hash- (or range-) partitions the table into
-  N key buckets and merges only the buckets a batch touches:
+- ``BucketedTableTarget`` — hash-partitions the table into N key
+  buckets and merges only the buckets a batch touches:
 
     1. compute the batch's net changes (already keyed),
     2. derive the AFFECTED bucket set (distinct hash of change keys —
@@ -20,13 +20,18 @@ Two targets behind one interface (``read``/``read_internal``/``stage``/
   hashing is fine). On Delta/Iceberg the same role is played by
   partition/file pruning on the merge key + deletion vectors.
 
-Both commit through :mod:`dtle_spark.sinks.manifest`: data dirs are
-immutable, a commit is ONE atomic manifest rename, and a crash at any
-point leaves the previous table state readable (no rename-swap window).
-``stage_merge`` (a batch's changes) and ``stage_image`` (a whole new
-image: a DDL batch's table) return the commit as a closure so the
-streaming batch loop can swap EVERY table's manifest in one tight loop —
-the A6 cross-table atomicity of streaming/pipeline.apply_batch.
+This module only builds frames and stages data dirs next to the table
+dir; every write commits through :func:`dtle_spark.sinks.manifest.commit`
+(data dirs are immutable, a commit is ONE atomic manifest rename under
+the table's writer lease, and a crash at any point leaves the previous
+table state readable). ``stage_merge`` (a batch's changes) and
+``stage_image`` (a whole new image: a DDL batch's table) return the
+commit as a closure so the streaming batch loop can swap EVERY table's
+manifest in one tight loop — the A6 cross-table atomicity of
+streaming/pipeline.apply_batch. The chores that rewrite entries in place
+(``purge_keys``, tombstone ``compact``) hold the lease from their
+manifest read to their swap and rewrite only the entries that hold
+matching rows.
 """
 
 from __future__ import annotations
@@ -46,32 +51,65 @@ from dtle_spark.operators.apply import (
     merge_into_versioned,
     with_version_columns,
 )
+from dtle_spark.sinks import manifest
 from dtle_spark.sinks.lease import writer_lease
-from dtle_spark.sinks.manifest import (
-    HISTORY_DIR,
-    TableManifest,
-    gc_unreferenced,
-    unique_entry_name,
-)
+from dtle_spark.sinks.manifest import TableManifest, unique_entry_name
 
 
 def hash_bucket(key_cols: list[str], n_buckets: int):
-    """Uniform hash routing: best when updates spread across the key
-    space evenly (every batch touches many buckets regardless)."""
+    """Uniform hash routing of a key to its bucket number."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-def range_bucket(key_col: str, width: int):
-    """Range routing on a numeric key: CDC activity is usually
-    key-LOCAL (auto-increment PKs -> recent rows cluster), so a
-    contiguous batch maps to a handful of buckets — this is where
-    bucket-selective merging actually pays. The lake analogue is
-    partitioning the table by a key/date prefix."""
+def _bucket_entries(staged: str) -> tuple[dict[str, str], dict[str, str]]:
+    """A staged ``partitionBy("__b")`` write as commit arguments: bucket
+    -> new entry ``b<K>-<hex>``, and entry -> its staged ``__b=K`` dir."""
+    entries, moves = {}, {}
+    for d in sorted(os.listdir(staged)):
+        if d.startswith("__b="):
+            b = d[4:]
+            entry = unique_entry_name(f"b{b}")
+            entries[b] = entry
+            moves[entry] = os.path.join(staged, d)
+    return entries, moves
 
-    def expr(key_cols: list[str], n_buckets: int):
-        return F.floor(F.col(key_col) / width).cast("int")
 
-    return expr
+def _drop_rows(spark: SparkSession, p: str, owner: str, prefix: str, hit, keep) -> int:
+    """Rewrite the entries that hold rows ``hit`` selects as ``keep``
+    of their rows, in one commit; the caller holds the writer lease
+    from before this manifest read to after the swap. ONE scan finds
+    the touched entries and their hit counts via input_file_name();
+    each touched entry is staged next to the table dir, untouched
+    ones keep their dirs. ``hit`` returns None when no row can
+    match. Returns the rows dropped."""
+    m = TableManifest.load(p)
+    if m is None or not m.entries:
+        return 0
+    dirs = sorted(set(m.entries.values()))
+    # mergeSchema: appended segments may carry evolved schemas (ADD
+    # COLUMN mid-stream); a single-file inferred schema could
+    # silently miss matches in segments whose layout differs
+    rows = spark.read.option("mergeSchema", "true").parquet(
+        *(os.path.join(p, d) for d in dirs)
+    )
+    hits = hit(rows.withColumn("__file", F.input_file_name()))
+    if hits is None:
+        return 0
+    per_dir: dict[str, int] = {}  # touched entry dir -> hit count
+    for r in hits.groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect():
+        for d in dirs:
+            if f"/{d}/" in r["__file"]:
+                per_dir[d] = per_dir.get(d, 0) + r["n"]
+                break
+    if per_dir:
+        new_dirs = {d: unique_entry_name(prefix) for d in per_dir}
+        staged = {e: f"{p}.staged-{e}" for e in new_dirs.values()}
+        for d, e in new_dirs.items():
+            keep(spark.read.parquet(os.path.join(p, d))).write.mode(
+                "overwrite"
+            ).parquet(staged[e])
+        manifest.commit(p, owner, m.repointed(new_dirs), staged, replace=True)
+    return sum(per_dir.values())
 
 
 class ManifestedTarget:
@@ -88,23 +126,21 @@ class ManifestedTarget:
     def _manifest(self, schema_name: str, table_name: str) -> TableManifest | None:
         return TableManifest.load(self.path(schema_name, table_name))
 
+    @staticmethod
+    def _read_manifest(spark: SparkSession, p: str, m: TableManifest) -> DataFrame | None:
+        dirs = [d for d in m.dirs(p) if os.path.exists(d)]
+        return spark.read.parquet(*dirs) if dirs else None
+
     def read_internal(self, spark: SparkSession, schema_name: str, table_name: str) -> DataFrame | None:
         """Raw stored form — may carry __seq/__deleted version columns."""
         p = self.path(schema_name, table_name)
         m = TableManifest.load(p)
         if m is not None:
-            dirs = [d for d in m.dirs(p) if os.path.exists(d)]
-            if not dirs:
-                return None
-            return spark.read.parquet(*dirs)
-        # legacy / externally-seeded layouts (pre-manifest)
-        if not os.path.exists(p):
-            return None
-        names = os.listdir(p)
-        legacy_buckets = [n for n in names if n.startswith("bucket=")]
-        if legacy_buckets:
-            return spark.read.parquet(*[os.path.join(p, n) for n in legacy_buckets])
-        if any(f.endswith(".parquet") or f == "_SUCCESS" for f in names):
+            return self._read_manifest(spark, p, m)
+        # an externally-seeded plain parquet dir (no manifest yet)
+        if os.path.isdir(p) and any(
+            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
+        ):
             return spark.read.parquet(p)
         return None
 
@@ -147,12 +183,9 @@ class ManifestedTarget:
         byte-stable until retention prunes it."""
         p = self.path(schema_name, table_name)
         m = TableManifest.load_version(p, version)
-        if m is None:
+        df = None if m is None else self._read_manifest(spark, p, m)
+        if df is None:
             return None
-        dirs = [d for d in m.dirs(p) if os.path.exists(d)]
-        if not dirs:
-            return None
-        df = spark.read.parquet(*dirs)
         if DELETED_COL in df.columns:
             df = df.filter(~F.col(DELETED_COL)).drop(SEQ_COL, DELETED_COL)
         return df
@@ -189,17 +222,11 @@ class ManifestedTarget:
         still resolve the old manifest), then atomically swap the
         manifest. Crash before the swap = old state intact; after = new
         state complete. GC of replaced dirs runs last and is restartable."""
-        p = self.path(schema_name, table_name)
-        os.makedirs(p, exist_ok=True)
-        with writer_lease(p, "commit"):
-            entry = unique_entry_name("t")
-            os.rename(staged, os.path.join(p, entry))
-            m = TableManifest.load(p) or TableManifest()
-            m.entries = {"_table": entry}
-            if seq_watermark is not None:
-                m.seq_watermark = seq_watermark
-            m.save(p)  # <- the commit point
-            gc_unreferenced(p, m)
+        entry = unique_entry_name("t")
+        manifest.commit(
+            self.path(schema_name, table_name), "commit", {"_table": entry},
+            {entry: staged}, replace=True, seq_watermark=seq_watermark,
+        )
 
     def overwrite(self, df: DataFrame, schema_name: str, table_name: str) -> None:
         self.commit(self.stage(df, schema_name, table_name), schema_name, table_name)
@@ -236,26 +263,18 @@ class ManifestedTarget:
         is O(batch) regardless of table size — the lake-append analogue
         for insert-only tables (streaming corpus ingest). Same atomic
         manifest swap; time travel sees one version per appended batch."""
-        p = self.path(schema_name, table_name)
-        m = TableManifest.load(p)
-        if m is not None and m.entries and all(
-            k.lstrip("-").isdigit() for k in m.entries
-        ):
+        m = self._manifest(schema_name, table_name)
+        if m is not None and m.bucketed:
             raise ValueError(
                 f"{schema_name}.{table_name} is key-bucketed; append is for "
                 "insert-only segment tables — use merge() on bucketed targets"
             )
         staged = self.stage(df, schema_name, table_name)
-        os.makedirs(p, exist_ok=True)
-        with writer_lease(p, "append"):
-            entry = unique_entry_name("seg")
-            os.rename(staged, os.path.join(p, entry))
-            m = TableManifest.load(p) or TableManifest()
-            m.entries[entry] = entry  # key = dir: appends never replace
-            if seq_watermark is not None:
-                m.seq_watermark.update(seq_watermark)
-            m.save(p)  # <- the commit point
-            gc_unreferenced(p, m)
+        entry = unique_entry_name("seg")
+        manifest.commit(  # key = dir: appends never replace
+            self.path(schema_name, table_name), "append", {entry: entry},
+            {entry: staged}, seq_watermark=seq_watermark,
+        )
 
     def purge_keys(
         self,
@@ -290,73 +309,16 @@ class ManifestedTarget:
         if not os.path.isdir(p):
             return 0
         with writer_lease(p, "purge_keys"):
-            return self._purge_keys_locked(spark, p, key_col, keys)
-
-    def _purge_keys_locked(
-        self, spark: SparkSession, p: str, key_col: str, keys: DataFrame
-    ) -> int:
-        m = TableManifest.load(p)
-        purged = 0
-        if m is not None and m.entries:
             keys = keys.select(F.col(key_col)).distinct().localCheckpoint()
-            dirs = sorted(set(m.entries.values()))
-            hits = (
-                # mergeSchema: appended segments may carry evolved
-                # schemas (ADD COLUMN mid-stream); a single-file
-                # inferred schema could silently miss key matches in
-                # segments whose layout differs (r13 advice)
-                spark.read.option("mergeSchema", "true")
-                .parquet(*(os.path.join(p, d) for d in dirs))
-                .select(F.col(key_col), F.input_file_name().alias("__file"))
-                .join(F.broadcast(keys), [key_col], "left_semi")
-                .groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
-                .collect()
+            purged = _drop_rows(
+                spark, p, "purge_keys", "purged",
+                lambda rows: rows.join(F.broadcast(keys), [key_col], "left_semi"),
+                lambda rows: rows.join(F.broadcast(keys), [key_col], "left_anti"),
             )
-            per_dir: dict[str, int] = {}  # touched segment -> match count
-            for r in hits:
-                for d in dirs:
-                    if f"/{d}/" in r["__file"]:
-                        per_dir[d] = per_dir.get(d, 0) + r["n"]
-                        break
-            purged = sum(per_dir.values())
-            if purged:
-                new_entries: dict[str, str] = {}
-                staged: list[tuple[str, str]] = []  # (staged, final)
-                for logical, d in sorted(m.entries.items()):
-                    if d not in per_dir:
-                        new_entries[logical] = d  # untouched: share dir
-                        continue
-                    kept = spark.read.parquet(os.path.join(p, d)).join(
-                        F.broadcast(keys), [key_col], "left_anti"
-                    )
-                    entry = unique_entry_name("purged")
-                    sdir = f"{p}.staged-{entry}"
-                    kept.write.mode("overwrite").parquet(sdir)
-                    staged.append((sdir, entry))
-                    # append-style manifests key logical BY dir name;
-                    # bucketed ones key by bucket number / "_table"
-                    new_entries[entry if logical == d else logical] = entry
-                for sdir, entry in staged:
-                    os.rename(sdir, os.path.join(p, entry))
-                m.entries = new_entries
-                m.save(p)  # <- the commit point
-        # sever time travel: drop every retained version older than the
-        # live one, then GC the dirs only they referenced. Runs even on
-        # a 0-hit call so a crash between swap and prune is completable
-        # by re-running the purge.
-        m = TableManifest.load(p)
-        if m is not None:
-            hist = os.path.join(p, HISTORY_DIR)
-            if os.path.isdir(hist):
-                for name in os.listdir(hist):
-                    if name.startswith("_v") and name.endswith(".json") \
-                            and int(name[2:-5]) < m.version:
-                        try:
-                            os.remove(os.path.join(hist, name))
-                        except OSError:
-                            pass
-            gc_unreferenced(p, m)
-        return purged
+            # sever time travel. Runs even on a 0-hit call so a crash
+            # between swap and prune is completable by re-running the purge.
+            manifest.sever_history(p)
+            return purged
 
     def compact_segments(
         self, spark: SparkSession, schema_name: str, table_name: str,
@@ -373,10 +335,8 @@ class ManifestedTarget:
         a schedule, like any lake OPTIMIZE."""
         p = self.path(schema_name, table_name)
         m = TableManifest.load(p)
-        if m is None or len(m.entries) <= max_segments:
-            return 0
-        if all(k.lstrip("-").isdigit() for k in m.entries):
-            return 0  # bucketed layout: compact() (tombstone GC) owns it
+        if m is None or len(m.entries) <= max_segments or m.bucketed:
+            return 0  # a bucketed layout is merge()'s; compact() drops its tombstones
         # lease spans read->stage->commit: an append landing between
         # the fold's read and its swap would be silently erased
         with writer_lease(p, "compact_segments"):
@@ -384,11 +344,7 @@ class ManifestedTarget:
             if cur is None:
                 return 0
             n = len(TableManifest.load(p).entries)
-            wm = self.seq_watermark(schema_name, table_name)
-            self.commit(
-                self.stage(cur, schema_name, table_name),
-                schema_name, table_name, seq_watermark=wm or None,
-            )
+            self.commit(self.stage(cur, schema_name, table_name), schema_name, table_name)
             return n
 
     def seq_watermark(self, schema_name: str, table_name: str) -> dict[str, int]:
@@ -405,19 +361,23 @@ class ManifestedTarget:
         guards against a STALE change arriving later, so once the
         source can no longer re-deliver below horizon_seq the marker
         is dead weight). Live rows and newer tombstones survive.
+
+        Per entry: only entries holding expired tombstones are rewritten
+        (a whole-table image is one entry, a bucketed table one per
+        bucket); untouched ones stay byte-identical, so at 100 TB the GC
+        cost tracks churn, not table size. The writer lease spans the
+        manifest read to the swap, so a merge cannot commit in between.
         Returns the number of tombstones dropped."""
-        cur = self.read_internal(spark, schema_name, table_name)
-        if cur is None or DELETED_COL not in cur.columns:
+        p = self.path(schema_name, table_name)
+        if not os.path.isdir(p):
             return 0
         dead = F.col(DELETED_COL) & (F.col(SEQ_COL) < F.lit(horizon_seq))
-        n = cur.filter(dead).count()
-        if n:
-            wm = self.seq_watermark(schema_name, table_name)
-            self.commit(
-                self.stage(cur.filter(~dead), schema_name, table_name),
-                schema_name, table_name, seq_watermark=wm or None,
+        with writer_lease(p, "compact"):
+            return _drop_rows(
+                spark, p, "compact", "compacted",
+                lambda rows: rows.filter(dead) if DELETED_COL in rows.columns else None,
+                lambda rows: rows.filter(~dead),
             )
-        return n
 
 
 class ParquetTableTarget(ManifestedTarget):
@@ -426,16 +386,9 @@ class ParquetTableTarget(ManifestedTarget):
 
 
 class BucketedTableTarget(ManifestedTarget):
-    def __init__(self, root: str, n_buckets: int = 32, bucket_fn=None):
+    def __init__(self, root: str, n_buckets: int = 32):
         super().__init__(root)
         self.n_buckets = n_buckets
-        self._bucket_fn = bucket_fn or hash_bucket
-
-    def _bucket_dirname(self, schema_name: str, table_name: str, b: int) -> str | None:
-        m = self._manifest(schema_name, table_name)
-        if m is None:
-            return None
-        return m.entries.get(str(b))
 
     def seed(self, df: DataFrame, schema_name: str, table_name: str, key_cols: list[str]) -> None:
         """Initial (snapshot) load: write every bucket partition
@@ -459,10 +412,9 @@ class BucketedTableTarget(ManifestedTarget):
             return super().stage_image(df, schema_name, table_name, seq_watermark=seq_watermark)
         if DELETED_COL not in df.columns:
             df = with_version_columns(df)
-        bucketed = df.withColumn("__b", self._bucket_fn(key_cols, self.n_buckets))
+        bucketed = df.withColumn("__b", hash_bucket(key_cols, self.n_buckets))
         p = self.path(schema_name, table_name)
-        token = uuid.uuid4().hex[:8]
-        staged = p + f".staged-{token}"
+        staged = p + f".staged-{uuid.uuid4().hex[:8]}"
         (
             bucketed.repartition(self.n_buckets, "__b")
             .write.partitionBy("__b")
@@ -471,20 +423,10 @@ class BucketedTableTarget(ManifestedTarget):
         )
 
         def commit_fn() -> None:
-            os.makedirs(p, exist_ok=True)
-            with writer_lease(p, "seed"):
-                m = TableManifest(key_cols=list(key_cols), n_buckets=self.n_buckets)
-                if seq_watermark is not None:
-                    m.seq_watermark = seq_watermark
-                for d in sorted(os.listdir(staged)):
-                    if not d.startswith("__b="):
-                        continue
-                    b = d[4:]
-                    entry = f"b{b}-{token}"
-                    os.rename(os.path.join(staged, d), os.path.join(p, entry))
-                    m.entries[b] = entry
-                m.save(p)  # <- commit point; replaces any previous table state
-                gc_unreferenced(p, m)
+            manifest.commit(  # replaces any previous table state
+                p, "seed", *_bucket_entries(staged), replace=True,
+                seq_watermark=seq_watermark, key_cols=key_cols, n_buckets=self.n_buckets,
+            )
             shutil.rmtree(staged, ignore_errors=True)
 
         return commit_fn
@@ -500,43 +442,6 @@ class BucketedTableTarget(ManifestedTarget):
             self.seed(df, schema_name, table_name, m.key_cols)
         else:
             super().overwrite(df, schema_name, table_name)
-
-    def compact(self, spark: SparkSession, schema_name: str, table_name: str,
-                horizon_seq: int) -> int:
-        """Tombstone GC, bucket-selective: only buckets that actually
-        hold expired tombstones (``__deleted`` with ``__seq`` below the
-        re-delivery horizon) are rewritten — untouched buckets stay
-        byte-identical, so at 100 TB the GC cost tracks churn, not
-        table size. One manifest swap commits every rewritten bucket.
-        Returns the number of tombstones dropped."""
-        p = self.path(schema_name, table_name)
-        m = TableManifest.load(p)
-        if m is None:
-            return super().compact(spark, schema_name, table_name, horizon_seq)
-        dead = F.col(DELETED_COL) & (F.col(SEQ_COL) < F.lit(horizon_seq))
-        dropped = 0
-        token = uuid.uuid4().hex[:8]
-        replaced: dict[str, str] = {}
-        for b, entry in sorted(m.entries.items()):
-            bdir = os.path.join(p, entry)
-            if not os.path.exists(bdir):
-                continue
-            cur = spark.read.parquet(bdir)
-            if DELETED_COL not in cur.columns:
-                continue
-            n = cur.filter(dead).count()
-            if not n:
-                continue  # bucket untouched — not even rewritten
-            dropped += n
-            new_entry = f"b{b}-c{token}"
-            cur.filter(~dead).write.mode("overwrite").parquet(os.path.join(p, new_entry))
-            replaced[b] = new_entry
-        if replaced:
-            m = TableManifest.load(p)  # re-read: manifest may have moved on
-            m.entries.update(replaced)
-            m.save(p)  # <- commit point for ALL rewritten buckets at once
-            gc_unreferenced(p, m)
-        return dropped
 
     def stage_merge(
         self,
@@ -565,36 +470,25 @@ class BucketedTableTarget(ManifestedTarget):
         per-key window of ``latest_image_per_key`` keeps exactly one of
         them (operators/apply.apply_changes)."""
         net = latest_image_per_key(changes, key_cols)
-        net = net.withColumn("__b", self._bucket_fn(key_cols, self.n_buckets)).persist()
+        net = net.withColumn("__b", hash_bucket(key_cols, self.n_buckets)).persist()
         p = self.path(schema_name, table_name)
         m = TableManifest.load(p)
-        bucketed_layout = (
-            m is not None and bool(m.entries) and all(k.lstrip("-").isdigit() for k in m.entries)
-        ) or (
-            m is None
-            and os.path.exists(p)
-            and any(n.startswith("bucket=") for n in os.listdir(p))
-        )
         try:
             touched = sorted(r["__b"] for r in net.select("__b").distinct().collect())
             if not touched:
                 return [], lambda: None
-            if bucketed_layout:
+            rewrite_all = m is None or not m.bucketed
+            if not rewrite_all:
                 # read ONLY affected buckets, resolved through the manifest
                 dirs = []
                 for b in touched:
-                    if m is not None:
-                        e = m.entries.get(str(b))
-                        d = os.path.join(p, e) if e else None
-                    else:  # legacy bucket=K layout (pre-manifest seed)
-                        d = os.path.join(p, f"bucket={b}")
-                    if d and os.path.exists(d):
-                        dirs.append(d)
+                    e = m.entries.get(str(b))
+                    if e and os.path.exists(os.path.join(p, e)):
+                        dirs.append(os.path.join(p, e))
                 if dirs:
                     current = spark.read.parquet(*dirs)
                 else:
                     current = spark.createDataFrame([], net.schema["row"].dataType)
-                rewrite_all = False
             else:
                 # one-time migration: the table was seeded as a whole-table
                 # image (overwrite/snapshot) or doesn't exist yet — merge
@@ -602,14 +496,12 @@ class BucketedTableTarget(ManifestedTarget):
                 current = self.read_internal(spark, schema_name, table_name)
                 if current is None:
                     current = spark.createDataFrame([], net.schema["row"].dataType)
-                rewrite_all = True
             if DELETED_COL not in current.columns:
                 current = with_version_columns(current)  # legacy unversioned rows
             merged = merge_into_versioned(current, net.drop("__b"), key_cols).withColumn(
-                "__b", self._bucket_fn(key_cols, self.n_buckets)
+                "__b", hash_bucket(key_cols, self.n_buckets)
             )
-            token = uuid.uuid4().hex[:8]
-            staged = p + f".merge-{token}"
+            staged = p + f".merge-{uuid.uuid4().hex[:8]}"
             n_parts = self.n_buckets if rewrite_all else len(touched)
             merged.repartition(n_parts, "__b").write.partitionBy("__b").mode(
                 "overwrite"
@@ -618,34 +510,9 @@ class BucketedTableTarget(ManifestedTarget):
             net.unpersist()
 
         def commit_fn() -> None:
-            os.makedirs(p, exist_ok=True)
-            with writer_lease(p, "merge"):
-                _commit_locked()
-
-        def _commit_locked() -> None:
-            new_entries: dict[str, str] = {}
-            for d in sorted(os.listdir(staged)):
-                if not d.startswith("__b="):
-                    continue
-                b = d[4:]
-                entry = f"b{b}-{token}"
-                os.rename(os.path.join(staged, d), os.path.join(p, entry))
-                new_entries[b] = entry
-            cur = TableManifest.load(p)
-            if cur is None:
-                cur = TableManifest(key_cols=list(key_cols), n_buckets=self.n_buckets)
-                # adopt pre-manifest bucket=K dirs so GC can't orphan them
-                for n in os.listdir(p):
-                    if n.startswith("bucket="):
-                        cur.entries[n.split("=", 1)[1]] = n
-            if rewrite_all:
-                cur.entries = new_entries  # full re-bucket replaces the image
-                cur.key_cols = list(key_cols)
-                cur.n_buckets = self.n_buckets
-            else:
-                cur.entries.update(new_entries)
-            cur.save(p)  # <- the commit point
-            gc_unreferenced(p, cur)
+            # a full re-bucket replaces the image and its bucketing spec
+            spec = {"key_cols": key_cols, "n_buckets": self.n_buckets} if rewrite_all else {}
+            manifest.commit(p, "merge", *_bucket_entries(staged), replace=rewrite_all, **spec)
             shutil.rmtree(staged, ignore_errors=True)
 
         return touched, commit_fn

@@ -40,13 +40,6 @@ class FileBridge:
         out.write.parquet(path)
         return path
 
-    def read_stream(self, spark: SparkSession, max_files_per_trigger: int = 10):
-        return (
-            spark.readStream.schema(WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(os.path.join(self.source_dir, "*"))
-        )
-
 
 def binlog_event_object_to_dict(ev) -> dict | None:
     """Adapt a binlog event OBJECT (python-mysql-replication's public

@@ -50,23 +50,14 @@ def _persistable_kwargs(kw: dict) -> dict:
 def _target_spec(target) -> dict:
     """Serializable descriptor for a TableTarget instance — job specs
     persist the descriptor, recover() rebuilds the instance. Unknown
-    target types (or non-default bucket functions) raise at create so
-    a recovered job can never silently run a different target."""
+    target types raise at create so a recovered job can never silently
+    run a different target."""
     from dtle_spark.sinks.delta_target import DeltaTableTarget
-    from dtle_spark.sinks.table_sink import (
-        BucketedTableTarget,
-        ParquetTableTarget,
-        hash_bucket,
-    )
+    from dtle_spark.sinks.table_sink import BucketedTableTarget, ParquetTableTarget
 
     # exact type identity, not isinstance: a subclass may change
     # behavior the descriptor cannot express
     if type(target) is BucketedTableTarget:
-        if target._bucket_fn is not hash_bucket:
-            raise ValueError(
-                "custom bucket_fn is not spec-serializable; create the "
-                "job without spec_root or use the default hash routing"
-            )
         return {"target_format": "bucketed", "target_n_buckets": target.n_buckets}
     if type(target) is DeltaTableTarget:
         return {"target_format": "delta"}

@@ -9,7 +9,20 @@ import os
 import pytest
 
 import bench
+from dtle_spark.session import get_spark
 from tests.conftest import SF_DIR
+
+
+def test_get_spark_leaves_a_running_session_untouched(spark):
+    """The builder's configs apply only to a session get_spark creates:
+    a second call returns the running session with its configs as set."""
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        assert get_spark("another_caller") is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
 
 
 def test_bench_main_prints_contract_line_with_spark_counters(spark, monkeypatch, capsys):
@@ -20,13 +33,7 @@ def test_bench_main_prints_contract_line_with_spark_counters(spark, monkeypatch,
     monkeypatch.setenv("SPARK_GRAFT_BENCH_NO_FULL", "1")
     records = [os.path.join(bench.REPO, f) for f in ("bench_full.json", "bench_last.json")]
     mtimes = [os.path.getmtime(p) if os.path.exists(p) else None for p in records]
-    # bench's get_spark() reuses the test session and re-sets its
-    # shuffle partitions from SPARK_GRAFT_CPUS
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        bench.main()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    bench.main()
     line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert {"metric", "value", "unit", "queries", "sf", "parallelism", "spark"} <= set(line)
     assert "errors" not in line

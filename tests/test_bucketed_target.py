@@ -3,8 +3,10 @@ final state identical to the whole-table merge path."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from dtle_spark.model import OP_INSERT
 from dtle_spark.plans import cdc_demo
 from dtle_spark.sinks.table_sink import BucketedTableTarget
 from tests.conftest import SF_DIR, assert_matches_oracle
@@ -206,25 +208,53 @@ def test_whole_table_target_compaction(spark, tmp_path):
     assert t.read_internal(spark, "db1", "orders").filter(F.col("__deleted")).count() == 0
 
 
-def test_range_bucketed_key_local_batch(spark, duck, tmp_path):
-    """Range routing: a key-local batch (the realistic CDC shape —
-    auto-increment activity) touches few buckets; full apply still
-    matches the oracle."""
-    from dtle_spark.sinks.table_sink import range_bucket
+def test_compaction_holds_the_lease_against_a_concurrent_merge(spark, tmp_path, monkeypatch):
+    """A merge that commits while a compaction is between its read and
+    its swap is refused ("writer lease held"), and the compaction's swap
+    then publishes the compacted rows. Without the lease the merge's GC
+    deleted the compaction's new bucket dir, and the swap pointed the
+    live manifest at it."""
+    import threading
+
+    from pyspark.sql import DataFrameWriter
 
     base = cdc_demo.orders_base(spark, SF_DIR)
     changes = cdc_demo.orders_changes(spark, SF_DIR)
-    t = BucketedTableTarget(
-        str(tmp_path / "tgt"), n_buckets=64, bucket_fn=range_bucket("o_orderkey", 50)
-    )
+    t = BucketedTableTarget(str(tmp_path / "tgt"), n_buckets=1)
     t.seed(base, "db1", "orders", ["o_orderkey"])
+    t.merge(spark, changes, "db1", "orders", ["o_orderkey"])
+    expected = sorted(map(tuple, t.read(spark, "db1", "orders").collect()))
 
-    local = changes.filter((F.col("gno") >= 100) & (F.col("gno") < 300))
-    touched = t.merge(spark, local, "db1", "orders", ["o_orderkey"])
-    # keys 100-300 span <=5 width-50 buckets; PK-moving updates (%17)
-    # relocate to key+10M and legitimately touch ~4 far buckets too
-    assert len(touched) <= 10
+    paused, resume = threading.Event(), threading.Event()
+    real_parquet = DataFrameWriter.parquet
 
-    rest = changes.filter((F.col("gno") < 100) | (F.col("gno") >= 300))
-    t.merge(spark, rest, "db1", "orders", ["o_orderkey"])
-    assert_matches_oracle(t.read(spark, "db1", "orders"), duck, cdc_demo.ORDERS_CDC_ORACLE)
+    def parquet(self, path, *a, **k):  # the compaction's staged write
+        real_parquet(self, path, *a, **k)
+        if threading.current_thread() is compactor:
+            paused.set()
+            resume.wait(timeout=120)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    errors = []
+
+    def compact():
+        try:
+            t.compact(spark, "db1", "orders", 10**18)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    compactor = threading.Thread(target=compact)
+    compactor.start()
+    try:
+        assert paused.wait(timeout=120)
+        insert = changes.filter(F.col("op") == OP_INSERT).orderBy("seq").limit(1)
+        with pytest.raises(RuntimeError, match="writer lease held"):
+            t.merge(spark, insert.withColumn("seq", F.lit(10**12)), "db1", "orders",
+                    ["o_orderkey"])
+    finally:
+        resume.set()
+        compactor.join(timeout=300)
+    assert not compactor.is_alive() and not errors
+    got = t.read(spark, "db1", "orders")
+    assert got is not None
+    assert sorted(map(tuple, got.collect())) == expected

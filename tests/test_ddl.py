@@ -83,6 +83,13 @@ class TestAlterBreadth:
             "add_column", "drop_column", "modify_column", "rename_column"
         ]
         assert all(x.schema_name == "db1" and x.table_name == "t" for x in acts)
+        # a comma inside an escaped string literal or a backticked name
+        # does not split the clause
+        for q in (
+            r"ALTER TABLE db1.t ADD COLUMN c int COMMENT 'it\'s, y', ADD COLUMN d int",
+            "ALTER TABLE db1.t ADD COLUMN `a,b` int, ADD COLUMN d int",
+        ):
+            assert [x.kind for x in parse_ddl_actions(q)] == ["add_column"] * 2, q
 
     def test_rename_table_statement_multi_pair(self):
         acts = parse_ddl_actions("RENAME TABLE a TO b, db2.c TO d", "dflt")

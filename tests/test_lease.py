@@ -73,15 +73,20 @@ def test_lease_dead_holder_self_breaks(tmp_path):
 
 def test_append_and_chores_refuse_under_foreign_lease(spark, tmp_path):
     """The wired entry points: append, commit (via overwrite),
-    purge_keys and compact_segments on a leased table all fail loud
-    instead of racing the manifest swap — and proceed once the lease
-    is gone."""
-    from dtle_spark.sinks.table_sink import ParquetTableTarget
+    purge_keys, compact_segments and tombstone compact on a leased
+    table all fail loud instead of racing the manifest swap — and
+    proceed once the lease is gone."""
+    from dtle_spark.sinks.table_sink import BucketedTableTarget, ParquetTableTarget
 
     t = ParquetTableTarget(str(tmp_path))
     df = spark.createDataFrame([(1, "a")], "id long, v string")
     t.append(df, "s", "tbl")
     p = t.path("s", "tbl")
+    bt = BucketedTableTarget(str(tmp_path / "bucketed"), n_buckets=2)
+    bt.seed(df, "s", "tbl", ["id"])
+    _foreign_lease(bt.path("s", "tbl"))
+    with pytest.raises(RuntimeError, match="writer lease held"):
+        bt.compact(spark, "s", "tbl", 10**18)
 
     _foreign_lease(p)
     with pytest.raises(RuntimeError, match="writer lease held"):
@@ -95,6 +100,8 @@ def test_append_and_chores_refuse_under_foreign_lease(spark, tmp_path):
         )
     with pytest.raises(RuntimeError, match="writer lease held"):
         t.compact_segments(spark, "s", "tbl", max_segments=0)
+    with pytest.raises(RuntimeError, match="writer lease held"):
+        t.compact(spark, "s", "tbl", 10**18)
     # the refused writers left the table intact
     assert t.read(spark, "s", "tbl").count() == 1
 
