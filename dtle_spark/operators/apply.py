@@ -7,16 +7,17 @@ keyed deletes (builder.go:86-159), update = delete(before)+replace(after)
 (applier_mts.go:30-264), and gtid-based idempotence
 (applier_incr.go:290-313).
 
-Spark-first restatement: a micro-batch of change rows is reduced to the
-**latest surviving image per key** with one window, then merged against
-the target with one join. Parallelism comes from hash-partitioning on
+Spark-first restatement: a micro-batch of change rows is exploded into
+per-key effects and the **latest surviving image per key** is kept by
+one window — over the effects alone (``latest_image_per_key``), or over
+the stored rows unioned with them (``merge_into_versioned``, the
+seq-versioned merge). Parallelism comes from hash-partitioning on
 the key — the same conflict-free property the reference's writeset
 scheduler (A8) computes per transaction, achieved structurally:
 rows of the same key land in the same partition, cross-key order is
 irrelevant, so the whole batch applies in parallel with zero
-coordination. At 100 TB the join is a shuffle on the unique key (or a
-broadcast when the batch is small — Catalyst/AQE picks), which scales
-linearly with executors.
+coordination. At 100 TB the window is one shuffle on the unique key,
+which scales linearly with executors.
 """
 
 from __future__ import annotations
@@ -38,20 +39,17 @@ def dedupe_redelivered(changes: DataFrame) -> DataFrame:
     return changes.dropDuplicates(["sid", "gno", "seq"])
 
 
-def latest_image_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Collapse a change batch to one terminal row per unique key.
+def change_effects(changes: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Explode a change batch into its per-key effects, one read of the
+    stream and no shuffle (A3: update applies as delete(before) +
+    replace(after)):
 
-    Semantics must respect PK-changing updates (A3: update applies as
-    delete(before)+replace(after)): an update row acts on **two** keys
-    when images disagree on the key. So:
-      1. explode each change into (key, action, image, seq) effects:
-         insert -> (after.key, upsert), delete -> (before.key, delete),
-         update -> (before.key, delete) + (after.key, upsert)
-         [one effect when the key is unchanged]
-      2. keep the max-seq effect per key (window, dense in one shuffle).
+      insert -> (after.key, upsert), delete -> (before.key, delete),
+      update -> (before.key, delete) + (after.key, upsert)
+      [one effect when the key is unchanged]
 
     Returns columns: key cols + ``__action`` ('upsert'|'delete') +
-    ``row`` (struct, the after-image for upserts).
+    ``row`` (struct, the after-image for upserts) + ``seq``.
     """
     # ONE read of the change stream (r16, guide §2.4): each change row
     # emits its 0-2 effects as an array of conditionally-present
@@ -104,7 +102,7 @@ def latest_image_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
             "before", "delete", null_row,
         ),
     )
-    effects = (
+    return (
         changes.select(F.explode(els).alias("__e"))
         .filter(F.col("__e").isNotNull())
         .select(
@@ -117,6 +115,14 @@ def latest_image_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
         )
     )
 
+
+def latest_image_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Collapse a change batch to one terminal row per unique key: the
+    max-seq effect of :func:`change_effects` per key (one window, dense
+    in one shuffle; delete wins a seq tie).
+
+    Returns the columns of :func:`change_effects`.
+    """
     # A7's ordering invariant, restated per key: the reference replays
     # transactions in (last_committed, seq) clock order; we only need the
     # per-key winner, which one row_number window provides. Sources must
@@ -125,7 +131,8 @@ def latest_image_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
     # source violates that.
     w = Window.partitionBy(*key_cols).orderBy(F.col("seq").desc(), F.col("__action"))
     return (
-        effects.withColumn("__rn", F.row_number().over(w))
+        change_effects(changes, key_cols)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
         # lazy checkpoint (r15): nearly every consumer reads the net
@@ -170,7 +177,10 @@ DELETED_COL = "__deleted"
 
 
 def merge_into_versioned(
-    versioned_target: DataFrame, net: DataFrame, key_cols: list[str]
+    versioned_target: DataFrame,
+    effects: DataFrame,
+    key_cols: list[str],
+    bucket: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Seq-versioned MERGE: an effect applies only if its seq beats the
     stored row's — last-write-wins BY SEQ, not by arrival order, so
@@ -184,11 +194,23 @@ def merge_into_versioned(
     (ParquetTableTarget.read). Tombstone GC = drop tombstones older
     than the source's max re-delivery horizon (compaction job; the
     reference's gtid_executed cleanup is the same chore).
+
+    ``effects`` has the columns of :func:`change_effects`: the raw
+    effects of a batch, or its :func:`latest_image_per_key` winners —
+    the result is the same. The stored rows and the effects are unioned
+    and ONE ``row_number`` window per key keeps the winner: the highest
+    seq; on a tie the stored row; among effects of equal seq the delete.
     This is the semantics Delta CDF merges express with a sequence
-    column; here it is one full-outer join.
+    column, at one shuffle.
+
+    ``bucket`` = (column, partitions): both frames carry the bucket
+    column; the union is hash-partitioned on it once and the window runs
+    per (bucket, key), so a ``partitionBy(column)`` write of the result
+    needs no further exchange. The result keeps the column.
     """
-    data_cols = [c for c in versioned_target.columns if c not in (SEQ_COL, DELETED_COL)]
-    new_type = net.schema["row"].dataType
+    internal = (SEQ_COL, DELETED_COL) + ((bucket[0],) if bucket else ())
+    data_cols = [c for c in versioned_target.columns if c not in internal]
+    new_type = effects.schema["row"].dataType
     new_names = [f.name for f in new_type.fields]
     if new_names != data_cols:
         # schema drift between the stored image and the incoming
@@ -207,43 +229,38 @@ def merge_into_versioned(
         # that name a silent no-op (its presence guard would see it).
         cur_types = {c: versioned_target.schema[c].dataType for c in data_cols}
         present = set(new_names)
-        cur_struct = F.struct(*[F.col(c) for c in data_cols])
         new_struct = F.struct(*[
             (F.col("row").getField(c).cast(cur_types[c]) if c in present
              else F.lit(None).cast(cur_types[c])).alias(c)
             for c in data_cols
         ])
     else:
-        cur_struct = F.struct(*[F.col(c) for c in data_cols])
         new_struct = F.col("row")
+    extra = [F.col(bucket[0])] if bucket else []
+    # __rank breaks a seq tie: the stored row (0), then a delete (1),
+    # then an upsert (2)
     cur = versioned_target.select(
         *[F.col(k) for k in key_cols],
-        cur_struct.alias("__cur_row"),
-        F.col(SEQ_COL).alias("__cur_seq"),
-        F.col(DELETED_COL).alias("__cur_del"),
+        F.struct(*[F.col(c) for c in data_cols]).alias("__row"),
+        F.col(SEQ_COL),
+        F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(DELETED_COL),
+        F.lit(0).alias("__rank"),
+        *extra,
     )
-    eff = net.select(
+    is_delete = F.col("__action") == "delete"
+    eff = effects.select(
         *[F.col(k) for k in key_cols],
-        F.col("__action"),
-        new_struct.alias("__new_row"),
-        F.col("seq").alias("__new_seq"),
+        new_struct.alias("__row"),
+        F.col("seq").alias(SEQ_COL),
+        is_delete.alias(DELETED_COL),
+        F.when(is_delete, 1).otherwise(2).alias("__rank"),
+        *extra,
     )
-    j = cur.join(eff, on=key_cols, how="full_outer")
-    # effect wins iff present and newer than the stored version
-    effect_wins = F.col("__new_seq").isNotNull() & (
-        F.col("__cur_seq").isNull() | (F.col("__new_seq") > F.col("__cur_seq"))
-    )
-    row = F.when(effect_wins, F.col("__new_row")).otherwise(F.col("__cur_row"))
-    seq = F.when(effect_wins, F.col("__new_seq")).otherwise(F.col("__cur_seq"))
-    deleted = F.when(effect_wins, F.col("__action") == "delete").otherwise(
-        F.coalesce(F.col("__cur_del"), F.lit(False))
-    )
-    out = j.select(
-        *[F.col(k) for k in key_cols],
-        row.alias("__row"),
-        seq.alias(SEQ_COL),
-        deleted.alias(DELETED_COL),
-    )
+    both = cur.unionByName(eff)
+    if bucket:
+        both = both.repartition(bucket[1], bucket[0])
+    w = Window.partitionBy(*extra, *key_cols).orderBy(F.col(SEQ_COL).desc(), F.col("__rank"))
+    out = both.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
     # tombstones keep only the key columns (row image nulled)
     return out.select(
         *[
@@ -254,6 +271,7 @@ def merge_into_versioned(
         ],
         SEQ_COL,
         DELETED_COL,
+        *extra,
     )
 
 

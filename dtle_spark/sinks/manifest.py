@@ -45,6 +45,12 @@ Manifest fields:
   replay guard) — stored here so data + watermark commit atomically.
 - ``key_cols`` / ``n_buckets``: bucketing spec, kept so DDL rewrites
   can re-bucket without being told the key again.
+- ``schema``: the stored image's Spark schema (``StructType.json()``)
+  when every entry is known to carry it, so a read passes it instead of
+  inferring it from the parquet footers (one Spark job). A replacing
+  commit sets it, or clears it when given none; a partial update keeps
+  it only when it wrote the same schema. Absent (older manifests, or
+  entries that may differ in schema): readers infer.
 - ``schema_version``: carried through load/save so older manifests
   round-trip; nothing sets it.
 - ``version``: commit counter; names the retained history entry.
@@ -71,6 +77,7 @@ class TableManifest:
     seq_watermark: dict[str, int] = field(default_factory=dict)
     key_cols: list[str] | None = None
     n_buckets: int | None = None
+    schema: str | None = None
     schema_version: int = 0
     version: int = 0
 
@@ -81,6 +88,7 @@ class TableManifest:
             seq_watermark={k: int(v) for k, v in d.get("seq_watermark", {}).items()},
             key_cols=d.get("key_cols"),
             n_buckets=d.get("n_buckets"),
+            schema=d.get("schema"),
             schema_version=int(d.get("schema_version", 0)),
             version=int(d.get("version", 0)),
         )
@@ -146,6 +154,7 @@ class TableManifest:
             "seq_watermark": self.seq_watermark,
             "key_cols": self.key_cols,
             "n_buckets": self.n_buckets,
+            "schema": self.schema,
             "schema_version": self.schema_version,
             "version": self.version,
         }
@@ -199,8 +208,24 @@ class TableManifest:
         keep = set(TableManifest.versions(table_dir)[-max(retain, 1):])
         _drop_history(table_dir, lambda v: v not in keep)
 
-    def dirs(self, table_dir: str) -> list[str]:
-        return [os.path.join(table_dir, d) for d in self.entries.values()]
+    def dirs(self, table_dir: str, keys=None) -> list[str]:
+        """The data dirs of ``keys`` (every entry by default; keys
+        without an entry are skipped). A dir the manifest names but the
+        disk lacks raises: reading around it would silently drop its
+        rows, and a merge would commit the loss."""
+        out = []
+        for k in self.entries if keys is None else keys:
+            d = self.entries.get(k)
+            if d is None:
+                continue
+            path = os.path.join(table_dir, d)
+            if not os.path.isdir(path):
+                raise FileNotFoundError(
+                    f"table {table_dir}: manifest v{self.version} entry {k!r} -> "
+                    f"{d} has no data dir"
+                )
+            out.append(path)
+        return out
 
 
 def unique_entry_name(prefix: str) -> str:
@@ -240,6 +265,7 @@ def commit(
     seq_watermark: dict[str, int] | None = None,
     key_cols: list[str] | None = None,
     n_buckets: int | None = None,
+    schema: str | None = None,
 ) -> None:
     """The one commit sequence of a table write, under the table's
     writer lease: move each ``staged`` dir (new entry name -> staged
@@ -248,22 +274,34 @@ def commit(
     create) the manifest, set ``entries`` (logical -> entry name) over
     the committed ones or, with ``replace``, in place of them, set the
     given seq-watermark keys (None keeps them all), set the
-    bucketing spec when ``key_cols`` is given, save — the commit point
-    — and collect what no retained version references. A crash before
-    the save leaves the previous state; the moved-in dirs are garbage
-    for the next commit's GC."""
+    bucketing spec when ``key_cols`` is given, record ``schema`` (the
+    schema the new entries were written with; None = unknown), save —
+    the commit point — and collect what no retained version references.
+    A crash before the save leaves the previous state; the moved-in
+    dirs are garbage for the next commit's GC. A commit that raises
+    (a refused lease included) removes the staged dirs it did not move
+    in."""
     os.makedirs(table_dir, exist_ok=True)
-    with writer_lease(table_dir, owner):
-        for entry, path in staged.items():
-            os.rename(path, os.path.join(table_dir, entry))
-        m = TableManifest.load(table_dir) or TableManifest()
-        m.entries = dict(entries) if replace else {**m.entries, **entries}
-        if seq_watermark is not None:
-            m.seq_watermark.update(seq_watermark)
-        if key_cols is not None:
-            m.key_cols, m.n_buckets = list(key_cols), n_buckets
-        m.save(table_dir)  # <- the commit point
-        gc_unreferenced(table_dir, m)
+    try:
+        with writer_lease(table_dir, owner):
+            for entry, path in staged.items():
+                os.rename(path, os.path.join(table_dir, entry))
+            m = TableManifest.load(table_dir) or TableManifest()
+            if replace:
+                m.schema = schema
+            elif m.schema != schema:
+                m.schema = None  # the entries may now differ in schema
+            m.entries = dict(entries) if replace else {**m.entries, **entries}
+            if seq_watermark is not None:
+                m.seq_watermark.update(seq_watermark)
+            if key_cols is not None:
+                m.key_cols, m.n_buckets = list(key_cols), n_buckets
+            m.save(table_dir)  # <- the commit point
+            gc_unreferenced(table_dir, m)
+    except BaseException:
+        for path in staged.values():
+            shutil.rmtree(path, ignore_errors=True)
+        raise
 
 
 def sever_history(table_dir: str) -> None:

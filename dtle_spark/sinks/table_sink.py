@@ -8,10 +8,11 @@ Two targets behind one interface (``read``/``read_internal``/``stage``/
 - ``BucketedTableTarget`` — hash-partitions the table into N key
   buckets and merges only the buckets a batch touches:
 
-    1. compute the batch's net changes (already keyed),
-    2. derive the AFFECTED bucket set (distinct hash of change keys —
-       for CDC batches a small fraction of N),
-    3. read ONLY those buckets, merge, commit ONLY those entries.
+    1. pin the batch's change effects with their bucket, observing the
+       AFFECTED bucket set on that pass (for CDC batches a small
+       fraction of N),
+    2. read ONLY those buckets (with the schema the manifest records),
+       merge, commit ONLY those entries.
 
   Merge cost becomes O(affected buckets) instead of O(table) — at
   100 TB with N=8192 buckets and a 1M-row batch, a merge touches
@@ -31,23 +32,28 @@ manifest in one tight loop — the A6 cross-table atomicity of
 streaming/pipeline.apply_batch. The chores that rewrite entries in place
 (``purge_keys``, tombstone ``compact``) hold the lease from their
 manifest read to their swap and rewrite only the entries that hold
-matching rows.
+matching rows. A staged dir that is never committed — a refused lease,
+a failed commit, a batch failing in another table's stage — is removed.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import json
 import os
 import shutil
 import uuid
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dtle_spark.operators.apply import (
     DELETED_COL,
     SEQ_COL,
-    latest_image_per_key,
+    change_effects,
     merge_into_versioned,
     with_version_columns,
 )
@@ -59,6 +65,57 @@ from dtle_spark.sinks.manifest import TableManifest, unique_entry_name
 def hash_bucket(key_cols: list[str], n_buckets: int):
     """Uniform hash routing of a key to its bucket number."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+_STAGED: ContextVar[list | None] = ContextVar("staged_dirs", default=None)
+
+
+@contextlib.contextmanager
+def recording_staged(dirs: list):
+    """Append to ``dirs`` every staging dir this thread creates inside
+    the block, so a caller holding commit closures it will not run can
+    remove what they staged (a committed dir has moved away already)."""
+    token = _STAGED.set(dirs)
+    try:
+        yield
+    finally:
+        _STAGED.reset(token)
+
+
+def _staging_dir(p: str, kind: str) -> str:
+    """A fresh staging dir name next to the table dir ``p``."""
+    path = f"{p}.{kind}-{uuid.uuid4().hex[:8]}"
+    rec = _STAGED.get()
+    if rec is not None:
+        rec.append(path)
+    return path
+
+
+def _schema_json(df: DataFrame) -> str:
+    """The manifest's ``schema`` of a write of ``df``: its columns but
+    the ``__b`` partition column, nullable as every file-source read is."""
+
+    def nullable(t: T.DataType) -> T.DataType:
+        if isinstance(t, T.StructType):
+            return T.StructType([T.StructField(f.name, nullable(f.dataType), True, f.metadata)
+                                 for f in t.fields])
+        if isinstance(t, T.ArrayType):
+            return T.ArrayType(nullable(t.elementType), True)
+        if isinstance(t, T.MapType):
+            return T.MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    return nullable(T.StructType([f for f in df.schema.fields if f.name != "__b"])).json()
+
+
+def _recorded_schema(m: TableManifest) -> T.StructType | None:
+    return None if m.schema is None else T.StructType.fromJson(json.loads(m.schema))
+
+
+def _reader(spark: SparkSession, m: TableManifest):
+    """A parquet reader for the manifest's entries: given the recorded
+    schema when there is one, else inferring it (a Spark job)."""
+    return spark.read if m.schema is None else spark.read.schema(_recorded_schema(m))
 
 
 def _bucket_entries(staged: str) -> tuple[dict[str, str], dict[str, str]]:
@@ -86,12 +143,11 @@ def _drop_rows(spark: SparkSession, p: str, owner: str, prefix: str, hit, keep) 
     if m is None or not m.entries:
         return 0
     dirs = sorted(set(m.entries.values()))
-    # mergeSchema: appended segments may carry evolved schemas (ADD
-    # COLUMN mid-stream); a single-file inferred schema could
-    # silently miss matches in segments whose layout differs
-    rows = spark.read.option("mergeSchema", "true").parquet(
-        *(os.path.join(p, d) for d in dirs)
-    )
+    # without a recorded schema, mergeSchema: appended segments may carry
+    # evolved schemas (ADD COLUMN mid-stream); a single-file inferred
+    # schema could silently miss matches in segments whose layout differs
+    reader = _reader(spark, m) if m.schema else spark.read.option("mergeSchema", "true")
+    rows = reader.parquet(*(os.path.join(p, d) for d in dirs))
     hits = hit(rows.withColumn("__file", F.input_file_name()))
     if hits is None:
         return 0
@@ -103,12 +159,18 @@ def _drop_rows(spark: SparkSession, p: str, owner: str, prefix: str, hit, keep) 
                 break
     if per_dir:
         new_dirs = {d: unique_entry_name(prefix) for d in per_dir}
-        staged = {e: f"{p}.staged-{e}" for e in new_dirs.values()}
-        for d, e in new_dirs.items():
-            keep(spark.read.parquet(os.path.join(p, d))).write.mode(
-                "overwrite"
-            ).parquet(staged[e])
-        manifest.commit(p, owner, m.repointed(new_dirs), staged, replace=True)
+        staged = {e: _staging_dir(p, f"staged-{e}") for e in new_dirs.values()}
+        try:
+            for d, e in new_dirs.items():
+                keep(_reader(spark, m).parquet(os.path.join(p, d))).write.mode(
+                    "overwrite"
+                ).parquet(staged[e])
+            # rewritten entries were read with the recorded schema
+            manifest.commit(p, owner, m.repointed(new_dirs), staged, replace=True,
+                            schema=m.schema)
+        finally:
+            for path in staged.values():  # gone once committed
+                shutil.rmtree(path, ignore_errors=True)
     return sum(per_dir.values())
 
 
@@ -128,8 +190,8 @@ class ManifestedTarget:
 
     @staticmethod
     def _read_manifest(spark: SparkSession, p: str, m: TableManifest) -> DataFrame | None:
-        dirs = [d for d in m.dirs(p) if os.path.exists(d)]
-        return spark.read.parquet(*dirs) if dirs else None
+        dirs = m.dirs(p)  # raises on a missing data dir
+        return _reader(spark, m).parquet(*dirs) if dirs else None
 
     def read_internal(self, spark: SparkSession, schema_name: str, table_name: str) -> DataFrame | None:
         """Raw stored form — may carry __seq/__deleted version columns."""
@@ -197,8 +259,7 @@ class ManifestedTarget:
         Write-retry mirrors the reference's deadlock retry
         (RetryTxLimit=5, applier.go:966-977/driver.go:172-173) — on a
         lake target this is the optimistic-concurrency retry loop."""
-        p = self.path(schema_name, table_name)
-        staged = f"{p}.staged-{uuid.uuid4().hex[:8]}"
+        staged = _staging_dir(self.path(schema_name, table_name), "staged")
         last_err = None
         for _ in range(retries):
             try:
@@ -208,6 +269,7 @@ class ManifestedTarget:
             except Exception as e:  # transient executor/file races
                 last_err = e
         if last_err is not None:
+            shutil.rmtree(staged, ignore_errors=True)
             raise last_err
         return staged
 
@@ -412,22 +474,38 @@ class BucketedTableTarget(ManifestedTarget):
             return super().stage_image(df, schema_name, table_name, seq_watermark=seq_watermark)
         if DELETED_COL not in df.columns:
             df = with_version_columns(df)
-        bucketed = df.withColumn("__b", hash_bucket(key_cols, self.n_buckets))
+        # the merge's column order (data, then version columns), so the
+        # schema recorded here is the one later merges write
+        df = df.select(*[c for c in df.columns if c not in (SEQ_COL, DELETED_COL)],
+                       SEQ_COL, DELETED_COL)
         p = self.path(schema_name, table_name)
-        staged = p + f".staged-{uuid.uuid4().hex[:8]}"
-        (
-            bucketed.repartition(self.n_buckets, "__b")
-            .write.partitionBy("__b")
-            .mode("overwrite")
-            .parquet(staged)
+        staged = _staging_dir(p, "staged")
+        self._write_buckets(df.withColumn("__b", hash_bucket(key_cols, self.n_buckets))
+                            .repartition(self.n_buckets, "__b"), staged)
+        return self._bucket_commit(
+            p, "seed", staged, _schema_json(df), replace=True,
+            seq_watermark=seq_watermark, key_cols=key_cols, n_buckets=self.n_buckets,
         )
 
-        def commit_fn() -> None:
-            manifest.commit(  # replaces any previous table state
-                p, "seed", *_bucket_entries(staged), replace=True,
-                seq_watermark=seq_watermark, key_cols=key_cols, n_buckets=self.n_buckets,
-            )
+    @staticmethod
+    def _write_buckets(df: DataFrame, staged: str) -> None:
+        """One ``partitionBy("__b")`` write; a failed one leaves nothing."""
+        try:
+            df.write.partitionBy("__b").mode("overwrite").parquet(staged)
+        except BaseException:
             shutil.rmtree(staged, ignore_errors=True)
+            raise
+
+    @staticmethod
+    def _bucket_commit(p: str, owner: str, staged: str, schema: str, **kw):
+        """The closure that commits a staged bucket write; the staged dir
+        goes whether the commit lands or raises (a refused lease)."""
+
+        def commit_fn() -> None:
+            try:
+                manifest.commit(p, owner, *_bucket_entries(staged), schema=schema, **kw)
+            finally:
+                shutil.rmtree(staged, ignore_errors=True)
 
         return commit_fn
 
@@ -460,6 +538,14 @@ class BucketedTableTarget(ManifestedTarget):
         micro-batches, same guarantee as the whole-table path, at
         O(affected buckets) cost. Tombstone GC is the compaction chore.
 
+        Three Spark jobs on a bucketed table whose manifest records its
+        schema: (1) the change effects are pinned with their bucket,
+        and an observed metric of that pass yields the touched buckets;
+        (2) the touched buckets' stored rows, read with the recorded
+        schema, are unioned with the effects and hash-partitioned by
+        bucket once — the merge window runs per (bucket, key); (3) the
+        ``partitionBy`` write, one file per touched bucket.
+
         The commit closure moves the staged bucket dirs inside the
         table dir (invisible — readers resolve the old manifest), then
         swaps the manifest ONCE. The streaming batch loop collects
@@ -467,55 +553,57 @@ class BucketedTableTarget(ManifestedTarget):
         A6 cross-table atomicity with a crash window of zero per table.
 
         No dedupe pass: a re-delivered row is a verbatim copy, and the
-        per-key window of ``latest_image_per_key`` keeps exactly one of
-        them (operators/apply.apply_changes)."""
-        net = latest_image_per_key(changes, key_cols)
-        net = net.withColumn("__b", hash_bucket(key_cols, self.n_buckets)).persist()
+        merge window keeps exactly one of them
+        (operators/apply.apply_changes)."""
         p = self.path(schema_name, table_name)
         m = TableManifest.load(p)
-        try:
-            touched = sorted(r["__b"] for r in net.select("__b").distinct().collect())
-            if not touched:
-                return [], lambda: None
-            rewrite_all = m is None or not m.bucketed
-            if not rewrite_all:
-                # read ONLY affected buckets, resolved through the manifest
-                dirs = []
-                for b in touched:
-                    e = m.entries.get(str(b))
-                    if e and os.path.exists(os.path.join(p, e)):
-                        dirs.append(os.path.join(p, e))
-                if dirs:
-                    current = spark.read.parquet(*dirs)
-                else:
-                    current = spark.createDataFrame([], net.schema["row"].dataType)
+        observed = (
+            change_effects(changes, key_cols)
+            .withColumn("__b", hash_bucket(key_cols, self.n_buckets))
+            .observe("touched", F.collect_set("__b"))
+        )
+        # eager local checkpoint, not persist(): a cached frame's first
+        # use is a job of its own under AQE, the checkpoint is one job
+        effects = observed.localCheckpoint(eager=True)
+        # the metric is read off the executed query, not through a
+        # pyspark Observation: that attaches a non-serializable
+        # ObservationManager to the session, and a later task capturing
+        # the session (an ML model's training summary) fails to serialize
+        metrics = observed._jdf.queryExecution().observedMetrics()
+        touched = sorted(metrics.get("touched").get().getList(0))
+        if not touched:
+            return [], lambda: None
+        rewrite_all = m is None or not m.bucketed
+        if rewrite_all:
+            # one-time migration: the table was seeded as a whole-table
+            # image (overwrite/snapshot) or doesn't exist yet — merge
+            # against the full image and re-bucket everything
+            current = self.read_internal(spark, schema_name, table_name)
+        else:
+            # read ONLY affected buckets, resolved through the manifest
+            dirs = m.dirs(p, [str(b) for b in touched])  # raises on a missing dir
+            if dirs:
+                current = _reader(spark, m).parquet(*dirs)
+            elif m.schema is not None:
+                current = spark.createDataFrame([], _recorded_schema(m))
             else:
-                # one-time migration: the table was seeded as a whole-table
-                # image (overwrite/snapshot) or doesn't exist yet — merge
-                # against the full image and re-bucket everything
-                current = self.read_internal(spark, schema_name, table_name)
-                if current is None:
-                    current = spark.createDataFrame([], net.schema["row"].dataType)
-            if DELETED_COL not in current.columns:
-                current = with_version_columns(current)  # legacy unversioned rows
-            merged = merge_into_versioned(current, net.drop("__b"), key_cols).withColumn(
-                "__b", hash_bucket(key_cols, self.n_buckets)
-            )
-            staged = p + f".merge-{uuid.uuid4().hex[:8]}"
-            n_parts = self.n_buckets if rewrite_all else len(touched)
-            merged.repartition(n_parts, "__b").write.partitionBy("__b").mode(
-                "overwrite"
-            ).parquet(staged)
-        finally:
-            net.unpersist()
-
-        def commit_fn() -> None:
-            # a full re-bucket replaces the image and its bucketing spec
-            spec = {"key_cols": key_cols, "n_buckets": self.n_buckets} if rewrite_all else {}
-            manifest.commit(p, "merge", *_bucket_entries(staged), replace=rewrite_all, **spec)
-            shutil.rmtree(staged, ignore_errors=True)
-
-        return touched, commit_fn
+                current = None
+        if current is None:
+            current = spark.createDataFrame([], effects.schema["row"].dataType)
+        if DELETED_COL not in current.columns:
+            current = with_version_columns(current)  # legacy unversioned rows
+        n_parts = self.n_buckets if rewrite_all else len(touched)
+        merged = merge_into_versioned(
+            current.withColumn("__b", hash_bucket(key_cols, self.n_buckets)),
+            effects, key_cols, bucket=("__b", n_parts),
+        )
+        staged = _staging_dir(p, "merge")
+        self._write_buckets(merged, staged)
+        # a full re-bucket replaces the image and its bucketing spec
+        spec = {"key_cols": key_cols, "n_buckets": self.n_buckets} if rewrite_all else {}
+        return touched, self._bucket_commit(
+            p, "merge", staged, _schema_json(merged), replace=rewrite_all, **spec
+        )
 
     def merge(
         self,

@@ -51,7 +51,7 @@ from dtle_spark.model import JobConfig, TableConfig
 from dtle_spark.operators.apply import (
     DELETED_COL,
     apply_changes_no_pk,
-    latest_image_per_key,
+    change_effects,
     merge_into_versioned,
     with_version_columns,
 )
@@ -70,6 +70,7 @@ from dtle_spark.streaming.wire import WIRE_SCHEMA, from_wire
 from dtle_spark.sinks.table_sink import (  # noqa: E402,F401
     BucketedTableTarget,
     ParquetTableTarget,
+    recording_staged,
 )
 
 
@@ -281,10 +282,13 @@ def split_complete_txs(
     with a DDL row survives to the planner's seq-clash check."""
     prev = spool.read(spark, below=batch_id)
     eff = batch if prev is None else prev.unionByName(batch)
-    eff = eff.dropDuplicates(["sid", "gno", "seq", "op"]).persist()
+    # the dedupe's exchange on (sid, gno) also clusters the summary's
+    # groups, so the summary reads the pinned batch without another one
+    eff = eff.repartition("sid", "gno").dropDuplicates(["sid", "gno", "seq", "op"]).persist()
     try:
         summary = BatchSummary.of(eff, hold_frontier=True)
-        spool.write(eff.filter(summary.held()), batch_id)
+        # at most one tx per source: one write task, not one per partition
+        spool.write(eff.filter(summary.held()).coalesce(1), batch_id)
     except BaseException:
         eff.unpersist()
         raise
@@ -417,7 +421,7 @@ def _stage_image(spark: SparkSession, steps: list, cfg: TableConfig, job: JobCon
             # seq-versioned merge: correct under split/reordered delivery
             # across micro-batches (multi-file sources); tombstones guard
             # late stale changes (operators/apply.merge_into_versioned)
-            img = merge_into_versioned(img, latest_image_per_key(tchanges, key), key)
+            img = merge_into_versioned(img, change_effects(tchanges, key), key)
         else:
             fresh.append(_unapplied(tchanges, wm))
             img = apply_changes_no_pk(img, fresh[-1])
@@ -616,10 +620,13 @@ def _stage_table(spark: SparkSession, batch: DataFrame, plan: TablePlan, job: Jo
 
 
 def _stage_tables(
-    spark: SparkSession, batch: DataFrame, plans: list[TablePlan], job: JobConfig, target
+    spark: SparkSession, batch: DataFrame, plans: list[TablePlan], job: JobConfig, target,
+    staged: list,
 ) -> list:
     """Stage every planned table; returns the commit closures in
-    ``job.tables`` order.
+    ``job.tables`` order, and appends to ``staged`` every staging dir
+    the stages create (what the caller removes when a closure never
+    runs).
 
     The tables' transform -> parse -> merge staging chains are
     independent, so they overlap on a pool of min(tables, default
@@ -630,14 +637,16 @@ def _stage_tables(
     jobs."""
     if not plans:
         return []
+
+    def stage(plan: TablePlan):
+        with recording_staged(staged):
+            return _stage_table(spark, batch, plan, job, target)
+
     n = min(len(plans), spark.sparkContext.defaultParallelism)
     with ThreadPoolExecutor(max_workers=n) as pool:
         # one wrapper per task: each clones the caller's properties, so
         # a worker setting its job description cannot leak into another
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(_stage_table), spark, batch, p, job, target)
-            for p in plans
-        ]
+        futures = [pool.submit(inheritable_thread_target(spark)(stage), p) for p in plans]
         return [fn for fn in (f.result() for f in futures) if fn is not None]
 
 
@@ -703,6 +712,7 @@ def apply_batch(
 
     t0 = _time.perf_counter()
     pinned = None
+    staged: list = []
     try:
         if spool is not None:
             pinned, summary = split_complete_txs(spark, batch, spool, batch_id)
@@ -725,7 +735,7 @@ def apply_batch(
         ddl_in_snapshot = batch_id is not None and marker >= batch_id
         cat = catalog.copy()
         plans = plan_tables(job, cat, summary, ddl_in_snapshot, batch_id)
-        for fn in _stage_tables(spark, batch, plans, job, target):
+        for fn in _stage_tables(spark, batch, plans, job, target, staged):
             fn()
         if summary.has_ddl:
             # every commit landed: snapshot the COPY first, then sync
@@ -764,6 +774,10 @@ def apply_batch(
         if spool is not None:
             spool.mark_applied(batch_id)
     finally:
+        # a committed dir has moved into its table; what is left was
+        # staged by a batch that failed before committing it
+        for path in staged:
+            shutil.rmtree(path, ignore_errors=True)
         if pinned is not None:
             pinned.unpersist()
 

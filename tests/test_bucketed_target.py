@@ -3,6 +3,9 @@ final state identical to the whole-table merge path."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -258,3 +261,67 @@ def test_compaction_holds_the_lease_against_a_concurrent_merge(spark, tmp_path, 
     got = t.read(spark, "db1", "orders")
     assert got is not None
     assert sorted(map(tuple, got.collect())) == expected
+    # the refused merge's staged dir went with its commit
+    assert os.listdir(tmp_path / "tgt" / "db1") == ["orders"]
+
+
+def test_missing_bucket_dir_fails_loudly(spark, tmp_path):
+    """A manifest entry whose data dir is gone fails every read and the
+    merge with the table and the entry named, instead of reading (and
+    then committing) the table without that bucket's rows."""
+    from dtle_spark.sinks.manifest import TableManifest
+
+    base = cdc_demo.orders_base(spark, SF_DIR)
+    changes = cdc_demo.orders_changes(spark, SF_DIR)
+    t = BucketedTableTarget(str(tmp_path / "tgt"), n_buckets=4)
+    t.seed(base, "db1", "orders", ["o_orderkey"])
+    p = t.path("db1", "orders")
+    m = TableManifest.load(p)
+    gone = sorted(m.entries.values())[0]
+    shutil.rmtree(os.path.join(p, gone))
+    for read in (lambda: t.read(spark, "db1", "orders"),
+                 lambda: t.read_at_version(spark, "db1", "orders", m.version),
+                 lambda: t.merge(spark, changes, "db1", "orders", ["o_orderkey"])):
+        with pytest.raises(FileNotFoundError, match=f"orders.*{gone}"):
+            read()
+    assert TableManifest.load(p).version == m.version
+    assert os.listdir(tmp_path / "tgt" / "db1") == ["orders"]
+
+
+def test_manifest_without_schema_still_reads_and_merges(spark, tmp_path):
+    """Bucketed commits record the image schema in the manifest, and
+    bucket reads use it. A manifest without the field (written before
+    it existed) reads and merges by inference, and a partial merge
+    leaves it without one; both tables end identical."""
+    import json
+
+    from dtle_spark.sinks.manifest import MANIFEST_NAME, TableManifest
+
+    base = cdc_demo.orders_base(spark, SF_DIR)
+    changes = cdc_demo.orders_changes(spark, SF_DIR)
+    t = BucketedTableTarget(str(tmp_path / "tgt"), n_buckets=8)
+    for table in ("recorded", "legacy"):
+        t.seed(base, "db1", table, ["o_orderkey"])
+    legacy = os.path.join(t.path("db1", "legacy"), MANIFEST_NAME)
+    with open(legacy) as f:
+        payload = json.load(f)
+    del payload["schema"]
+    with open(legacy, "w") as f:
+        json.dump(payload, f)
+    for lo, hi in [(0, 8000), (8000, 10**18)]:
+        part = changes.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
+        for table in ("recorded", "legacy"):
+            t.merge(spark, part, "db1", table, ["o_orderkey"])
+    recorded = TableManifest.load(t.path("db1", "recorded")).schema
+    assert recorded is not None
+    assert json.loads(recorded)["fields"][-2:] == [
+        {"name": n, "type": ty, "nullable": True, "metadata": {}}
+        for n, ty in (("__seq", "long"), ("__deleted", "boolean"))
+    ]
+    assert TableManifest.load(t.path("db1", "legacy")).schema is None
+
+    def rows(table):
+        return sorted(map(tuple, t.read_internal(spark, "db1", table).collect()))
+
+    assert rows("legacy") == rows("recorded")
+

@@ -384,6 +384,138 @@ class TestVersionedMergeConvergence:
             assert got == expected, f"trial {trial}"
 
 
+def _join_merge_reference(versioned_target, net, key_cols):
+    """The full-outer-join formula of the seq-versioned merge, kept as
+    the reference: ``net`` is one winner per key (latest_image_per_key);
+    the effect wins iff it is newer than the stored row."""
+    from dtle_spark.operators.apply import DELETED_COL, SEQ_COL
+
+    data_cols = [c for c in versioned_target.columns if c not in (SEQ_COL, DELETED_COL)]
+    new_names = [f.name for f in net.schema["row"].dataType.fields]
+    if new_names != data_cols:
+        cur_types = {c: versioned_target.schema[c].dataType for c in data_cols}
+        new_struct = F.struct(*[
+            (F.col("row").getField(c).cast(cur_types[c]) if c in new_names
+             else F.lit(None).cast(cur_types[c])).alias(c)
+            for c in data_cols
+        ])
+    else:
+        new_struct = F.col("row")
+    cur = versioned_target.select(
+        *key_cols, F.struct(*data_cols).alias("__cur_row"),
+        F.col(SEQ_COL).alias("__cur_seq"), F.col(DELETED_COL).alias("__cur_del"),
+    )
+    eff = net.select(*key_cols, "__action", new_struct.alias("__new_row"),
+                     F.col("seq").alias("__new_seq"))
+    j = cur.join(eff, on=key_cols, how="full_outer")
+    wins = F.col("__new_seq").isNotNull() & (
+        F.col("__cur_seq").isNull() | (F.col("__new_seq") > F.col("__cur_seq"))
+    )
+    out = j.select(
+        *key_cols,
+        F.when(wins, F.col("__new_row")).otherwise(F.col("__cur_row")).alias("__row"),
+        F.when(wins, F.col("__new_seq")).otherwise(F.col("__cur_seq")).alias(SEQ_COL),
+        F.when(wins, F.col("__action") == "delete").otherwise(
+            F.coalesce(F.col("__cur_del"), F.lit(False))).alias(DELETED_COL),
+    )
+    return out.select(
+        *[F.when(~F.col(DELETED_COL), F.col(f"__row.{c}")).otherwise(
+            F.col(c) if c in key_cols else F.lit(None)).alias(c) for c in data_cols],
+        SEQ_COL, DELETED_COL,
+    )
+
+
+def test_union_window_merge_matches_join_formula(spark):
+    """merge_into_versioned (one window over stored rows + raw effects,
+    with and without bucket partitioning) equals the full-outer-join
+    formula over latest_image_per_key on random batches with stored-vs-
+    incoming seq ties, stale replays, PK-moving updates, delete then
+    re-insert of one key, a same-seq delete/upsert pair, verbatim
+    redelivery, and a stored schema that lacks one incoming field and
+    carries one the batch lacks."""
+    import random
+
+    from dtle_spark.operators.apply import (
+        change_effects,
+        latest_image_per_key,
+        merge_into_versioned,
+    )
+    from dtle_spark.sinks.table_sink import hash_bucket
+
+    rng = random.Random(20261020)
+    for trial in range(6):
+        drift = trial % 2 == 1
+        # stored seqs are even, batch seqs odd: ties happen only where built
+        stored, cur_rows = {}, []
+        for k in rng.sample(range(1, 9), 5):
+            stored[k] = 2 * rng.randint(1, 10)
+            dead = rng.random() < 0.25
+            name = None if dead else f"s{k}"
+            amount = None if dead else float(k)
+            cur_rows.append((k, name, f"x{k}" if drift and not dead else None, amount,
+                             stored[k], dead))
+        if drift:
+            cur = spark.createDataFrame(
+                [(k, n, x, s, d) for k, n, x, _, s, d in cur_rows],
+                "id long, name string, extra string, __seq long, __deleted boolean",
+            )
+        else:
+            cur = spark.createDataFrame(
+                [(k, n, a, s, d) for k, n, _, a, s, d in cur_rows],
+                "id long, name string, amount double, __seq long, __deleted boolean",
+            )
+        seqs = iter(rng.sample(range(1, 60, 2), 30))
+        ev = []
+        for _ in range(8):
+            k = rng.randint(1, 9)
+            s = next(seqs)
+            op = rng.choice(["i", "u", "d", "move"])
+            if op == "i":
+                ev.append(_base(gno=s, seq=s, op="i", after=_r(k, f"i{s}", float(s))))
+            elif op == "d":
+                ev.append(_base(gno=s, seq=s, op="d", before=_r(k, "old", 0.0)))
+            elif op == "u":
+                ev.append(_base(gno=s, seq=s, op="u", before=_r(k, "old", 0.0),
+                                after=_r(k, f"u{s}", float(s))))
+            else:  # PK-moving update
+                k2 = rng.randint(10, 12)
+                ev.append(_base(gno=s, seq=s, op="u", before=_r(k, "old", 0.0),
+                                after=_r(k2, f"m{s}", float(s))))
+        # stored-vs-incoming tie: an update at exactly the stored seq
+        k = rng.choice(sorted(stored))
+        ev.append(_base(gno=99, seq=stored[k], op="u", before=_r(k, "old", 0.0),
+                        after=_r(k, "tie", -1.0)))
+        # stale replay below the stored seq
+        k = rng.choice(sorted(stored))
+        ev.append(_base(gno=98, seq=stored[k] - 1, op="i", after=_r(k, "stale", -2.0)))
+        # delete then re-insert of one key in the batch
+        k, s1, s2 = rng.randint(1, 9), next(seqs), next(seqs)
+        ev.append(_base(gno=s1, seq=min(s1, s2), op="d", before=_r(k, "old", 0.0)))
+        ev.append(_base(gno=s2, seq=max(s1, s2), op="i", after=_r(k, "again", 1.0)))
+        # equal-seq delete and upsert of one key: a PK move off key 13
+        # and an insert of key 13 at the same seq
+        s = next(seqs)
+        ev.append(_base(gno=s, seq=s, op="u", before=_r(13, "old", 0.0),
+                        after=_r(14, "moved", 1.0)))
+        ev.append(_base(gno=s, seq=s, op="i", after=_r(13, "same-seq", 1.0)))
+        # verbatim redelivery
+        ev += rng.sample(ev, 3)
+        changes = _chg(spark, ev)
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.drop("__b").collect())
+
+        expected = rows(_join_merge_reference(cur, latest_image_per_key(changes, ["id"]), ["id"]))
+        assert rows(merge_into_versioned(cur, change_effects(changes, ["id"]), ["id"])) == expected, trial
+        b = hash_bucket(["id"], 4)
+        bucketed = merge_into_versioned(
+            cur.withColumn("__b", b), change_effects(changes, ["id"]).withColumn("__b", b),
+            ["id"], bucket=("__b", 3),
+        )
+        assert rows(bucketed) == expected, trial
+        assert rows(merge_into_versioned(cur, latest_image_per_key(changes, ["id"]), ["id"])) == expected
+
+
 def test_registry_fully_oracle_gated():
     """Every registry query ships a DuckDB oracle (the driver's strong
     rows+schema+hash gate) — a new entry without one should be a
