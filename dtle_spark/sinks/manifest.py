@@ -45,12 +45,6 @@ Manifest fields:
   replay guard) — stored here so data + watermark commit atomically.
 - ``key_cols`` / ``n_buckets``: bucketing spec, kept so DDL rewrites
   can re-bucket without being told the key again.
-- ``schema``: the stored image's Spark schema (``StructType.json()``)
-  when every entry is known to carry it, so a read passes it instead of
-  inferring it from the parquet footers (one Spark job). A replacing
-  commit sets it, or clears it when given none; a partial update keeps
-  it only when it wrote the same schema. Absent (older manifests, or
-  entries that may differ in schema): readers infer.
 - ``schema_version``: carried through load/save so older manifests
   round-trip; nothing sets it.
 - ``version``: commit counter; names the retained history entry.
@@ -77,7 +71,6 @@ class TableManifest:
     seq_watermark: dict[str, int] = field(default_factory=dict)
     key_cols: list[str] | None = None
     n_buckets: int | None = None
-    schema: str | None = None
     schema_version: int = 0
     version: int = 0
 
@@ -88,7 +81,6 @@ class TableManifest:
             seq_watermark={k: int(v) for k, v in d.get("seq_watermark", {}).items()},
             key_cols=d.get("key_cols"),
             n_buckets=d.get("n_buckets"),
-            schema=d.get("schema"),
             schema_version=int(d.get("schema_version", 0)),
             version=int(d.get("version", 0)),
         )
@@ -154,7 +146,6 @@ class TableManifest:
             "seq_watermark": self.seq_watermark,
             "key_cols": self.key_cols,
             "n_buckets": self.n_buckets,
-            "schema": self.schema,
             "schema_version": self.schema_version,
             "version": self.version,
         }
@@ -265,7 +256,6 @@ def commit(
     seq_watermark: dict[str, int] | None = None,
     key_cols: list[str] | None = None,
     n_buckets: int | None = None,
-    schema: str | None = None,
 ) -> None:
     """The one commit sequence of a table write, under the table's
     writer lease: move each ``staged`` dir (new entry name -> staged
@@ -274,23 +264,17 @@ def commit(
     create) the manifest, set ``entries`` (logical -> entry name) over
     the committed ones or, with ``replace``, in place of them, set the
     given seq-watermark keys (None keeps them all), set the
-    bucketing spec when ``key_cols`` is given, record ``schema`` (the
-    schema the new entries were written with; None = unknown), save —
-    the commit point — and collect what no retained version references.
-    A crash before the save leaves the previous state; the moved-in
-    dirs are garbage for the next commit's GC. A commit that raises
-    (a refused lease included) removes the staged dirs it did not move
-    in."""
+    bucketing spec when ``key_cols`` is given, save — the commit point
+    — and collect what no retained version references. A crash before
+    the save leaves the previous state; the moved-in dirs are garbage
+    for the next commit's GC. A commit that raises (a refused lease
+    included) removes the staged dirs it did not move in."""
     os.makedirs(table_dir, exist_ok=True)
     try:
         with writer_lease(table_dir, owner):
             for entry, path in staged.items():
                 os.rename(path, os.path.join(table_dir, entry))
             m = TableManifest.load(table_dir) or TableManifest()
-            if replace:
-                m.schema = schema
-            elif m.schema != schema:
-                m.schema = None  # the entries may now differ in schema
             m.entries = dict(entries) if replace else {**m.entries, **entries}
             if seq_watermark is not None:
                 m.seq_watermark.update(seq_watermark)

@@ -11,8 +11,8 @@ Two targets behind one interface (``read``/``read_internal``/``stage``/
     1. pin the batch's change effects with their bucket, observing the
        AFFECTED bucket set on that pass (for CDC batches a small
        fraction of N),
-    2. read ONLY those buckets (with the schema the manifest records),
-       merge, commit ONLY those entries.
+    2. read ONLY those buckets (with the schema their parquet footers
+       record), merge, commit ONLY those entries.
 
   Merge cost becomes O(affected buckets) instead of O(table) — at
   100 TB with N=8192 buckets and a 1M-row batch, a merge touches
@@ -91,31 +91,49 @@ def _staging_dir(p: str, kind: str) -> str:
     return path
 
 
-def _schema_json(df: DataFrame) -> str:
-    """The manifest's ``schema`` of a write of ``df``: its columns but
-    the ``__b`` partition column, nullable as every file-source read is."""
-
-    def nullable(t: T.DataType) -> T.DataType:
-        if isinstance(t, T.StructType):
-            return T.StructType([T.StructField(f.name, nullable(f.dataType), True, f.metadata)
-                                 for f in t.fields])
-        if isinstance(t, T.ArrayType):
-            return T.ArrayType(nullable(t.elementType), True)
-        if isinstance(t, T.MapType):
-            return T.MapType(nullable(t.keyType), nullable(t.valueType), True)
-        return t
-
-    return nullable(T.StructType([f for f in df.schema.fields if f.name != "__b"])).json()
+# the footer key under which Spark's parquet writer stores the schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _recorded_schema(m: TableManifest) -> T.StructType | None:
-    return None if m.schema is None else T.StructType.fromJson(json.loads(m.schema))
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field nullable, as a file-source read sees it."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                             for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
-def _reader(spark: SparkSession, m: TableManifest):
-    """A parquet reader for the manifest's entries: given the recorded
-    schema when there is one, else inferring it (a Spark job)."""
-    return spark.read if m.schema is None else spark.read.schema(_recorded_schema(m))
+def _footer_schema(dirs: list[str]) -> T.StructType | None:
+    """The one Spark schema every parquet file in ``dirs`` was written
+    with, read from their footers on the driver (no Spark job); None
+    when the files differ in schema, or one was not written by Spark."""
+    import pyarrow.parquet as pq
+
+    found = None
+    for d in dirs:
+        for f in glob.glob(os.path.join(d, "*.parquet")):
+            raw = (pq.read_metadata(f).metadata or {}).get(_SPARK_SCHEMA_KEY)
+            if raw is None:
+                return None
+            schema = _nullable(T.StructType.fromJson(json.loads(raw)))
+            if found is not None and schema != found:
+                return None
+            found = schema
+    return found
+
+
+def _reader(spark: SparkSession, dirs: list[str], merge: bool = False):
+    """A parquet reader for ``dirs``: given their files' common schema,
+    else inferring one (a Spark job) from a single file or, with
+    ``merge``, from every file."""
+    schema = _footer_schema(dirs)
+    if schema is not None:
+        return spark.read.schema(schema)
+    return spark.read.option("mergeSchema", "true") if merge else spark.read
 
 
 def _bucket_entries(staged: str) -> tuple[dict[str, str], dict[str, str]]:
@@ -143,11 +161,10 @@ def _drop_rows(spark: SparkSession, p: str, owner: str, prefix: str, hit, keep) 
     if m is None or not m.entries:
         return 0
     dirs = sorted(set(m.entries.values()))
-    # without a recorded schema, mergeSchema: appended segments may carry
-    # evolved schemas (ADD COLUMN mid-stream); a single-file inferred
-    # schema could silently miss matches in segments whose layout differs
-    reader = _reader(spark, m) if m.schema else spark.read.option("mergeSchema", "true")
-    rows = reader.parquet(*(os.path.join(p, d) for d in dirs))
+    paths = [os.path.join(p, d) for d in dirs]
+    # merged: segments appended before and after an ADD COLUMN differ,
+    # and a schema inferred from one file could miss matches in another
+    rows = _reader(spark, paths, merge=True).parquet(*paths)
     hits = hit(rows.withColumn("__file", F.input_file_name()))
     if hits is None:
         return 0
@@ -162,12 +179,11 @@ def _drop_rows(spark: SparkSession, p: str, owner: str, prefix: str, hit, keep) 
         staged = {e: _staging_dir(p, f"staged-{e}") for e in new_dirs.values()}
         try:
             for d, e in new_dirs.items():
-                keep(_reader(spark, m).parquet(os.path.join(p, d))).write.mode(
+                path = os.path.join(p, d)
+                keep(_reader(spark, [path]).parquet(path)).write.mode(
                     "overwrite"
                 ).parquet(staged[e])
-            # rewritten entries were read with the recorded schema
-            manifest.commit(p, owner, m.repointed(new_dirs), staged, replace=True,
-                            schema=m.schema)
+            manifest.commit(p, owner, m.repointed(new_dirs), staged, replace=True)
         finally:
             for path in staged.values():  # gone once committed
                 shutil.rmtree(path, ignore_errors=True)
@@ -191,7 +207,7 @@ class ManifestedTarget:
     @staticmethod
     def _read_manifest(spark: SparkSession, p: str, m: TableManifest) -> DataFrame | None:
         dirs = m.dirs(p)  # raises on a missing data dir
-        return _reader(spark, m).parquet(*dirs) if dirs else None
+        return _reader(spark, dirs).parquet(*dirs) if dirs else None
 
     def read_internal(self, spark: SparkSession, schema_name: str, table_name: str) -> DataFrame | None:
         """Raw stored form — may carry __seq/__deleted version columns."""
@@ -475,7 +491,7 @@ class BucketedTableTarget(ManifestedTarget):
         if DELETED_COL not in df.columns:
             df = with_version_columns(df)
         # the merge's column order (data, then version columns), so the
-        # schema recorded here is the one later merges write
+        # buckets later merges rewrite keep one footer schema with these
         df = df.select(*[c for c in df.columns if c not in (SEQ_COL, DELETED_COL)],
                        SEQ_COL, DELETED_COL)
         p = self.path(schema_name, table_name)
@@ -483,7 +499,7 @@ class BucketedTableTarget(ManifestedTarget):
         self._write_buckets(df.withColumn("__b", hash_bucket(key_cols, self.n_buckets))
                             .repartition(self.n_buckets, "__b"), staged)
         return self._bucket_commit(
-            p, "seed", staged, _schema_json(df), replace=True,
+            p, "seed", staged, replace=True,
             seq_watermark=seq_watermark, key_cols=key_cols, n_buckets=self.n_buckets,
         )
 
@@ -497,13 +513,13 @@ class BucketedTableTarget(ManifestedTarget):
             raise
 
     @staticmethod
-    def _bucket_commit(p: str, owner: str, staged: str, schema: str, **kw):
+    def _bucket_commit(p: str, owner: str, staged: str, **kw):
         """The closure that commits a staged bucket write; the staged dir
         goes whether the commit lands or raises (a refused lease)."""
 
         def commit_fn() -> None:
             try:
-                manifest.commit(p, owner, *_bucket_entries(staged), schema=schema, **kw)
+                manifest.commit(p, owner, *_bucket_entries(staged), **kw)
             finally:
                 shutil.rmtree(staged, ignore_errors=True)
 
@@ -538,10 +554,10 @@ class BucketedTableTarget(ManifestedTarget):
         micro-batches, same guarantee as the whole-table path, at
         O(affected buckets) cost. Tombstone GC is the compaction chore.
 
-        Three Spark jobs on a bucketed table whose manifest records its
-        schema: (1) the change effects are pinned with their bucket,
-        and an observed metric of that pass yields the touched buckets;
-        (2) the touched buckets' stored rows, read with the recorded
+        Three Spark jobs on a bucketed table whose touched buckets share
+        one footer schema: (1) the change effects are pinned with their
+        bucket, and an observed metric of that pass yields the touched
+        buckets; (2) the touched buckets' stored rows, read with that
         schema, are unioned with the effects and hash-partitioned by
         bucket once — the merge window runs per (bucket, key); (3) the
         ``partitionBy`` write, one file per touched bucket.
@@ -582,12 +598,7 @@ class BucketedTableTarget(ManifestedTarget):
         else:
             # read ONLY affected buckets, resolved through the manifest
             dirs = m.dirs(p, [str(b) for b in touched])  # raises on a missing dir
-            if dirs:
-                current = _reader(spark, m).parquet(*dirs)
-            elif m.schema is not None:
-                current = spark.createDataFrame([], _recorded_schema(m))
-            else:
-                current = None
+            current = _reader(spark, dirs).parquet(*dirs) if dirs else None
         if current is None:
             current = spark.createDataFrame([], effects.schema["row"].dataType)
         if DELETED_COL not in current.columns:
@@ -602,7 +613,7 @@ class BucketedTableTarget(ManifestedTarget):
         # a full re-bucket replaces the image and its bucketing spec
         spec = {"key_cols": key_cols, "n_buckets": self.n_buckets} if rewrite_all else {}
         return touched, self._bucket_commit(
-            p, "merge", staged, _schema_json(merged), replace=rewrite_all, **spec
+            p, "merge", staged, replace=rewrite_all, **spec
         )
 
     def merge(

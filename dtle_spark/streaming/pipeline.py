@@ -282,13 +282,10 @@ def split_complete_txs(
     with a DDL row survives to the planner's seq-clash check."""
     prev = spool.read(spark, below=batch_id)
     eff = batch if prev is None else prev.unionByName(batch)
-    # the dedupe's exchange on (sid, gno) also clusters the summary's
-    # groups, so the summary reads the pinned batch without another one
-    eff = eff.repartition("sid", "gno").dropDuplicates(["sid", "gno", "seq", "op"]).persist()
+    eff = eff.dropDuplicates(["sid", "gno", "seq", "op"]).persist()
     try:
         summary = BatchSummary.of(eff, hold_frontier=True)
-        # at most one tx per source: one write task, not one per partition
-        spool.write(eff.filter(summary.held()).coalesce(1), batch_id)
+        spool.write(eff.filter(summary.held()), batch_id)
     except BaseException:
         eff.unpersist()
         raise

@@ -288,40 +288,43 @@ def test_missing_bucket_dir_fails_loudly(spark, tmp_path):
     assert os.listdir(tmp_path / "tgt" / "db1") == ["orders"]
 
 
-def test_manifest_without_schema_still_reads_and_merges(spark, tmp_path):
-    """Bucketed commits record the image schema in the manifest, and
-    bucket reads use it. A manifest without the field (written before
-    it existed) reads and merges by inference, and a partial merge
-    leaves it without one; both tables end identical."""
-    import json
-
-    from dtle_spark.sinks.manifest import MANIFEST_NAME, TableManifest
+def test_buckets_without_one_footer_schema_still_read_and_merge(spark, tmp_path):
+    """Bucket reads take the schema Spark wrote into the parquet
+    footers, so seed and merge writes keep one schema. Buckets whose
+    footers differ (here one bucket rewritten with its columns in
+    another order) make reads merge the files' schemas instead; the
+    table reads and merges exactly like one whose buckets agree."""
+    from dtle_spark.sinks.manifest import TableManifest
+    from dtle_spark.sinks.table_sink import _footer_schema
 
     base = cdc_demo.orders_base(spark, SF_DIR)
     changes = cdc_demo.orders_changes(spark, SF_DIR)
     t = BucketedTableTarget(str(tmp_path / "tgt"), n_buckets=8)
-    for table in ("recorded", "legacy"):
+    for table in ("agreed", "mixed"):
         t.seed(base, "db1", table, ["o_orderkey"])
-    legacy = os.path.join(t.path("db1", "legacy"), MANIFEST_NAME)
-    with open(legacy) as f:
-        payload = json.load(f)
-    del payload["schema"]
-    with open(legacy, "w") as f:
-        json.dump(payload, f)
-    for lo, hi in [(0, 8000), (8000, 10**18)]:
-        part = changes.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
-        for table in ("recorded", "legacy"):
-            t.merge(spark, part, "db1", table, ["o_orderkey"])
-    recorded = TableManifest.load(t.path("db1", "recorded")).schema
-    assert recorded is not None
-    assert json.loads(recorded)["fields"][-2:] == [
-        {"name": n, "type": ty, "nullable": True, "metadata": {}}
-        for n, ty in (("__seq", "long"), ("__deleted", "boolean"))
-    ]
-    assert TableManifest.load(t.path("db1", "legacy")).schema is None
+
+    def dirs(table):
+        p = t.path("db1", table)
+        return TableManifest.load(p).dirs(p)
 
     def rows(table):
-        return sorted(map(tuple, t.read_internal(spark, "db1", table).collect()))
+        df = t.read_internal(spark, "db1", table)
+        return sorted(str(sorted(r.asDict().items())) for r in df.collect())
 
-    assert rows("legacy") == rows("recorded")
-
+    bucket = dirs("mixed")[0]
+    cols = spark.read.parquet(bucket).columns
+    spark.read.parquet(bucket).select(*reversed(cols)).write.parquet(str(tmp_path / "re"))
+    shutil.rmtree(bucket)
+    os.rename(tmp_path / "re", bucket)
+    assert _footer_schema(dirs("mixed")) is None
+    assert rows("mixed") == rows("agreed")
+    for lo, hi in [(0, 8000), (8000, 10**18)]:
+        part = changes.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
+        for table in ("agreed", "mixed"):
+            t.merge(spark, part, "db1", table, ["o_orderkey"])
+    schema = _footer_schema(dirs("agreed"))
+    assert schema is not None
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields[-2:]] == [
+        ("__seq", "bigint"), ("__deleted", "boolean")
+    ]
+    assert rows("mixed") == rows("agreed")
